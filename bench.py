@@ -18,6 +18,11 @@ Each query is consumed with a ``noop``-format write: the full plan executes
 distributed (scan → transform → exchange) but nothing is serialized to the
 driver, so timings measure the engine, not ``collect()`` transfer.
 
+A leading cold pass runs every id once right after ``cache.clear()``, so
+each id pays its own session-cache fills; line 1 carries those times as
+``cold: {qid: sec}`` next to the warm minima. ``SPARK_GRAFT_BENCH_PASSES``
+(default 3) counts the warm passes that follow.
+
 The numpy-driver-tier graph ids (``_ISOLATED_IDS``) are measured in their
 own subprocess each (fresh JVM + driver heap; startup excluded — timing is
 per-query inside the child): round-11 established that their driver-side
@@ -91,11 +96,13 @@ def _cpu_ticks() -> "tuple[int, int] | None":
         return None
 
 
-def _measure_isolated(qid: str) -> "tuple[float, float | None, float | None] | None":
+def _measure_isolated(
+    qid: str,
+) -> "tuple[float, float | None, float | None, float | None] | None":
     """Run ``bench.py`` for one id in a fresh subprocess and return
-    ``(recorded minimum, child's anchor seconds, child's steal %)``, or
-    None if the child failed (caller falls back to in-process
-    measurement — logged and tagged, never silent)."""
+    ``(recorded minimum, child's anchor seconds, child's steal %, child's
+    cold seconds)``, or None if the child failed (caller falls back to
+    in-process measurement — logged and tagged, never silent)."""
     import subprocess
 
     env = dict(os.environ)
@@ -126,7 +133,8 @@ def _measure_isolated(qid: str) -> "tuple[float, float | None, float | None] | N
                 f"(rc={out.returncode}, stderr tail: {out.stderr[-500:]!r})"
             )
         anchor = rec.get("anchor", {}).get("sec")
-        return float(rec["queries"][qid]), anchor, rec.get("steal_pct")
+        cold = rec.get("cold", {}).get(qid)
+        return float(rec["queries"][qid]), anchor, rec.get("steal_pct"), cold
     except Exception as exc:
         print(
             f"bench: isolated child for {qid} failed ({exc}); falling back "
@@ -148,7 +156,8 @@ def split_final_queries(
     """Split per-query timings into (final-line dict, penultimate-line
     dict): slowest ids go to the final line (2-decimal, packed greedily
     until the full final line would exceed ``_FINAL_LINE_BUDGET`` bytes),
-    the rest to the penultimate. Pure so the byte-budget test can pin it."""
+    the rest to the penultimate, fastest first. Pure so the byte-budget
+    test can pin it."""
     probe = dict(summary)
     by_cost = sorted(timings, key=lambda q: (-timings[q], q))
     part2: dict[str, float] = {}
@@ -160,13 +169,16 @@ def split_final_queries(
         if len(json.dumps(probe, separators=(",", ":"))) > _FINAL_LINE_BUDGET:
             break
         part2 = cand
+    # fastest first: only the TAIL of stdout is kept, so truncation eats
+    # the start of this line — the slower ids must sit at its end
     part1 = {
-        q: round(timings[q], 2) for q in by_cost if q not in part2
+        q: round(timings[q], 2) for q in reversed(by_cost) if q not in part2
     }
     return part2, part1
 
 
 def main() -> None:
+    from boletia_kubernetes_kafka_mongodb_spark import cache
     from boletia_kubernetes_kafka_mongodb_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -196,25 +208,27 @@ def main() -> None:
 
     ticks0 = _cpu_ticks()
 
-    # multiple passes, keep per-query minimum: the host is co-tenant-noisy
-    # and a single pass conflates engine time with neighbor interference
+    # multiple warm passes, keep per-query minimum: the host is
+    # co-tenant-noisy and a single pass conflates engine time with
+    # neighbor interference
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
 
-    def _min_secs(fn) -> float:
-        best = float("inf")
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+    def _run(fn) -> float:
+        t0 = time.perf_counter()
+        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
+    def _min_secs(fn) -> float:
+        return min(_run(fn) for _ in range(passes))
+
+    cold: dict[str, float] = {}
+    for qid in sorted(queries):
+        cache.clear()
+        cold[qid] = round(_run(queries[qid]), 3)
     raw: dict[str, list[float]] = {qid: [] for qid in queries}
     for _ in range(passes):
         for qid in sorted(queries):
-            t0 = time.perf_counter()
-            df = queries[qid](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            raw[qid].append(time.perf_counter() - t0)
+            raw[qid].append(_run(queries[qid]))
     total = 0.0
     for qid, times in raw.items():
         timings[qid] = round(min(times), 3)
@@ -233,10 +247,14 @@ def main() -> None:
         res = _measure_isolated(qid)
         if res is None:  # child failed: fall back, tagged not silent
             fallback_ids.append(qid)
+            cache.clear()
+            c = _run(all_queries[qid])
             t, anchor, steal = _min_secs(all_queries[qid]), None, None
         else:
-            t, anchor, steal = res
+            t, anchor, steal, c = res
         timings[qid] = round(t, 3)
+        if c is not None:
+            cold[qid] = round(c, 3)
         isolated_meta[qid] = {
             "raw": round(t, 3),
             "anchor_sec": anchor,
@@ -258,6 +276,7 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
+        "cold": cold,
         "sf": sf,
         "cpus": int(CPUS),
         "n_queries": len(timings),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from .. import tables
+from .. import cache, tables
 from .text import TOKEN_RE, fingerprint_col, tokens_col
 
 JACCARD_THRESHOLD = 0.5
@@ -160,9 +160,6 @@ def _block_degree(sf_dir: str, table: str, floor: int = 8, cap: int = 512) -> in
     return int(max(floor, min(cap, sz // (64 << 20) + 1)))
 
 
-_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _token_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, lang, hs, sz)`` — each doc's distinct tokens as a SORTED
     array of xxhash64 longs, plus the set size. One narrow map over the
@@ -170,29 +167,27 @@ def _token_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision merges two tokens (probability ~2⁻⁶⁴ per token pair — the
     same equivalence every hash-based shuffle in the pipeline relies on).
 
-    Cached per (application, sf_dir) behind a lazy ``localCheckpoint``:
-    three dedup queries start from this same frame, and in a real pipeline
-    the tokenized column is materialized once at ingest, not re-derived per
+    Cached (see `cache`) behind a lazy ``localCheckpoint``: three dedup
+    queries start from this same frame, and in a real pipeline the
+    tokenized column is materialized once at ingest, not re-derived per
     downstream consumer.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SETS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = tables.load(spark, sf_dir, "documents", fan=True)
-    # NULL text ⇒ empty token set (not a NULL array): real crawls carry null
-    # documents, and a NULL hs would reach the Arrow kernels as None
-    hs = F.array_sort(
-        F.transform(
-            F.array_distinct(tokens_col(F.coalesce(F.col("text"), F.lit("")))),
-            lambda t: F.xxhash64(t),
+
+    def _build():
+        docs = tables.load(spark, sf_dir, "documents", fan=True)
+        # NULL text ⇒ empty token set (not a NULL array): real crawls carry
+        # null documents, and a NULL hs would reach the Arrow kernels as None
+        hs = F.array_sort(
+            F.transform(
+                F.array_distinct(tokens_col(F.coalesce(F.col("text"), F.lit("")))),
+                lambda t: F.xxhash64(t),
+            )
         )
-    )
-    out = docs.select(
-        "doc_id", "lang", hs.alias("hs"), F.size(hs).alias("sz")
-    ).localCheckpoint(eager=False)
-    _SETS_CACHE[key] = out
-    return out
+        return docs.select(
+            "doc_id", "lang", hs.alias("hs"), F.size(hs).alias("sz")
+        ).localCheckpoint(eager=False)
+
+    return cache.cached(spark, sf_dir, ("documents",), "token-hash-sets", _build)
 
 
 def _blocked_set_pairs(spark: SparkSession, sf_dir: str, measure: str, threshold: float) -> DataFrame:
@@ -463,17 +458,13 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAR_EDGES_CACHE: dict = {}
-
-
 def _star_edges_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused tile-contraction star-edge list, kernel-run + checkpointed
-    once per (application, dataset signature) — the same per-dataset edge
-    discipline as `graph._jaccard_pairs_cache` (this frame is the
-    ingest-time materialization a deployment's cluster-resolution stage
-    starts from; re-running the tiled kernel per invocation billed the
-    pair scan to every pass)."""
-    from ..sources.layouts import dataset_cache_get
+    once (see `cache`) — the same per-dataset edge discipline as
+    `graph._jaccard_pairs_cache` (this frame is the ingest-time
+    materialization a deployment's cluster-resolution stage starts from;
+    re-running the tiled kernel per invocation billed the pair scan to
+    every pass)."""
     from ._pandas_udfs import make_set_component_kernel
 
     def _build():
@@ -487,15 +478,7 @@ def _star_edges_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    try:
-        return dataset_cache_get(
-            _STAR_EDGES_CACHE, spark, sf_dir, "documents", _build, tag="star-edges"
-        )
-    except FileNotFoundError:
-        # crafted fixture behind a mocked tables.load (no on-disk dataset
-        # to key the cache on): compute uncached — correctness-identical,
-        # just without the per-dataset reuse
-        return _build()
+    return cache.cached(spark, sf_dir, ("documents",), "star-edges", _build)
 
 
 def _sql_clusters_ctes() -> str:
@@ -727,19 +710,14 @@ def minhash_band_keys(docs: DataFrame) -> DataFrame:
     )
 
 
-_MINHASH_BANDS_CACHE: dict = {}
-
-
 def _minhash_band_keys_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, band, bucket) materialized once per (application, dataset
-    signature) — see ext_dedup_minhash_lsh's docstring for the rationale."""
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _MINHASH_BANDS_CACHE,
+    """(doc_id, band, bucket) materialized once (see `cache`) — see
+    ext_dedup_minhash_lsh's docstring for the rationale."""
+    return cache.cached(
         spark,
         sf_dir,
-        "documents",
+        ("documents",),
+        "minhash-bands",
         lambda: minhash_band_keys(
             tables.load(spark, sf_dir, "documents", fan=True)
         ).localCheckpoint(eager=False),
@@ -789,8 +767,8 @@ def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     see `minhash_perm_constants`); recall vs the exhaustive truth set is
     additionally asserted in tests/test_dedup.py.
 
-    Band keys are cached per (application, dataset signature) behind a
-    lazy ``localCheckpoint`` — the signature+banding stage is exactly what
+    Band keys are cached (see `cache`) behind a lazy
+    ``localCheckpoint`` — the signature+banding stage is exactly what
     ``write_minhash_band_index`` materializes at ingest in a deployment
     (same `_token_hash_sets` / SimHash-signature discipline).
     """
@@ -957,36 +935,27 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
 SIMHASH_BANDS = 4
 
 
-_SIMHASH_SIG_CACHE: dict = {}
-
-
 def _simhash_signature_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, simhash) materialized once per (application, dataset
-    signature) — see ext_dedup_simhash's docstring for the rationale."""
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _SIMHASH_SIG_CACHE,
+    """(doc_id, lang, simhash) materialized once (see `cache`) — see
+    ext_dedup_simhash's docstring for the rationale."""
+    return cache.cached(
         spark,
         sf_dir,
-        "documents",
+        ("documents",),
+        "simhash-signatures",
         lambda: simhash_signatures(
             tables.load(spark, sf_dir, "documents", fan=True)
         ).localCheckpoint(eager=False),
     )
 
 
-_SIMHASH_GROUPS_CACHE: dict = {}
-
-
 def _simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, simhash, sorted doc_id list) — the distinct-signature
-    roster, materialized once per (application, dataset signature) on top
-    of the cached signature frame. Template-heavy corpora repeat
+    roster, materialized once (see `cache`) on top of the cached
+    signature frame. Template-heavy corpora repeat
     signatures (sf0.1: 5,000 docs → 3,905 distinct sigs; the hot 611-member
     band bucket holds only 302), so every downstream stage that operates
     per SIGNATURE instead of per DOC shrinks with the duplication factor."""
-    from ..sources.layouts import dataset_cache_get
 
     def _build():
         return (
@@ -996,17 +965,7 @@ def _simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
 
-    try:
-        return dataset_cache_get(
-            _SIMHASH_GROUPS_CACHE,
-            spark,
-            sf_dir,
-            "documents",
-            _build,
-            tag="simhash-groups",
-        )
-    except FileNotFoundError:  # mocked tables.load fixture — build uncached
-        return _build()
+    return cache.cached(spark, sf_dir, ("documents",), "simhash-groups", _build)
 
 
 def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,9 +1003,9 @@ def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ext_dedup_simhash_oracle`); python-reference equality test
     additionally pins the kernel.
 
-    Signatures (and the distinct-signature roster) are cached per
-    (application, dataset signature) behind lazy ``localCheckpoint``s —
-    the `_token_hash_sets` discipline: in a real pipeline the signature
+    Signatures (and the distinct-signature roster) are cached (see
+    `cache`) behind lazy ``localCheckpoint``s — the `_token_hash_sets`
+    discipline: in a real pipeline the signature
     column is materialized once at ingest, not re-derived per consumer.
     """
     groups = _simhash_groups(spark, sf_dir)
@@ -1544,13 +1503,11 @@ def _band_index_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    from ..sources.layouts import dataset_cache_key
-
     # keyed by the source table's content signature, not just the path —
     # a regenerated fixture must invalidate the standing index; v2 in the
     # name: the hash-scheme change (xxhash64 → md5/universal perms) must
     # invalidate indexes built by older code
-    key = dataset_cache_key(sf_dir, "documents")
+    key = cache.signature(sf_dir, "documents")
     return os.path.join(tempfile.gettempdir(), f"boletia_band_index_v2_{key}")
 
 
@@ -1834,8 +1791,8 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize only on the |identities|-sized aggregated frame. In-bucket
     cost is |block|², the knob the declared blocking keys control.
 
-    The banded identities checkpoint is cached per (application, dataset
-    signature) — optimization round 14 (r13 verdict #8), the
+    The banded identities checkpoint is cached (see `cache`) —
+    optimization round 14 (r13 verdict #8), the
     `_simhash_signature_cache` discipline: the banded frame is a pure
     function of the reservas fact table, and in a real pipeline the
     identity roster is materialized once at ingest, not re-aggregated
@@ -1843,26 +1800,11 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dies with the JVM; the first invocation per application pays the
     build (the bench's disclosed warm-min protocol).
     """
-    from ..sources.layouts import dataset_cache_get
-
     identities = _er_identities(spark, sf_dir)
-    try:
-        banded = dataset_cache_get(
-            _ER_BANDED_CACHE,
-            spark,
-            sf_dir,
-            "lineitem",
-            lambda: _er_banded(identities),
-            tag="er_banded",
-        )
-    except FileNotFoundError:
-        # crafted fixture behind a mocked tables.load (no on-disk dataset
-        # to key the cache on): compute uncached — correctness-identical
-        banded = _er_banded(identities)
+    banded = cache.cached(
+        spark, sf_dir, ("lineitem",), "er-banded", lambda: _er_banded(identities)
+    )
     return er_resolve(identities, _banded=banded)
-
-
-_ER_BANDED_CACHE: dict = {}
 
 
 def _er_banded(identities: DataFrame) -> DataFrame:

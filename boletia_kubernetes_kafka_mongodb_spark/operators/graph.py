@@ -76,6 +76,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from . import dedup
 
 PR_ITERS = 8            # fixed power-iteration count (state: iter ∈ [0, 8])
@@ -92,36 +93,26 @@ BROADCAST_NODES_MAX = 100_000_000
 # edges/4M (~25k rows at 10^11 edges — always broadcastable)
 HUB_DEGREE_MIN = 4_000_000
 
-_JACCARD_PAIRS_CACHE: dict = {}
-
-
 def _jaccard_pairs_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_a, doc_b) exact-Jaccard pair list, kernel-run + checkpointed
-    ONCE per (application, dataset signature) — three graph operators
-    consume the same edge source, and without the cache each re-runs the
-    tiled kernel (~1.5 s at sf0.1) and re-materializes its own checkpoint
-    (the `_minhash_band_keys_cache` discipline; content-signature-keyed
-    via `dataset_cache_get`)."""
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _JACCARD_PAIRS_CACHE,
+    ONCE (see `cache`) — three graph operators consume the same edge
+    source, and without the cache each re-runs the tiled kernel (~1.5 s at
+    sf0.1) and re-materializes its own checkpoint (the
+    `_minhash_band_keys_cache` discipline)."""
+    return cache.cached(
         spark,
         sf_dir,
-        "documents",
+        ("documents",),
+        "graph-pairs",
         lambda: dedup.ext_dedup_ngram_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True),
-        tag="graph-pairs",
     )
-
-
-_PAIR_ARRAYS_CACHE: dict = {}
 
 
 def _pair_arrays(spark: SparkSession, sf_dir: str):
     """``(n_pairs, arrays)`` for the cached pair list, Arrow-collected ONCE
-    per (application, dataset signature); ``arrays`` is the (doc_a, doc_b)
+    (see `cache`); ``arrays`` is the (doc_a, doc_b)
     int64 numpy pair — or None when the graph is beyond the driver tier
     (the gate runs BEFORE any collect, so no code path ever pulls an
     unbounded edge list onto one node).
@@ -132,9 +123,8 @@ def _pair_arrays(spark: SparkSession, sf_dir: str):
     run at sf0.1, dwarfing the actual numpy kernels (~50 ms) — and re-ran
     the gate ``count()`` as a separate job. The pair list is exactly the
     frame `_jaccard_pairs_cache` already pins per dataset, so its count
-    and collected form are cached under the same key discipline; the
-    symmetric (src, dst) view is two O(n) numpy concatenations."""
-    from ..sources.layouts import dataset_cache_get
+    and collected form are cached alongside it; the symmetric (src, dst)
+    view is two O(n) numpy concatenations."""
 
     def _build():
         import numpy as np
@@ -152,9 +142,7 @@ def _pair_arrays(spark: SparkSession, sf_dir: str):
             ),
         )
 
-    return dataset_cache_get(
-        _PAIR_ARRAYS_CACHE, spark, sf_dir, "documents", _build, tag="graph-pair-arrays"
-    )
+    return cache.cached(spark, sf_dir, ("documents",), "graph-pair-arrays", _build)
 
 
 def _sym_arrays(a, b):
@@ -165,43 +153,31 @@ def _sym_arrays(a, b):
     return np.concatenate([a, b]), np.concatenate([b, a])
 
 
-_CC_ARRAYS_CACHE: dict = {}
-
-
 def _cc_arrays_cache(spark: SparkSession, sf_dir: str):
     """(nodes, component) of the pair graph's connected components, run
-    once per (application, dataset signature) over the cached pair arrays
-    — the min-label pointer-jumping result is a per-graph constant."""
-    from ..sources.layouts import dataset_cache_get
+    once (see `cache`) over the cached pair arrays — the min-label
+    pointer-jumping result is a per-graph constant."""
 
     def _build():
         _, arrays = _pair_arrays(spark, sf_dir)
         return dedup._cc_core(*arrays)
 
-    return dataset_cache_get(
-        _CC_ARRAYS_CACHE, spark, sf_dir, "documents", _build, tag="graph-cc-arrays"
-    )
-
-
-_SYM_INDEX_CACHE: dict = {}
+    return cache.cached(spark, sf_dir, ("documents",), "graph-cc-arrays", _build)
 
 
 def _sym_index_cache(spark: SparkSession, sf_dir: str):
-    """The driver tier's `_sym_index` (nodes, si, di, deg) built once per
-    (application, dataset signature) from the cached pair arrays — the
-    searchsorted/bincount constants are per-graph, not per-invocation.
-    Returns None outside the driver tier."""
-    from ..sources.layouts import dataset_cache_get
+    """The driver tier's `_sym_index` (nodes, si, di, deg) built once (see
+    `cache`) from the cached pair arrays — the searchsorted/bincount
+    constants are per-graph, not per-invocation. Returns None outside the
+    driver tier."""
 
     def _build():
         _, arrays = _pair_arrays(spark, sf_dir)
         if arrays is None:
-            return (None,)
-        return (_sym_index(*_sym_arrays(*arrays)),)
+            return None
+        return _sym_index(*_sym_arrays(*arrays))
 
-    return dataset_cache_get(
-        _SYM_INDEX_CACHE, spark, sf_dir, "documents", _build, tag="graph-sym-index"
-    )[0]
+    return cache.cached(spark, sf_dir, ("documents",), "graph-sym-index", _build)
 
 
 def _pagerank_nano(
@@ -696,19 +672,15 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagate(edges, lp_seed_frame(spark, sf_dir, edges))
 
 
-_LP_SEED_PDF_CACHE: dict = {}
-
-
 def _lp_driver_state_cache(spark: SparkSession, sf_dir: str):
-    """(seed pandas frame, si, di) for the driver tier, built ONCE per
-    (application, dataset signature): the vertex set comes from the
+    """(seed pandas frame, si, di) for the driver tier, built ONCE (see
+    `cache`): the vertex set comes from the
     already-collected symmetric edge arrays (numpy unique — no Spark
     distinct shuffle), the documents scan is pruned to it by a broadcast
     join before ONE bounded collect (≤ |vertices| rows, the same bound
     the old verts.join(docs).toPandas() path had — minus its
     per-invocation 4.6M-row distinct shuffle), and the seed-frame edge
     index (`_lp_edge_index`) is a per-graph constant."""
-    from ..sources.layouts import dataset_cache_get
 
     def _build():
         import numpy as np
@@ -744,9 +716,7 @@ def _lp_driver_state_cache(spark: SparkSession, sf_dir: str):
         )
         return seeds, si, di
 
-    return dataset_cache_get(
-        _LP_SEED_PDF_CACHE, spark, sf_dir, "documents", _build, tag="graph-lp-seeds"
-    )
+    return cache.cached(spark, sf_dir, ("documents",), "graph-lp-seeds", _build)
 
 
 def label_propagate(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 TRAIN_PCT = 80      # bucket < 80        → train
 VAL_PCT = 10        # 80 ≤ bucket < 90   → val; rest → test
@@ -172,11 +172,9 @@ def ensure_components_layout(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    from ..sources.layouts import dataset_cache_key
-
     from . import dedup
 
-    key = dataset_cache_key(sf_dir, "documents")
+    key = cache.signature(sf_dir, "documents")
     path = os.path.join(tempfile.gettempdir(), f"boletia_components_v1_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
@@ -871,10 +869,6 @@ def ext_split_drift_oracle() -> str:
 BLOOM_M = 1 << 16   # filter bits
 BLOOM_K = 3         # hash functions
 
-# (tag, applicationId, sf_dir, content signature) → packed 1024-long mask
-_BLOOM_MASK_CACHE: dict = {}
-
-
 def _bloom_pos(col, j: int) -> F.Column:
     """Bit position j of a shingle: 32-bit md5 slice of a seeded rendering,
     mod BLOOM_M — identical in Spark and DuckDB, so the filter's false
@@ -950,19 +944,11 @@ def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             mask[r.pos >> 6] |= 1 << (r.pos & 63)
         return [m - (1 << 64) if m >= (1 << 63) else m for m in mask]
 
-    # the packed filter is cached per (application, dataset signature) —
-    # it IS the precomputed artifact bloom decontamination exists to ship
-    # (the eval set is small and fixed; a deployment builds the filter at
-    # eval-set ingest, the `_band_index_path` discipline)
-    from ..sources.layouts import dataset_cache_get
-
-    try:
-        mask = dataset_cache_get(
-            _BLOOM_MASK_CACHE, spark, sf_dir, "documents", _build_mask,
-            tag="bloom-mask",
-        )
-    except FileNotFoundError:  # mocked tables.load fixture — build uncached
-        mask = _build_mask()
+    # the packed filter is cached (see `cache`) — it IS the precomputed
+    # artifact bloom decontamination exists to ship (the eval set is small
+    # and fixed; a deployment builds the filter at eval-set ingest, the
+    # `_band_index_path` discipline)
+    mask = cache.cached(spark, sf_dir, ("documents",), "bloom-mask", _build_mask)
     mask_lit = F.lit(mask)
 
     def _bit_set(j: int) -> F.Column:

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -55,18 +55,13 @@ def _with_norm(emb: DataFrame) -> DataFrame:
     )
 
 
-_QUERY_VEC_CACHE: dict = {}
-
-
 def query_vector(spark: SparkSession, sf_dir: str):
     """The fixed probe vector (vec_id = QUERY_VEC_ID) as a numpy array,
-    fetched once per (application, dataset signature) — every ANN serve
+    fetched once (see `cache`) — every ANN serve
     needs it, and re-running the 1-row pushdown scan per probe bills a
     whole Spark job to each query for a value that cannot change while the
     dataset doesn't."""
     import numpy as np
-
-    from ..sources.layouts import dataset_cache_get
 
     def _fetch():
         emb = tables.load(spark, sf_dir, "embeddings")
@@ -75,7 +70,7 @@ def query_vector(spark: SparkSession, sf_dir: str):
             dtype=np.float64,
         )
 
-    return dataset_cache_get(_QUERY_VEC_CACHE, spark, sf_dir, "embeddings", _fetch)
+    return cache.cached(spark, sf_dir, ("embeddings",), "query-vector", _fetch)
 
 
 def ext_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,9 +289,7 @@ def _srp_layout_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    from ..sources.layouts import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "embeddings")
+    key = cache.signature(sf_dir, "embeddings")
     # LAYOUT_FMT version in the path: a quantizer/banding CODE change must
     # invalidate on-disk layouts built by older code (the dataset key alone
     # only tracks DATA changes)
@@ -901,11 +894,9 @@ def _ivf_layout_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    from ..sources.layouts import dataset_cache_key
-
     # content-signature key: a regenerated embeddings table invalidates the
     # layout (path-only keys serve stale indexes silently)
-    key = dataset_cache_key(sf_dir, "embeddings")
+    key = cache.signature(sf_dir, "embeddings")
     # v2: assignment rounds similarities to 6dp before argmax (cross-engine
     # determinism) — older layouts used unrounded argmax
     return os.path.join(tempfile.gettempdir(), f"boletia_ivf_layout_v2_{key}")
@@ -978,16 +969,13 @@ def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF index refresh under corpus growth (round 10)
 # ---------------------------------------------------------------------------
 
-_IVF_STANDING_QUANT_CACHE: dict = {}
-
-
 def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     """The FROZEN coarse quantizer of the standing index: centroids are the
     IVF_NLIST lowest non-null vec_ids of the STANDING corpus (the non-test
     hash splits — the corpus that existed when the index was built), with
     centroid id = rank position (the `kmeans_init_centroids` derivation
     applied to the IVF family). Same 6dp-rounded cosine argmax as
-    ``_build_ivf_quantizer``; cached per (application, dataset signature).
+    ``_build_ivf_quantizer``; cached (see `cache`).
 
     Freezing is the point of a refresh: arriving vectors are assigned by
     the quantizer that PLACED the existing billions of rows — re-deriving
@@ -998,7 +986,6 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     import numpy as np
 
     from .sampling import split_assignment
-    from ..sources.layouts import dataset_cache_get
 
     def _build():
         emb = tables.load(spark, sf_dir, "embeddings")
@@ -1028,9 +1015,8 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
 
         return assign, C, c_norm
 
-    return dataset_cache_get(
-        _IVF_STANDING_QUANT_CACHE, spark, sf_dir, "embeddings", _build,
-        tag="standing",
+    return cache.cached(
+        spark, sf_dir, ("embeddings",), "ivf-standing-quantizer", _build
     )
 
 
@@ -1038,9 +1024,7 @@ def _ivf_refresh_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    from ..sources.layouts import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "embeddings")
+    key = cache.signature(sf_dir, "embeddings")
     return os.path.join(tempfile.gettempdir(), f"boletia_ivf_refresh_v1_{key}")
 
 
@@ -1077,7 +1061,7 @@ def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     emb = tables.load(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    layouts._invalidate_layout(path)
+    cache.clear(path)
     # build: static overwrite clears any partial prior attempt
     (
         emb.where(split_assignment("vec_id") != "test")
@@ -1094,9 +1078,9 @@ def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
         .partitionBy("ivf_list")
         .parquet(path)
     )
-    layouts._invalidate_layout(path)
+    cache.clear(path)
     layouts.compact_layout(spark, path)
-    layouts._invalidate_layout(path)
+    cache.clear(path)
     with open(marker, "w") as f:
         f.write("build+append+compact complete\n")
     return path
@@ -1212,9 +1196,6 @@ def ann_topk_over_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
 PROMOTE_K = 5        # recall@k of the audit
 PROMOTE_NQ = 4       # probe queries (lowest non-null vec_ids)
 PROMOTE_MIN_HITS = 10  # promote iff hits >= this, i.e. recall >= 0.5 of K*NQ
-
-_PROMOTE_CACHE: dict = {}
-
 
 def _promote_new_quantizer(spark: SparkSession, sf_dir: str):
     """The CANDIDATE re-clustering's quantizer: IVF_NLIST lowest ODD
@@ -1378,7 +1359,6 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest price of measuring recall, run on a sampled query set in
     production); everything committed moves through the pointer-file
     protocol (crash-atomic, power-loss-durable after round 11/12)."""
-    from ..sources.layouts import dataset_cache_get
 
     def build():
         import shutil
@@ -1454,9 +1434,7 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             shutil.rmtree(work, ignore_errors=True)
 
-    rows = dataset_cache_get(
-        _PROMOTE_CACHE, spark, sf_dir, "embeddings", build, tag="ann_promote"
-    )
+    rows = cache.cached(spark, sf_dir, ("embeddings",), "ann-promote", build)
     return spark.createDataFrame(
         rows,
         "candidate string, audited_hits long, audited_recall double, "
@@ -1917,20 +1895,15 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     inner products are cosines. Deterministic throughout: hash-ordered
     sample, evenly-spaced init, fixed Lloyd iteration count — no RNG.
 
-    Cached per (application, sf_dir) like `_kmeans_fit`: the codebooks are
-    the index's model artifact — trained once when the index is built,
-    served by every query."""
-    import numpy as np
-
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _KMEANS_FIT_CACHE,
+    Cached (see `cache`) like `_kmeans_fit`: the codebooks are the
+    index's model artifact — trained once when the index is built, served
+    by every query."""
+    return cache.cached(
         spark,
         sf_dir,
-        "embeddings",
+        ("embeddings",),
+        "pq-codebooks",
         lambda: _pq_codebooks_build(spark, sf_dir),
-        tag="pq",
     )
 
 
@@ -2393,9 +2366,6 @@ def _kmeans_partials():
     return partials
 
 
-_KMEANS_FIT_CACHE: dict = {}
-
-
 def _kmeans_fit(spark: SparkSession, sf_dir: str):
     """Run KMEANS_ITERS Lloyd iterations; return (base frame, centroids).
 
@@ -2404,22 +2374,19 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     literal centroids) + one K-group aggregation whose K×(dim+1) result is
     the ONLY thing the driver ever holds.
 
-    The fitted model is cached per (application, sf_dir) — same rationale
-    as the CDC message-log cache: three operators (cluster report, label
+    The fitted model is cached (see `cache`) — same rationale as the CDC
+    message-log cache: three operators (cluster report, label
     assignments, SemDeDup prune) SERVE the same trained model, and a
     deployment trains once and serves many; re-running Lloyd per query
     would measure training three times and serving once. First call pays
     the full fit.
     """
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _KMEANS_FIT_CACHE,
+    return cache.cached(
         spark,
         sf_dir,
-        "embeddings",
+        ("embeddings",),
+        "kmeans-fit",
         lambda: _kmeans_fit_build(spark, sf_dir),
-        tag="fit",
     )
 
 

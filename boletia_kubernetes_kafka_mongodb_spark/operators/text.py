@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 TOKEN_RE = "[a-z0-9]+"
 
@@ -1449,23 +1449,17 @@ def ext_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_LEARN_CACHE: dict = {}
-
-
 def _bpe_learn(spark: SparkSession, sf_dir: str) -> list:
     """The merge-learning loop; returns [(rank, left, right, count), ...].
 
-    Cached per (application, sf_dir, dataset signature) like `_kmeans_fit`:
-    the merge table is the trained tokenizer — `ext_tokenizer_apply` SERVES
-    it, and a deployment trains once; the content signature keeps a
-    same-path regenerated fixture from serving stale merges."""
-    from ..sources.layouts import dataset_cache_get
-
-    return dataset_cache_get(
-        _BPE_LEARN_CACHE,
+    Cached (see `cache`) like `_kmeans_fit`: the merge table is the
+    trained tokenizer — `ext_tokenizer_apply` SERVES it, and a deployment
+    trains once."""
+    return cache.cached(
         spark,
         sf_dir,
-        "documents",
+        ("documents",),
+        "bpe-learn",
         lambda: _bpe_learn_build(spark, sf_dir),
     )
 
@@ -1941,20 +1935,17 @@ def ext_bpe_vocab_sweep_oracle() -> str:
 def _bpe_learn_train(spark: SparkSession, sf_dir: str) -> list:
     """The merge loop fit on the TRAIN+VAL hash split only (the held-out
     'test' split never touches training) — the model the OOV audit
-    evaluates. Cached like `_bpe_learn` (tag-discriminated: same dict,
-    different model)."""
+    evaluates. Cached like `_bpe_learn` under its own tag."""
     from .sampling import split_assignment
-    from ..sources.layouts import dataset_cache_get
 
-    return dataset_cache_get(
-        _BPE_LEARN_CACHE,
+    return cache.cached(
         spark,
         sf_dir,
-        "documents",
+        ("documents",),
+        "bpe-learn-train-split",
         lambda: _bpe_learn_build(
             spark, sf_dir, docs_filter=split_assignment("doc_id") != "test"
         ),
-        tag="train_split",
     )
 
 
@@ -2272,21 +2263,16 @@ def quality_classifier_fit_apply(spark: SparkSession, docs: DataFrame) -> DataFr
     return quality_classifier_score(feats, w)
 
 
-_QC_FIT_CACHE: dict = {}
-
-
 def _qc_fit_cached(spark: SparkSession, sf_dir: str):
     """(checkpointed feature frame, n, weights) for the documents table,
-    fit ONCE per (application, dataset signature) — THREE driver ids
+    fit ONCE (see `cache`) — THREE driver ids
     consume the identical deterministic fit (`ext_quality_classifier`,
     `ext_quality_calibration`, `ext_quality_threshold`), and without the
     cache each re-runs the 8-collect GD loop (~1.5 s at sf0.1) on a model
     that cannot change while the dataset doesn't (the
-    `_jaccard_pairs_cache` discipline; content-signature-keyed via
-    `dataset_cache_get`). The crafted-corpus tests keep driving
-    `quality_classifier_fit_apply` directly — arbitrary frames never
-    enter this cache."""
-    from ..sources.layouts import dataset_cache_get
+    `_jaccard_pairs_cache` discipline). The crafted-corpus tests keep
+    driving `quality_classifier_fit_apply` directly — arbitrary frames
+    never enter this cache."""
 
     def _build():
         feats = _qc_features(
@@ -2296,9 +2282,7 @@ def _qc_fit_cached(spark: SparkSession, sf_dir: str):
         w = quality_classifier_fit(feats, n) if n else [0.0] * 5
         return feats, n, w
 
-    return dataset_cache_get(
-        _QC_FIT_CACHE, spark, sf_dir, "documents", _build, tag="qc-fit"
-    )
+    return cache.cached(spark, sf_dir, ("documents",), "qc-fit", _build)
 
 
 def quality_classifier_fit(feats: DataFrame, n: int) -> list[float]:

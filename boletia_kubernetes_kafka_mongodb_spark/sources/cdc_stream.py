@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 from .catalog import (
     MESSAGE_SCHEMA,
     TOPIC_EVENTOS,
@@ -36,9 +36,6 @@ def _double_encode(doc_json):
     return json_quote_string(doc_json)
 
 
-_LOG_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def build_message_log(spark: SparkSession, sf_dir: str, dup_fraction_mod: int = 20) -> DataFrame:
     """Deterministic interleaved CDC history over the domain views.
 
@@ -47,21 +44,20 @@ def build_message_log(spark: SparkSession, sf_dir: str, dup_fraction_mod: int = 
     reservation-lifecycle messages in reservas.seq order. Every
     ``seq % dup_fraction_mod == 7`` message is emitted twice (redelivery).
 
-    The built log is cached per (application, sf_dir, mod) behind a lazy
-    ``localCheckpoint``: the log is the INPUT every consumer-side query
-    parses — in the reference it exists once on the broker, so re-encoding
+    The built log is cached (see `cache`; it reads ``part`` and
+    ``lineitem``) behind a lazy ``localCheckpoint``: the log is the INPUT
+    every consumer-side query parses — in the reference it exists once on the broker, so re-encoding
     it per query both overstates the decode path's cost and re-does work no
     deployment repeats. First use pays the encode once; every later query
     over the same fixture starts from the materialized batch (at real scale
     the checkpoint is the broker/object-store itself).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, dup_fraction_mod)
-    cached = _LOG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    log = _build_message_log(spark, sf_dir, dup_fraction_mod).localCheckpoint(eager=False)
-    _LOG_CACHE[key] = log
-    return log
+    return cache.cached(
+        spark, sf_dir, ("part", "lineitem"), f"message-log-{dup_fraction_mod}",
+        lambda: _build_message_log(spark, sf_dir, dup_fraction_mod).localCheckpoint(
+            eager=False
+        ),
+    )
 
 
 def _build_message_log(spark: SparkSession, sf_dir: str, dup_fraction_mod: int) -> DataFrame:

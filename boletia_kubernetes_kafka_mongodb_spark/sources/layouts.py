@@ -27,95 +27,23 @@ its signature inspection (same constraint as operators/_pandas_udfs.py).
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import tables
+from .. import cache, tables
 
 
 # ---------------------------------------------------------------------------
 # IVF-partitioned embedding layout
 # ---------------------------------------------------------------------------
 
-def dataset_cache_key(sf_dir: str, table: str) -> str:
-    """Cache key for derived on-disk artifacts (IVF layout, band index):
-    hashes the source table's (path, mtime, size) so a REGENERATED fixture
-    at the same path invalidates the artifact instead of silently serving
-    stale verdicts — _SUCCESS alone cannot distinguish 'built from this
-    data' from 'built from whatever used to live here'."""
-    import hashlib
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(path)
-        # os.stat succeeds on directory datasets too, but a directory's
-        # size/mtime don't reflect file rewrites inside it — hash the
-        # RECURSIVE per-file (relpath, mtime, size) listing (review fix:
-        # a top-level-only scandir missed rewrites inside Hive-partition
-        # subdirectories entirely)
-        if os.path.isdir(path):
-
-            def _entry(root, f):
-                st1 = os.stat(os.path.join(root, f))
-                return (
-                    os.path.relpath(os.path.join(root, f), path),
-                    st1.st_mtime_ns,
-                    st1.st_size,
-                )
-
-            parts = sorted(
-                _entry(root, f)
-                for root, _dirs, files in os.walk(path)
-                for f in files
-            )
-            sig = f"{path}:{parts}"
-        else:
-            sig = f"{path}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        # missing dataset: fail loudly rather than silently degrading to a
-        # path-only key (the staleness class this function exists to stop)
-        raise FileNotFoundError(f"dataset not found for cache key: {path}")
-    return hashlib.md5(sig.encode()).hexdigest()[:12]
-
-
-def dataset_cache_get(cache: dict, spark, sf_dir: str, table: str, build, tag: str = ""):
-    """Shared get-or-compute for per-dataset session caches: key =
-    (tag, applicationId, sf_dir, content signature of ``table``). One
-    helper so no cache site can forget the content-signature component
-    (the round-3 review found exactly that omission in the PQ codebook
-    cache); ``tag`` discriminates multiple models sharing one dict."""
-    key = (
-        tag,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_cache_key(sf_dir, table),
-    )
-    val = cache.get(key)
-    if val is None:
-        val = build()
-        cache[key] = val
-    return val
-
-
-_IVF_QUANTIZER_CACHE: dict = {}
-
-
 def ivf_assignment_udf(spark: SparkSession, sf_dir: str):
     """The same deterministic coarse quantizer ``ext_ann_ivf_topk`` uses,
     as a reusable (assign_udf, centroid_matrix, centroid_norms) triple.
 
-    The centroid fetch is cached per (application, sf_dir) — the quantizer
-    is part of the index (it was fixed when the layout was written), so
-    re-collecting it per probe would bill index construction to every
-    query."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import IVF_NLIST
-
-    def _build():
-        return _build_ivf_quantizer(spark, sf_dir)
-
-    return dataset_cache_get(
-        _IVF_QUANTIZER_CACHE, spark, sf_dir, "embeddings", _build
+    The centroid fetch is cached — the quantizer is part of the index (it
+    was fixed when the layout was written), so re-collecting it per probe
+    would bill index construction to every query."""
+    return cache.cached(
+        spark, sf_dir, ("embeddings",), "ivf-quantizer",
+        lambda: _build_ivf_quantizer(spark, sf_dir),
     )
 
 
@@ -150,9 +78,6 @@ def _build_ivf_quantizer(spark: SparkSession, sf_dir: str):
     return assign, C, c_norm
 
 
-_LAYOUT_DF_CACHE: dict = {}
-
-
 def read_layout(spark: SparkSession, layout_path: str) -> DataFrame:
     """Session-cached parquet read of a partitioned layout.
 
@@ -160,23 +85,12 @@ def read_layout(spark: SparkSession, layout_path: str) -> DataFrame:
     a 512-directory band layout that is ~2 s of pure file listing billed
     to EVERY probe. A deployment registers the layout as a catalog table
     and lists once; this cache is that model for ad-hoc paths (layout
-    paths are content-keyed, so a regenerated dataset lands at a NEW path
-    and can never hit a stale entry). Partition pruning still happens per
-    query on top of the cached relation."""
-    key = (spark.sparkContext.applicationId, layout_path)
-    df = _LAYOUT_DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(layout_path)
-        _LAYOUT_DF_CACHE[key] = df
-    return df
-
-
-def _invalidate_layout(layout_path: str) -> None:
-    """Drop cached relations for a path about to be rewritten (writers call
-    this — in-place rewrites are the one way a cached listing could go
-    stale)."""
-    for key in [k for k in _LAYOUT_DF_CACHE if k[1] == layout_path]:
-        del _LAYOUT_DF_CACHE[key]
+    paths are content-keyed, and writers ``cache.clear`` a path before
+    rewriting it). Partition pruning still happens per query on top of
+    the cached relation."""
+    return cache.cached(
+        spark, layout_path, (), "layout", lambda: spark.read.parquet(layout_path)
+    )
 
 
 def write_ivf_layout(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -186,7 +100,7 @@ def write_ivf_layout(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     is a partition-pruned scan. Hive-style partitioning means the list id
     never occupies row space — it lives in the directory name.
     """
-    _invalidate_layout(out_path)
+    cache.clear(out_path)
     assign, _, _ = ivf_assignment_udf(spark, sf_dir)
     emb = tables.load(spark, sf_dir, "embeddings")
     (
@@ -303,7 +217,7 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     session's catalog doesn't have them yet, and return the database name.
 
     The db name carries the source tables' content signature, so a
-    regenerated fixture gets fresh buckets (the dataset_cache_key staleness
+    regenerated fixture gets fresh buckets (the `cache.signature` staleness
     contract); the files live under the system temp dir, NOT the repo's
     warehouse. Catalog state is session-scoped (in-memory catalog), so a
     fresh driver session re-registers — the bucketed WRITE is the one-time
@@ -324,8 +238,8 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
         c for c in spark.sparkContext.applicationId if c.isalnum()
     ).lower()[-12:]
     key = (
-        dataset_cache_key(sf_dir, "part")[:6]
-        + dataset_cache_key(sf_dir, "lineitem")[:6]
+        cache.signature(sf_dir, "part")[:6]
+        + cache.signature(sf_dir, "lineitem")[:6]
         + "_" + app
     )
     db = f"boletia_bucketed_{key}"
@@ -743,7 +657,7 @@ def write_srp_band_layout(spark: SparkSession, sf_dir: str, out_path: str) -> No
     B bucket partitions — partition pruning at planning time, no per-row
     band filter, no full-corpus scan. This is the round-2 verdict's ask:
     the 100 TB serving path `ext_ann_lsh_topk`'s docstring promised."""
-    _invalidate_layout(out_path)
+    cache.clear(out_path)
     emb = tables.load(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     bucket_ids = srp_bucket_ids_udf(dim)

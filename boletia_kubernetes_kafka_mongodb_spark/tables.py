@@ -37,6 +37,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import cache
+
 TABLES = (
     "region",
     "nation",
@@ -49,10 +51,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# (applicationId, path, fan, mtime_ns, size) → loaded DataFrame (logical
-# plan only — see `load`); single-file fixtures only
-_LOAD_CACHE: dict = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, fan: bool = False) -> DataFrame:
@@ -84,44 +82,25 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan: bool = False) -> Data
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    # memoize the loaded DataFrame per (application, file signature, fan):
-    # `spark.read.parquet` pays driver-side file listing + footer/schema
-    # reads on EVERY call, and the engine's 149 queries loaded each base
-    # table afresh per invocation (measured ~0.1-0.3 s of pure plan-build
-    # per query at sf0.1; the same listing cost recurs at any scale —
-    # guide §6 file-listing note). The cached object is a LOGICAL plan:
-    # every action still computes from parquet. mtime+size key a
-    # single-file fixture regeneration to a fresh entry; directory-style
-    # datasets (mtime of the dir does not reflect inner rewrites) are
-    # deliberately NOT cached.
-    try:
-        st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            path,
-            fan,
-            st.st_mtime_ns,
-            st.st_size,
-        ) if not os.path.isdir(path) else None
-    except OSError:
-        key = None
-    if key is not None:
-        cached = _LOAD_CACHE.get(key)
-        if cached is not None:
-            return cached
-    df = spark.read.parquet(path)
-    if fan:
-        target = max(spark.sparkContext.defaultParallelism * 2, 8)
-        max_split = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
-        try:
-            small = os.path.getsize(path) < target * max_split
-        except OSError:  # directory-style dataset — let natural splits rule
-            small = False
-        if small:
-            df = df.repartition(target)
-    if key is not None:
-        _LOAD_CACHE[key] = df
-    return df
+
+    # memoized (see `cache`): `spark.read.parquet` pays driver-side file
+    # listing + footer/schema reads on EVERY call (measured ~0.1-0.3 s of
+    # pure plan-build per query at sf0.1). The cached object is a LOGICAL
+    # plan: every action still computes from parquet.
+    def _read():
+        df = spark.read.parquet(path)
+        if fan:
+            target = max(spark.sparkContext.defaultParallelism * 2, 8)
+            max_split = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
+            try:
+                small = os.path.getsize(path) < target * max_split
+            except OSError:  # directory-style dataset — let natural splits rule
+                small = False
+            if small:
+                df = df.repartition(target)
+        return df
+
+    return cache.cached(spark, sf_dir, (name,), f"load-fan={fan}", _read)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

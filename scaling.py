@@ -268,13 +268,14 @@ def _incremental_append_leg(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from boletia_kubernetes_kafka_mongodb_spark import cache
     from boletia_kubernetes_kafka_mongodb_spark.operators import similarity as S
     from boletia_kubernetes_kafka_mongodb_spark.operators.sampling import (
         split_assignment,
     )
     from boletia_kubernetes_kafka_mongodb_spark.sources import layouts
 
-    key = layouts.dataset_cache_key(sf_dir, "embeddings")
+    key = cache.signature(sf_dir, "embeddings")
     idx = layouts.IncrementalIvfIndex(
         spark, os.path.join(tempfile.gettempdir(), f"boletia_incidx_{key}")
     )

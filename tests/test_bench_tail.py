@@ -11,7 +11,8 @@ real byte counts over the real 149-id registry:
 2. the final line produced by ``split_final_queries`` stays inside
    ``_FINAL_LINE_BUDGET`` for worst-case value widths;
 3. the two parts partition the id set exactly (nothing dropped, nothing
-   doubled) and the final line carries the SLOWEST ids.
+   doubled), the final line carries the SLOWEST ids, and the penultimate
+   line runs fastest first.
 """
 
 from __future__ import annotations
@@ -70,17 +71,20 @@ def test_final_line_within_budget_worst_case():
 
 def test_parts_partition_ids_and_slowest_go_final():
     summary = _worst_case_summary()
-    # distinct, realistic spread of timings
-    timings = {q: 0.1 + 0.05 * i for i, q in enumerate(QIDS)}
+    # distinct, realistic spread of timings, registered in an order that
+    # is neither ascending nor descending in cost
+    timings = {q: 0.1 + 0.05 * ((i * 37) % len(QIDS)) for i, q in enumerate(QIDS)}
     part2, part1 = bench.split_final_queries(summary, timings)
     assert set(part2) | set(part1) == set(QIDS)
     assert not (set(part2) & set(part1))
-    if part1:
-        # every id in the final line is at least as slow as every id
-        # relegated to the penultimate line
-        assert min(timings[q] for q in part2) >= max(
-            timings[q] for q in part1
-        )
+    assert part1
+    # every id in the final line is at least as slow as every id
+    # relegated to the penultimate line
+    assert min(timings[q] for q in part2) >= max(timings[q] for q in part1)
+    # the penultimate line runs fastest first: tail truncation eats its
+    # start, so the slower ids must sit at its end
+    costs = [timings[q] for q in part1]
+    assert costs == sorted(costs)
 
 
 def test_small_runs_fit_one_line():

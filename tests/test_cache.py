@@ -1,0 +1,224 @@
+"""The session cache (`cache.py`): registry semantics, the missing-dataset
+rule, and content keying against in-place fixture rewrites."""
+
+from __future__ import annotations
+
+import shutil
+from types import SimpleNamespace
+from unittest import mock
+
+import pytest
+
+from boletia_kubernetes_kafka_mongodb_spark import cache
+from tests.conftest import SF_SMOKE, compare_with_oracle
+
+
+@pytest.fixture
+def fresh_cache(monkeypatch):
+    """An empty private registry with a small bound; the session's real
+    entries are untouched."""
+    from collections import OrderedDict
+
+    monkeypatch.setattr(cache, "_CACHE", OrderedDict())
+    monkeypatch.setattr(cache, "MAX_ENTRIES", 3)
+    return cache._CACHE
+
+
+def _fake_spark(app="app-1"):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
+def _dataset(root, name, *tables):
+    d = root / name
+    d.mkdir()
+    for t in tables:
+        (d / f"{t}.parquet").write_bytes(b"x" * 8)
+    return str(d)
+
+
+def test_hit_returns_same_object(fresh_cache, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+    spark = _fake_spark()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return object()
+
+    first = cache.cached(spark, sf, ("documents",), "t", build)
+    assert cache.cached(spark, sf, ("documents",), "t", build) is first
+    assert len(builds) == 1
+    # tag and application are part of the key
+    assert cache.cached(spark, sf, ("documents",), "u", build) is not first
+    assert cache.cached(_fake_spark("app-2"), sf, ("documents",), "t", build) is not first
+
+
+def test_rewrite_signs_a_fresh_entry(fresh_cache, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+    spark = _fake_spark()
+    first = cache.cached(spark, sf, ("documents",), "t", object)
+    (tmp_path / "a" / "documents.parquet").write_bytes(b"y" * 16)
+    assert cache.cached(spark, sf, ("documents",), "t", object) is not first
+
+
+def test_bound_evicts_least_recently_used(fresh_cache, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+    spark = _fake_spark()
+    vals = {t: cache.cached(spark, sf, ("documents",), t, object) for t in "abc"}
+    # touch "a": "b" becomes the least recently used entry
+    assert cache.cached(spark, sf, ("documents",), "a", object) is vals["a"]
+    cache.cached(spark, sf, ("documents",), "d", object)
+    assert len(fresh_cache) == cache.MAX_ENTRIES
+    assert [k[0] for k in fresh_cache] == ["c", "a", "d"]
+    assert cache.cached(spark, sf, ("documents",), "b", object) is not vals["b"]
+
+
+def test_clear_path_drops_only_that_paths_entries(fresh_cache, tmp_path, monkeypatch):
+    monkeypatch.setattr(cache, "MAX_ENTRIES", 10)
+    spark = _fake_spark()
+    a = _dataset(tmp_path, "a", "documents", "lineitem")
+    b = _dataset(tmp_path, "b", "documents")
+    layout = str(tmp_path / "layout")
+    va = cache.cached(spark, a, ("documents",), "t", object)
+    vl = cache.cached(spark, a, ("lineitem",), "t", object)
+    vb = cache.cached(spark, b, ("documents",), "t", object)
+    vlay = cache.cached(spark, layout, (), "layout", object)
+
+    cache.clear(layout)
+    assert cache.cached(spark, layout, (), "layout", object) is not vlay
+    assert cache.cached(spark, a, ("documents",), "t", object) is va
+
+    cache.clear(a)
+    assert cache.cached(spark, a, ("documents",), "t", object) is not va
+    assert cache.cached(spark, a, ("lineitem",), "t", object) is not vl
+    assert cache.cached(spark, b, ("documents",), "t", object) is vb
+
+    cache.clear()
+    assert not fresh_cache
+
+
+def test_concurrent_lookups_keep_the_bound(fresh_cache, tmp_path):
+    """Threads hitting and evicting the same small registry: no lookup
+    fails and the bound holds."""
+    import sys
+    import threading
+
+    sf = _dataset(tmp_path, "a", "documents")
+    spark = _fake_spark()
+    errors = []
+
+    def worker(seed):
+        try:
+            for i in range(2000):
+                tag = str((i * seed) % 5)
+                assert cache.cached(spark, sf, ("documents",), tag, object) is not None
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in (1, 2, 3, 7, 11, 13)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(fresh_cache) <= cache.MAX_ENTRIES
+
+
+def test_missing_dataset_builds_uncached(fresh_cache, tmp_path):
+    spark = _fake_spark()
+    missing = str(tmp_path / "nowhere")
+    first = cache.cached(spark, missing, ("documents",), "t", object)
+    assert cache.cached(spark, missing, ("documents",), "t", object) is not first
+    assert not fresh_cache
+    with pytest.raises(FileNotFoundError):
+        cache.signature(missing, "documents")
+
+
+def test_simhash_under_mocked_load_matches_bruteforce(spark, tmp_path):
+    """ext_dedup_simhash over a crafted corpus behind a mocked tables.load
+    whose sf_dir has no dataset on disk: every cached stage builds
+    uncached, and the pairs equal a brute-force banded Hamming check."""
+    import random
+
+    from boletia_kubernetes_kafka_mongodb_spark.operators import dedup as D
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    rows = []
+    for doc_id in range(60):
+        if doc_id % 3 and rows:  # near-copy of an earlier doc: 0-3 edits
+            toks = rng.choice(rows)[1].split()
+            for _ in range(rng.randint(0, 3)):
+                toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        else:
+            toks = [rng.choice(vocab) for _ in range(rng.randint(0, 20))]
+        text = " ".join(toks)
+        rows.append((doc_id, text, rng.choice(["en", "es"]), "s", len(text)))
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    sigs = [
+        (r.doc_id, r.lang, r.simhash & ((1 << 64) - 1))
+        for r in D.simhash_signatures(docs).collect()
+    ]
+
+    def bands(s):
+        return [(s >> (16 * b)) & 0xFFFF for b in range(D.SIMHASH_BANDS)]
+
+    want = set()
+    for ida, la, sa in sigs:
+        for idb, lb, sb in sigs:
+            if ida >= idb or la != lb:
+                continue
+            ham = bin(sa ^ sb).count("1")
+            if ham <= D.SIMHASH_MAX_HAMMING and any(
+                x == y for x, y in zip(bands(sa), bands(sb))
+            ):
+                want.add((ida, idb, ham))
+
+    sf_dir = str(tmp_path / "no-dataset")
+    with mock.patch.object(D.tables, "load", return_value=docs):
+        got = {
+            (r.doc_a, r.doc_b, r.hamming)
+            for r in D.ext_dedup_simhash(spark, sf_dir).collect()
+        }
+    assert want, "crafted corpus should contain near-duplicates"
+    assert got == want
+
+
+def test_rewritten_fixture_is_not_served_stale(spark, duck, tmp_path):
+    """Rewriting documents/lineitem in place at the SAME path must not
+    serve results computed from the old rows."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE, sf)
+    oracle = duck.cursor()
+    for name in (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split():
+        oracle.execute(
+            f"CREATE TEMP VIEW {name} AS SELECT * FROM '{sf}/{name}.parquet'"
+        )
+    fns, sqls = entrymod.queries(), entrymod.oracle_sql()
+    ids = ("ext_dedup_ngram_jaccard", "cdc_broker_metrics")
+    try:
+        for qid in ids:
+            compare_with_oracle(spark, oracle, fns[qid], sqls[qid], sf_dir=str(sf))
+        for name in ("documents", "lineitem"):
+            path = sf / f"{name}.parquet"
+            t = pq.read_table(path)
+            pq.write_table(t.take(list(range(0, t.num_rows, 2))), path)
+        for qid in ids:
+            compare_with_oracle(spark, oracle, fns[qid], sqls[qid], sf_dir=str(sf))
+    finally:
+        oracle.close()
+        cache.clear(str(sf))

@@ -158,9 +158,8 @@ def test_tiled_kernels_match_bruteforce_on_random_corpora(spark):
     doesn't have: empty docs, single-token docs, exact duplicates, docs
     colliding into the same block, multiple langs with identical texts.
 
-    NOTE: sf_dir must be unique per generated corpus — ``_token_hash_sets``
-    caches per (application, sf_dir), so reusing a key would silently serve
-    the previous corpus.
+    The ``sf_dir`` names hold no dataset on disk, so the session cache
+    builds every stage uncached for the mocked corpus.
     """
     import random
     import re as _re
