@@ -25,4 +25,20 @@ Layout
 - ``plans``      — plan-inspection helpers (assert pushdown / broadcast)
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Executor workers need not be able to import this package: they get the
+# driver's code by value. cloudpickle serializes every function, class and
+# constant of a registered package into the closure that references it
+# (cluster workers without ``--py-files``, or a driver started outside the
+# repo, have no ``boletia_kubernetes_kafka_mongodb_spark`` on ``sys.path``).
+# The rule this sets: an executor closure may call package functions and
+# read package constants. It must never hold a package MODULE object or a
+# stateful global (the ``cache`` lock, a SparkSession): that module would be
+# pickled by value along with the closure, and locks or sessions do not
+# pickle.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

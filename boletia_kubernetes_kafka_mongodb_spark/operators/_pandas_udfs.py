@@ -1,94 +1,14 @@
 """Arrow-batched pandas UDFs.
 
-NOTE 1: deliberately NO ``from __future__ import annotations`` here —
+NOTE: deliberately NO ``from __future__ import annotations`` here —
 ``pandas_udf`` resolves the type hints at decoration time, and deferred
 (stringified) annotations break its signature inspection.
-
-NOTE 2: this module registers itself for cloudpickle BY-VALUE serialization.
-Executor Python workers do not share the driver's ``sys.path``, so a UDF
-pickled by reference (module path) dies with ModuleNotFoundError on any
-cluster where the package isn't shipped via ``--py-files``. By-value
-pickling makes every UDF here self-contained on the wire.
 """
-
-import sys
 
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
-
-try:  # make all UDFs in this module self-contained when serialized
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except Exception:  # pragma: no cover - older cloudpickle without the API
-    pass
-
-
-def make_admission_map_batches():
-    """mapInPandas admission fold over (evento, seq)-sorted partitions.
-
-    One python pass per Arrow batch instead of one applyInPandas call per
-    group (~1 ms × n_groups of overhead). Groups may span batch boundaries
-    within a partition, so per-key state carries across the iterator.
-    """
-
-    def fold(batches):
-        import pandas as pd
-
-        state = {}  # evento -> available (carries across batches in partition)
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            admitted, after = [], []
-            for ev, op, qty, cap in zip(
-                pdf["evento"], pdf["op"], pdf["cantidad"], pdf["capacidad"]
-            ):
-                available = state.get(ev)
-                if available is None:
-                    available = int(cap)
-                qty = int(qty)
-                if op == "reserve":
-                    ok = available >= qty
-                    if ok:
-                        available -= qty
-                else:
-                    ok = True
-                    available += qty
-                state[ev] = available
-                admitted.append(ok)
-                after.append(available)
-            yield pd.DataFrame(
-                {
-                    "evento": pdf["evento"],
-                    "seq": pdf["seq"],
-                    "_id": pdf["_id"],
-                    "email": pdf["email"],
-                    "op": pdf["op"],
-                    "cantidad": pdf["cantidad"],
-                    "admitted": admitted,
-                    "disponible_despues": after,
-                }
-            )
-
-    return fold
-
-
-def _unwrap(maybe_broadcast):
-    """Accept either raw data or a pyspark Broadcast handle (preferred — the
-    closure then ships only the handle and executors fetch the data once per
-    JVM instead of once per task)."""
-    return maybe_broadcast.value if hasattr(maybe_broadcast, "value") else maybe_broadcast
-
-
-def _popcount_rows(x):
-    """Per-row popcount of a (N, W) uint64 array (numpy<2 lacks bitwise_count)."""
-    import numpy as np
-
-    v = np.ascontiguousarray(x).view(np.uint8).reshape(x.shape[0], -1)
-    return np.unpackbits(v, axis=1).sum(axis=1).astype(np.int64)
 
 
 def make_set_pairs_kernel(measure, threshold):
@@ -390,100 +310,6 @@ def make_block_cosine_kernel(threshold):
         )
 
     return kernel
-
-
-def make_admission_stateful_processor(state_schema):
-    """StatefulProcessor for ``transformWithStateInPandas`` — the admission
-    fold on the Spark 4.x arbitrary-state API. Defined HERE so cloudpickle
-    serializes the class by value: TWS spawns a fresh python driver worker
-    that unpickles the processor without our package on its sys.path.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class AdmissionProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._available = handle.getValueState("available", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            pdf = pd.concat(list(rows))
-            if pdf.empty:
-                return iter(())
-            pdf = pdf.sort_values("seq")
-            if self._available.exists():
-                (available,) = self._available.get()
-            else:
-                available = int(pdf["capacidad"].iloc[0])
-            admitted, after = [], []
-            for op, qty in zip(pdf["op"], pdf["cantidad"]):
-                qty = int(qty)
-                if op == "reserve":
-                    ok = available >= qty
-                    if ok:
-                        available -= qty
-                else:
-                    ok = True
-                    available += qty
-                admitted.append(ok)
-                after.append(available)
-            self._available.update((available,))
-            return iter(
-                (
-                    pd.DataFrame(
-                        {
-                            "evento": pdf["evento"],
-                            "seq": pdf["seq"],
-                            "_id": pdf["_id"],
-                            "email": pdf["email"],
-                            "op": pdf["op"],
-                            "cantidad": pdf["cantidad"],
-                            "admitted": admitted,
-                            "disponible_despues": after,
-                        }
-                    ),
-                )
-            )
-
-        def close(self) -> None:
-            pass
-
-    return AdmissionProcessor()
-
-
-def admission_fold_pandas(pdf):
-    """The sequential admission fold over one event's rows (seq-sorted).
-
-    Shared by the batch ``applyInPandas`` ledger and (logic-wise) the
-    streaming state processor — see streaming/admission.py. Lives here so it
-    pickles by value (executor workers can't import the package).
-    """
-    pdf = pdf.sort_values("seq")
-    available = int(pdf["capacidad"].iloc[0])
-    admitted, after = [], []
-    for op, qty in zip(pdf["op"], pdf["cantidad"]):
-        qty = int(qty)
-        if op == "reserve":
-            ok = available >= qty
-            if ok:
-                available -= qty
-        else:  # cancel: unguarded restitution
-            ok = True
-            available += qty
-        admitted.append(ok)
-        after.append(available)
-    return pd.DataFrame(
-        {
-            "evento": pdf["evento"],
-            "seq": pdf["seq"],
-            "_id": pdf["_id"],
-            "email": pdf["email"],
-            "op": pdf["op"],
-            "cantidad": pdf["cantidad"],
-            "admitted": admitted,
-            "disponible_despues": after,
-        }
-    )
 
 
 @pandas_udf(LongType())

@@ -503,8 +503,7 @@ def _kmv_sketches_from(ev: DataFrame) -> DataFrame:
     hashes = ev.select(
         "event_type", F.shiftleft(hi, 32).bitwiseOR(lo).alias("h")
     )
-    k = int(KMV_K)  # captured by value: workers must not resolve package
-    # globals when the driver's cwd isn't the repo (round-3 catch)
+    k = int(KMV_K)
 
     def _partial(batches):
         import numpy as np
@@ -809,8 +808,7 @@ def _qsk_partials(ev: DataFrame) -> DataFrame:
         "event_id",
         "value",
     )
-    k = int(QSK_K)  # captured by value (workers must not resolve package
-    # globals when the driver's cwd isn't the repo — round-3 catch)
+    k = int(QSK_K)
 
     def _partial(batches):
         import pandas as pd

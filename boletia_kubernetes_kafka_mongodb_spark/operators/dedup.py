@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from .. import cache, tables
 from .text import TOKEN_RE, fingerprint_col, tokens_col
@@ -556,8 +555,9 @@ def _shingles_sql(toks_sql: str) -> str:
     form builds (slice/zip_with/CASE/concat_ws/array_distinct), parsed in a
     single JVM call. Optimization round 13 (guide §7.3, driver time):
     constructing the Column form costs ~45 ms of py4j round-trips PER
-    invocation; `F.expr` of this string costs ~1 ms. Equality of the two
-    forms is pinned by tests/test_dedup.py::test_expr_string_builders_match_column_forms."""
+    invocation; `F.expr` of this string costs ~1 ms. Equality with the
+    Column form `_shingles` is pinned by
+    tests/test_dedup.py::test_expr_string_builders_match_column_forms."""
     n = SHINGLE_N
     ng = f"greatest(size({toks_sql}) - {n - 1}, 1)"
     out = f"slice({toks_sql}, 1, {ng})"
@@ -658,30 +658,14 @@ def _minhash_sig_over_hs() -> F.Column:
     # lambdas cost ~0.44 s of py4j round-trips per invocation when built as
     # Column objects; ONE `F.expr` parse of the identical tree costs ~2 ms.
     # `h` is a long, so the int literals promote exactly as `F.lit(a) * h`
-    # did; equality pinned by test_expr_string_builders_match_column_forms.
+    # did; equality with the Column-builder reference form (kept in
+    # tests/test_dedup.py) is pinned by
+    # test_expr_string_builders_match_column_forms.
     sql = "array(" + ", ".join(
         f"array_min(transform(hs, h -> ({a}L * h + {b}L) % {MINHASH_MOD}L))"
         for a, b in minhash_perm_constants()
     ) + ")"
     return F.expr(sql)
-
-
-def _minhash_sig_over_hs_column_form() -> F.Column:
-    """The original Column-builder form of `_minhash_sig_over_hs` — kept as
-    the semantic reference the equivalence test compares the expr-string
-    form against (and as documentation of the tree being parsed)."""
-    m = F.lit(MINHASH_MOD)
-
-    def _perm(a: int, b: int):
-        # factory, not default-args: Spark's HOF introspects lambda arity
-        return lambda h: (F.lit(a) * h + F.lit(b)) % m
-
-    return F.array(
-        *[
-            F.array_min(F.transform("hs", _perm(a, b)))
-            for a, b in minhash_perm_constants()
-        ]
-    )
 
 
 def minhash_band_keys(docs: DataFrame) -> DataFrame:

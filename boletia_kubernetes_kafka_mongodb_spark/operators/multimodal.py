@@ -257,58 +257,13 @@ def media_table_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def synth(batches: Iterator) -> Iterator:
-        # self-contained closure (pickle-by-value rule): the encoder twin
-        # is re-defined inside; equality with module-level encode_png is
-        # pinned by tests
-        import zlib
-
-        def zstore(data):
-            out = [b"\x78\x01"]
-            blocks = max((len(data) + 65534) // 65535, 1)
-            for i in range(blocks):
-                chunk = data[i * 65535 : (i + 1) * 65535]
-                ln = len(chunk)
-                out.append(
-                    bytes([1 if i == blocks - 1 else 0])
-                    + ln.to_bytes(2, "little")
-                    + (ln ^ 0xFFFF).to_bytes(2, "little")
-                    + chunk
-                )
-            out.append(zlib.adler32(data).to_bytes(4, "big"))
-            return b"".join(out)
-
-        def chunk(ctype, data):
-            return (
-                len(data).to_bytes(4, "big") + ctype + data
-                + zlib.crc32(ctype + data).to_bytes(4, "big")
-            )
-
-        def to_png(data, w=16):
-            h = max((len(data) + w - 1) // w, 1)
-            padded = data + b"\x00" * (w * h - len(data))
-            sl = bytearray()
-            for r in range(h):
-                row = padded[r * w : (r + 1) * w]
-                sl.append(1)
-                prev = 0
-                for px in row:
-                    sl.append((px - prev) & 0xFF)
-                    prev = px
-            ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 0, 0, 0, 0])
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zstore(bytes(sl)))
-                + chunk(b"IEND", b"")
-            )
-
         for pdf in batches:
             png_rows = pdf["doc_id"] % 4 == 2
             if png_rows.any():
                 payloads = pdf["payload"].copy()
                 nbytes = pdf["n_bytes"].copy()
                 for i in pdf.index[png_rows]:
-                    built = to_png(bytes(payloads[i]))
+                    built = encode_png(bytes(payloads[i]))
                     payloads[i] = bytearray(built)
                     nbytes[i] = len(built)
                 pdf = pdf.assign(payload=payloads, n_bytes=nbytes)
@@ -411,81 +366,14 @@ def extract_features(spark: SparkSession, media: DataFrame) -> DataFrame:
     row took, so the driver's hash check pins that wav/png rows really
     went through the parsers.
 
-    The closure is self-contained (no references to module-level
-    functions): executor workers don't share the driver's sys.path, so
-    anything captured must pickle by value — the wav parser is re-defined
-    inside the closure for exactly that reason.
+    The closure calls the module's ``decode_wav`` / ``decode_png``: the
+    package is pickled by value (see the package ``__init__``), so workers
+    that cannot import it still receive both parsers with the closure.
     """
 
     def featurize(batches: Iterator) -> Iterator:
-        import zlib
-
         import numpy as np
         import pandas as pd
-
-        def decode_wav_local(p: bytes) -> bytes:
-            # keep in sync with module-level decode_wav (pickle-by-value
-            # closure rule); equality is pinned by tests
-            if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"WAVE":
-                raise ValueError("decode_wav: not a RIFF/WAVE container")
-            pos = 12
-            while pos + 8 <= len(p):
-                cid = p[pos : pos + 4]
-                size = int.from_bytes(p[pos + 4 : pos + 8], "little")
-                if cid == b"data":
-                    if pos + 8 + size > len(p):
-                        raise ValueError("decode_wav: data chunk overruns container")
-                    return p[pos + 8 : pos + 8 + size]
-                pos += 8 + size + (size & 1)
-            raise ValueError("decode_wav: no data chunk")
-
-        png_sig = b"\x89PNG\r\n\x1a\n"
-
-        def decode_png_local(p: bytes) -> bytes:
-            # keep in sync with module-level decode_png (pickle-by-value
-            # closure rule); equality is pinned by tests
-            if len(p) < 8 or p[:8] != png_sig:
-                raise ValueError("decode_png: not a PNG signature")
-            pos, w, h, idat, ended = 8, None, None, [], False
-            while pos + 12 <= len(p):
-                ln = int.from_bytes(p[pos : pos + 4], "big")
-                ctype = p[pos + 4 : pos + 8]
-                data = p[pos + 8 : pos + 8 + ln]
-                if len(data) != ln:
-                    raise ValueError("decode_png: chunk overruns container")
-                crc = int.from_bytes(p[pos + 8 + ln : pos + 12 + ln], "big")
-                if zlib.crc32(ctype + data) != crc:
-                    raise ValueError(f"decode_png: CRC mismatch in {ctype!r}")
-                if ctype == b"IHDR":
-                    w = int.from_bytes(data[0:4], "big")
-                    h = int.from_bytes(data[4:8], "big")
-                    if data[8] != 8 or data[9] != 0:
-                        raise ValueError("decode_png: only 8-bit grayscale supported")
-                elif ctype == b"IDAT":
-                    idat.append(data)
-                elif ctype == b"IEND":
-                    ended = True
-                    break
-                pos += 12 + ln
-            if w is None or not idat or not ended:
-                raise ValueError("decode_png: missing IHDR/IDAT/IEND")
-            raw = zlib.decompress(b"".join(idat))
-            if len(raw) != h * (w + 1):
-                raise ValueError("decode_png: scanline stream length mismatch")
-            out = bytearray()
-            for r in range(h):
-                line = raw[r * (w + 1) : (r + 1) * (w + 1)]
-                ftype, row = line[0], line[1:]
-                if ftype == 0:
-                    out.extend(row)
-                elif ftype == 1:
-                    prev = 0
-                    for d in row:
-                        prev = (d + prev) & 0xFF
-                        out.append(prev)
-                else:
-                    raise ValueError(f"decode_png: unsupported filter type {ftype}")
-            return bytes(out)
 
         for pdf in batches:
             feats_mean = []
@@ -494,10 +382,10 @@ def extract_features(spark: SparkSession, media: DataFrame) -> DataFrame:
             for payload, fmt in zip(pdf["payload"], pdf["media_format"]):
                 pb = bytes(payload)
                 if fmt == "wav":
-                    raw_b = decode_wav_local(pb)
+                    raw_b = decode_wav(pb)
                     decoders.append("wav")
-                elif fmt == "png" and pb[:8] == png_sig:
-                    raw_b = decode_png_local(pb)
+                elif fmt == "png" and pb[:8] == PNG_SIG:
+                    raw_b = decode_png(pb)
                     decoders.append("png")
                 else:
                     raw_b = pb  # identity fake (stub mandate)
@@ -570,7 +458,6 @@ def resize_media(media: DataFrame) -> DataFrame:
         import pandas as pd
 
         box = RESIZE_BOX
-        png_sig = b"\x89PNG\r\n\x1a\n"
 
         def ihdr_dims(p: bytes):
             # signature + first chunk must be IHDR per the PNG spec; CRC
@@ -599,7 +486,7 @@ def resize_media(media: DataFrame) -> DataFrame:
                 # signature — an arbitrary non-png binary payload that
                 # happens to start with \x89PNG must not have its dims
                 # hijacked (or fail) on a header parse it never had
-                if fmt == "png" and pb[:8] == png_sig:
+                if fmt == "png" and pb[:8] == PNG_SIG:
                     w[i], h[i] = ihdr_dims(pb)
                     src[i] = "png-ihdr"
             m = np.maximum(w, h)

@@ -387,10 +387,6 @@ def exact_topk_over_candidates(spark: SparkSession, candidates: DataFrame, q_vec
     ASC) tie-break — so `_sql_rerank_topk` oracles hold as-is. numpy-matmul
     vs DuckDB ``list_dot_product`` parity at 6dp is the same contract the
     k-means / IVF-assignment kernels already rely on.
-
-    Closure rule: captures only numpy arrays / ints (never package symbols —
-    the driver imports this module from an arbitrary cwd; workers cannot
-    import the package).
     """
     import numpy as np
 
@@ -948,19 +944,10 @@ def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_sims = np.round((C @ q_vec) / (c_norm * q_norm), 6)
     probe = sorted(np.argsort(-c_sims, kind="stable")[:IVF_NPROBE].tolist())
 
-    @F.pandas_udf("long")
-    def assign(emb_s: pd.Series) -> pd.Series:
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.Series([], dtype="int64")
-        sims = (X @ C.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * c_norm)
-        # rounded before argmax (cross-engine determinism); argmax returns
-        # the FIRST max ⇒ lowest cent_id on ties (C is vec_id-ordered),
-        # matching the window tie-break
-        return pd.Series(np.argmax(np.round(sims, 6), axis=1).astype("int64"))
-
+    # C is vec_id-ordered, so the assignment's first-max tie-break picks
+    # the lowest cent_id, matching the oracle's window tie-break
     candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).where(
-        assign("embedding").isin(probe)
+        _make_assign_udf(C)("embedding").isin(probe)
     )
     return exact_topk_over_candidates(spark, candidates, q_vec)
 
@@ -974,8 +961,8 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     IVF_NLIST lowest non-null vec_ids of the STANDING corpus (the non-test
     hash splits — the corpus that existed when the index was built), with
     centroid id = rank position (the `kmeans_init_centroids` derivation
-    applied to the IVF family). Same 6dp-rounded cosine argmax as
-    ``_build_ivf_quantizer``; cached (see `cache`).
+    applied to the IVF family). Same assignment UDF (`_make_assign_udf`)
+    as ``_build_ivf_quantizer``; cached (see `cache`).
 
     Freezing is the point of a refresh: arriving vectors are assigned by
     the quantizer that PLACED the existing billions of rows — re-deriving
@@ -1001,19 +988,7 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
         )
         C = np.array([r.embedding for r in cent], dtype=np.float64)
         c_norm = np.sqrt((C * C).sum(axis=1))
-
-        # closure rule: capture only numpy arrays (never package symbols)
-        @F.pandas_udf("long")
-        def assign(emb_s: pd.Series) -> pd.Series:
-            import numpy as np
-
-            X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-            if X.size == 0:
-                return pd.Series([], dtype="int64")
-            sims = (X @ C.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * c_norm)
-            return pd.Series(np.argmax(np.round(sims, 6), axis=1).astype("int64"))
-
-        return assign, C, c_norm
+        return _make_assign_udf(C), C, c_norm
 
     return cache.cached(
         spark, sf_dir, ("embeddings",), "ivf-standing-quantizer", _build
@@ -1220,7 +1195,11 @@ def _make_assign_udf(C, farthest: bool = False):
     """Arrow-batched assignment to the nearest (or, for the poisoned
     candidate, the FARTHEST) of the captured centroids — 6dp-rounded
     cosine before the arg pick, ties to the lowest cid, the cross-engine
-    convention every IVF oracle here uses."""
+    convention every IVF oracle here uses. Rounding BEFORE the pick makes
+    the assignment identical under any summation order, so the DuckDB
+    oracle (sequential list ops) and the numpy matmul (pairwise) agree
+    exactly. The one IVF quantizer UDF: layouts, the standing index and
+    the re-index all wrap their centroid matrix here."""
     import numpy as np
 
     C = np.asarray(C, dtype=np.float64)

@@ -49,9 +49,8 @@ def ivf_assignment_udf(spark: SparkSession, sf_dir: str):
 
 def _build_ivf_quantizer(spark: SparkSession, sf_dir: str):
     import numpy as np
-    import pandas as pd
 
-    from ..operators.similarity import IVF_NLIST
+    from ..operators.similarity import IVF_NLIST, _make_assign_udf
 
     emb = tables.load(spark, sf_dir, "embeddings")
     cent = sorted(
@@ -60,22 +59,7 @@ def _build_ivf_quantizer(spark: SparkSession, sf_dir: str):
     )
     C = np.array([r.embedding for r in cent], dtype=np.float64)
     c_norm = np.sqrt((C * C).sum(axis=1))
-
-    @F.pandas_udf("long")
-    def assign(emb_s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.Series([], dtype="int64")
-        sims = (X @ C.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * c_norm)
-        # round BEFORE argmax: makes the assignment identical under any
-        # summation order, so the DuckDB oracle (sequential list ops) and
-        # the numpy matmul (pairwise) agree exactly; first-max ⇒ lowest
-        # cent_id on ties, matching row_number(sim DESC, cid ASC)
-        return pd.Series(np.argmax(np.round(sims, 6), axis=1).astype("int64"))
-
-    return assign, C, c_norm
+    return _make_assign_udf(C), C, c_norm
 
 
 def read_layout(spark: SparkSession, layout_path: str) -> DataFrame:
@@ -606,9 +590,7 @@ def srp_bucket_ids_udf(dim: int):
     (rows × D) @ (D × B·P) matmul per Arrow batch — the identical bit
     convention the query side uses in ``srp_query_buckets``, so layout and
     probe can never disagree on bucket membership. The hyperplane matrix is
-    resolved driver-side and captured as a plain numpy array: a closure
-    that references package symbols would make the worker import the
-    package, which the external driver's cwd cannot guarantee."""
+    resolved once, driver-side, and captured as a numpy array."""
     import numpy as np
     import pandas as pd
 
@@ -796,33 +778,6 @@ def write_zorder_events(
 # ---------------------------------------------------------------------------
 # Incrementally-maintained IVF layout (round 10 — streaming index refresh)
 # ---------------------------------------------------------------------------
-
-
-def make_cosine_assign_udf(C_arr):
-    """Quantizer factory: a pandas UDF assigning each embedding to the
-    nearest row of ``C_arr`` by 6dp-rounded cosine argmax (first max ⇒
-    lowest centroid id on ties) — the IVF family's engine-stable
-    assignment rule as a standalone builder. This is how a re-index
-    (``IncrementalIvfIndex.rebase``) freezes its NEW quantizer: collect
-    the re-clustered centroid matrix once, wrap it here, hand the UDF to
-    the append handler. Closure rule: captures only numpy arrays."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(C_arr, dtype=np.float64)
-    c_norm = np.sqrt((C * C).sum(axis=1))
-
-    @F.pandas_udf("long")
-    def assign(emb_s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.Series([], dtype="int64")
-        sims = (X @ C.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * c_norm)
-        return pd.Series(np.argmax(np.round(sims, 6), axis=1).astype("int64"))
-
-    return assign
 
 
 class IncrementalIvfIndex:

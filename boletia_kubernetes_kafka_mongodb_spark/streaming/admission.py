@@ -6,17 +6,21 @@ The reference's core operator is the guarded atomic decrement
 That last clause is what the plain window/prefix-sum batch oracle
 (operators/mutations.py M1) cannot express — it needs a sequential fold.
 
-Two implementations share one fold:
+Three runtimes share one step, :func:`admit`:
 
-- ``admission_ledger_batch`` — ``groupBy(evento).applyInPandas``: one
-  Arrow batch per event, fold in seq order. Deterministic under any input
-  partitioning (the groupBy gathers the key), so it is driver-checkable —
-  and DuckDB *can* express the fold as a recursive CTE, giving the true
-  semantics an exact SQL oracle (``admission_oracle_sql``).
-- ``admission_ledger_stream`` — ``applyInPandasWithState`` keyed by evento,
-  carrying ``available`` across micro-batches: the production streaming
-  form. Equivalence with the batch fold is asserted in tests (same input →
-  same ledger), which is exactly SURVEY §7's Phase-4 test strategy.
+- ``admission_ledger_batch`` — ``repartition(evento)`` + a sorted
+  ``mapInPandas`` pass (:func:`fold_map_batches`), per-key state carried
+  across Arrow batches. Deterministic under any input partitioning (the
+  repartition gathers the key), so it is driver-checkable — and DuckDB
+  *can* express the fold as a recursive CTE, giving the true semantics an
+  exact SQL oracle (``admission_oracle_sql``).
+- ``admission_ledger_stream`` — ``applyInPandasWithState`` keyed by evento
+  (:func:`fold_with_state`), carrying ``available`` across micro-batches:
+  the production streaming form. Equivalence with the batch fold is
+  asserted in tests (same input → same ledger), which is exactly SURVEY
+  §7's Phase-4 test strategy.
+- ``admission_ledger_stream_event_time`` — the same state API with an
+  event-time buffer (:func:`fold_event_time`) for out-of-order input.
 
 Scale: state is one long per event key; the shuffle is on the natural key
 ``evento``; skew on hot events is bounded by AQE + the fact the fold is
@@ -28,12 +32,11 @@ Ops semantics per row (in seq order):
 - op "reserve" (cantidad n): admit iff available ≥ n → available -= n
 - op "cancel"  (cantidad n): available += n (unguarded M2 restitution;
   the canres=−1 sentinel lives in the emitted echo, handled by the router)
-
-Closures below are self-contained (stdlib+pandas only): executor workers
-don't share the driver's sys.path.
 """
 
 from __future__ import annotations
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +67,37 @@ LEDGER_SCHEMA = StructType(
 )
 
 STATE_SCHEMA = StructType([StructField("available", LongType(), False)])
+
+# drain sentinels only advance the watermark: no state effect, never emitted
+# to the ledger (see ``admission_drain_frames``)
+DRAIN_OP = "__drain__"
+
+
+def admit(available: int, op: str, qty: int) -> tuple[bool, int]:
+    """The guarded decrement, one request: a reserve is admitted iff
+    ``available`` covers it and a rejected one consumes nothing; a cancel
+    restores its quantity unguarded. Returns ``(admitted, available)``."""
+    if op == "reserve":
+        if available >= qty:
+            return True, available - qty
+        return False, available
+    return True, available + qty
+
+
+def _ledger_frame(pdf, admitted, after):
+    """A request frame's ledger columns plus the fold's two outputs."""
+    return pd.DataFrame(
+        {
+            "evento": pdf["evento"],
+            "seq": pdf["seq"],
+            "_id": pdf["_id"],
+            "email": pdf["email"],
+            "op": pdf["op"],
+            "cantidad": pdf["cantidad"],
+            "admitted": admitted,
+            "disponible_despues": after,
+        }
+    )
 
 
 def request_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,10 +157,33 @@ def admission_ledger_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fold_requests_batch(requests: DataFrame) -> DataFrame:
     """Fold any (evento, seq, _id, email, op, cantidad, capacidad) request
     frame into the admission ledger — one shuffle on the key, one Arrow pass."""
-    from ..operators._pandas_udfs import make_admission_map_batches
-
     arranged = requests.repartition("evento").sortWithinPartitions("evento", "seq")
-    return arranged.mapInPandas(make_admission_map_batches(), schema=LEDGER_SCHEMA)
+    return arranged.mapInPandas(fold_map_batches, schema=LEDGER_SCHEMA)
+
+
+def fold_map_batches(batches):
+    """mapInPandas admission fold over (evento, seq)-sorted partitions.
+
+    One python pass per Arrow batch instead of one applyInPandas call per
+    group (~1 ms × n_groups of overhead). Groups may span batch boundaries
+    within a partition, so per-key state carries across the iterator.
+    """
+    state = {}  # evento -> available (carries across batches in partition)
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        admitted, after = [], []
+        for ev, op, qty, cap in zip(
+            pdf["evento"], pdf["op"], pdf["cantidad"], pdf["capacidad"]
+        ):
+            available = state.get(ev)
+            if available is None:
+                available = int(cap)
+            ok, available = admit(available, op, int(qty))
+            state[ev] = available
+            admitted.append(ok)
+            after.append(available)
+        yield _ledger_frame(pdf, admitted, after)
 
 
 def admission_oracle_sql() -> str:
@@ -161,61 +218,24 @@ def admission_oracle_sql() -> str:
     ).replace("WITH ", "WITH RECURSIVE ", 1)
 
 
-def _make_fold_with_state():
-    """Factory whose product is the applyInPandasWithState fold.
-
-    The factory indirection is LOAD-BEARING: a plain module-level function
-    cloudpickles BY REFERENCE (module + qualname), which would require
-    executor workers to import this package — exactly the failure class
-    the SRP-layout UDF hit when the driver runs outside the repo. A
-    function whose __qualname__ contains ``<locals>`` fails cloudpickle's
-    by-reference lookup and is serialized BY VALUE, keeping the fold
-    self-contained (stdlib+pandas only) on the wire while still giving the
-    property tests the exact production object via the module attribute
-    below."""
-
-    def fold_with_state(key, pdf_iter, state):
-        import pandas as pd
-
-        rows = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(rows).sort_values("seq") if rows else None
-        if pdf is None or pdf.empty:
-            return
-        if state.exists:
-            (available,) = state.get
-        else:
-            available = int(pdf["capacidad"].iloc[0])
-        admitted, after = [], []
-        for op, qty in zip(pdf["op"], pdf["cantidad"]):
-            qty = int(qty)
-            if op == "reserve":
-                ok = available >= qty
-                if ok:
-                    available -= qty
-            else:
-                ok = True
-                available += qty
-            admitted.append(ok)
-            after.append(available)
-        state.update((available,))
-        yield pd.DataFrame(
-            {
-                "evento": pdf["evento"],
-                "seq": pdf["seq"],
-                "_id": pdf["_id"],
-                "email": pdf["email"],
-                "op": pdf["op"],
-                "cantidad": pdf["cantidad"],
-                "admitted": admitted,
-                "disponible_despues": after,
-            }
-        )
-
-    return fold_with_state
-
-
-# the production fold object — ``<locals>`` qualname ⇒ cloudpickled by value
-fold_with_state = _make_fold_with_state()
+def fold_with_state(key, pdf_iter, state):
+    """The ``applyInPandasWithState`` fold: one key's micro-batch rows in
+    seq order, ``available`` carried in state across micro-batches."""
+    rows = list(pdf_iter)
+    pdf = pd.concat(rows).sort_values("seq") if rows else None
+    if pdf is None or pdf.empty:
+        return
+    if state.exists:
+        (available,) = state.get
+    else:
+        available = int(pdf["capacidad"].iloc[0])
+    admitted, after = [], []
+    for op, qty in zip(pdf["op"], pdf["cantidad"]):
+        ok, available = admit(available, op, int(qty))
+        admitted.append(ok)
+        after.append(available)
+    state.update((available,))
+    yield _ledger_frame(pdf, admitted, after)
 
 
 def admission_ledger_stream(requests: DataFrame) -> DataFrame:
@@ -256,117 +276,98 @@ EVENT_TIME_STATE_SCHEMA = StructType(
 )
 
 
-def _make_event_time_fold():
-    """Factory for the out-of-order (event-time) admission fold — the
-    ``<locals>``-qualname/by-value pickling rule, same as
-    ``_make_fold_with_state``. Self-contained: stdlib + pandas only."""
-
-    def fold_event_time(key, pdf_iter, state):
-        import pandas as pd
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            (available, initialized, bseq, bid, bem, bop, bqty, bts,
-             max_emitted) = state.get
-            bseq, bid, bem = list(bseq or []), list(bid or []), list(bem or [])
-            bop, bqty, bts = list(bop or []), list(bqty or []), list(bts or [])
-            available = int(available)
-            initialized = bool(initialized)
-            max_emitted = int(max_emitted)
-        else:
-            available, initialized, max_emitted = 0, False, -1
-            bseq, bid, bem, bop, bqty, bts = [], [], [], [], [], []
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            if not initialized:
-                available = int(pdf["capacidad"].iloc[0])
-                initialized = True
-            bseq.extend(int(v) for v in pdf["seq"])
-            bid.extend(str(v) for v in pdf["_id"])
-            bem.extend(str(v) for v in pdf["email"])
-            bop.extend(str(v) for v in pdf["op"])
-            bqty.extend(int(v) for v in pdf["cantidad"])
-            # ts_us is computed JVM-side (unix_micros) BEFORE the shuffle:
-            # Arrow hands pandas the ts column localized to the session
-            # timezone as tz-naive values, while getCurrentWatermarkMs is
-            # epoch UTC — converting here would skew the horizon by the
-            # session's UTC offset on any non-UTC driver session
-            bts.extend(int(v) for v in pdf["ts_us"])
-        # emit everything safely behind the horizon, folded in seq order:
-        # STRICT ts < watermark — a not-yet-arrived row is guaranteed
-        # ts ≥ watermark (bounded-reorder contract), so equality stays
-        # buffered one more trigger rather than risking an order inversion
-        order = sorted(range(len(bseq)), key=lambda i: bseq[i])
-        emit_idx = [i for i in order if bts[i] < wm_us]
-        keep_idx = [i for i in order if bts[i] >= wm_us]
-        # order-inversion guard (loud failure, never a silent wrong ledger):
-        # the safety argument requires event time monotone in seq per key
-        # and disorder bounded by the watermark delay — a violated
-        # precondition would fold a lower seq AFTER a higher one
-        if emit_idx:
-            lo = min(bseq[i] for i in emit_idx)
-            hi = max(bseq[i] for i in emit_idx)
-            if lo <= max_emitted or (keep_idx and hi > min(bseq[i] for i in keep_idx)):
-                raise ValueError(
-                    "admission event-time fold: seq order inversion — input "
-                    "violates the monotone-ts-per-seq / bounded-disorder "
-                    "contract (or data arrived later than the watermark "
-                    f"delay): emitting seqs [{lo},{hi}] after max_emitted="
-                    f"{max_emitted}"
-                )
-            max_emitted = hi
-        out = {
-            "evento": [], "seq": [], "_id": [], "email": [],
-            "op": [], "cantidad": [], "admitted": [], "disponible_despues": [],
-        }
-        evento = key[0]
-        for i in emit_idx:
-            # keep in sync with module-level DRAIN_OP (pickle-by-value
-            # closure rule): drain sentinels exist only to advance the
-            # watermark — no state effect, never emitted to the ledger
-            if bop[i] == "__drain__":
-                continue
-            qty = bqty[i]
-            if bop[i] == "reserve":
-                ok = available >= qty
-                if ok:
-                    available -= qty
-            else:
-                ok = True
-                available += qty
-            out["evento"].append(evento)
-            out["seq"].append(bseq[i])
-            out["_id"].append(bid[i])
-            out["email"].append(bem[i])
-            out["op"].append(bop[i])
-            out["cantidad"].append(qty)
-            out["admitted"].append(ok)
-            out["disponible_despues"].append(available)
-        state.update(
-            (
-                available,
-                initialized,
-                [bseq[i] for i in keep_idx],
-                [bid[i] for i in keep_idx],
-                [bem[i] for i in keep_idx],
-                [bop[i] for i in keep_idx],
-                [bqty[i] for i in keep_idx],
-                [bts[i] for i in keep_idx],
-                max_emitted,
+def fold_event_time(key, pdf_iter, state):
+    """The out-of-order (event-time) admission fold: buffer rows in state
+    until the watermark passes them, then fold them in seq order."""
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    if state.exists:
+        (available, initialized, bseq, bid, bem, bop, bqty, bts,
+         max_emitted) = state.get
+        bseq, bid, bem = list(bseq or []), list(bid or []), list(bem or [])
+        bop, bqty, bts = list(bop or []), list(bqty or []), list(bts or [])
+        available = int(available)
+        initialized = bool(initialized)
+        max_emitted = int(max_emitted)
+    else:
+        available, initialized, max_emitted = 0, False, -1
+        bseq, bid, bem, bop, bqty, bts = [], [], [], [], [], []
+    for pdf in pdf_iter:
+        if len(pdf) == 0:
+            continue
+        if not initialized:
+            available = int(pdf["capacidad"].iloc[0])
+            initialized = True
+        bseq.extend(int(v) for v in pdf["seq"])
+        bid.extend(str(v) for v in pdf["_id"])
+        bem.extend(str(v) for v in pdf["email"])
+        bop.extend(str(v) for v in pdf["op"])
+        bqty.extend(int(v) for v in pdf["cantidad"])
+        # ts_us is computed JVM-side (unix_micros) BEFORE the shuffle:
+        # Arrow hands pandas the ts column localized to the session
+        # timezone as tz-naive values, while getCurrentWatermarkMs is
+        # epoch UTC — converting here would skew the horizon by the
+        # session's UTC offset on any non-UTC driver session
+        bts.extend(int(v) for v in pdf["ts_us"])
+    # emit everything safely behind the horizon, folded in seq order:
+    # STRICT ts < watermark — a not-yet-arrived row is guaranteed
+    # ts ≥ watermark (bounded-reorder contract), so equality stays
+    # buffered one more trigger rather than risking an order inversion
+    order = sorted(range(len(bseq)), key=lambda i: bseq[i])
+    emit_idx = [i for i in order if bts[i] < wm_us]
+    keep_idx = [i for i in order if bts[i] >= wm_us]
+    # order-inversion guard (loud failure, never a silent wrong ledger):
+    # the safety argument requires event time monotone in seq per key
+    # and disorder bounded by the watermark delay — a violated
+    # precondition would fold a lower seq AFTER a higher one
+    if emit_idx:
+        lo = min(bseq[i] for i in emit_idx)
+        hi = max(bseq[i] for i in emit_idx)
+        if lo <= max_emitted or (keep_idx and hi > min(bseq[i] for i in keep_idx)):
+            raise ValueError(
+                "admission event-time fold: seq order inversion — input "
+                "violates the monotone-ts-per-seq / bounded-disorder "
+                "contract (or data arrived later than the watermark "
+                f"delay): emitting seqs [{lo},{hi}] after max_emitted="
+                f"{max_emitted}"
             )
+        max_emitted = hi
+    out = {
+        "evento": [], "seq": [], "_id": [], "email": [],
+        "op": [], "cantidad": [], "admitted": [], "disponible_despues": [],
+    }
+    evento = key[0]
+    for i in emit_idx:
+        if bop[i] == DRAIN_OP:
+            continue
+        qty = bqty[i]
+        ok, available = admit(available, bop[i], qty)
+        out["evento"].append(evento)
+        out["seq"].append(bseq[i])
+        out["_id"].append(bid[i])
+        out["email"].append(bem[i])
+        out["op"].append(bop[i])
+        out["cantidad"].append(qty)
+        out["admitted"].append(ok)
+        out["disponible_despues"].append(available)
+    state.update(
+        (
+            available,
+            initialized,
+            [bseq[i] for i in keep_idx],
+            [bid[i] for i in keep_idx],
+            [bem[i] for i in keep_idx],
+            [bop[i] for i in keep_idx],
+            [bqty[i] for i in keep_idx],
+            [bts[i] for i in keep_idx],
+            max_emitted,
         )
-        if keep_idx:
-            # wake this key when the watermark next advances, even if no
-            # new rows arrive for it (the flush path)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        if out["seq"]:
-            yield pd.DataFrame(out)
-
-    return fold_event_time
-
-
-fold_event_time = _make_event_time_fold()
+    )
+    if keep_idx:
+        # wake this key when the watermark next advances, even if no
+        # new rows arrive for it (the flush path)
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
+    if out["seq"]:
+        yield pd.DataFrame(out)
 
 
 def admission_ledger_stream_event_time(
@@ -435,9 +436,6 @@ def admission_ledger_stream_event_time(
     )
 
 
-DRAIN_OP = "__drain__"  # twin of the literal inside the fold closure
-
-
 def admission_drain_frames(
     spark: SparkSession,
     capacities: dict,
@@ -484,26 +482,3 @@ def admission_drain_frames(
         )
         for k in range(n_batches)
     ]
-
-
-def admission_ledger_stream_tws(requests: DataFrame) -> DataFrame:
-    """Same admission fold on the ``transformWithStateInPandas`` API — the
-    GA arbitrary-state processor of Spark 4.x (typed state handles, timers,
-    TTL, state schema evolution), which is where
-    ``applyInPandasWithState`` workloads are headed.
-
-    Semantics are identical to :func:`admission_ledger_stream` (one
-    ``ValueState[available:long]`` per evento, rows folded in seq order
-    within each micro-batch); the equivalence test asserts ledger equality
-    with the batch fold. RUNTIME REQUIREMENT: TWS's python↔JVM state
-    protocol needs ``google.protobuf``; environments without it (this
-    container) keep using the classic API — the test auto-skips.
-    """
-    from ..operators._pandas_udfs import make_admission_stateful_processor
-
-    return requests.groupBy("evento").transformWithStateInPandas(
-        statefulProcessor=make_admission_stateful_processor(STATE_SCHEMA),
-        outputStructType=LEDGER_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

@@ -39,20 +39,6 @@ from pyspark.sql import functions as F
 
 from . import cache
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load(spark: SparkSession, sf_dir: str, name: str, fan: bool = False) -> DataFrame:
     """Read one testdata table. Parquet scan → column pruning + predicate
     pushdown come free downstream.
@@ -101,10 +87,6 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan: bool = False) -> Data
         return df
 
     return cache.cached(spark, sf_dir, (name,), f"load-fan={fan}", _read)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
 # ---------------------------------------------------------------------------

@@ -33,8 +33,11 @@ Configs and the scale failure each one is a proxy for:
 Run ``python hostile.py`` for the standard set, ``--configs a,b`` /
 ``--only qid1,qid2`` to narrow, ``--sf DIR`` for another scale. Each
 config runs in its OWN subprocess (fresh JVM) so session caches built
-under one config can never mask sensitivity in the next. Exit code 0
-only if every config's sweep is fully green.
+under one config can never mask sensitivity in the next. The subprocess
+starts in an empty temp dir: only the driver puts the repo on
+``sys.path``, so its Python workers cannot import the package, as on a
+cluster without ``--py-files``. Exit code 0 only if every config's sweep
+is fully green.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -205,9 +209,10 @@ def main() -> int:
         if only:
             cmd += ["--only", ",".join(only)]
         try:
-            proc = subprocess.run(
-                cmd, capture_output=True, text=True, cwd=REPO, timeout=3600
-            )
+            with tempfile.TemporaryDirectory(prefix=f"hostile-{name}-") as cwd:
+                proc = subprocess.run(
+                    cmd, capture_output=True, text=True, cwd=cwd, timeout=3600
+                )
         except subprocess.TimeoutExpired:
             # one slow config must not abort the rest of the sweep
             print(f"[{name}] CHILD TIMED OUT after 3600s", file=sys.stderr)

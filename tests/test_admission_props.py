@@ -108,10 +108,6 @@ def _python_model(capacity, ops):
 def test_fold_matches_python_model(capacity, ops):
     import pandas as pd
 
-    from boletia_kubernetes_kafka_mongodb_spark.operators._pandas_udfs import (
-        make_admission_map_batches,
-    )
-
     pdf = pd.DataFrame(
         {
             "evento": ["E"] * len(ops),
@@ -123,8 +119,7 @@ def test_fold_matches_python_model(capacity, ops):
             "capacidad": [capacity] * len(ops),
         }
     )
-    fold = make_admission_map_batches()
-    out = pd.concat(list(fold(iter([pdf]))))
+    out = pd.concat(list(admission.fold_map_batches(iter([pdf]))))
     expect = _python_model(capacity, ops)
     got = list(zip(out["admitted"], out["disponible_despues"]))
     assert [(bool(a), int(d)) for a, d in got] == expect
@@ -145,10 +140,6 @@ def test_fold_batch_boundary_invariant(capacity, ops, split):
     (state carries across batches within a partition)."""
     import pandas as pd
 
-    from boletia_kubernetes_kafka_mongodb_spark.operators._pandas_udfs import (
-        make_admission_map_batches,
-    )
-
     split = min(split, len(ops) - 1)
 
     def mk(op_slice, seq0):
@@ -164,10 +155,10 @@ def test_fold_batch_boundary_invariant(capacity, ops, split):
             }
         )
 
-    whole = pd.concat(list(make_admission_map_batches()(iter([mk(ops, 0)]))))
+    whole = pd.concat(list(admission.fold_map_batches(iter([mk(ops, 0)]))))
     parts = pd.concat(
         list(
-            make_admission_map_batches()(
+            admission.fold_map_batches(
                 iter([mk(ops[:split], 0), mk(ops[split:], split)])
             )
         )

@@ -1409,12 +1409,8 @@ def test_drift_gated_reindex_composition(spark, tmp_path):
         grown.orderBy("vec_id").limit(S.IVF_NLIST).collect(),
         key=lambda r: r.vec_id,
     )
-    from boletia_kubernetes_kafka_mongodb_spark.sources.layouts import (
-        make_cosine_assign_udf,
-    )
-
     C_new = np.array([r.embedding for r in new_cent], dtype=np.float64)
-    assign2 = make_cosine_assign_udf(C_new)
+    assign2 = S._make_assign_udf(C_new)
 
     # PROMOTION GATE (r10 verdict #4): a re-clustering is promoted only if
     # its serve quality clears the audit — through the engine API itself:
@@ -1439,7 +1435,7 @@ def test_drift_gated_reindex_composition(spark, tmp_path):
     # staged audit must reject it, leaving the serving index untouched
     n_serving = idx.read().count()
     promoted = idx.rebase(
-        grown.withColumn("ivf_list", make_cosine_assign_udf(-C_new)("embedding")),
+        grown.withColumn("ivf_list", S._make_assign_udf(-C_new)("embedding")),
         audit=audit,
     )
     assert promoted is False and audited[-1] < GATE, (

@@ -800,6 +800,24 @@ def test_minhash_accuracy_audit(spark, duck):
     )
 
 
+def _minhash_sig_over_hs_column_form():
+    """The Column-builder form of `dedup._minhash_sig_over_hs` — the
+    semantic reference its expr-string form is compared against (and the
+    tree that string parses to)."""
+    m = F.lit(dedup.MINHASH_MOD)
+
+    def _perm(a: int, b: int):
+        # factory, not default-args: Spark's HOF introspects lambda arity
+        return lambda h: (F.lit(a) * h + F.lit(b)) % m
+
+    return F.array(
+        *[
+            F.array_min(F.transform("hs", _perm(a, b)))
+            for a, b in dedup.minhash_perm_constants()
+        ]
+    )
+
+
 def test_expr_string_builders_match_column_forms(spark):
     """Optimization round 13 (guide §7.3 driver time): the shingle and
     32-perm-signature builders are parsed from single SQL strings instead
@@ -836,7 +854,7 @@ def test_expr_string_builders_match_column_forms(spark):
     )
     sigs = hs.select(
         "doc_id",
-        D._minhash_sig_over_hs_column_form().alias("ref"),
+        _minhash_sig_over_hs_column_form().alias("ref"),
         D._minhash_sig_over_hs().alias("opt"),
     ).collect()
     for r in sigs:

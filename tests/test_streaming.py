@@ -129,54 +129,6 @@ def test_admission_stream_equals_batch(spark, tmpdir):
     assert all(d >= 0 for _, d in got.values())
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas state protocol requires google.protobuf",
-)
-def test_admission_tws_equals_classic_state_api(spark, tmpdir):
-    """transformWithStateInPandas twin produces the identical ledger."""
-    reqs = admission.request_stream_batch(spark, SF_SMOKE)
-    some = reqs.where(F.col("evento") < "Evento 000050")
-    cdc_stream.write_ordered_files(some, f"{tmpdir}/reqs", n_files=5)
-
-    batch_ledger = {
-        (r.evento, r.seq): (r.admitted, r.disponible_despues)
-        for r in admission.admission_ledger_batch(spark, SF_SMOKE)
-        .where(F.col("evento") < "Evento 000050")
-        .collect()
-    }
-
-    stream_reqs = (
-        spark.readStream.schema(some.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmpdir}/reqs")
-    )
-    ledger_stream = admission.admission_ledger_stream_tws(stream_reqs)
-    q = (
-        ledger_stream.writeStream.format("memory")
-        .queryName("ledger_tws_out")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.evento, r.seq): (r.admitted, r.disponible_despues)
-        for r in spark.sql("select * from ledger_tws_out").collect()
-    }
-    assert got == batch_ledger
-
-
 # ---------------------------------------------------------------------------
 # sinks: idempotent MERGE under replay (invariant vi)
 # ---------------------------------------------------------------------------

@@ -456,11 +456,10 @@ def test_wav_features_run_real_decode_branch(spark):
 
 
 def test_wav_executor_parser_padded_chunk_and_malformed(spark):
-    """The executor-side wav parser is a re-defined twin inside the
-    mapInPandas closure (pickle-by-value rule: workers can't import the
-    package), so pinning the MODULE function alone would not catch drift —
-    this drives the closure itself through ``extract_features`` on crafted
-    frames: a container with an extra odd-sized chunk before ``data``
+    """The executor path reaches ``decode_wav`` through the
+    ``extract_features`` closure, shipped by value with the package, so
+    this drives that path on crafted frames, not only the module
+    function: a container with an extra odd-sized chunk before ``data``
     (exercises the word-alignment walk, which ``media_table_mixed`` never
     produces) must featurize the exact PCM, and a malformed container must
     fail the job loudly."""
@@ -476,7 +475,7 @@ def test_wav_executor_parser_padded_chunk_and_malformed(spark):
         + b"WAVEfmt " + M._WAV_STATIC_FMT + extra
         + b"data" + len(pcm).to_bytes(4, "little") + pcm
     )
-    assert M.decode_wav(good) == pcm  # module fn agrees
+    assert M.decode_wav(good) == pcm  # the module function, on the driver
 
     def media_frame(payload):
         return spark.createDataFrame(
@@ -638,11 +637,10 @@ def test_png_malformed_inputs():
 
 
 def test_png_executor_decoder_twin_and_malformed(spark):
-    """The executor-side png parser is a re-defined twin inside the
-    extract_features closure — drive the CLOSURE itself on crafted frames:
-    a filter-0 PNG (a branch media_table_mixed never produces) must
-    featurize its exact pixels, and a CRC-corrupted container must fail
-    the job loudly."""
+    """Drive ``decode_png`` through the ``extract_features`` executor
+    closure on crafted frames: a filter-0 PNG (a branch media_table_mixed
+    never produces) must featurize its exact pixels, and a CRC-corrupted
+    container must fail the job loudly."""
     import zlib
 
     import numpy as np
@@ -658,7 +656,7 @@ def test_png_executor_decoder_twin_and_malformed(spark):
         + M._png_chunk(b"IDAT", M._zlib_store(sl))
         + M._png_chunk(b"IEND", b"")
     )
-    assert M.decode_png(png) == pixels  # module twin agrees on filter 0
+    assert M.decode_png(png) == pixels  # the module function, on the driver
 
     def media_frame(payload):
         return spark.createDataFrame(
