@@ -1,18 +1,19 @@
-"""The package's one session cache.
+"""The package's one cache: session values in memory, derived artifacts on disk.
 
 Derived artifacts a deployment builds once and serves many times — loaded
 table relations, the broker's message log, token/signature frames behind
-``localCheckpoint``, trained quantizers and models, graph arrays — live
-here and nowhere else. The policy:
+``localCheckpoint``, trained quantizers and models, graph arrays, and the
+write-time layouts on disk — live here and nowhere else.
+
+In memory, :func:`cached` keeps a value for one SparkSession:
 
 - **Key:** ``(tag, applicationId, sf_dir, signatures)``, where each
   signature is the content signature of a table the build reads
   (:func:`signature`: path, mtime and size; a recursive per-file walk for a
   directory dataset). A fixture regenerated at the same path therefore
   lands on a fresh entry and can never be served stale. A build that reads
-  no table (a write-time layout directory whose path already names its
-  content) passes ``tables=()`` and keys on its path; its writers call
-  :func:`clear` with that path before they rewrite it.
+  no table (a parquet read of an artifact tree, whose path already names
+  its content) passes ``tables=()`` and keys on its path.
 - **Missing dataset:** when any of the tables is not on disk (a crafted
   frame behind a mocked ``tables.load``), the value is built and returned
   without caching.
@@ -23,14 +24,39 @@ here and nowhere else. The policy:
 
 Cold timings come from :func:`clear`, which drops everything (or one
 path's entries).
+
+On disk, :func:`artifact` keeps a tree of files that every session and
+process on the host shares (layouts, band indexes, component maps,
+bucketed tables):
+
+- **Key:** the store directory ``<tempdir>/boletia_{tag}_{signatures}``,
+  one content signature per table the writer reads. A rewritten table
+  names a fresh store.
+- **Version:** the tag carries the writer's code version (``ivf_layout_v2``).
+  Bump it whenever the writer's output changes for the same input;
+  otherwise trees built by older code are served.
+- **Commit:** the writer fills a staging tree and the store's pointer file
+  is flipped onto it (``streaming._snapshot.SnapshotDir``). A tree is
+  served only once its pointer names it, so a crashed or failed write is
+  never read and the next call rebuilds. A store left by older code
+  without a pointer reads as not built, and the first commit removes it.
+- **Lock:** first builds of one store are serialized across threads and
+  processes by an exclusive ``flock`` on ``<store>.lock``, beside the
+  store because the commit deletes every entry of the store the pointer
+  does not name. The winner builds; the others find its tree.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
+import shutil
+import tempfile
 import threading
 from collections import OrderedDict
+
+from .streaming._snapshot import SnapshotDir
 
 MAX_ENTRIES = 128
 
@@ -66,10 +92,9 @@ def _sign(path: str) -> str | None:
 
 def signature(sf_dir: str, table: str) -> str:
     """Content signature of ``table`` under ``sf_dir`` — also the name
-    component of on-disk derived artifacts (layouts, band indexes), so a
-    regenerated fixture gets a fresh artifact. Raises FileNotFoundError
-    when the table is missing: an artifact needs a dataset to be built
-    from."""
+    component of :func:`artifact` stores, so a regenerated fixture gets a
+    fresh artifact. Raises FileNotFoundError when the table is missing: an
+    artifact needs a dataset to be built from."""
     sig = _sign(_table_path(sf_dir, table))
     if sig is None:
         raise FileNotFoundError(
@@ -94,6 +119,31 @@ def cached(spark, sf_dir: str, tables, tag: str, build):
         while len(_CACHE) > MAX_ENTRIES:
             _CACHE.popitem(last=False)
     return value
+
+
+def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
+    """Path of the committed tree ``write(path)`` builds from ``tables``
+    under ``sf_dir``, written at most once per content (see the
+    docstring)."""
+    sigs = "_".join(signature(sf_dir, t) for t in tables)
+    store = SnapshotDir(os.path.join(tempfile.gettempdir(), f"boletia_{tag}_{sigs}"))
+    tree, _ = store.current()
+    if tree is not None:
+        return tree
+    with open(store.path + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        tree, _ = store.current()
+        if tree is None:
+            # every write starts empty: drop what a failed attempt left
+            staging = store.staging(0)
+            shutil.rmtree(staging, ignore_errors=True)
+            write(staging)
+            store.commit(os.path.basename(staging), 0)
+            tree, _ = store.current()
+            # a store deleted from outside is rebuilt at the same path:
+            # drop this session's reads of the old files
+            clear(tree)
+    return tree
 
 
 def clear(path: str | None = None) -> None:

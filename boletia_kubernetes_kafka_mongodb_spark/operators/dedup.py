@@ -1483,18 +1483,6 @@ def ext_dedup_incremental_near_oracle() -> str:
     """
 
 
-def _band_index_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    # keyed by the source table's content signature, not just the path —
-    # a regenerated fixture must invalidate the standing index; v2 in the
-    # name: the hash-scheme change (xxhash64 → md5/universal perms) must
-    # invalidate indexes built by older code
-    key = cache.signature(sf_dir, "documents")
-    return os.path.join(tempfile.gettempdir(), f"boletia_band_index_v2_{key}")
-
-
 def ext_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup: the arriving batch (test split) probed against
     the standing corpus's write-time MinHash band index
@@ -1509,15 +1497,16 @@ def ext_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys AND the probe's, so the whole nightly gate is hash-checked
     (`ext_dedup_incremental_near_oracle`); the exact verify stage
     guarantees precision and recall vs the exhaustive cross-split pair set
-    is asserted in tests.
+    is asserted in tests. The standing index is a ``cache.artifact``,
+    written on first use.
     """
-    import os
-
     from ..sources import layouts
 
-    path = _band_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layouts.write_minhash_band_index(spark, sf_dir, path)
+    # v2: the hash-scheme change (xxhash64 → md5/universal perms)
+    path = cache.artifact(
+        spark, sf_dir, ("documents",), "band_index_v2",
+        lambda out: layouts.write_minhash_band_index(spark, sf_dir, out),
+    )
     return layouts.probe_minhash_band_index(spark, sf_dir, path)
 
 

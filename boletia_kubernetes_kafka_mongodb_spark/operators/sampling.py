@@ -132,10 +132,10 @@ def ext_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); the split itself stays a narrow map. The cluster derivation is
     the dominant cost and is exactly the dedup pass the pipeline already
     runs — so components persist as a WRITE-TIME ARTIFACT
-    (`ensure_components_layout`, the same build-once/serve-many pattern
-    as the IVF/SRP vector layouts, content-keyed so a regenerated corpus
-    invalidates it): the dedup pass pays it once, every split/dedup
-    consumer reads a tiny parquet.
+    (`ensure_components_layout`, a content-keyed ``cache.artifact`` like
+    the IVF/SRP vector layouts, so a regenerated corpus gets a fresh one):
+    the dedup pass pays it once, every split/dedup consumer in every
+    session reads a tiny parquet.
 
     Oracle: the clusters oracle's recursive CTE chain
     (`dedup._sql_clusters_ctes`, shared builder — composed, not
@@ -162,28 +162,19 @@ def ext_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_components_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the near-dup component map (doc_id → component) once per
-    dataset content signature and return its path — the write-time
-    artifact every cluster consumer (dedup survivorship, leakage-safe
-    split) reads instead of re-running the pair/CC pass. Same
-    ensure-pattern as `similarity.ensure_ivf_layout`: `_SUCCESS` marks a
-    complete build; a regenerated `documents` table changes the content
-    key and invalidates the layout."""
-    import os
-    import tempfile
-
+    """The committed near-dup component map (doc_id → component) for
+    ``sf_dir`` — the write-time artifact every cluster consumer (dedup
+    survivorship, leakage-safe split) reads instead of re-running the
+    pair/CC pass. A ``cache.artifact`` like the IVF/SRP layouts: written
+    once per `documents` content, shared by every session."""
     from . import dedup
 
-    key = cache.signature(sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), f"boletia_components_v1_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            dedup.ext_dedup_clusters(spark, sf_dir)
-            .select("doc_id", "component")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    return cache.artifact(
+        spark, sf_dir, ("documents",), "components_v1",
+        lambda path: dedup.ext_dedup_clusters(spark, sf_dir)
+        .select("doc_id", "component")
+        .write.parquet(path),
+    )
 
 
 def ext_split_leakage_safe_oracle() -> str:
@@ -946,8 +937,8 @@ def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the packed filter is cached (see `cache`) — it IS the precomputed
     # artifact bloom decontamination exists to ship (the eval set is small
-    # and fixed; a deployment builds the filter at eval-set ingest, the
-    # `_band_index_path` discipline)
+    # and fixed; a deployment builds the filter at eval-set ingest, as it
+    # builds the standing MinHash band index)
     mask = cache.cached(spark, sf_dir, ("documents",), "bloom-mask", _build_mask)
     mask_lit = F.lit(mask)
 

@@ -285,29 +285,16 @@ def ext_ann_lsh_topk_oracle() -> str:
     """
 
 
-def _srp_layout_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    key = cache.signature(sf_dir, "embeddings")
-    # LAYOUT_FMT version in the path: a quantizer/banding CODE change must
-    # invalidate on-disk layouts built by older code (the dataset key alone
-    # only tracks DATA changes)
-    return os.path.join(tempfile.gettempdir(), f"boletia_srp_layout_v2_{key}")
-
-
 def ensure_srp_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write the SRP band-bucket layout for ``sf_dir`` if absent (checked
-    via parquet's ``_SUCCESS``), and return its path — the one-time
-    indexing cost; every probe afterwards is an 8-partition pruned scan."""
-    import os
-
+    """The committed SRP band-bucket layout for ``sf_dir`` (a
+    ``cache.artifact``, written on first use) — the one-time indexing
+    cost; every probe afterwards is an 8-partition pruned scan."""
     from ..sources import layouts
 
-    path = _srp_layout_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layouts.write_srp_band_layout(spark, sf_dir, path)
-    return path
+    return cache.artifact(
+        spark, sf_dir, ("embeddings",), "srp_layout_v2",
+        lambda path: layouts.write_srp_band_layout(spark, sf_dir, path),
+    )
 
 
 def ann_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,31 +873,19 @@ def ext_ann_ndcg_audit_oracle() -> str:
     """
 
 
-def _ivf_layout_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    # content-signature key: a regenerated embeddings table invalidates the
-    # layout (path-only keys serve stale indexes silently)
-    key = cache.signature(sf_dir, "embeddings")
-    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
-    # determinism) — older layouts used unrounded argmax
-    return os.path.join(tempfile.gettempdir(), f"boletia_ivf_layout_v2_{key}")
-
-
 def ensure_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write the IVF-partitioned embedding layout for ``sf_dir`` if it isn't
-    already on disk (checked via parquet's ``_SUCCESS`` marker), and return
-    its path. The write is the one-time indexing cost every vector index
-    pays; every subsequent probe is a pruned scan."""
-    import os
-
+    """The committed IVF-partitioned embedding layout for ``sf_dir`` (a
+    ``cache.artifact``, written on first use). The write is the one-time
+    indexing cost every vector index pays; every subsequent probe is a
+    pruned scan."""
     from ..sources import layouts
 
-    path = _ivf_layout_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layouts.write_ivf_layout(spark, sf_dir, path)
-    return path
+    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
+    # determinism) — v1 layouts used unrounded argmax
+    return cache.artifact(
+        spark, sf_dir, ("embeddings",), "ivf_layout_v2",
+        lambda path: layouts.write_ivf_layout(spark, sf_dir, path),
+    )
 
 
 def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,14 +970,6 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     )
 
 
-def _ivf_refresh_path(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    key = cache.signature(sf_dir, "embeddings")
-    return os.path.join(tempfile.gettempdir(), f"boletia_ivf_refresh_v1_{key}")
-
-
 def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     """The nightly index-maintenance job, materialized once per dataset:
 
@@ -1022,43 +989,33 @@ def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     The refreshed layout serves through the same partition-pruned probe
     path as the one-shot layout, and equals a from-scratch rebuild under
     the same frozen quantizer row-for-row (pinned in tests — appends
-    must place vectors exactly where a rebuild would)."""
-    import os
+    must place vectors exactly where a rebuild would).
 
+    All three steps run inside the staging tree of a ``cache.artifact``:
+    the layout is served only once build, append and compaction have all
+    committed."""
     from .sampling import split_assignment
     from ..sources import layouts
 
-    path = _ivf_refresh_path(sf_dir)
-    marker = os.path.join(path, "_REFRESHED")
-    if os.path.exists(marker):
-        return path
-    assign, _, _ = _ivf_standing_quantizer(spark, sf_dir)
-    emb = tables.load(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    cache.clear(path)
-    # build: static overwrite clears any partial prior attempt
-    (
-        emb.where(split_assignment("vec_id") != "test")
-        .withColumn("ivf_list", assign("embedding"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_list")
-        .parquet(path)
-    )
-    # refresh: frozen-quantizer assignment of the arriving batch, appended
-    (
-        emb.where(split_assignment("vec_id") == "test")
-        .withColumn("ivf_list", assign("embedding"))
-        .write.mode("append")
-        .partitionBy("ivf_list")
-        .parquet(path)
-    )
-    cache.clear(path)
-    layouts.compact_layout(spark, path)
-    cache.clear(path)
-    with open(marker, "w") as f:
-        f.write("build+append+compact complete\n")
-    return path
+    def _write(path: str) -> None:
+        assign, _, _ = _ivf_standing_quantizer(spark, sf_dir)
+        emb = tables.load(spark, sf_dir, "embeddings").where(
+            F.col("embedding").isNotNull()
+        )
+        is_new = split_assignment("vec_id") == "test"
+        # build over the standing corpus, then append the arriving batch
+        # under the same frozen quantizer
+        for rows, mode in ((~is_new, "overwrite"), (is_new, "append")):
+            (
+                emb.where(rows)
+                .withColumn("ivf_list", assign("embedding"))
+                .write.mode(mode)
+                .partitionBy("ivf_list")
+                .parquet(path)
+            )
+        layouts.compact_layout(spark, path)
+
+    return cache.artifact(spark, sf_dir, ("embeddings",), "ivf_refresh_v1", _write)
 
 
 def ext_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:

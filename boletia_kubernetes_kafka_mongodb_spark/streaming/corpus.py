@@ -65,8 +65,8 @@ class DurableSketchState:
     the effect replay-safe); this store applies it to the monitors with
     the ``ParquetMergeTable`` discipline (``streaming/sinks.py``):
 
-    - the snapshot (state rows + the micro-batch id that produced them,
-      one constant ``_bid`` column) swaps atomically INSIDE the same
+    - the snapshot (the state rows; the pointer records the micro-batch
+      id that produced them) swaps atomically INSIDE the same
       ``foreachBatch`` that folded the batch;
     - restart: the handler reloads the exact state the last committed
       batch produced before the first new batch arrives;
@@ -89,8 +89,6 @@ class DurableSketchState:
     0-row state frame at batch N is representable (the previous layout's
     documented caveat is gone)."""
 
-    BID_COL = "_bid"
-
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -101,26 +99,15 @@ class DurableSketchState:
         has ever been committed."""
         sub, bid = self._snap.current()
         if sub is None:
-            # pre-r10 flat layout (parquet files directly in the store
-            # path, bid carried as a max over the _bid column): readable
-            # so an in-place upgrade resumes instead of re-warming.
-            if os.path.isdir(self.path) and any(
-                f.endswith(".parquet") for f in os.listdir(self.path)
-            ):
-                df = self.spark.read.parquet(self.path)
-                b = df.select(F.max(self.BID_COL)).first()[0]
-                return df.drop(self.BID_COL), (-1 if b is None else int(b))
             return None, -1
-        return self.spark.read.parquet(sub).drop(self.BID_COL), bid
+        return self.spark.read.parquet(sub), bid
 
     def save(self, state_df: DataFrame, bid: int) -> None:
         """Crash-atomic snapshot commit: write the immutable versioned
         dir, then flip the pointer with one ``os.replace`` (the
         ``SnapshotDir`` protocol; predecessor GC'd after the flip)."""
         sub = self._snap.staging(int(bid))
-        state_df.withColumn(
-            self.BID_COL, F.lit(int(bid)).cast("long")
-        ).write.mode("overwrite").parquet(sub)
+        state_df.write.mode("overwrite").parquet(sub)
         self._snap.commit(os.path.basename(sub), int(bid))
 
 

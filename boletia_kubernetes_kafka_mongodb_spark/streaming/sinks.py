@@ -39,15 +39,7 @@ class ParquetMergeTable:
 
     def read(self) -> DataFrame | None:
         sub, _ = self._snap.current()
-        if sub is None:
-            # pre-r10 flat layout (parquet files directly in the table
-            # path): readable so an in-place upgrade keeps its rows.
-            if os.path.isdir(self.path) and any(
-                f.endswith(".parquet") for f in os.listdir(self.path)
-            ):
-                return self.spark.read.parquet(self.path)
-            return None
-        return self.spark.read.parquet(sub)
+        return None if sub is None else self.spark.read.parquet(sub)
 
     def _replace_with(self, df: DataFrame) -> None:
         """Crash-atomic snapshot replace: write the immutable versioned

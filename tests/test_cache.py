@@ -1,9 +1,12 @@
-"""The session cache (`cache.py`): registry semantics, the missing-dataset
-rule, and content keying against in-place fixture rewrites."""
+"""The cache (`cache.py`): registry semantics, the missing-dataset rule,
+content keying against in-place fixture rewrites, and the on-disk
+artifact store's commit, reuse and first-build lock."""
 
 from __future__ import annotations
 
+import os
 import shutil
+from pathlib import Path
 from types import SimpleNamespace
 from unittest import mock
 
@@ -138,6 +141,124 @@ def test_missing_dataset_builds_uncached(fresh_cache, tmp_path):
     assert not fresh_cache
     with pytest.raises(FileNotFoundError):
         cache.signature(missing, "documents")
+
+
+@pytest.fixture
+def artifact_root(monkeypatch, tmp_path):
+    """Artifact stores under a private temp dir."""
+    import tempfile
+
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    return root
+
+
+def _writer(calls, payload="rows"):
+    def write(path):
+        calls.append(path)
+        os.makedirs(path)
+        (Path(path) / "part-0").write_text(payload)
+
+    return write
+
+
+def test_artifact_second_call_does_not_write(artifact_root, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+    calls = []
+    tree = cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", _writer(calls))
+    assert (Path(tree) / "part-0").read_text() == "rows"
+    again = cache.artifact(_fake_spark("app-2"), sf, ("documents",), "t_v1", _writer(calls))
+    assert again == tree and len(calls) == 1
+    # the tree is the one the store's pointer names
+    from boletia_kubernetes_kafka_mongodb_spark.streaming._snapshot import SnapshotDir
+
+    assert SnapshotDir(os.path.dirname(tree)).current()[0] == tree
+    # a new tag is a new store
+    assert cache.artifact(_fake_spark(), sf, ("documents",), "t_v2", _writer(calls)) != tree
+
+
+def test_artifact_failed_write_commits_nothing(artifact_root, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+
+    def broken(path):
+        os.makedirs(path)
+        (Path(path) / "part-0").write_text("half")
+        raise RuntimeError("writer died")
+
+    with pytest.raises(RuntimeError):
+        cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", broken)
+    (store,) = [p for p in artifact_root.iterdir() if p.is_dir()]
+    assert not (store / "CURRENT").exists()
+
+    calls = []
+    tree = cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", _writer(calls))
+    assert len(calls) == 1 and (Path(tree) / "part-0").read_text() == "rows"
+
+
+def test_artifact_collects_flat_store_left_at_its_root(artifact_root, tmp_path):
+    """A store written without a pointer (the old flat format: files plus
+    ``_SUCCESS``) reads as not built; the first commit removes it."""
+    sf = _dataset(tmp_path, "a", "documents")
+    flat = artifact_root / f"boletia_t_v1_{cache.signature(sf, 'documents')}"
+    (flat / "ivf_list=0").mkdir(parents=True)
+    (flat / "_SUCCESS").write_text("")
+    calls = []
+    tree = cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", _writer(calls))
+    assert len(calls) == 1
+    assert sorted(os.listdir(flat)) == ["CURRENT", os.path.basename(tree)]
+
+
+def test_artifact_rewritten_table_gets_a_fresh_tree(artifact_root, tmp_path):
+    sf = _dataset(tmp_path, "a", "documents")
+    calls = []
+    first = cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", _writer(calls, "old"))
+    (tmp_path / "a" / "documents.parquet").write_bytes(b"y" * 16)
+    second = cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", _writer(calls, "new"))
+    assert second != first and len(calls) == 2
+    assert (Path(second) / "part-0").read_text() == "new"
+
+
+def test_artifact_racing_first_builds_write_once(artifact_root, tmp_path):
+    """More threads than cores race one first build: ``write`` runs once
+    and every thread reads the same committed tree."""
+    import sys
+    import threading
+    import time
+
+    sf = _dataset(tmp_path, "a", "documents")
+    calls = []
+    write = _writer(calls)
+
+    def slow_write(path):
+        time.sleep(0.2)  # hold the lock while the other threads arrive
+        write(path)
+
+    n = 8
+    got, errors = [], []
+    start = threading.Barrier(n)
+
+    def worker():
+        try:
+            start.wait()
+            got.append(cache.artifact(_fake_spark(), sf, ("documents",), "t_v1", slow_write))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(calls) == 1
+    assert len(got) == n and len(set(got)) == 1
+    assert (Path(got[0]) / "part-0").read_text() == "rows"
 
 
 def test_simhash_under_mocked_load_matches_bruteforce(spark, tmp_path):

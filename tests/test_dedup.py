@@ -618,8 +618,12 @@ def test_tiled_bucket_pairs_equals_naive_on_hot_bucket(spark):
 # ---------------------------------------------------------------------------
 
 
-def _lev(a: str, b: str) -> int:
-    """Plain DP Levenshtein — the python reference for the JVM builtin."""
+def _lev(a: str, b: str, cap: int | None = None) -> int:
+    """Plain DP Levenshtein — the python reference for the JVM builtin.
+
+    With ``cap``, returns ``cap + 1`` as soon as a DP row's minimum
+    exceeds it: row minima never decrease, so the distance is then above
+    the cap too, and every distance within the cap is still exact."""
     if len(a) < len(b):
         a, b = b, a
     prev = list(range(len(b) + 1))
@@ -627,6 +631,8 @@ def _lev(a: str, b: str) -> int:
         cur = [i]
         for j, cb in enumerate(b, 1):
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        if cap is not None and min(cur) > cap:
+            return cap + 1
         prev = cur
     return prev[-1]
 
@@ -713,7 +719,7 @@ def test_edit_distance_matches_bruteforce(spark):
             (ta, na), (tb, nb) = norm[a], norm[b]
             if abs(na - nb) > dedup.EDIT_DIST_MAX:
                 continue
-            d = _lev(ta, tb)
+            d = _lev(ta, tb, dedup.EDIT_DIST_MAX)
             if d <= dedup.EDIT_DIST_MAX:
                 want[(min(a, b), max(a, b))] = d
     got = {

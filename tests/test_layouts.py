@@ -111,7 +111,8 @@ def test_driver_join_availability_bucketed_is_exchange_free(spark):
 
 def test_bucketed_availability_join_is_exchange_free(spark, tmp_path):
     db = "boletia_bucketed_test"
-    layouts.write_bucketed_tables(spark, SF_SMOKE, db=db, location=f"{tmp_path}/wh")
+    layouts.write_bucketed_tables(spark, SF_SMOKE, f"{tmp_path}/wh")
+    layouts.register_bucketed_tables(spark, db, f"{tmp_path}/wh")
     try:
         joined = layouts.availability_join_bucketed(spark, db=db)
         plan = plans.explain_str(joined)
@@ -341,50 +342,41 @@ def test_ext_ann_ivfpq_topk_pruned_plan_and_recall(spark):
         assert lists[r.vec_id] in probe, (r.vec_id, lists[r.vec_id])
 
 
-def test_bucketed_warehouse_heartbeat_protects_live_sessions(spark):
-    """The stale-sibling sweep keys on the HEARTBEAT file, not raw dir
-    mtime (round-6: dir mtime does not advance on reads, so a >6h-lived
-    session re-entering ensure must refresh its liveness mark or a newer
-    session's sweep would rmtree its in-use warehouse mid-run)."""
+def test_bucketed_tables_reregister_committed_tree_without_rewrite(spark, monkeypatch):
+    """The bucketed files are one committed tree shared by every session:
+    once the database is gone from the catalog (a new session, or a drop),
+    ensure registers that same tree again without rewriting it, and the
+    availability join over it stays exchange-free and correct."""
     import os
-    import tempfile
-    import time
+    from urllib.parse import urlparse
+
+    from boletia_kubernetes_kafka_mongodb_spark.operators import joins
+
+    def bucket_files(db):
+        return sorted(
+            (f, os.stat(urlparse(f).path).st_mtime_ns)
+            for name, _, _ in layouts.BUCKETED
+            for f in spark.table(f"{db}.{name}").inputFiles()
+        )
 
     db = layouts.ensure_bucketed_tables(spark, SF_SMOKE)
-    # locate THIS session's warehouse via the db key suffix
-    key = db[len("boletia_bucketed_"):]
-    loc = os.path.join(tempfile.gettempdir(), f"boletia_bucketed_wh_{key}")
-    hb = os.path.join(loc, layouts._HEARTBEAT_NAME)
-    assert os.path.exists(hb)
-    before = os.path.getmtime(hb)
+    before = bucket_files(db)
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+    assert not spark.catalog.databaseExists(db)
 
-    # simulate a long-lived session: age BOTH the dir and heartbeat,
-    # then re-enter ensure — the heartbeat must be refreshed
-    old = time.time() - 7 * 3600
-    os.utime(hb, (old, old))
-    os.utime(loc, (old, old))
-    layouts.ensure_bucketed_tables(spark, SF_SMOKE)
-    assert os.path.getmtime(hb) > old + 3600, "ensure must refresh the heartbeat"
+    def no_rewrite(*_a, **_k):
+        raise AssertionError("committed bucketed tree was rewritten")
 
-    # a sibling dir with an OLD dir mtime but FRESH heartbeat survives a
-    # sweep; one with an old (or absent) heartbeat is removed
-    live = os.path.join(tempfile.gettempdir(), "boletia_bucketed_wh_livefake")
-    dead = os.path.join(tempfile.gettempdir(), "boletia_bucketed_wh_deadfake")
-    for p in (live, dead):
-        os.makedirs(p, exist_ok=True)
-        os.utime(p, (old, old))
-    with open(os.path.join(live, layouts._HEARTBEAT_NAME), "w"):
-        pass  # fresh heartbeat, stale dir mtime → must survive
-    try:
-        # force the sweep branch: drop the catalog db so ensure rebuilds
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        layouts.ensure_bucketed_tables(spark, SF_SMOKE)
-        assert os.path.isdir(live), "fresh-heartbeat sibling swept (ADVICE bug)"
-        assert not os.path.isdir(dead), "stale sibling not swept"
-    finally:
-        import shutil
-        shutil.rmtree(live, ignore_errors=True)
-        shutil.rmtree(dead, ignore_errors=True)
+    monkeypatch.setattr(layouts, "write_bucketed_tables", no_rewrite)
+    assert layouts.ensure_bucketed_tables(spark, SF_SMOKE) == db
+    assert before and bucket_files(db) == before
+
+    df = joins.join_availability_bucketed(spark, SF_SMOKE)
+    plan = plans.explain_str(df)
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
+    assert "SelectedBucketsCount" in plan
+    got = sorted(map(tuple, df.collect()))
+    assert got == sorted(map(tuple, joins.join_availability(spark, SF_SMOKE).collect()))
 
 
 # --- round 10: IVF index refresh under corpus growth ------------------------

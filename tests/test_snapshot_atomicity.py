@@ -111,21 +111,6 @@ def test_sketch_empty_state_representable(spark, tmp_path):
     assert got.columns == ["j", "b", "cnt"]
 
 
-def test_sketch_legacy_flat_layout_still_loads(spark, tmp_path):
-    path = str(tmp_path / "state")
-    legacy = _cells(spark, [(1, 7, 42)]).withColumn(
-        "_bid", F.lit(5).cast("long")
-    )
-    legacy.write.mode("overwrite").parquet(path)
-    got, bid = C.DurableSketchState(spark, path).load()
-    assert bid == 5 and _sorted(got) == [(1, 7, 42)]
-    # and the first post-upgrade save moves it to the pointer protocol
-    store = C.DurableSketchState(spark, path)
-    store.save(_cells(spark, [(1, 7, 50)]), 6)
-    got, bid = C.DurableSketchState(spark, path).load()
-    assert bid == 6 and _sorted(got) == [(1, 7, 50)]
-
-
 # --- ParquetMergeTable -----------------------------------------------------
 
 
@@ -152,19 +137,6 @@ def test_merge_table_crash_between_write_and_flip(spark, tmp_path, monkeypatch):
     assert sorted(os.listdir(path)) == ["CURRENT", "v1"]
 
 
-def test_merge_table_legacy_flat_layout_still_reads(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [("a", 1, "x")], "k string, seq long, v string"
-    ).write.mode("overwrite").parquet(path)
-    t = sinks.ParquetMergeTable(spark, path, key="k", order_col="seq")
-    assert _sorted(t.read()) == [("a", 1, "x")]
-    t.upsert_keep_last(
-        spark.createDataFrame([("b", 2, "y")], "k string, seq long, v string")
-    )
-    assert _sorted(t.read()) == [("a", 1, "x"), ("b", 2, "y")]
-
-
 # --- protocol fuzz with the mid-swap crash action ---------------------------
 
 
@@ -179,10 +151,7 @@ class _CrashySketchStore(C.DurableSketchState):
 
     def save(self, state_df, bid):
         if self._rng.random() < self._p:
-            sub = self._snap.staging(int(bid))
-            state_df.withColumn(
-                self.BID_COL, F.lit(int(bid)).cast("long")
-            ).write.mode("overwrite").parquet(sub)
+            state_df.write.mode("overwrite").parquet(self._snap.staging(int(bid)))
             raise _CrashMidSwap(f"mid-swap crash at bid {bid}")
         super().save(state_df, bid)
 
@@ -686,8 +655,8 @@ def test_corrupt_pointer_raises_instead_of_silently_resetting(tmp_path):
 
 def test_corrupt_pointer_surfaces_through_durable_stores(spark, tmp_path):
     """The stores built on SnapshotDir (merge table, sketch state) must
-    surface pointer corruption loudly instead of falling back to the
-    legacy flat-layout probe (which would read the store as absent)."""
+    surface pointer corruption loudly instead of reading the store as
+    absent."""
     from boletia_kubernetes_kafka_mongodb_spark.streaming import _snapshot
 
     path = str(tmp_path / "tbl")
