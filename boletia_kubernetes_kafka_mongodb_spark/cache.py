@@ -44,13 +44,27 @@ bucketed tables):
   processes by an exclusive ``flock`` on ``<store>.lock``, beside the
   store because the commit deletes every entry of the store the pointer
   does not name. The winner builds; the others find its tree.
+- **Bound:** the lock file also records the store's sources, each table
+  path with the signature the tree is built from, written before the
+  commit. Each new build (never a hit) then deletes every other store
+  (``boletia_<name>_v<N>_<signatures>``, any tag) whose recorded sources
+  are missing or rewritten, each with its lock file. A store whose lock is
+  held is being built and is skipped. A store without a record is deleted
+  only if nothing was ever committed to it (a flat store of older code);
+  a committed store of older code names no sources, so it is kept: a
+  reader may hold it. Any tag counts, so the stores of a retired tag
+  version go with their datasets too. A store outlives its dataset until
+  the next build of any store.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
 import hashlib
+import json
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -59,6 +73,7 @@ from collections import OrderedDict
 from .streaming._snapshot import SnapshotDir
 
 MAX_ENTRIES = 128
+_STORE = re.compile(r"boletia_\w+_v\d+(_[0-9a-f]{12})+")
 
 _CACHE: OrderedDict = OrderedDict()
 # guards _CACHE, never held across a build (builds nest)
@@ -125,7 +140,8 @@ def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
     """Path of the committed tree ``write(path)`` builds from ``tables``
     under ``sf_dir``, written at most once per content (see the
     docstring)."""
-    sigs = "_".join(signature(sf_dir, t) for t in tables)
+    sources = {_table_path(sf_dir, t): signature(sf_dir, t) for t in tables}
+    sigs = "_".join(sources.values())
     store = SnapshotDir(os.path.join(tempfile.gettempdir(), f"boletia_{tag}_{sigs}"))
     tree, _ = store.current()
     if tree is not None:
@@ -138,12 +154,44 @@ def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
             staging = store.staging(0)
             shutil.rmtree(staging, ignore_errors=True)
             write(staging)
+            lock.truncate(0)
+            lock.write(json.dumps(sources))
+            lock.flush()  # no committed store without its record
             store.commit(os.path.basename(staging), 0)
             tree, _ = store.current()
             # a store deleted from outside is rebuilt at the same path:
             # drop this session's reads of the old files
             clear(tree)
+            _collect_stale(store.path)
     return tree
+
+
+def _collect_stale(own: str) -> None:
+    """Delete the other stores that no live source backs (see the
+    docstring's **Bound**)."""
+    root = os.path.dirname(own)
+    for entry in os.listdir(root):
+        path = os.path.join(root, entry)
+        if path == own or not _STORE.fullmatch(entry) or not os.path.isdir(path):
+            continue
+        with open(path + ".lock", "a+") as lock:
+            try:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                continue
+            lock.seek(0)
+            try:
+                sources = json.loads(lock.read())
+            except ValueError:
+                sources = {}
+            if sources:
+                if all(_sign(p) == sig for p, sig in sources.items()):
+                    continue
+            elif os.path.exists(os.path.join(path, SnapshotDir.POINTER)):
+                continue
+            shutil.rmtree(path, ignore_errors=True)
+            with contextlib.suppress(FileNotFoundError):  # a racing collector
+                os.remove(path + ".lock")
 
 
 def clear(path: str | None = None) -> None:

@@ -11,21 +11,117 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 
+def tile_sides(key, pdf, pack):
+    """Split one (…, block_i, block_j) tile of a ``dedup.block_tiles``
+    fan-out into its packed sides: ``(diagonal, a, b)``, where ``a`` is
+    ``pack`` of the block_i rows and ``b`` of the block_j rows. The
+    diagonal tile carries side 'a' only and is paired with itself (``b is
+    a``). None when either side is empty — the tile holds no pair."""
+    pi, pj = key[-2:]
+    a = pdf[pdf["side"] == "a"]
+    if not len(a):
+        return None
+    a = pack(a)
+    if pi == pj:
+        return True, a, a
+    b = pdf[pdf["side"] == "b"]
+    if not len(b):
+        return None
+    return False, a, pack(b)
+
+
+def _pack_sets(rows):
+    import numpy as np
+
+    ids = rows["doc_id"].to_numpy(dtype=np.int64)
+    hs = [np.asarray(h, dtype=np.int64) for h in rows["hs"]]
+    return ids, hs
+
+
+def _pack_vectors(rows):
+    """(ids, unit-norm row matrix) of a tile side."""
+    import numpy as np
+
+    ids = rows["vec_id"].to_numpy(dtype=np.int64)
+    M = np.array([np.asarray(e, dtype=np.float64) for e in rows["embedding"]])
+    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    return ids, M
+
+
+def _set_tile_scores(key, pdf, measure, threshold):
+    """Score one (lang, block_i, block_j) tile of the exact token-set join:
+    ``(ids_a, ids_b, score)`` of the pairs scoring ≥ ``threshold``, or None
+    when there are none.
+
+    The tile builds a membership matrix over the TILE-LOCAL vocabulary
+    (np.unique + searchsorted — built per tile on the executor, never on
+    the driver) and computes ALL pairwise intersection sizes in one float32
+    matmul (BLAS; exact for counts ≪ 2²⁴), then vectorizes the measure and
+    its rounding over the whole tile at once. ``measure`` ∈ {"jaccard",
+    "containment"}: inter/union vs inter/min-size, 6dp-rounded as the
+    oracles round before they compare; zero-token docs score 0.0 (below any
+    threshold), matching the oracles' NULL-drop / explicit-exclusion
+    behavior. The diagonal tile keeps only its upper triangle by doc_id
+    order."""
+    import numpy as np
+
+    sides = tile_sides(key, pdf, _pack_sets)
+    if sides is None:
+        return None
+    diagonal, (ids_a, hs_a), (ids_b, hs_b) = sides
+    vocab = np.unique(np.concatenate(hs_a + hs_b + [np.array([], dtype=np.int64)]))
+
+    def membership(hs_list):
+        m = np.zeros((len(hs_list), len(vocab)), dtype=np.float32)
+        for i, h in enumerate(hs_list):
+            m[i, np.searchsorted(vocab, h)] = 1.0
+        return m
+
+    m_a = membership(hs_a)
+    m_b = m_a if diagonal else membership(hs_b)
+    sz_a = np.array([len(h) for h in hs_a], dtype=np.int64)
+    sz_b = sz_a if diagonal else np.array([len(h) for h in hs_b], dtype=np.int64)
+    inter = (m_a @ m_b.T).astype(np.int64)  # (na, nb) exact intersection sizes
+    if measure == "jaccard":
+        denom = sz_a[:, None] + sz_b[None, :] - inter
+    else:
+        denom = np.minimum(sz_a[:, None], sz_b[None, :])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = np.where(denom > 0, np.round(inter / denom, 6), 0.0)
+    pairable = ids_a[:, None] < ids_b[None, :] if diagonal else np.ones_like(s, bool)
+    ii, jj = np.nonzero(pairable & (s >= threshold))
+    if not len(ii):
+        return None
+    return ids_a[ii], ids_b[jj], s[ii, jj]
+
+
+def cc_core(src, dst):
+    """Vectorized min-label propagation with pointer jumping over int64
+    (doc_a, doc_b) edge arrays — returns (nodes, component) arrays. Pure
+    function of the arrays: the set-component kernel's in-tile
+    contraction, the Spark-frame driver path (``dedup._cc_driver``) and
+    the graph operators' cached-array fast path share these exact bits."""
+    import numpy as np
+
+    nodes = np.unique(np.concatenate([src, dst]))
+    si = np.searchsorted(nodes, src)
+    di = np.searchsorted(nodes, dst)
+    label = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, di, label[si])
+        np.minimum.at(label, si, label[di])
+        label = np.minimum(label, label[label])  # pointer jumping
+        if np.array_equal(label, prev):
+            break
+    return nodes, nodes[label]
+
+
 def make_set_pairs_kernel(measure, threshold):
     """applyInPandas kernel for one (lang, block_i, block_j) tile of the
     exact all-pairs token-set similarity join (see
-    ``dedup._blocked_set_pairs``).
-
-    The tile builds a boolean membership matrix over the TILE-LOCAL
-    vocabulary (np.unique + searchsorted — built per tile on the executor,
-    never on the driver) and computes ALL pairwise intersection sizes in one
-    float32 matmul (BLAS; exact for counts ≪ 2²⁴), then vectorizes the
-    measure, rounding, and threshold over the whole tile at once.
-    ``measure`` ∈ {"jaccard", "containment"}: inter/union vs inter/min-size,
-    both with the oracle's round-then-compare semantics; zero-token docs
-    score 0.0 (below any threshold), matching the oracles' NULL-drop /
-    explicit-exclusion behavior.
-    """
+    ``dedup._blocked_set_pairs``): the qualifying pairs of
+    ``_set_tile_scores``, with their score."""
 
     def kernel(key, pdf):
         import numpy as np
@@ -39,56 +135,16 @@ def make_set_pairs_kernel(measure, threshold):
                 measure: pd.Series(dtype="float64"),
             }
         )
-        lang, pi, pj = key
-
-        def pack(rows):
-            ids = rows["doc_id"].to_numpy(dtype=np.int64)
-            hs = [np.asarray(h, dtype=np.int64) for h in rows["hs"]]
-            return ids, hs
-
-        a = pdf[pdf["side"] == "a"]
-        if not len(a):
+        hits = _set_tile_scores(key, pdf, measure, threshold)
+        if hits is None:
             return empty
-        ids_a, hs_a = pack(a)
-        diagonal = pi == pj
-        if diagonal:
-            ids_b, hs_b = ids_a, hs_a
-        else:
-            b = pdf[pdf["side"] == "b"]
-            if not len(b):
-                return empty
-            ids_b, hs_b = pack(b)
-        vocab = np.unique(np.concatenate(hs_a + hs_b + [np.array([], dtype=np.int64)]))
-
-        def membership(hs_list):
-            m = np.zeros((len(hs_list), len(vocab)), dtype=np.float32)
-            for i, h in enumerate(hs_list):
-                m[i, np.searchsorted(vocab, h)] = 1.0
-            return m
-
-        m_a = membership(hs_a)
-        m_b = m_a if diagonal else membership(hs_b)
-        sz_a = np.array([len(h) for h in hs_a], dtype=np.int64)
-        sz_b = sz_a if diagonal else np.array([len(h) for h in hs_b], dtype=np.int64)
-        inter = (m_a @ m_b.T).astype(np.int64)  # (na, nb) exact intersection sizes
-        if measure == "jaccard":
-            denom = sz_a[:, None] + sz_b[None, :] - inter
-        else:
-            denom = np.minimum(sz_a[:, None], sz_b[None, :])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            s = np.where(denom > 0, np.round(inter / denom, 6), 0.0)
-        # diagonal tiles keep only the upper triangle by doc_id order
-        pairable = ids_a[:, None] < ids_b[None, :] if diagonal else np.ones_like(s, bool)
-        ii, jj = np.nonzero(pairable & (s >= threshold))
-        if not len(ii):
-            return empty
-        ia, ib = ids_a[ii], ids_b[jj]
+        ia, ib, score = hits
         return pd.DataFrame(
             {
                 "doc_a": np.minimum(ia, ib),
                 "doc_b": np.maximum(ia, ib),
-                "lang": str(lang),
-                measure: s[ii, jj],
+                "lang": str(key[0]),
+                measure: score,
             }
         )
 
@@ -100,75 +156,25 @@ def make_set_component_kernel(threshold):
     the (root, node) STAR EDGES of the tile-local connected components
     instead of the qualifying pair list (see ``dedup.ext_dedup_clusters``).
 
-    Same membership-matmul scoring as ``make_set_pairs_kernel``; the
-    in-tile contraction (vectorized min-label pointer jumping) collapses a
-    dense tile's ~k² qualifying pairs to ≤ |tile nodes| rows before
-    anything leaves the python worker. Tile-local shortcuts are always true
-    connections and every qualifying pair scores in its designated tile, so
-    the union of star edges has exactly the corpus's connectivity — the
-    cross-tile merge happens in ``_connected_components``.
+    Same scoring as ``make_set_pairs_kernel`` (``_set_tile_scores``); the
+    in-tile contraction (``cc_core``) collapses a dense tile's ~k²
+    qualifying pairs to ≤ |tile nodes| rows before anything leaves the
+    python worker. Tile-local shortcuts are always true connections and
+    every qualifying pair scores in its designated tile, so the union of
+    star edges has exactly the corpus's connectivity — the cross-tile merge
+    happens in ``_connected_components``.
     """
 
     def kernel(key, pdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {"doc_a": pd.Series(dtype="int64"), "doc_b": pd.Series(dtype="int64")}
-        )
-        _, pi, pj = key
-
-        def pack(rows):
-            ids = rows["doc_id"].to_numpy(dtype=np.int64)
-            hs = [np.asarray(h, dtype=np.int64) for h in rows["hs"]]
-            return ids, hs
-
-        a = pdf[pdf["side"] == "a"]
-        if not len(a):
-            return empty
-        ids_a, hs_a = pack(a)
-        diagonal = pi == pj
-        if diagonal:
-            ids_b, hs_b = ids_a, hs_a
-        else:
-            b = pdf[pdf["side"] == "b"]
-            if not len(b):
-                return empty
-            ids_b, hs_b = pack(b)
-        vocab = np.unique(np.concatenate(hs_a + hs_b + [np.array([], dtype=np.int64)]))
-
-        def membership(hs_list):
-            m = np.zeros((len(hs_list), len(vocab)), dtype=np.float32)
-            for i, h in enumerate(hs_list):
-                m[i, np.searchsorted(vocab, h)] = 1.0
-            return m
-
-        m_a = membership(hs_a)
-        m_b = m_a if diagonal else membership(hs_b)
-        sz_a = np.array([len(h) for h in hs_a], dtype=np.int64)
-        sz_b = sz_a if diagonal else np.array([len(h) for h in hs_b], dtype=np.int64)
-        inter = (m_a @ m_b.T).astype(np.int64)
-        denom = sz_a[:, None] + sz_b[None, :] - inter
-        with np.errstate(divide="ignore", invalid="ignore"):
-            s = np.where(denom > 0, np.round(inter / denom, 6), 0.0)
-        pairable = ids_a[:, None] < ids_b[None, :] if diagonal else np.ones_like(s, bool)
-        ii, jj = np.nonzero(pairable & (s >= threshold))
-        if not len(ii):
-            return empty
-        src, dst = ids_a[ii], ids_b[jj]
-        # tile-local contraction: min-label propagation with pointer jumping
-        nodes = np.unique(np.concatenate([src, dst]))
-        si = np.searchsorted(nodes, src)
-        di = np.searchsorted(nodes, dst)
-        lab = np.arange(len(nodes), dtype=np.int64)
-        while True:
-            prev = lab.copy()
-            np.minimum.at(lab, di, lab[si])
-            np.minimum.at(lab, si, lab[di])
-            lab = np.minimum(lab, lab[lab])
-            if np.array_equal(lab, prev):
-                break
-        return pd.DataFrame({"doc_a": nodes[lab], "doc_b": nodes})
+        hits = _set_tile_scores(key, pdf, "jaccard", threshold)
+        if hits is None:
+            return pd.DataFrame(
+                {"doc_a": pd.Series(dtype="int64"), "doc_b": pd.Series(dtype="int64")}
+            )
+        nodes, component = cc_core(*hits[:2])
+        return pd.DataFrame({"doc_a": component, "doc_b": nodes})
 
     return kernel
 
@@ -198,27 +204,13 @@ def make_knn_tile_kernel():
                 "cosine": pd.Series(dtype="float64"),
             }
         )
-        pi, pj = key
-
         def pack(rows):
-            ids = rows["vec_id"].to_numpy(dtype=np.int64)
-            labs = rows["label"].to_numpy(dtype=np.int32)
-            M = np.array([np.asarray(e, dtype=np.float64) for e in rows["embedding"]])
-            M /= np.linalg.norm(M, axis=1, keepdims=True)
-            return ids, labs, M
+            return (*_pack_vectors(rows), rows["label"].to_numpy(dtype=np.int32))
 
-        a = pdf[pdf["side"] == "a"]
-        if not len(a):
+        sides = tile_sides(key, pdf, pack)
+        if sides is None:
             return empty
-        ids_a, lab_a, A = pack(a)
-        diagonal = pi == pj
-        if diagonal:
-            ids_b, lab_b, B = ids_a, lab_a, A
-        else:
-            b = pdf[pdf["side"] == "b"]
-            if not len(b):
-                return empty
-            ids_b, lab_b, B = pack(b)
+        diagonal, (ids_a, A, lab_a), (ids_b, B, lab_b) = sides
 
         def best(sims, ids_src, lab_src, ids_dst, lab_dst):
             if sims.shape[1] == 0:
@@ -256,11 +248,10 @@ def make_block_cosine_kernel(threshold):
     """applyInPandas kernel for one (block_i, block_j) tile of the exact
     all-pairs cosine join (see ``dedup.ext_dedup_embedding``).
 
-    Each tile holds its two blocks' vectors (side 'a' = block_i rows, side
-    'b' = block_j rows; the diagonal tile carries side 'a' only) and does one
-    numpy matmul — vectorized Arrow path, no per-pair python, no data
-    outside the tile. Emits (vec_a < vec_b, cosine) above threshold with the
-    oracle's round-then-compare semantics.
+    One numpy matmul per tile — vectorized Arrow path, no per-pair python,
+    no data outside the tile. Emits (vec_a < vec_b, cosine) above threshold
+    with the oracle's round-then-compare semantics; the diagonal tile keeps
+    its strict upper triangle.
     """
 
     def kernel(key, pdf):
@@ -274,38 +265,23 @@ def make_block_cosine_kernel(threshold):
                 "cosine": pd.Series(dtype="float64"),
             }
         )
-        a = pdf[pdf["side"] == "a"]
-        if not len(a):
+        sides = tile_sides(key, pdf, _pack_vectors)
+        if sides is None:
             return empty
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        A = np.array([np.asarray(e, dtype=np.float64) for e in a["embedding"]])
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        pi, pj = key
-        if pi == pj:
-            if len(ids_a) < 2:
-                return empty
-            sims = np.round(A @ A.T, 6)
-            iu, ju = np.triu_indices(len(ids_a), k=1)
-            s = sims[iu, ju]
-            hit = s >= threshold
-            ia, ib = ids_a[iu][hit], ids_a[ju][hit]
-            s = s[hit]
+        diagonal, (ids_a, A), (ids_b, Bm) = sides
+        sims = np.round(A @ Bm.T, 6)
+        if diagonal:
+            ii, jj = np.triu_indices(len(ids_a), k=1)
+            hit = sims[ii, jj] >= threshold
+            ii, jj = ii[hit], jj[hit]
         else:
-            b = pdf[pdf["side"] == "b"]
-            if not len(b):
-                return empty
-            ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-            Bm = np.array([np.asarray(e, dtype=np.float64) for e in b["embedding"]])
-            Bm /= np.linalg.norm(Bm, axis=1, keepdims=True)
-            sims = np.round(A @ Bm.T, 6)
             ii, jj = np.nonzero(sims >= threshold)
-            ia, ib = ids_a[ii], ids_b[jj]
-            s = sims[ii, jj]
+        ia, ib = ids_a[ii], ids_b[jj]
         return pd.DataFrame(
             {
                 "vec_a": np.minimum(ia, ib),
                 "vec_b": np.maximum(ia, ib),
-                "cosine": s,
+                "cosine": sims[ii, jj],
             }
         )
 

@@ -191,14 +191,14 @@ def _token_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _blocked_set_pairs(spark: SparkSession, sf_dir: str, measure: str, threshold: float) -> DataFrame:
     """Exact all-pairs token-set similarity (Jaccard or containment ≥
-    threshold), blocked by ``lang``, as a block-tiled bitmask join.
+    threshold), blocked by ``lang``, as a block-tiled membership-matmul
+    join.
 
-    Physical plan: the lang block's docs hash into ``SET_BLOCKS`` blocks;
-    each doc replicates (via explode, never a CartesianProduct) to the
-    (i ≤ j) tiles it participates in, and each (lang, i, j) tile packs its
-    two blocks' token sets into uint64 bitmasks over the tile-local
-    vocabulary and scores every cross pair with one vectorized AND+popcount
-    sweep (``make_set_pairs_kernel``). Exact all-pairs is inherently
+    Physical plan: the docs hash into ``B`` blocks and replicate to the
+    (i ≤ j) tiles they participate in (``block_tiles``); each (lang, i, j)
+    tile scores every cross pair of its two blocks with one float32
+    membership matmul over the tile-local vocabulary
+    (``make_set_pairs_kernel``). Exact all-pairs is inherently
     quadratic in compute; this shape caps any task at a (N/B)² tile,
     shuffles (B+1)/2 × the (tiny — doc_id + ~25 longs) token-set rows, and
     keeps the driver out of the data path — the round-1 formulation packed
@@ -223,34 +223,41 @@ def _blocked_set_pairs(spark: SparkSession, sf_dir: str, measure: str, threshold
     )
 
 
-def _set_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replicate each doc's token-set row to its (i ≤ j) block tiles — the
-    shared fan-out stage of every tiled set-similarity kernel."""
-    sets = _token_hash_sets(spark, sf_dir)
-    B = _block_degree(sf_dir, "documents", floor=SET_BLOCKS)
-    v = sets.select(
-        "doc_id", "lang", "hs", "sz", F.pmod("doc_id", F.lit(B)).cast("int").alias("blk")
+def block_tiles(rows: DataFrame, id_col: str, B: int, *cols: str) -> DataFrame:
+    """The fan-out stage of every exact block-tiled all-pairs join: each
+    row hashes to block ``blk = id mod B`` and is copied to every (i ≤ j)
+    tile that holds it — as side 'a' of the tiles (blk, j ≥ blk) and as
+    side 'b' of the tiles (i < blk, blk). Columns ``pi``, ``pj``,
+    ``id_col``, ``cols`` and ``side``; callers group by (…, pi, pj) and
+    split each tile with ``_pandas_udfs.tile_sides``. The diagonal tile
+    carries side 'a' only. Replication is (B+1)/2 × the input, by explode,
+    never a CartesianProduct."""
+    v = rows.select(
+        id_col, *cols, F.pmod(id_col, F.lit(B)).cast("int").alias("blk")
     )
     as_a = v.select(
-        "lang",
         F.col("blk").alias("pi"),
         F.explode(F.sequence("blk", F.lit(B - 1))).alias("pj"),
-        "doc_id",
-        "hs",
-        "sz",
+        id_col,
+        *cols,
         F.lit("a").alias("side"),
     )
     # guard blk > 0: sequence(0, -1) would count DOWN, not produce empty
     as_b = v.where(F.col("blk") > 0).select(
-        "lang",
         F.explode(F.sequence(F.lit(0), F.col("blk") - 1)).alias("pi"),
         F.col("blk").alias("pj"),
-        "doc_id",
-        "hs",
-        "sz",
+        id_col,
+        *cols,
         F.lit("b").alias("side"),
     )
     return as_a.unionByName(as_b)
+
+
+def _set_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each doc's token-set row on its (i ≤ j) block tiles — the shared
+    fan-out stage of both tiled set-similarity kernels."""
+    B = _block_degree(sf_dir, "documents", floor=SET_BLOCKS)
+    return block_tiles(_token_hash_sets(spark, sf_dir), "doc_id", B, "lang", "hs", "sz")
 
 
 def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,27 +297,6 @@ DRIVER_CC_MAX_EDGES = 10_000_000  # below this the edge list is broadcast-sized
 _CC_MAX_ROUNDS = 25  # star contraction halves depth per round: 2^25 ≫ any graph
 
 
-def _cc_core(src, dst):
-    """Vectorized min-label propagation with pointer jumping over int64
-    (doc_a, doc_b) edge arrays — returns (nodes, component) arrays. Pure
-    function of the arrays: the Spark-frame driver path and the graph
-    operators' cached-array fast path share these exact bits."""
-    import numpy as np
-
-    nodes = np.unique(np.concatenate([src, dst]))
-    si = np.searchsorted(nodes, src)
-    di = np.searchsorted(nodes, dst)
-    label = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        prev = label.copy()
-        np.minimum.at(label, di, label[si])
-        np.minimum.at(label, si, label[di])
-        label = np.minimum(label, label[label])  # pointer jumping
-        if np.array_equal(label, prev):
-            break
-    return nodes, nodes[label]
-
-
 def _cc_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Driver fast path: vectorized min-label propagation with pointer
     jumping over a numpy edge list. Used only when the edge count is under
@@ -321,8 +307,10 @@ def _cc_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from ._pandas_udfs import cc_core
+
     edges_pdf = edges.toPandas()
-    nodes, component = _cc_core(
+    nodes, component = cc_core(
         edges_pdf["doc_a"].to_numpy(dtype=np.int64),
         edges_pdf["doc_b"].to_numpy(dtype=np.int64),
     )
@@ -737,6 +725,48 @@ def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def pair_features(
+    docs: DataFrame, pairs: DataFrame, a: str, b: str, features
+) -> DataFrame:
+    """``(a, b, f_a, f_b, …)``: for each candidate pair, every feature
+    column ``f`` that ``features(member_docs)`` returns next to ``doc_id``,
+    for both sides — the verify stage of the candidate-priced joins.
+
+    The pair list is materialized once (lazy ``localCheckpoint``: read by
+    two join inputs, it would otherwise re-run the candidate chain per
+    branch, measured 2×). The doc scan is semi-joined to the distinct
+    member ids first (broadcast, no text work), so ``features`` runs once
+    per member document however many pairs it joins, and one pair-key
+    aggregation assembles both sides.
+    """
+    cand = pairs.localCheckpoint(eager=False)
+    sides = cand.select(a, b, F.explode(F.array(a, b)).alias("member"))
+    members = sides.select(F.col("member").alias("doc_id")).distinct()
+    feats = features(docs.join(F.broadcast(members), "doc_id", "inner"))
+    joined = feats.withColumnRenamed("doc_id", "member").join(
+        F.broadcast(sides), "member", "inner"
+    )
+    member = F.col("member")
+    return joined.groupBy(a, b).agg(
+        *(
+            F.first(F.when(member == F.col(side), F.col(f)), ignorenulls=True).alias(
+                f"{f}_{suffix}"
+            )
+            for f in feats.columns
+            if f != "doc_id"
+            for side, suffix in ((a, "a"), (b, "b"))
+        )
+    )
+
+
+def jaccard_col(x: str, y: str) -> F.Column:
+    """6dp-rounded exact Jaccard of two set-valued array columns."""
+    return F.round(
+        F.size(F.array_intersect(x, y)).cast("double") / F.size(F.array_union(x, y)),
+        6,
+    )
+
+
 def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs with exact-Jaccard verification.
 
@@ -757,41 +787,21 @@ def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same `_token_hash_sets` / SimHash-signature discipline).
     """
     docs = tables.load(spark, sf_dir, "documents", fan=True)
-    candidates = _minhash_candidates(spark, sf_dir)
-    # exact-Jaccard verification priced by the CANDIDATE set, not the
-    # corpus. The pair list is materialized ONCE via localCheckpoint —
-    # referencing the lazy `candidates` frame from two join inputs would
-    # re-execute the whole signature→band→bucket chain per branch (measured
-    # 2×); at real scale a reliable checkpoint dir replaces local executor
-    # storage. Then join the raw doc scan against the distinct member ids
-    # FIRST (cheap broadcast semi on doc_id — no text work) and shingle
-    # only survivors: the full-corpus second shingling pass this operator
-    # used to pay is gone — at 100 TB the verify stage touches |members|
-    # documents, period, and each member shingles once however many pairs
-    # it joins. (~0.25s slower than the corpus-pass form at sf0.1, where
-    # one extra pass over 20k docs is almost free — the trade flips
-    # catastrophically in the corpus's favor at any real scale.)
-    cand = candidates.localCheckpoint(eager=False)
-    sides = cand.select(
-        "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    )
-    members = sides.select("doc_id").distinct()
-    member_docs = docs.join(F.broadcast(members), "doc_id", "inner")
-    shingles_df = member_docs.select(
-        "doc_id", _shingles_text().alias("sh")
-    )
-    joined = shingles_df.join(F.broadcast(sides), "doc_id", "inner")
-    paired = joined.groupBy("doc_a", "doc_b").agg(
-        F.first(F.when(F.col("doc_id") == F.col("doc_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-        F.first(F.when(F.col("doc_id") == F.col("doc_b"), F.col("sh")), ignorenulls=True).alias("sh_b"),
-    )
-    jac = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")),
-        6,
+    # exact-Jaccard verification priced by the candidate set
+    # (`pair_features`): only member docs are shingled, each once — the
+    # full-corpus second shingling pass is gone. (~0.25s slower than the
+    # corpus-pass form at sf0.1, where one extra pass over 20k docs is
+    # almost free — the trade flips catastrophically in the corpus's favor
+    # at any real scale.)
+    paired = pair_features(
+        docs,
+        _minhash_candidates(spark, sf_dir),
+        "doc_a",
+        "doc_b",
+        lambda d: d.select("doc_id", _shingles_text().alias("sh")),
     )
     return (
-        paired.select("doc_a", "doc_b", jac.alias("jaccard"))
+        paired.select("doc_a", "doc_b", jaccard_col("sh_a", "sh_b").alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
@@ -1142,8 +1152,8 @@ def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Physical plan: block-partitioned matmul. Vectors hash into
     ``EMBED_BLOCKS`` blocks; each vector replicates to the block *tiles*
-    (i ≤ j) it participates in via an explode (never a CartesianProduct),
-    and each tile computes one numpy matmul in ``applyInPandas``. Exact
+    (i ≤ j) it participates in (``block_tiles``), and each tile computes
+    one numpy matmul in ``applyInPandas``. Exact
     all-pairs is inherently quadratic in compute, but this shape caps any
     single task at a (N/B)² tile, shuffles (B+1)/2 × the corpus, and keeps
     the driver out of the data path entirely — the previous formulation
@@ -1158,25 +1168,8 @@ def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, sf_dir, "embeddings")
     B = _block_degree(sf_dir, "embeddings", floor=EMBED_BLOCKS)
     # null vectors can't participate in cosine — drop before the kernel
-    v = emb.where(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.pmod("vec_id", F.lit(B)).cast("int").alias("blk")
-    )
-    as_a = v.select(
-        F.col("blk").alias("pi"),
-        F.explode(F.sequence("blk", F.lit(B - 1))).alias("pj"),
-        "vec_id",
-        "embedding",
-        F.lit("a").alias("side"),
-    )
-    # guard blk > 0: sequence(0, -1) would count DOWN, not produce empty
-    as_b = v.where(F.col("blk") > 0).select(
-        F.explode(F.sequence(F.lit(0), F.col("blk") - 1)).alias("pi"),
-        F.col("blk").alias("pj"),
-        "vec_id",
-        "embedding",
-        F.lit("b").alias("side"),
-    )
-    tiles = as_a.unionByName(as_b)
+    vecs = emb.where(F.col("embedding").isNotNull())
+    tiles = block_tiles(vecs, "vec_id", B, "embedding")
     return tiles.groupBy("pi", "pj").applyInPandas(
         make_block_cosine_kernel(EMBED_DUP_THRESHOLD),
         schema="vec_a long, vec_b long, cosine double",
@@ -1251,7 +1244,7 @@ def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Containment = |A∩B| / min(|A|,|B|): the asymmetric companion to
     ``ext_dedup_ngram_jaccard`` that flags a short document subsumed by a
     longer one — the quote/boilerplate-extraction case Jaccard's
-    union-normalization hides. Same tiled bitmask join (see
+    union-normalization hides. Same tiled membership-matmul join (see
     ``_blocked_set_pairs``), same blocking, same exact-verification role
     next to the MinHash scale path.
     """
@@ -1801,7 +1794,7 @@ def _er_banded(identities: DataFrame) -> DataFrame:
         # tile chunk: a skewed band (many same-length identities — exactly
         # this fixture's userN emails) would otherwise put its whole |block|²
         # in ONE task; chunk-pair keys spread it over T² tasks (the
-        # EMBED_BLOCKS tiling pattern applied to ER)
+        # `block_tiles` tiling pattern, applied to ER as a join)
         F.pmod(F.xxhash64("email"), F.lit(ER_TILES)).cast("int").alias("chunk"),
     ).localCheckpoint(eager=False)
 
@@ -2173,35 +2166,28 @@ def ext_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-key aggregation assembles both sides — the corpus is never
     # signature-scanned at all (candidate-priced, like the dedup verify).
     docs = tables.load(spark, sf_dir, "documents", fan=True)
-    cand = _minhash_candidates(spark, sf_dir).localCheckpoint(eager=False)
-    sides = cand.select(
-        "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    )
-    members = sides.select("doc_id").distinct()
-    # double Generate barrier: bind sh, then hs, as concrete attributes so
-    # neither the shingle construction nor the hash transform inlines into
-    # the 32 per-perm lambdas (the measured-7s CollapseProject trap in
-    # `minhash_signatures`)
-    member_feats = (
-        docs.join(F.broadcast(members), "doc_id", "inner")
-        .select(
-            "doc_id", F.explode(F.array(_shingles_text())).alias("sh")
+
+    def member_feats(member_docs):
+        # double Generate barrier: bind sh, then hs, as concrete attributes
+        # so neither the shingle construction nor the hash transform inlines
+        # into the 32 per-perm lambdas (the measured-7s CollapseProject trap
+        # in `minhash_signatures`)
+        return (
+            member_docs.select(
+                "doc_id", F.explode(F.array(_shingles_text())).alias("sh")
+            )
+            .select(
+                "doc_id",
+                "sh",
+                F.explode(
+                    F.array(F.transform("sh", lambda s: shingle_hash31(s)))
+                ).alias("hs"),
+            )
+            .select("doc_id", "sh", _minhash_sig_over_hs().alias("sig"))
         )
-        .select(
-            "doc_id",
-            "sh",
-            F.explode(
-                F.array(F.transform("sh", lambda s: shingle_hash31(s)))
-            ).alias("hs"),
-        )
-        .select("doc_id", "sh", _minhash_sig_over_hs().alias("sig"))
-    )
-    joined = member_feats.join(F.broadcast(sides), "doc_id", "inner")
-    paired = joined.groupBy("doc_a", "doc_b").agg(
-        F.first(F.when(F.col("doc_id") == F.col("doc_a"), F.col("sig")), ignorenulls=True).alias("sig_a"),
-        F.first(F.when(F.col("doc_id") == F.col("doc_b"), F.col("sig")), ignorenulls=True).alias("sig_b"),
-        F.first(F.when(F.col("doc_id") == F.col("doc_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-        F.first(F.when(F.col("doc_id") == F.col("doc_b"), F.col("sh")), ignorenulls=True).alias("sh_b"),
+
+    paired = pair_features(
+        docs, _minhash_candidates(spark, sf_dir), "doc_a", "doc_b", member_feats
     )
     est = F.round(
         F.aggregate(
@@ -2212,11 +2198,7 @@ def ext_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(float(MINHASH_PERMS)),
         6,
     )
-    exact = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")),
-        6,
-    )
+    exact = jaccard_col("sh_a", "sh_b")
     return paired.select(
         "doc_a",
         "doc_b",

@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from . import dedup
+from ._pandas_udfs import cc_core
 
 PR_ITERS = 8            # fixed power-iteration count (state: iter ∈ [0, 8])
 PR_DAMP_NUM = 85        # damping d = 85/100 in integer arithmetic
@@ -160,7 +161,7 @@ def _cc_arrays_cache(spark: SparkSession, sf_dir: str):
 
     def _build():
         _, arrays = _pair_arrays(spark, sf_dir)
-        return dedup._cc_core(*arrays)
+        return cc_core(*arrays)
 
     return cache.cached(spark, sf_dir, ("documents",), "graph-cc-arrays", _build)
 

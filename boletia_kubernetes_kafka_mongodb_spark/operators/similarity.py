@@ -1544,10 +1544,10 @@ def ext_knn_label_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation primitive, and the standard embedding-quality probe
     (neighborhood label purity).
 
-    Physical plan: the same block-tile shape as ``dedup.ext_dedup_embedding``
-    — vectors replicate to their (i ≤ j) tiles via explode, each tile emits
-    its per-vector best candidate from one numpy matmul
-    (``make_knn_tile_kernel``), and a groupBy max on (cosine, −neighbor_id)
+    Physical plan: the block-tile join of ``dedup.block_tiles``, as in
+    ``dedup.ext_dedup_embedding`` — vectors replicate to their (i ≤ j)
+    tiles, each tile emits its per-vector best candidate from one numpy
+    matmul (``make_knn_tile_kernel``), and a groupBy max on (cosine, −neighbor_id)
     reduces tile candidates to the global 1-NN. All-pairs compute tiled to
     (N/B)² tasks, (B+1)/2 × shuffle replication, no driver collect, and the
     final reduce shuffles one candidate row per (vector, tile) — not the
@@ -1555,29 +1555,14 @@ def ext_knn_label_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the oracle window exactly.
     """
     from ._pandas_udfs import make_knn_tile_kernel
-    from .dedup import _block_degree
+    from .dedup import _block_degree, block_tiles
 
     emb = tables.load(spark, sf_dir, "embeddings")
     B = _block_degree(sf_dir, "embeddings", floor=KNN_BLOCKS)
     # null vectors can't participate in cosine — drop before the kernel
-    v = emb.where(F.col("embedding").isNotNull()).select(
-        "vec_id", "label", "embedding",
-        F.pmod("vec_id", F.lit(B)).cast("int").alias("blk"),
-    )
-    as_a = v.select(
-        F.col("blk").alias("pi"),
-        F.explode(F.sequence("blk", F.lit(B - 1))).alias("pj"),
-        "vec_id", "label", "embedding",
-        F.lit("a").alias("side"),
-    )
-    # guard blk > 0: sequence(0, -1) would count DOWN, not produce empty
-    as_b = v.where(F.col("blk") > 0).select(
-        F.explode(F.sequence(F.lit(0), F.col("blk") - 1)).alias("pi"),
-        F.col("blk").alias("pj"),
-        "vec_id", "label", "embedding",
-        F.lit("b").alias("side"),
-    )
-    candidates = as_a.unionByName(as_b).groupBy("pi", "pj").applyInPandas(
+    vecs = emb.where(F.col("embedding").isNotNull())
+    tiles = block_tiles(vecs, "vec_id", B, "label", "embedding")
+    candidates = tiles.groupBy("pi", "pj").applyInPandas(
         make_knn_tile_kernel(),
         schema="vec_id long, label int, nn_vec_id long, nn_label int, cosine double",
     )

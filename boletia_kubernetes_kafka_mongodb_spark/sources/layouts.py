@@ -464,7 +464,9 @@ def probe_minhash_band_index(
     from ..operators.dedup import (
         JACCARD_THRESHOLD,
         _shingles_text,
+        jaccard_col,
         minhash_band_keys,
+        pair_features,
     )
     from ..operators.sampling import split_assignment
 
@@ -475,40 +477,18 @@ def probe_minhash_band_index(
         "band", "bucket", F.col("doc_id").alias("dup_of")
     )
     candidates = (
-        new_keys.join(index, ["band", "bucket"])
-        .select("doc_id", "dup_of")
-        .distinct()
-        .localCheckpoint(eager=False)
+        new_keys.join(index, ["band", "bucket"]).select("doc_id", "dup_of").distinct()
     )
-    sides = candidates.select(
+    paired = pair_features(
+        docs,
+        candidates,
         "doc_id",
         "dup_of",
-        F.explode(F.array("doc_id", "dup_of")).alias("member"),
+        lambda d: d.select("doc_id", _shingles_text().alias("sh")),
     )
-    members = sides.select("member").distinct()
-    member_docs = docs.join(
-        F.broadcast(members.withColumnRenamed("member", "doc_id")), "doc_id"
-    )
-    sh = member_docs.select(
-        F.col("doc_id").alias("member"), _shingles_text().alias("sh")
-    )
-    joined = sh.join(F.broadcast(sides), "member")
-    paired = joined.groupBy("doc_id", "dup_of").agg(
-        F.first(
-            F.when(F.col("member") == F.col("doc_id"), F.col("sh")), ignorenulls=True
-        ).alias("sh_new"),
-        F.first(
-            F.when(F.col("member") == F.col("dup_of"), F.col("sh")), ignorenulls=True
-        ).alias("sh_old"),
-    )
-    jac = F.round(
-        F.size(F.array_intersect("sh_new", "sh_old")).cast("double")
-        / F.size(F.array_union("sh_new", "sh_old")),
-        6,
-    )
-    return paired.select("doc_id", "dup_of", jac.alias("jaccard")).where(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
+    return paired.select(
+        "doc_id", "dup_of", jaccard_col("sh_a", "sh_b").alias("jaccard")
+    ).where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------

@@ -80,30 +80,6 @@ CONFIGS: dict[str, dict[str, str]] = {
 }
 
 
-def _norm(v, duck=False):
-    """Driver-style cell canonicalization (mirrors tests/conftest.py,
-    including its ASYMMETRIC NaN rule: only the DUCKDB side NULL-maps
-    NaN — DuckDB surfaces SQL NULL aggregates as float('nan') through
-    fetchall in some paths. A SPARK-side NaN stays a distinct value, so
-    a config-sensitive regression that turns a NULL result into NaN
-    (silent-null casts are exactly what ansioff probes) is a caught
-    mismatch, not a green)."""
-    import decimal
-    import math
-
-    if v is None or (duck and isinstance(v, float) and math.isnan(v)):
-        return "\x00NULL"
-    if isinstance(v, bool):
-        return f"bool:{v}"
-    if isinstance(v, decimal.Decimal):
-        return f"decimal:{v}"
-    if isinstance(v, float):
-        return f"float:{round(v, 6)}"
-    if isinstance(v, int):
-        return f"int:{v}"
-    return f"str:{v}"
-
-
 def run_child(config_name: str, sf_dir: str, only: list[str] | None) -> dict:
     """Execute one full sweep under ``config_name`` in this process."""
     from pyspark.sql import SparkSession
@@ -120,6 +96,8 @@ def run_child(config_name: str, sf_dir: str, only: list[str] | None) -> dict:
     import __spark_entry__ as entry
 
     import duckdb
+
+    from tests.conftest import canon
 
     con = duckdb.connect()
     for name in (
@@ -149,7 +127,7 @@ def run_child(config_name: str, sf_dir: str, only: list[str] | None) -> dict:
             sdf = queries[qid](spark, sf_dir)
             s_cols = sorted(sdf.columns)
             s_rows = sorted(
-                tuple(_norm(r[c]) for c in s_cols) for r in sdf.collect()
+                tuple(canon(r[c]) for c in s_cols) for r in sdf.collect()
             )
             sql = oracles.get(qid)
             if sql is None:
@@ -160,7 +138,7 @@ def run_child(config_name: str, sf_dir: str, only: list[str] | None) -> dict:
             d_cols = sorted(d_colnames)
             fetched = rel.fetchall()
             d_rows = sorted(
-                tuple(_norm(row[d_colnames.index(c)]) for c in d_cols)
+                tuple(canon(row[d_colnames.index(c)], duck=True) for c in d_cols)
                 for row in fetched
             )
             if s_cols != d_cols:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import decimal
+import math
 import sys
 from pathlib import Path
 
@@ -36,14 +38,36 @@ def duck():
     con.close()
 
 
+def canon(v, duck=False) -> str:
+    """Driver-style canonical form of one result cell, the one rule
+    `compare_with_oracle` and ``hostile.py`` compare by.
+
+    Values are type-tagged; floats round to 6dp; a Decimal stays apart
+    from a float, so a DECIMAL-typed oracle column is caught as a mismatch
+    (the driver's hash would differ). NaN→NULL is ASYMMETRIC: only the
+    DuckDB side (``duck=True``) maps NaN to NULL — DuckDB surfaces SQL NULL
+    aggregates as float('nan') through fetchall in some paths. A Spark-side
+    NaN stays a distinct value, so a config-sensitive regression that turns
+    a NULL result into NaN (silent-null casts) is a caught mismatch."""
+    if v is None or (duck and isinstance(v, float) and math.isnan(v)):
+        return "\x00NULL"
+    if isinstance(v, bool):
+        return f"bool:{v}"
+    if isinstance(v, decimal.Decimal):
+        return f"decimal:{v}"
+    if isinstance(v, float):
+        return f"float:{round(v, 6)}"
+    if isinstance(v, int):
+        return f"int:{v}"
+    return f"str:{v}"
+
+
 def compare_with_oracle(spark, duck, query_fn, sql, sf_dir=SF_CORRECT):
-    """Mimic the driver: row-count + column names + order-insensitive values.
+    """Mimic the driver: row-count + column names + order-insensitive values
+    (cells compared by `canon`).
 
     DuckDB results come via fetchall (native python values) — fetchdf would
     coerce BIGINT columns to float64 and mask/introduce type mismatches.
-
-    hostile.py's ``_norm`` mirrors this normalization (including the
-    asymmetric duck-side-only NaN→NULL rule) — keep the two in sync.
     """
     sdf = query_fn(spark, sf_dir)
     spark_rows = sdf.collect()
@@ -57,38 +81,9 @@ def compare_with_oracle(spark, duck, query_fn, sql, sf_dir=SF_CORRECT):
     d_cols = sorted(d_colnames)
     assert s_cols == d_cols, f"columns: spark={s_cols} duck={d_cols}"
 
-    import decimal
-
-    def norm(v):
-        if v is None:
-            return None
-        if isinstance(v, bool):
-            return bool(v)
-        # deliberately NOT coercing Decimal to float: a DECIMAL-typed oracle
-        # column must be caught as a mismatch (the driver's hash would differ)
-        if isinstance(v, decimal.Decimal):
-            return ("decimal", str(v))
-        if isinstance(v, float):
-            return round(v, 6)
-        if isinstance(v, int):
-            return int(v)
-        return str(v)
-
-    import math
-
-    def norm_duck(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return None
-        return norm(v)
-
-    def render(vals):  # None-safe total order, matching driver-style hashing
-        return tuple("\x00NULL" if v is None else f"{type(v).__name__}:{v}" for v in vals)
-
-    s_set = sorted(
-        render(norm(r[c]) for c in s_cols) for r in spark_rows
-    )
+    s_set = sorted(tuple(canon(r[c]) for c in s_cols) for r in spark_rows)
     d_set = sorted(
-        render(norm_duck(row[c]) for c in d_cols) for row in duck_rows
+        tuple(canon(row[c], duck=True) for c in d_cols) for row in duck_rows
     )
     mismatches = [
         (a, b) for a, b in zip(s_set, d_set) if a != b

@@ -261,6 +261,64 @@ def test_artifact_racing_first_builds_write_once(artifact_root, tmp_path):
     assert (Path(got[0]) / "part-0").read_text() == "rows"
 
 
+def _store_of(tree):
+    return Path(os.path.dirname(tree))
+
+
+def test_artifact_build_collects_stores_of_deleted_dataset(artifact_root, tmp_path):
+    """A build deletes the stores, of any tag, whose dataset is gone, and
+    flat stores of older code; other entries stay."""
+    a = _dataset(tmp_path, "a", "documents")
+    gone = [
+        _store_of(cache.artifact(_fake_spark(), a, ("documents",), tag, _writer([])))
+        for tag in ("t_v1", "u_v1")
+    ]
+    assert all(Path(f"{g}.lock").exists() for g in gone)
+    flat = artifact_root / "boletia_t_v1_0123456789ab"  # no pointer, no lock
+    (flat / "ivf_list=0").mkdir(parents=True)
+    other = artifact_root / "boletia_incidx_0123456789ab"  # not a store name
+    other.mkdir()
+    # committed by older code, which recorded no sources: kept
+    old_code = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "v_v1", _writer([])))
+    Path(f"{old_code}.lock").write_text("")
+    shutil.rmtree(a)
+    b = _dataset(tmp_path, "b", "documents")
+    store_b = _store_of(cache.artifact(_fake_spark(), b, ("documents",), "t_v1", _writer([])))
+    assert sorted(p.name for p in artifact_root.iterdir()) == sorted(
+        [store_b.name, f"{store_b.name}.lock", other.name,
+         old_code.name, f"{old_code.name}.lock"]
+    )
+
+
+def test_artifact_build_keeps_live_and_locked_siblings(artifact_root, tmp_path):
+    import fcntl
+
+    a = _dataset(tmp_path, "a", "documents")
+    live = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "t_v1", _writer([])))
+    other_tag = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "u_v1", _writer([])))
+    gone = _dataset(tmp_path, "gone", "documents")
+    held = _store_of(cache.artifact(_fake_spark(), gone, ("documents",), "t_v1", _writer([])))
+    shutil.rmtree(gone)
+    b = _dataset(tmp_path, "b", "documents")
+    with open(f"{held}.lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # a build of that store in progress
+        cache.artifact(_fake_spark(), b, ("documents",), "t_v1", _writer([]))
+    assert live.exists() and other_tag.exists() and held.exists()
+    # released, the next build of the tag collects it
+    c = _dataset(tmp_path, "c", "documents")
+    cache.artifact(_fake_spark(), c, ("documents",), "t_v1", _writer([]))
+    assert live.exists() and not held.exists()
+
+
+def test_artifact_build_collects_store_of_rewritten_source(artifact_root, tmp_path):
+    a = _dataset(tmp_path, "a", "documents")
+    old = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "t_v1", _writer([])))
+    (tmp_path / "a" / "documents.parquet").write_bytes(b"y" * 16)
+    new = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "t_v1", _writer([])))
+    assert new != old and new.exists()
+    assert not old.exists() and not Path(f"{old}.lock").exists()
+
+
 def test_simhash_under_mocked_load_matches_bruteforce(spark, tmp_path):
     """ext_dedup_simhash over a crafted corpus behind a mocked tables.load
     whose sf_dir has no dataset on disk: every cached stage builds

@@ -24,6 +24,8 @@ QIDS = (
     "ext_multimodal_features",
     "ext_ann_ivf_topk",
     "ext_dedup_simhash",
+    "ext_dedup_clusters",
+    "ext_knn_label_transfer",
 )
 
 DRIVER = textwrap.dedent(
