@@ -26,8 +26,9 @@ Cold timings come from :func:`clear`, which drops everything (or one
 path's entries).
 
 On disk, :func:`artifact` keeps a tree of files that every session and
-process on the host shares (layouts, band indexes, component maps,
-bucketed tables):
+process on the host shares (IVF and SRP layouts, band indexes, component
+maps, and the keyed tree of ``part``/``lineitem``: bucketed eventos and
+reservas plus the maintained ``reservado`` counter):
 
 - **Key:** the store directory ``<tempdir>/boletia_{tag}_{signatures}``,
   one content signature per table the writer reads. A rewritten table
@@ -52,9 +53,11 @@ bucketed tables):
   held is being built and is skipped. A store without a record is deleted
   only if nothing was ever committed to it (a flat store of older code);
   a committed store of older code names no sources, so it is kept: a
-  reader may hold it. Any tag counts, so the stores of a retired tag
-  version go with their datasets too. A store outlives its dataset until
-  the next build of any store.
+  reader may hold it. Its first hit writes its record (the store's name
+  encodes the signatures it was built from), and from then on it is
+  collected like any other. Any tag counts, so the stores of a retired
+  tag version go with their datasets too. A store outlives its dataset
+  until the next build of any store.
 """
 
 from __future__ import annotations
@@ -145,6 +148,7 @@ def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
     store = SnapshotDir(os.path.join(tempfile.gettempdir(), f"boletia_{tag}_{sigs}"))
     tree, _ = store.current()
     if tree is not None:
+        _record_hit(store.path, sources)
         return tree
     with open(store.path + ".lock", "a") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
@@ -164,6 +168,21 @@ def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
             clear(tree)
             _collect_stale(store.path)
     return tree
+
+
+def _record_hit(store: str, sources: dict) -> None:
+    """Give a committed store without a sources record (one committed by
+    code that kept none) its record. The store's name encodes the
+    signatures of ``sources``, so they are the ones its tree was built
+    from; once recorded, `_collect_stale` collects the store when they
+    go."""
+    with contextlib.suppress(FileNotFoundError):
+        if os.path.getsize(store + ".lock") > 0:
+            return
+    with open(store + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.fstat(lock.fileno()).st_size == 0:
+            lock.write(json.dumps(sources))
 
 
 def _collect_stale(own: str) -> None:

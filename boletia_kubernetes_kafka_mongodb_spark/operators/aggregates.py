@@ -29,7 +29,7 @@ def agg_running_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 longs) instead of ~20-byte label strings, the estado predicates
     # compile to l_returnflag comparisons readable straight off the scan,
     # and the evento label renders once per group, not once per row.
-    # estado mapping (tables.reservas_project): N→A, R→X, else→C, so
+    # estado mapping (tables.reservas_keyed): N→A, R→X, else→C, so
     # {A,C} ⇔ returnflag ≠ 'R' and X ⇔ returnflag = 'R'.
     li = tables.load(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("int")

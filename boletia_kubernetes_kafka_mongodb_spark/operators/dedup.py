@@ -160,9 +160,9 @@ def _block_degree(sf_dir: str, table: str, floor: int = 8, cap: int = 512) -> in
 
 
 def _token_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, lang, hs, sz)`` — each doc's distinct tokens as a SORTED
-    array of xxhash64 longs, plus the set size. One narrow map over the
-    scan: tokens travel as 8-byte longs, never as strings. A 64-bit
+    """``(doc_id, lang, hs)`` — each doc's distinct tokens as a SORTED
+    array of xxhash64 longs; the set size is the array's length. One narrow
+    map over the scan: tokens travel as 8-byte longs, never as strings. A 64-bit
     collision merges two tokens (probability ~2⁻⁶⁴ per token pair — the
     same equivalence every hash-based shuffle in the pipeline relies on).
 
@@ -182,9 +182,7 @@ def _token_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda t: F.xxhash64(t),
             )
         )
-        return docs.select(
-            "doc_id", "lang", hs.alias("hs"), F.size(hs).alias("sz")
-        ).localCheckpoint(eager=False)
+        return docs.select("doc_id", "lang", hs.alias("hs")).localCheckpoint(eager=False)
 
     return cache.cached(spark, sf_dir, ("documents",), "token-hash-sets", _build)
 
@@ -257,7 +255,7 @@ def _set_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each doc's token-set row on its (i ≤ j) block tiles — the shared
     fan-out stage of both tiled set-similarity kernels."""
     B = _block_degree(sf_dir, "documents", floor=SET_BLOCKS)
-    return block_tiles(_token_hash_sets(spark, sf_dir), "doc_id", B, "lang", "hs", "sz")
+    return block_tiles(_token_hash_sets(spark, sf_dir), "doc_id", B, "lang", "hs")
 
 
 def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

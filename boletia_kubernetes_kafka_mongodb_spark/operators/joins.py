@@ -116,8 +116,10 @@ def join_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The implicit business query behind the whole reference pipeline
     (``README.md:266,441-454``): availability = capacity − Σ active
-    reservations. Physical plan: partial+final hash agg on the fact side,
-    broadcast join against the event dim (see tables.inventario).
+    reservations. Physical plan: the Σ is the keyed tree's maintained
+    ``reservado`` (≤ one row per event), broadcast-joined against the
+    event dim — no scan of ``lineitem``, no aggregate, no shuffle (see
+    tables.inventario).
     """
     return tables.inventario(spark, sf_dir)
 

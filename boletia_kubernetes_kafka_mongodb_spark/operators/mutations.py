@@ -16,7 +16,8 @@ processor; the window formulation here is the documented batch oracle
 (prefix-sum admission), per SURVEY.md §7 Phase 2.
 
 Scale notes: every window below partitions by ``evento`` — one shuffle on the
-natural key, then per-partition sort; no global sort, no driver collect.
+natural key (none for M1, whose input is bucketed on it), then per-partition
+sort; no global sort, no driver collect.
 Conditional rewrites are shuffle-free narrow maps (the dim-side membership
 probe is a broadcast semi join).
 """
@@ -47,10 +48,15 @@ def reserve_guarded_decrement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger: one row per active reservation attempt with its running total,
     admitted flag, and post-decision availability.
     """
-    # Keyed formulation: the window shuffle partitions/sorts on
-    # (l_partkey, seq) longs, the capacity dim joins by long key, and the
-    # _id/evento/email strings render once per output row, post-shuffle.
-    res = tables.reservas_keyed(spark, sf_dir, estado_eq="A")
+    # Keyed formulation over the keyed tree's reservas_keyed, bucketed by
+    # l_partkey: the window's distribution on l_partkey is the bucket
+    # layout itself, so there is no shuffle — each bucket sorts on
+    # (l_partkey, seq) longs in its own task, the capacity dim joins by
+    # broadcast, and the _id/evento/email strings render once per output row.
+    from ..sources import layouts
+
+    db = layouts.ensure_bucketed_tables(spark, sf_dir)
+    res = spark.table(f"{db}.reservas_keyed").where(F.col("estado") == "A")
     cap = tables.eventos_keyed(spark, sf_dir).select("p_partkey", "capacidad")
     w = Window.partitionBy("l_partkey").orderBy("seq").rowsBetween(Window.unboundedPreceding, 0)
     ledger = (

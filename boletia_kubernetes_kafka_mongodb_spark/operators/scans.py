@@ -95,38 +95,39 @@ def lookup_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
     performed on the *request literal* before the query runs — so ours runs
     in plain Python on the id string, exactly where the reference validates
     the URL path id. The looked-up id is the minimum ``_id`` (a deterministic
-    existing key at every SF), fetched as a one-value scalar aggregate — the
-    stand-in for the HTTP request's id parameter, not a data-plane collect.
+    existing key at every SF) — the stand-in for the HTTP request's id
+    parameter, not a data-plane collect. ``min(_id) ≡ min(seq)`` because the
+    24-hex encoding of a non-negative long is order-preserving, and it is
+    read from the row-group statistics in the keyed tree's parquet footers
+    (``layouts.min_reserva_seq``): no Spark job, no row read.
 
-    The id literal then inverts to base-column equalities
-    (tables.seq_to_parts — same move as tables.partkey_of_nombre for P3) so
-    the probe compiles to a parquet scan with PushedFilters + min/max
-    row-group skipping on every key column: the true index access path at
-    100 TB. An earlier broadcast-join formulation lost this — Catalyst's
-    constraint propagation inferred the build side's hex-validation filter
-    onto the probe through the join key, running format_string+RLIKE over
-    the whole corpus.
+    The true index access path: the probe ``l_partkey = pk AND seq = v``
+    (``pk`` unpacked from the id by ``tables.seq_to_parts``) runs on the
+    keyed tree's ``reservas_keyed``, bucketed by ``l_partkey`` and sorted
+    by ``(l_partkey, seq)`` in small row groups. Bucket pruning reads one
+    of the N bucket files, and the min/max statistics of that file's row
+    groups (then parquet's page index) skip all but the rows near ``pk`` —
+    at most one row group, one 20k-row page at sf0.1: the unique-``_id``
+    index lookup of the reference. An earlier
+    broadcast-join formulation lost this — Catalyst's constraint
+    propagation inferred the build side's hex-validation filter onto the
+    probe through the join key, running format_string+RLIKE over the
+    whole corpus.
     """
     import re
 
-    li = tables.load(spark, sf_dir, "lineitem")
-    # min(_id) ≡ min(seq): the 24-hex encoding of a non-negative long is
-    # order-preserving. Scalar job over the 5 packed key columns only.
-    v = li.select(tables.reserva_seq().alias("seq")).agg(F.min("seq")).collect()[0][0]
-    id_hex = format(v, "024x")
+    from ..sources import layouts
+
+    db = layouts.ensure_bucketed_tables(spark, sf_dir)
+    res = spark.table(f"{db}.reservas_keyed")
+    v = layouts.min_reserva_seq(spark, sf_dir)
+    id_hex = "" if v is None else format(v, "024x")
     if not (len(id_hex) == 24 and re.fullmatch(r"[0-9a-f]{24}", id_hex)):
-        return tables.reservas(spark, sf_dir).limit(0)  # invalid id → empty
-    ok, ln, pk, sk, qty = tables.seq_to_parts(int(id_hex, 16))
-    hit = li.where(
-        (F.col("l_orderkey") == ok)
-        & (F.col("l_linenumber") == ln)
-        & (F.col("l_partkey") == pk)
-        & (F.col("l_suppkey") == sk)
-        & (F.col("l_quantity") == float(qty))
-    )
-    return tables.reservas_project(hit).select(
-        "_id", "evento", "estado", "email", "cantidad", "seq"
-    )
+        return tables.reserva_render(res.limit(0))  # invalid id → empty
+    seq = int(id_hex, 16)
+    pk = tables.seq_to_parts(seq)[2]
+    hit = res.where((F.col("l_partkey") == pk) & (F.col("seq") == seq))
+    return tables.reserva_render(hit)
 
 
 def lookup_pk_oracle() -> str:

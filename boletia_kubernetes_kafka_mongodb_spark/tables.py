@@ -23,10 +23,13 @@ testdata so the DuckDB oracle can check every operator:
 The *same* mapping is declared in SQL form in :mod:`..oracle` — keep both in
 sync; the driver hash-compares their outputs.
 
-Scale notes: the views are pure narrow projections over the parquet scans —
-Catalyst pushes filters/column pruning through them, so e.g. a point lookup
-on ``eventos`` compiles to a parquet scan of ``part`` with PushedFilters on
-``p_partkey``. Nothing here materializes or collects.
+Scale notes: the eventos and reservas views are pure narrow projections over
+the parquet scans — Catalyst pushes filters/column pruning through them, so
+e.g. a point lookup on ``eventos`` compiles to a parquet scan of ``part``
+with PushedFilters on ``p_partkey``; they never materialize or collect.
+``inventario`` is the exception: it reads the maintained ``reservado``
+counter of the keyed tree (``sources/layouts``), which the first call per
+``lineitem`` content writes to disk.
 """
 
 from __future__ import annotations
@@ -258,10 +261,10 @@ def seq_to_parts(seq: int) -> tuple[int, int, int, int, int]:
     """Invert :func:`reserva_seq`'s packing back to the base lineitem key
     columns (l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity).
 
-    Point lookups on ``_id``/``seq`` hand-translate to these base-column
-    equalities (the computed-column pushdown move of
-    :func:`partkey_of_nombre`) so the predicate reaches the parquet scan
-    as PushedFilters with min/max row-group skipping.
+    The ``_id`` point lookup unpacks its ``l_partkey`` from here (the
+    computed-column pushdown move of :func:`partkey_of_nombre`): an
+    equality on the bucket key of the keyed tree prunes to one bucket
+    file and, by min/max statistics, to one row group.
     """
     qty = seq % 100
     sk = (seq // 100) % 10_000
@@ -271,22 +274,21 @@ def seq_to_parts(seq: int) -> tuple[int, int, int, int, int]:
     return ok, ln, pk, sk, qty
 
 
-def reservas_project(li: DataFrame) -> DataFrame:
-    """Apply the Reserva projection to a (possibly pre-filtered) lineitem
-    frame — split out so point lookups can join/filter on the cheap packed
-    key FIRST and pay the rendered columns only for surviving rows."""
-    seq = reserva_seq()
-    keyed = li.select(
-        "l_partkey",
-        "l_suppkey",
-        F.when(F.col("l_returnflag") == "N", F.lit("A"))
-        .when(F.col("l_returnflag") == "R", F.lit("X"))
-        .otherwise(F.lit("C"))
-        .alias("estado"),
-        F.col("l_quantity").cast("int").alias("cantidad"),
-        seq.alias("seq"),
+def inventario_rows(ev: DataFrame, reserved: DataFrame) -> DataFrame:
+    """The inventario shape of ``eventos_keyed`` ⟕ ``reserved``
+    (``l_partkey``, ``reservado``): events without active reservations
+    keep their whole capacity. Callers choose the join strategy by the
+    frames they pass (a broadcast hint, or co-bucketed tables)."""
+    reservado = F.coalesce(reserved["reservado"], F.lit(0)).cast("long")
+    return ev.join(reserved, ev["p_partkey"] == reserved["l_partkey"], "left").select(
+        hex24(ev["p_partkey"]).alias("_id"),
+        evento_label(ev["p_partkey"]).alias("nombre"),
+        ev["capacidad"],
+        ev["categoria"],
+        ev["estado"],
+        reservado.alias("reservado"),
+        (ev["capacidad"] - reservado).cast("long").alias("disponible"),
     )
-    return reserva_render(keyed)
 
 
 def inventario(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,30 +300,17 @@ def inventario(spark: SparkSession, sf_dir: str) -> DataFrame:
     disponible = capacidad − Σ cantidad of *active* reservations
     (``README.md:266,441-454``).
 
-    Physical plan: partial+final hash aggregate of reservas (map-side combine
-    shrinks the shuffle to ≤1 row per event), then broadcast-hash-join of that
-    aggregate against eventos — the fact table is shuffled only on the groupBy
-    key; the join itself moves no big data. The aggregate side is broadcast
-    (≤ |eventos| rows) so the left-outer preserves all events.
+    The Σ is that counter, kept: the keyed tree's ``reservado``
+    (``sources/layouts.reservado``, ≤ one row per event, built once per
+    ``lineitem`` content). Physical plan: a scan of ``part`` and of
+    ``reservado``, and a broadcast-hash-join of ``reservado`` against
+    eventos — no scan of ``lineitem``, no aggregate, no shuffle. The
+    left-outer keeps every event; the _id/nombre strings render once per
+    event on the output.
     """
-    # Keyed formulation end-to-end: the fact-side aggregate groups on the
-    # 8-byte l_partkey (estado='A' pushes down as l_returnflag='N'), the
-    # join matches longs, and the _id/nombre strings render once per event
-    # on the final output.
-    ev = eventos_keyed(spark, sf_dir)
-    res = reservas_keyed(spark, sf_dir, estado_eq="A")
-    reserved = res.groupBy("l_partkey").agg(
-        F.sum("cantidad").cast("long").alias("reservado")
-    )
-    return (
-        ev.join(F.broadcast(reserved), ev["p_partkey"] == reserved["l_partkey"], "left")
-        .select(
-            hex24(ev["p_partkey"]).alias("_id"),
-            evento_label(ev["p_partkey"]).alias("nombre"),
-            ev["capacidad"],
-            ev["categoria"],
-            ev["estado"],
-            F.coalesce(F.col("reservado"), F.lit(0)).cast("long").alias("reservado"),
-            (F.col("capacidad") - F.coalesce(F.col("reservado"), F.lit(0))).cast("long").alias("disponible"),
-        )
+    # lazy: layouts imports this module
+    from .sources import layouts
+
+    return inventario_rows(
+        eventos_keyed(spark, sf_dir), F.broadcast(layouts.reservado(spark, sf_dir))
     )

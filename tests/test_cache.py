@@ -319,6 +319,32 @@ def test_artifact_build_collects_store_of_rewritten_source(artifact_root, tmp_pa
     assert not old.exists() and not Path(f"{old}.lock").exists()
 
 
+@pytest.mark.parametrize("left", ["empty", "missing"])
+def test_artifact_hit_records_a_recordless_store(artifact_root, tmp_path, left):
+    """A committed store whose lock file is empty or gone (as code that
+    kept no sources record left it) gets its record on its first hit, and
+    a later build collects it once its dataset is deleted."""
+    import json
+
+    a = _dataset(tmp_path, "a", "documents")
+    calls = []
+    old = _store_of(cache.artifact(_fake_spark(), a, ("documents",), "t_v1", _writer(calls)))
+    lock = Path(f"{old}.lock")
+    if left == "empty":
+        lock.write_text("")
+    else:
+        lock.unlink()
+    assert _store_of(cache.artifact(_fake_spark(), a, ("documents",), "t_v1", _writer(calls))) == old
+    assert len(calls) == 1
+    assert json.loads(lock.read_text()) == {
+        os.path.join(a, "documents.parquet"): cache.signature(a, "documents")
+    }
+    shutil.rmtree(a)
+    b = _dataset(tmp_path, "b", "documents")
+    cache.artifact(_fake_spark(), b, ("documents",), "t_v1", _writer(calls))
+    assert not old.exists() and not lock.exists()
+
+
 def test_simhash_under_mocked_load_matches_bruteforce(spark, tmp_path):
     """ext_dedup_simhash over a crafted corpus behind a mocked tables.load
     whose sf_dir has no dataset on disk: every cached stage builds
@@ -398,6 +424,56 @@ def test_rewritten_fixture_is_not_served_stale(spark, duck, tmp_path):
             pq.write_table(t.take(list(range(0, t.num_rows, 2))), path)
         for qid in ids:
             compare_with_oracle(spark, oracle, fns[qid], sqls[qid], sf_dir=str(sf))
+    finally:
+        oracle.close()
+        cache.clear(str(sf))
+
+
+def test_keyed_reads_follow_a_rewritten_lineitem(spark, duck, tmp_path):
+    """The ids served from the keyed tree (the footer-read id and bucketed
+    probe, the bucketed admission window, the maintained reservado) match
+    the oracle, and still match after lineitem is rewritten in place at
+    the SAME path."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE, sf)
+    oracle = duck.cursor()
+    for name in (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split():
+        oracle.execute(
+            f"CREATE TEMP VIEW {name} AS SELECT * FROM '{sf}/{name}.parquet'"
+        )
+    fns, sqls = entrymod.queries(), entrymod.oracle_sql()
+    ids = (
+        "lookup_pk", "reserve_guarded_decrement", "join_availability",
+        "order_topn_disponible", "scan_full_inventario",
+    )
+
+    def results():
+        return {q: sorted(map(tuple, fns[q](spark, str(sf)).collect())) for q in ids}
+
+    try:
+        for qid in ids:
+            compare_with_oracle(spark, oracle, fns[qid], sqls[qid], sf_dir=str(sf))
+        before = results()
+        path = sf / "lineitem.parquet"
+        t = pq.read_table(path)
+        # every other row, dropping the one with the smallest id
+        # (l_orderkey, l_linenumber lead the packed key), so lookup_pk's
+        # answer moves too
+        first = pc.sort_indices(
+            t, sort_keys=[("l_orderkey", "ascending"), ("l_linenumber", "ascending")]
+        )[0].as_py()
+        pq.write_table(t.take(list(range(1 - first % 2, t.num_rows, 2))), path)
+        for qid in ids:
+            compare_with_oracle(spark, oracle, fns[qid], sqls[qid], sf_dir=str(sf))
+        after = results()
+        assert [q for q in ids if after[q] == before[q]] == []
     finally:
         oracle.close()
         cache.clear(str(sf))

@@ -6,6 +6,8 @@ full scan, an accidental sort-merge join, or a lost codegen span at scale.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from boletia_kubernetes_kafka_mongodb_spark import plans, tables
@@ -64,11 +66,62 @@ def test_mutations_fact_side_shuffle_free(spark):
 
 
 def test_window_partitions_by_event_key(spark):
-    # M1 prefix-sum: the only exchange is hashpartitioning on the window key
+    # M1 prefix-sum: reservas_keyed is bucketed on the window key, so the
+    # window needs no shuffle — the only exchange broadcasts the capacity side
     df = mutations.reserve_guarded_decrement(spark, SF_CORRECT)
-    plan = plans.explain_str(df)
-    assert "hashpartitioning" in plan
+    plan = plans.explain_str(df, mode="simple")
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert exchanges and all("BroadcastExchange" in line for line in exchanges), plan
+    assert any(
+        "reservas_keyed" in line and "Bucketed: true" in line
+        for line in plan.splitlines()
+        if "FileScan" in line
+    ), plan
     assert "SinglePartition" not in plan, "global window would serialize at scale"
+
+
+def test_lookup_pk_reads_one_row_group_without_build_jobs(spark):
+    """P4 reads its id from the keyed tree's footers (no Spark job while
+    the query builds) and probes one bucket file, where min/max statistics
+    leave at most one row group to read."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from boletia_kubernetes_kafka_mongodb_spark.sources import layouts
+
+    scans.lookup_pk(spark, SF_CORRECT)  # builds and registers the tree
+    sc = spark.sparkContext
+    group = "lookup-pk-build-gate"
+    sc.setJobGroup(group, group)
+    try:
+        df = scans.lookup_pk(spark, SF_CORRECT)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert len(df.collect()) == 1
+    files = glob.glob(f"{layouts.keyed_tree(spark, SF_CORRECT)}/reservas_keyed/*.parquet")
+    metas = [pq.read_metadata(f) for f in files]
+    largest = max(m.row_group(i).num_rows for m in metas for i in range(m.num_row_groups))
+    assert sum(m.num_rows for m in metas) > largest  # the gate can tell
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    (scan,) = [leaves.apply(i) for i in range(leaves.size())]
+    assert "reservas_keyed" in scan.toString()
+    assert 0 < scan.metrics().get("numOutputRows").get().value() <= largest
+
+
+def test_inventario_scans_no_lineitem(spark):
+    """inventario joins the keyed tree's maintained reservado: the executed
+    plan scans part and reservado, never lineitem."""
+    df = tables.inventario(spark, SF_CORRECT)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scanned = re.findall(r"Location: [^\[]*\[([^\]]*)\]", plan)
+    assert scanned, plan
+    assert not any("lineitem" in loc for loc in scanned), plan
+    assert any("reservado" in loc for loc in scanned), plan
+    assert not any("lineitem" in f for f in df.inputFiles())
 
 
 def test_no_cartesian_product_anywhere(spark):
