@@ -13,7 +13,10 @@ In memory, :func:`cached` keeps a value for one SparkSession:
   directory dataset). A fixture regenerated at the same path therefore
   lands on a fresh entry and can never be served stale. A build that reads
   no table (a parquet read of an artifact tree, whose path already names
-  its content) passes ``tables=()`` and keys on its path.
+  its content) passes ``tables=()`` and keys on its path. A shared
+  ``pandas_udf`` reads nothing but binds to the SparkContext that first
+  runs it, so it is held here too (``sf_dir=""``, ``tables=()``), never in
+  a module global that outlives its session.
 - **Missing dataset:** when any of the tables is not on disk (a crafted
   frame behind a mocked ``tables.load``), the value is built and returned
   without caching.

@@ -1134,14 +1134,6 @@ def ext_dedup_simhash_oracle() -> str:
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 EMBED_BLOCKS = 8  # block-matmul tiling-degree FLOOR; replication ≈ (B+1)/2
 
 

@@ -3,13 +3,31 @@
 - ``ext_topk_similarity`` — brute-force cosine top-k: the exact baseline.
   Dot products via ``zip_with``/``aggregate`` higher-order functions (JVM,
   no UDF); top-k via ``row_number`` with a deterministic tie-break.
-- ``ext_ann_lsh_topk`` — the scale path: sign-random-projection LSH buckets
-  + multi-probe, searching only vectors sharing ≥1 band with the query.
-  At 100 TB the bucket join replaces the full scan; here the candidate set
-  is verified ⊇-correct against brute force in tests.
-- ``ext_ann_ivf_topk`` — IVF variant: k-means-free deterministic coarse
-  quantizer (vectors assigned to nearest of √n seed centroids chosen by
-  vec_id), probe the query's nearest ``IVF_NPROBE`` centroids only.
+- ``ext_ann_lsh_topk`` — the scale path: sign-random-projection LSH,
+  served from the write-time band-bucket layout. The probe reads only the
+  query's bucket partitions (vectors sharing ≥1 band with the query) and
+  re-ranks them exactly.
+- ``ext_ann_ivf_topk`` / ``ext_ann_ivf_batch`` — IVF: a k-means-free
+  deterministic coarse quantizer (the ``IVF_NLIST`` lowest-vec_id
+  vectors), served from the list-partitioned layout; each query probes its
+  ``IVF_NPROBE`` nearest lists only.
+- PQ / IVFPQ, the index refresh and the recall-gated promotion build on
+  the same pieces.
+
+The ANN serve core: every rule below has one definition, used by every
+serve, layout writer and audit.
+
+- ``ivf_probe_mask`` — the IVF probe rule, a (lists × queries) mask.
+- ``topk_kernel`` / ``_scored_topk`` — the per-batch top-k
+  ``mapInPandas`` kernel and its window tail (IVF single query, IVF batch,
+  and both sides of the promotion audit).
+- ``_centroid_matrix`` — the centroid build of every quantizer;
+  ``_make_assign_udf`` — the list assignment.
+- ``srp_buckets`` — the SRP sign-bit bucket ids (layout UDF and query).
+- ``_rerank_topk`` — the JVM exact re-rank tail (brute force, SRP, PQ).
+
+The oracles re-derive each of these in SQL, so a fault in the shared code
+shows as an oracle mismatch.
 
 All cosine math is promoted to double before summation so the DuckDB oracle
 (double list ops) agrees to ~1e-15; outputs round to 6 dp.
@@ -17,12 +35,14 @@ All cosine math is promoted to double before summation so the DuckDB oracle
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cache, tables
+from ..sources import layouts
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -61,7 +81,6 @@ def query_vector(spark: SparkSession, sf_dir: str):
     needs it, and re-running the 1-row pushdown scan per probe bills a
     whole Spark job to each query for a value that cannot change while the
     dataset doesn't."""
-    import numpy as np
 
     def _fetch():
         emb = tables.load(spark, sf_dir, "embeddings")
@@ -73,6 +92,42 @@ def query_vector(spark: SparkSession, sf_dir: str):
     return cache.cached(spark, sf_dir, ("embeddings",), "query-vector", _fetch)
 
 
+def _top_rows(scored: DataFrame, k: int, cols, by) -> DataFrame:
+    """The ranking tail every top-k here ends with: ``row_number`` over
+    (cosine DESC, vec_id ASC) — the oracles' tie-break — per ``by`` group,
+    or one global window when ``by`` is empty; rows ranked ≤ ``k``."""
+    w = Window.partitionBy(*by).orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
+def _query_frame(spark: SparkSession, q_vec) -> DataFrame:
+    """The one-row (q_emb, q_norm) frame `_rerank_topk` broadcasts."""
+    q = np.asarray(q_vec, dtype=np.float64)
+    return spark.createDataFrame(
+        [(q.tolist(), float(np.sqrt(q @ q)))], "q_emb: array<double>, q_norm: double"
+    )
+
+
+def _rerank_topk(cand: DataFrame, q: DataFrame) -> DataFrame:
+    """The JVM exact re-rank tail: the rounded cosine of every ``cand`` row
+    (vec_id, label, embedding) against the broadcast one-row query frame
+    ``q`` (q_emb, q_norm), then the global top-``TOPK`` window. The
+    brute-force baseline, the SRP serve and the PQ serve each pass their
+    own candidates and query frame."""
+    scored = _with_norm(cand).crossJoin(F.broadcast(q)).select(
+        "vec_id",
+        "label",
+        F.round(
+            _cosine("embedding", F.col("q_emb"), F.col("norm"), F.col("q_norm")), 6
+        ).alias("cosine"),
+    )
+    return _top_rows(scored, TOPK, ("rank", "vec_id", "label", "cosine"), ())
+
+
 def ext_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k neighbors of the query vector (vec_id=0).
 
@@ -81,27 +136,11 @@ def ext_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is the only ordering step and operates on per-partition top-k
     prefilters if extended; the scan itself never shuffles.
     """
-    emb = _with_norm(tables.load(spark, sf_dir, "embeddings", fan=True))
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
+    emb = tables.load(spark, sf_dir, "embeddings", fan=True)
+    q = _with_norm(emb).where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm")
     )
-    scored = (
-        emb.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(_cosine("embedding", F.col("q_emb"), F.col("norm"), F.col("q_norm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("rank", "vec_id", "label", "cosine")
-    )
+    return _rerank_topk(emb.where(F.col("vec_id") != QUERY_VEC_ID), q)
 
 
 def ext_topk_similarity_oracle() -> str:
@@ -150,11 +189,8 @@ def ext_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= BATCH_TOPK)
-        .select("query_id", "rank", "vec_id", "cosine")
+    return _top_rows(
+        scored, BATCH_TOPK, ("query_id", "rank", "vec_id", "cosine"), ("query_id",)
     )
 
 
@@ -178,24 +214,204 @@ def ext_topk_batch_oracle() -> str:
     """
 
 
-def _hyperplanes(dim: int) -> list[list[float]]:
-    """Deterministic ±1 sign-random-projection hyperplanes.
+# ---------------------------------------------------------------------------
+# The ANN serve core
+# ---------------------------------------------------------------------------
+
+
+def rounded_cosines(A, B):
+    """The (rows of A × rows of B) cosine matrix rounded to 6dp — the
+    cross-engine grain every numpy kernel here ranks by: summation-order
+    drift between numpy's matmul and DuckDB's sequential
+    ``list_dot_product`` vanishes under the rounding."""
+    A = np.atleast_2d(np.asarray(A, dtype=np.float64))
+    B = np.atleast_2d(np.asarray(B, dtype=np.float64))
+    norms = np.sqrt((A * A).sum(axis=1))[:, None] * np.sqrt((B * B).sum(axis=1))[None, :]
+    return np.round((A @ B.T) / norms, 6)
+
+
+def ivf_probe_mask(C, Q):
+    """The IVF probe rule: a (lists × queries) bool mask, True where list
+    ``l`` is one of query ``q``'s IVF_NPROBE nearest centroids.
+
+    Nearness is the 6dp-ROUNDED cosine, ties to the lowest cid (a stable
+    argsort of the cid-ordered ``C``) — the oracles'
+    ``row_number(sim DESC, cid ASC)`` exactly. ``Q`` is one query vector
+    or a (queries × D) matrix; resolving the probes is an NL × NQ numpy
+    product on the driver."""
+    sims = rounded_cosines(C, Q)
+    mask = np.zeros(sims.shape, dtype=bool)
+    nearest = np.argsort(-sims, axis=0, kind="stable")[:IVF_NPROBE]
+    np.put_along_axis(mask, nearest, True, axis=0)
+    return mask
+
+
+def topk_kernel(Q, qids, k: int, probe_mask, labels: bool):
+    """The per-batch top-k ``mapInPandas`` kernel of every IVF-family serve
+    (FAISS IVFFlat's scan shape).
+
+    Each Arrow batch of (vec_id, embedding[, label][, ivf_list]) is scored
+    against every row of the query matrix ``Q`` with ONE numpy matmul, and
+    only each query's top ``k`` rows leave the batch — a bounded heap per
+    batch, so the final window sorts ≤ k rows per batch instead of every
+    probed row. A row may serve query ``q`` iff its vec_id is not
+    ``qids[q]`` (self-exclusion) and, given a ``probe_mask`` (lists ×
+    queries), its ``ivf_list`` is probed for ``q``. Emits
+    ([query_id, ]vec_id[, label], cosine), ``query_id`` being the query's
+    row index in ``Q`` — left out when ``Q`` holds one query.
+
+    The global top-k of per-batch top-ks is exactly the top-k over all
+    rows, with the same 6dp rounding and (cosine DESC, vec_id ASC)
+    tie-break, so the `_sql_rerank_topk` oracles hold. numpy-matmul vs
+    DuckDB ``list_dot_product`` parity at 6dp is the same contract the
+    assignment kernels rely on."""
+    Q = np.atleast_2d(np.asarray(Q, dtype=np.float64))
+    qids = np.asarray(qids, dtype=np.int64)
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf["vec_id"].to_numpy()
+            cos = rounded_cosines([np.asarray(e) for e in pdf["embedding"]], Q)
+            ok = ids[:, None] != qids[None, :]
+            if probe_mask is not None:
+                ok &= probe_mask[pdf["ivf_list"].to_numpy().astype(np.int64)]
+            # lexsort: last key is primary — (-cos) asc == cosine desc,
+            # vec_id asc breaks ties (the oracle's row_number order)
+            tops = [
+                rows[np.lexsort((ids[rows], -cos[rows, q]))][:k]
+                for q, rows in enumerate(np.nonzero(c)[0] for c in ok.T)
+            ]
+            qcol = np.repeat(np.arange(len(tops), dtype=np.int64), [len(t) for t in tops])
+            if qcol.size == 0:
+                continue
+            sel = np.concatenate(tops)
+            out = {"query_id": qcol} if len(Q) > 1 else {}
+            out["vec_id"] = ids[sel]
+            if labels:
+                out["label"] = pdf["label"].to_numpy()[sel]
+            out["cosine"] = cos[sel, qcol]
+            yield pd.DataFrame(out)
+
+    return score
+
+
+def _scored_topk(
+    cand: DataFrame, Q, qids, k: int, probe_mask, labels: bool
+) -> DataFrame:
+    """`topk_kernel` over ``cand`` plus the ranking tail:
+    ([query_id, ]rank, vec_id[, label], cosine), ≤ ``k`` rows per query.
+    One query ranks in a single global window; several rank per
+    query_id."""
+    key = ["query_id"] if np.atleast_2d(Q).shape[0] > 1 else []
+    carry = ["label"] if labels else []
+    lists = ["ivf_list"] if probe_mask is not None else []
+    schema = ", ".join(
+        [f"{c} long" for c in key + ["vec_id"]] + [f"{c} int" for c in carry] + ["cosine double"]
+    )
+    partial = cand.select("vec_id", "embedding", *carry, *lists).mapInPandas(
+        topk_kernel(Q, qids, k, probe_mask, labels), schema
+    )
+    return _top_rows(partial, k, key + ["rank", "vec_id"] + carry + ["cosine"], key)
+
+
+def _centroid_matrix(rows: DataFrame):
+    """The one centroid build of every IVF quantizer: the IVF_NLIST
+    lowest-vec_id non-null embeddings of ``rows`` as an (NL × D) matrix,
+    row index = cid (rank position). Each quantizer differs only in the
+    rows it passes."""
+    got = (
+        rows.where(F.col("embedding").isNotNull())
+        .orderBy("vec_id")
+        .limit(IVF_NLIST)
+        .select("embedding")
+        .collect()
+    )
+    return np.array([r.embedding for r in got], dtype=np.float64)
+
+
+def _make_assign_udf(C, farthest: bool = False):
+    """Arrow-batched assignment to the nearest (or, for the poisoned
+    candidate, the FARTHEST) of the captured centroids — 6dp-rounded
+    cosine before the arg pick, ties to the lowest cid, the cross-engine
+    convention every IVF oracle here uses. Rounding BEFORE the pick makes
+    the assignment identical under any summation order, so the DuckDB
+    oracle (sequential list ops) and the numpy matmul (pairwise) agree
+    exactly. The one IVF quantizer UDF: the layout, the standing index and
+    the re-index all wrap their centroid matrix here."""
+    C = np.asarray(C, dtype=np.float64)
+
+    @F.pandas_udf("long")
+    def assign(emb_s: pd.Series) -> pd.Series:
+        if len(emb_s) == 0:
+            return pd.Series([], dtype="int64")
+        sims = rounded_cosines([np.asarray(e) for e in emb_s], C)
+        pick = np.argmin(sims, axis=1) if farthest else np.argmax(sims, axis=1)
+        return pd.Series(pick.astype("int64"))
+
+    return assign
+
+
+def _quantizer(spark: SparkSession, sf_dir: str, tag: str, rows):
+    """(assign_udf, C) over the centroids `_centroid_matrix` picks from
+    the embeddings rows matching ``rows``; cached per session (see
+    `cache`) — the quantizer is part of the index, fixed when its layout
+    was written, so re-collecting it per probe would bill index
+    construction to every query."""
+
+    def build():
+        C = _centroid_matrix(tables.load(spark, sf_dir, "embeddings").where(rows))
+        return _make_assign_udf(C), C
+
+    return cache.cached(spark, sf_dir, ("embeddings",), tag, build)
+
+
+def ivf_quantizer(spark: SparkSession, sf_dir: str):
+    """The serving quantizer of ``ext_ann_ivf_topk``'s layout: centroids =
+    the vectors with vec_id < IVF_NLIST, cid = vec_id. Returns
+    (assign_udf, C)."""
+    return _quantizer(spark, sf_dir, "ivf-quantizer", F.col("vec_id") < IVF_NLIST)
+
+
+def _hyperplanes(dim: int):
+    """Deterministic ±1 sign-random-projection hyperplanes, a
+    (LSH_BANDS_ANN·LSH_PLANES × dim) matrix.
 
     Weights derive from md5(plane:dim) parity — reproducible across runs and
-    sessions with no stored model, so the same function serves the
-    driver-side query signature and the corpus-side expression.
+    sessions with no stored model, so the same matrix serves the
+    layout's bucket UDF and the query side.
     """
     import hashlib
 
-    rows = []
-    for j in range(LSH_BANDS_ANN * LSH_PLANES):
-        rows.append(
+    return np.array(
+        [
             [
                 1.0 if hashlib.md5(f"{j}:{d}".encode()).digest()[0] % 2 == 0 else -1.0
                 for d in range(dim)
             ]
-        )
-    return rows
+            for j in range(LSH_BANDS_ANN * LSH_PLANES)
+        ]
+    )
+
+
+def srp_buckets(X, H):
+    """The SRP sign-bit codes: an (n × LSH_BANDS_ANN) matrix of the bucket
+    ids of the rows of ``X`` under hyperplanes ``H``.
+
+    Bucket id = band * 2^LSH_PLANES + code, where code packs the band's
+    sign bits little-endian (bit p = [x·H[band*P+p] ≥ 0]). The layout's
+    bucket UDF and the query side both call this, so layout and probe
+    cannot disagree on bucket membership."""
+    X = np.atleast_2d(np.asarray(X, dtype=np.float64))
+    bits = (X @ H.T >= 0).reshape(len(X), LSH_BANDS_ANN, LSH_PLANES)
+    codes = (bits * (1 << np.arange(LSH_PLANES, dtype=np.int64))).sum(axis=2)
+    return codes + np.arange(LSH_BANDS_ANN, dtype=np.int64) * (1 << LSH_PLANES)
+
+
+# ---------------------------------------------------------------------------
+# SRP-LSH
+# ---------------------------------------------------------------------------
 
 
 def ext_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,28 +420,41 @@ def ext_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Candidates = vectors agreeing with the query on ALL planes of ≥1 of the
     8 bands. The band codes are precomputed at write time
-    (``sources/layouts.write_srp_band_layout``: embeddings replicated once
-    per band, Hive-partitioned by ``srp_bucket``); the probe reads ONLY the
-    query's 8 bucket partitions — partition pruning at planning time, the
-    full-corpus scan from rounds 1-2 is gone (that form survives below as
-    ``ann_lsh_topk_scan``, the index-free fallback the layout path is
-    equivalence-tested against). Exact cosine re-rank on candidates only.
+    (`write_srp_band_layout`: embeddings replicated once per band,
+    Hive-partitioned by ``srp_bucket``); the probe reads ONLY the query's 8
+    bucket partitions — partition pruning at planning time, no full-corpus
+    scan. Exact cosine re-rank on candidates only (`_rerank_topk`).
 
-    Oracle-backed (round 3): unlike MinHash banding (seeded with Spark's
-    xxhash64), the SRP hyperplanes derive from md5 parity — fully
-    engine-independent — so DuckDB recomputes the same band codes,
-    candidate set and re-rank (`ext_ann_lsh_topk_oracle`). The one
-    cross-engine float hazard is the SIGN of a hyperplane dot product
-    computed by numpy matmul (layout/scan side, pairwise summation) vs
-    `list_dot_product` (oracle, sequential): a dot within ~1e-13 of zero
-    could flip — probability ~1e-14 per (vector, plane) on this data;
-    accepted and documented. Recall vs brute force additionally asserted
-    in tests/test_similarity.py.
+    Oracle-backed: unlike MinHash banding (seeded with Spark's xxhash64),
+    the SRP hyperplanes derive from md5 parity — fully engine-independent —
+    so DuckDB recomputes the same band codes, candidate set and re-rank
+    (`ext_ann_lsh_topk_oracle`). The one cross-engine float hazard is the
+    SIGN of a hyperplane dot product computed by numpy matmul
+    (`srp_buckets`, pairwise summation) vs `list_dot_product` (oracle,
+    sequential): a dot within ~1e-13 of zero could flip — probability
+    ~1e-14 per (vector, plane) on this data; accepted and documented.
+    Recall vs brute force additionally asserted in tests/test_similarity.py.
     """
-    from ..sources import layouts
+    return ann_lsh_serve(spark, sf_dir, ensure_srp_layout(spark, sf_dir))
 
-    path = ensure_srp_layout(spark, sf_dir)
-    return layouts.ann_lsh_topk_over_layout(spark, sf_dir, path)
+
+def ann_lsh_serve(spark: SparkSession, sf_dir: str, layout_path: str) -> DataFrame:
+    """`ext_ann_lsh_topk` over the SRP layout at ``layout_path``: read the
+    query's bucket partitions, drop the cross-band duplicates (on the
+    pruned, tiny candidate set, not the corpus), re-rank exactly.
+
+    A vector agrees with the query on all planes of ≥1 band ⟺ it lives in
+    ≥1 of the query's bucket partitions, so the candidate set is the
+    declarative one the oracle computes."""
+    q_vec = query_vector(spark, sf_dir)
+    buckets = srp_buckets(q_vec, _hyperplanes(len(q_vec)))[0]
+    cand = (
+        layouts.read_partitions(spark, layout_path, "srp_bucket", sorted(buckets))
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .select("vec_id", "label", "embedding")
+        .dropDuplicates(["vec_id"])
+    )
+    return _rerank_topk(cand, _query_frame(spark, q_vec))
 
 
 def _sql_rerank_topk(cand_cte: str) -> str:
@@ -285,139 +514,49 @@ def ext_ann_lsh_topk_oracle() -> str:
     """
 
 
+def write_srp_band_layout(spark: SparkSession, sf_dir: str, out_path: str) -> None:
+    """Persist embeddings replicated once per band, Hive-partitioned by
+    ``srp_bucket`` (band × 2^planes directories).
+
+    The LSH analogue of `write_ivf_layout`: storage pays the B-way
+    replication once at write time; a probe then reads EXACTLY the query's
+    B bucket partitions. The bucket UDF is one (rows × D) @ (D × B·P)
+    matmul per Arrow batch (`srp_buckets`); the hyperplane matrix is
+    resolved once on the driver and captured as a numpy array."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    H = _hyperplanes(len(emb.select("embedding").first()[0]))
+
+    @F.pandas_udf("array<long>")
+    def bucket_ids(emb_s: pd.Series) -> pd.Series:
+        if len(emb_s) == 0:
+            return pd.Series([], dtype=object)
+        return pd.Series(list(srp_buckets([np.asarray(e) for e in emb_s], H)))
+
+    (
+        emb.select(
+            "vec_id", "label", "embedding",
+            F.explode(bucket_ids("embedding")).alias("srp_bucket"),
+        )
+        .repartition("srp_bucket")
+        .write.mode("overwrite")
+        .partitionBy("srp_bucket")
+        .parquet(out_path)
+    )
+
+
 def ensure_srp_layout(spark: SparkSession, sf_dir: str) -> str:
     """The committed SRP band-bucket layout for ``sf_dir`` (a
     ``cache.artifact``, written on first use) — the one-time indexing
     cost; every probe afterwards is an 8-partition pruned scan."""
-    from ..sources import layouts
-
     return cache.artifact(
         spark, sf_dir, ("embeddings",), "srp_layout_v2",
-        lambda path: layouts.write_srp_band_layout(spark, sf_dir, path),
+        lambda path: write_srp_band_layout(spark, sf_dir, path),
     )
 
 
-def ann_lsh_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-free SRP-LSH serving path (full scan + in-row band filter).
-
-    The query's sign bits are computed driver-side from the deterministic
-    hyperplane matrix; the corpus side is a single vectorized Arrow-batched
-    boolean UDF (numpy matmul). Exists as the no-index fallback and as the
-    reference ``ext_ann_lsh_topk``'s layout path must exactly match.
-    """
-    import numpy as np
-
-    emb = tables.load(spark, sf_dir, "embeddings")
-    # the query's sign bits are one D-dim vector × the hyperplane matrix —
-    # computed driver-side (a 1-row parquet read with vec_id pushdown)
-    q_vec = query_vector(spark, sf_dir)
-    H = _hyperplanes(len(q_vec))
-    q_bits = [bool(b) for b in (np.asarray(H) @ q_vec >= 0)]
-    q_norm = float(np.sqrt(q_vec @ q_vec))
-
-    # corpus-side probe: ONE vectorized Arrow-batched boolean UDF — a
-    # (rows × D) @ (D × 48) numpy matmul per batch, then per-band
-    # all-planes-agree / any-band-agrees reductions. Expressing the 48 dot
-    # products as zip_with/aggregate HOFs instead keeps the plan JVM-only
-    # but pays ~1µs per interpreted lambda element (48·D per row — measured
-    # 2-4s at sf0.1); the matmul is memory-bandwidth-bound and the single
-    # UDF column transfers only `embedding` in and one boolean out. No
-    # fan_out: the per-row work is trivial, so natural file splits carry
-    # the parallelism at scale.
-    H_np = np.asarray(H)
-    qb_np = np.asarray(q_bits)
-    n_bands, n_planes = LSH_BANDS_ANN, LSH_PLANES
-
-    @F.pandas_udf("boolean")
-    def band_match(emb_s: pd.Series) -> pd.Series:
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.Series([], dtype=bool)
-        agree = ((X @ H_np.T) >= 0) == qb_np
-        return pd.Series(agree.reshape(-1, n_bands, n_planes).all(axis=2).any(axis=1))
-
-    candidates = _with_norm(
-        emb.where(F.col("vec_id") != QUERY_VEC_ID).where(band_match("embedding"))
-    )
-    q = spark.createDataFrame(
-        [(q_vec.tolist(), q_norm)], "q_emb: array<double>, q_norm: double"
-    )
-    scored = candidates.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        "label",
-        F.round(_cosine("embedding", F.col("q_emb"), F.col("norm"), F.col("q_norm")), 6).alias(
-            "cosine"
-        ),
-    )
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("rank", "vec_id", "label", "cosine")
-    )
-
-
-def exact_topk_over_candidates(spark: SparkSession, candidates: DataFrame, q_vec) -> DataFrame:
-    """Exact rounded-cosine top-k of ``candidates`` (vec_id, label,
-    embedding) against ``q_vec`` — the shared scoring tail of the IVF-family
-    serves (round-5: replaces the crossJoin + per-element ``aggregate`` fold
-    + global window over EVERY probed row).
-
-    Kernel shape = FAISS IVFFlat's scan: each Arrow batch is scored with ONE
-    numpy matmul and emits only its top-k rows (a bounded heap per batch),
-    so the global sort sees ≤ k rows per batch instead of the whole probed
-    list — the x1/x3/x10 scaling study measured the old per-row fold +
-    full-probe sort as the one serve-path term that grew linearly (p=0.73).
-    The OUTPUT is unchanged: global top-k of per-batch top-k is exactly the
-    top-k over all probed rows (k candidates survive from any batch that
-    could contain a winner), same 6dp rounding, same (cosine DESC, vec_id
-    ASC) tie-break — so `_sql_rerank_topk` oracles hold as-is. numpy-matmul
-    vs DuckDB ``list_dot_product`` parity at 6dp is the same contract the
-    k-means / IVF-assignment kernels already rely on.
-    """
-    import numpy as np
-
-    q = np.asarray(q_vec, dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-    k = TOPK
-
-    def make_score_kernel():
-        def score(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(
-                    [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-                )
-                cos = np.round(
-                    (X @ q) / (np.sqrt((X * X).sum(axis=1)) * qn), 6
-                )
-                ids = pdf["vec_id"].to_numpy()
-                # lexsort: last key is primary — (-cos) asc == cosine desc,
-                # vec_id asc breaks ties (the oracle's row_number order)
-                order = np.lexsort((ids, -cos))[:k]
-                yield pd.DataFrame(
-                    {
-                        "vec_id": ids[order],
-                        "label": pdf["label"].to_numpy()[order],
-                        "cosine": cos[order],
-                    }
-                )
-
-        return score
-
-    partial = candidates.select("vec_id", "label", "embedding").mapInPandas(
-        make_score_kernel(), "vec_id long, label int, cosine double"
-    )
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("rank", "vec_id", "label", "cosine")
-    )
+# ---------------------------------------------------------------------------
+# IVF
+# ---------------------------------------------------------------------------
 
 
 def ext_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,24 +564,63 @@ def ext_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned layout.
 
     The IVF index is a STORAGE property: embeddings persist partitioned by
-    their coarse-quantizer list id (``sources/layouts.write_ivf_layout``,
-    built lazily once per sf_dir here), and the probe reads only the
-    query's IVF_NPROBE nearest lists — partition pruning at planning time,
-    zero per-row filtering, the parquet analogue of a FAISS IVF index. This
-    replaces the round-1 form that re-assigned the FULL corpus through a
-    pandas UDF on every query (kept below as ``ann_ivf_topk_scan``, the
-    index-free fallback and the reference the layout path is tested
-    against). Oracle-backed (round 3): centroids are deterministic
-    (vec_id < IVF_NLIST) and the assignment rounds cosine similarities to
-    6dp BEFORE the argmax on both engines, so DuckDB re-derives the
-    identical lists, probe set and re-rank (`ext_ann_ivf_topk_oracle`).
-    Recall asserted in tests, partition pruning pinned in
+    their coarse-quantizer list id (`write_ivf_layout`, built lazily once
+    per sf_dir here), and the probe reads only the query's IVF_NPROBE
+    nearest lists — partition pruning at planning time, zero per-row
+    filtering, the parquet analogue of a FAISS IVF index. Oracle-backed:
+    centroids are deterministic (vec_id < IVF_NLIST) and the assignment
+    rounds cosine similarities to 6dp BEFORE the argmax on both engines,
+    so DuckDB re-derives the identical lists, probe set and re-rank
+    (`ext_ann_ivf_topk_oracle`). Recall asserted in tests, partition
+    pruning and oracle equality of the layout pinned in
     tests/test_layouts.py.
     """
-    from ..sources import layouts
-
     path = ensure_ivf_layout(spark, sf_dir)
-    return layouts.ann_topk_over_layout(spark, sf_dir, path)
+    return ann_ivf_serve(spark, sf_dir, path, ivf_quantizer(spark, sf_dir)[1])
+
+
+def ann_ivf_serve(spark: SparkSession, sf_dir: str, layout_path: str, C) -> DataFrame:
+    """The one IVF serve: `ext_ann_ivf_topk` over any list-partitioned
+    layout whose ``ivf_list`` was assigned by centroids ``C`` — the
+    one-shot layout with the serving quantizer, or the refreshed layout
+    with the frozen standing quantizer. Reads the query's probe lists
+    (`ivf_probe_mask`) and scores them with `topk_kernel`."""
+    q_vec = query_vector(spark, sf_dir)
+    probe = np.nonzero(ivf_probe_mask(C, q_vec)[:, 0])[0]
+    cand = layouts.read_partitions(spark, layout_path, "ivf_list", probe).where(
+        F.col("vec_id") != QUERY_VEC_ID
+    )
+    return _scored_topk(cand, q_vec, [QUERY_VEC_ID], TOPK, None, True)
+
+
+def write_ivf_layout(spark: SparkSession, sf_dir: str, out_path: str) -> None:
+    """Persist embeddings partitioned by IVF list id (`ivf_list=<k>/` dirs).
+
+    The write-time cost every vector index pays once; afterwards any probe
+    is a partition-pruned scan. Hive-style partitioning means the list id
+    never occupies row space — it lives in the directory name.
+    """
+    assign, _ = ivf_quantizer(spark, sf_dir)
+    emb = tables.load(spark, sf_dir, "embeddings")
+    (
+        emb.withColumn("ivf_list", assign("embedding"))
+        .write.mode("overwrite")
+        .partitionBy("ivf_list")
+        .parquet(out_path)
+    )
+
+
+def ensure_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
+    """The committed IVF-partitioned embedding layout for ``sf_dir`` (a
+    ``cache.artifact``, written on first use). The write is the one-time
+    indexing cost every vector index pays; every subsequent probe is a
+    pruned scan."""
+    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
+    # determinism) — v1 layouts used unrounded argmax
+    return cache.artifact(
+        spark, sf_dir, ("embeddings",), "ivf_layout_v2",
+        lambda path: write_ivf_layout(spark, sf_dir, path),
+    )
 
 
 def ext_ann_ivf_topk_oracle() -> str:
@@ -486,32 +664,29 @@ def ext_ann_ivf_topk_oracle() -> str:
 
 
 def ext_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched ANN over the IVF layout (round 5): the N_BATCH_QUERIES
-    query set served from ONE partition-pruned scan — the ANN counterpart
-    of ``ext_topk_batch``'s brute-force batch (same query set, same
-    output shape, same tie-breaks).
+    """Batched ANN over the IVF layout: the N_BATCH_QUERIES query set
+    served from ONE partition-pruned scan — the ANN counterpart of
+    ``ext_topk_batch``'s brute-force batch (same query set, same output
+    shape, same tie-breaks).
 
     The batch-inference serve shape at 100 TB: resolve each query's
-    IVF_NPROBE lists driver-side (a NL×NQ numpy product over the cached
-    centroid matrix), scan the UNION of probe partitions once, and score
-    every batch with ONE (rows × queries) matmul — each row's (16×NQ)
-    probe-membership mask decides which queries it may serve. Per batch,
-    only the per-query top-k survives (the bounded-heap discipline of
-    ``exact_topk_over_candidates``), so the final per-query windows sort
-    ≤ k rows per batch, not the probed lists. Amortization is the point:
-    N queries cost one scan + one matmul column each, not N scans.
+    IVF_NPROBE lists driver-side (`ivf_probe_mask`, an NL×NQ numpy product
+    over the cached centroid matrix), scan the UNION of probe partitions
+    once, and score every batch with ONE (rows × queries) matmul
+    (`topk_kernel`) — each row's probe-membership mask decides which
+    queries it may serve, and only the per-query top-k leaves a batch, so
+    the final per-query windows sort ≤ k rows per batch, not the probed
+    lists. Amortization is the point: N queries cost one scan + one
+    matmul column each, not N scans. ``query_id`` is the query's position
+    in the vec_id-ordered query set (= its vec_id on the fixture).
 
     Oracle: the single-query IVF CTE program generalized — the same
     ``sims`` frame ranks every query's probe lists (queries are corpus
     rows), candidates join assignment × per-query probes, exact rounded
     re-rank partitioned by query.
     """
-    import numpy as np
-
-    from ..sources import layouts
-
     path = ensure_ivf_layout(spark, sf_dir)
-    _, C, c_norm = layouts.ivf_assignment_udf(spark, sf_dir)
+    _, C = ivf_quantizer(spark, sf_dir)
     emb = tables.load(spark, sf_dir, "embeddings")
     qrows = sorted(
         emb.where(F.col("vec_id") < N_BATCH_QUERIES)
@@ -520,71 +695,11 @@ def ext_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r.vec_id,
     )
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)  # (NQ, D)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-    nq, k = Q.shape[0], BATCH_TOPK
-    # per-query probe lists: 6dp-rounded centroid sims, stable argsort —
-    # identical rule to ivf_probe_lists / the oracle's row_number
-    sims = np.round((C @ Q.T) / (c_norm[:, None] * q_norms[None, :]), 6)
-    probe_mask = np.zeros((C.shape[0], nq), dtype=bool)
-    for q in range(nq):
-        for lst in np.argsort(-sims[:, q], kind="stable")[:IVF_NPROBE]:
-            probe_mask[lst, q] = True
-    union = sorted(int(l) for l in np.nonzero(probe_mask.any(axis=1))[0])
-
-    cand = layouts.read_ivf_probe(spark, path, union).select(
-        "vec_id", "embedding", "ivf_list"
+    probe_mask = ivf_probe_mask(C, Q)
+    cand = layouts.read_partitions(
+        spark, path, "ivf_list", np.nonzero(probe_mask.any(axis=1))[0]
     )
-
-    def make_batch_kernel():
-        def score(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(
-                    [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-                )
-                ids = pdf["vec_id"].to_numpy()
-                lists = pdf["ivf_list"].to_numpy()
-                cos = np.round(
-                    (X @ Q.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * q_norms[None, :]),
-                    6,
-                )  # (rows, NQ)
-                mask = probe_mask[lists]  # row may serve query iff its list is probed
-                mask &= ids[:, None] != np.arange(nq)[None, :]  # self-exclusion
-                out_q, out_id, out_cos = [], [], []
-                for q in range(nq):
-                    rows = np.nonzero(mask[:, q])[0]
-                    if rows.size == 0:
-                        continue
-                    order = rows[np.lexsort((ids[rows], -cos[rows, q]))][:k]
-                    out_q.extend([q] * len(order))
-                    out_id.extend(ids[order].tolist())
-                    out_cos.extend(cos[order, q].tolist())
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.array(out_q, dtype=np.int64),
-                            "vec_id": np.array(out_id, dtype=np.int64),
-                            "cosine": np.array(out_cos),
-                        }
-                    )
-
-        return score
-
-    partial = cand.mapInPandas(
-        make_batch_kernel(), "query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _scored_topk(cand, Q, [r.vec_id for r in qrows], BATCH_TOPK, probe_mask, False)
 
 
 def ext_ann_ivf_batch_oracle() -> str:
@@ -873,71 +988,16 @@ def ext_ann_ndcg_audit_oracle() -> str:
     """
 
 
-def ensure_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
-    """The committed IVF-partitioned embedding layout for ``sf_dir`` (a
-    ``cache.artifact``, written on first use). The write is the one-time
-    indexing cost every vector index pays; every subsequent probe is a
-    pruned scan."""
-    from ..sources import layouts
-
-    # v2: assignment rounds similarities to 6dp before argmax (cross-engine
-    # determinism) — v1 layouts used unrounded argmax
-    return cache.artifact(
-        spark, sf_dir, ("embeddings",), "ivf_layout_v2",
-        lambda path: layouts.write_ivf_layout(spark, sf_dir, path),
-    )
-
-
-def ann_ivf_topk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-free IVF serving path (full scan + in-row list filter).
-
-    Centroids = the IVF_NLIST lowest-vec_id vectors (a deterministic,
-    training-free stand-in for k-means — the *plan shape* is what matters:
-    assign each vector to its nearest centroid via one vectorized Arrow UDF
-    against the driver-collected NL×D centroid matrix, probe only the
-    query's IVF_NPROBE nearest lists). Exists as the no-index fallback and
-    as the reference ``ext_ann_ivf_topk``'s layout path must exactly match.
-    """
-    import numpy as np
-
-    emb = tables.load(spark, sf_dir, "embeddings")
-    # centroid matrix is IVF_NLIST × D — collect it driver-side (a tiny
-    # pushdown scan) and resolve the probe lists there too; shipping a
-    # 16-row dim table through crossJoin+window cost two shuffles and two
-    # window sorts for what is a (16×D)@(D,) numpy product
-    cent = sorted(
-        emb.where(F.col("vec_id") < IVF_NLIST).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    C = np.array([r.embedding for r in cent], dtype=np.float64)  # (NL, D)
-    c_norm = np.sqrt((C * C).sum(axis=1))
-    q_vec = query_vector(spark, sf_dir)
-    q_norm = float(np.sqrt(q_vec @ q_vec))
-    # the query's IVF_NPROBE nearest centroids (ties → lowest cent_id, same
-    # as the former row_number(ORDER BY sim DESC, cent_id) formulation);
-    # rounded to 6dp first — cross-engine determinism, see assignment UDF
-    c_sims = np.round((C @ q_vec) / (c_norm * q_norm), 6)
-    probe = sorted(np.argsort(-c_sims, kind="stable")[:IVF_NPROBE].tolist())
-
-    # C is vec_id-ordered, so the assignment's first-max tie-break picks
-    # the lowest cent_id, matching the oracle's window tie-break
-    candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).where(
-        _make_assign_udf(C)("embedding").isin(probe)
-    )
-    return exact_topk_over_candidates(spark, candidates, q_vec)
-
-
 # ---------------------------------------------------------------------------
 # IVF index refresh under corpus growth (round 10)
 # ---------------------------------------------------------------------------
 
 def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
-    """The FROZEN coarse quantizer of the standing index: centroids are the
-    IVF_NLIST lowest non-null vec_ids of the STANDING corpus (the non-test
-    hash splits — the corpus that existed when the index was built), with
-    centroid id = rank position (the `kmeans_init_centroids` derivation
-    applied to the IVF family). Same assignment UDF (`_make_assign_udf`)
-    as ``_build_ivf_quantizer``; cached (see `cache`).
+    """The FROZEN coarse quantizer of the standing index, (assign_udf, C):
+    centroids are the IVF_NLIST lowest non-null vec_ids of the STANDING
+    corpus (the non-test hash splits — the corpus that existed when the
+    index was built), with centroid id = rank position (the
+    `kmeans_init_centroids` derivation applied to the IVF family).
 
     Freezing is the point of a refresh: arriving vectors are assigned by
     the quantizer that PLACED the existing billions of rows — re-deriving
@@ -945,28 +1005,10 @@ def _ivf_standing_quantizer(spark: SparkSession, sf_dir: str):
     partitions and turn a cheap append into a full re-index
     (`ext_embed_drift` firing is the signal that the frozen geometry has
     expired and a true re-cluster is due)."""
-    import numpy as np
-
     from .sampling import split_assignment
 
-    def _build():
-        emb = tables.load(spark, sf_dir, "embeddings")
-        cent = (
-            emb.where(
-                F.col("embedding").isNotNull()
-                & (split_assignment("vec_id") != "test")
-            )
-            .orderBy("vec_id")
-            .limit(IVF_NLIST)
-            .select("embedding")
-            .collect()
-        )
-        C = np.array([r.embedding for r in cent], dtype=np.float64)
-        c_norm = np.sqrt((C * C).sum(axis=1))
-        return _make_assign_udf(C), C, c_norm
-
-    return cache.cached(
-        spark, sf_dir, ("embeddings",), "ivf-standing-quantizer", _build
+    return _quantizer(
+        spark, sf_dir, "ivf-standing-quantizer", split_assignment("vec_id") != "test"
     )
 
 
@@ -995,10 +1037,9 @@ def ensure_refreshed_ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     the layout is served only once build, append and compaction have all
     committed."""
     from .sampling import split_assignment
-    from ..sources import layouts
 
     def _write(path: str) -> None:
-        assign, _, _ = _ivf_standing_quantizer(spark, sf_dir)
+        assign, _ = _ivf_standing_quantizer(spark, sf_dir)
         emb = tables.load(spark, sf_dir, "embeddings").where(
             F.col("embedding").isNotNull()
         )
@@ -1036,12 +1077,11 @@ def ext_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree with the declarative statement of what a rebuild would hold.
 
     Serving and acceptance live on the composed surface: the refreshed
-    layout serves through the same partition-pruned probe path
-    (``ann_topk_over_refreshed``), and the standing recall/NDCG audits
-    are the acceptance gate a deployment runs before promoting the
+    layout serves through the one IVF serve, ``ann_ivf_serve`` with the
+    frozen standing quantizer's centroids, and the standing recall/NDCG
+    audits are the acceptance gate a deployment runs before promoting the
     refreshed index."""
     from .sampling import split_assignment
-    from ..sources import layouts
 
     path = ensure_refreshed_ivf_layout(spark, sf_dir)
     lay = layouts.read_layout(spark, path)
@@ -1099,30 +1139,6 @@ def ext_ann_index_refresh_oracle() -> str:
     """
 
 
-def ann_topk_over_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ext_ann_ivf_topk`` semantics served from the REFRESHED layout:
-    probe lists come from the frozen standing quantizer, the scan is
-    partition-pruned to them, scoring is the shared bounded-top-k matmul
-    kernel. Arriving vectors are first-class the moment the append
-    commits — they live in real partitions, not a side table."""
-    import numpy as np
-
-    from ..sources import layouts
-
-    path = ensure_refreshed_ivf_layout(spark, sf_dir)
-    _, C, c_norm = _ivf_standing_quantizer(spark, sf_dir)
-    q_vec = query_vector(spark, sf_dir)
-    q_norm = float(np.sqrt(q_vec @ q_vec))
-    c_sims = np.round((C @ q_vec) / (c_norm * q_norm), 6)
-    probe = sorted(np.argsort(-c_sims, kind="stable")[:IVF_NPROBE].tolist())
-    candidates = (
-        layouts.read_ivf_probe(spark, path, probe)
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", "embedding")
-    )
-    return exact_topk_over_candidates(spark, candidates, q_vec)
-
-
 # --- staged index promotion (recall-gated rebase as a driver-attested op) ---
 
 PROMOTE_K = 5        # recall@k of the audit
@@ -1130,135 +1146,36 @@ PROMOTE_NQ = 4       # probe queries (lowest non-null vec_ids)
 PROMOTE_MIN_HITS = 10  # promote iff hits >= this, i.e. recall >= 0.5 of K*NQ
 
 def _promote_new_quantizer(spark: SparkSession, sf_dir: str):
-    """The CANDIDATE re-clustering's quantizer: IVF_NLIST lowest ODD
+    """The CANDIDATE re-clustering's centroids: the IVF_NLIST lowest ODD
     non-null vec_ids, cid = rank position — deterministically different
     geometry from the standing quantizer (vec_id < IVF_NLIST), so the
     audit measures a genuine re-index, and SQL-rederivable so the oracle
     can re-run the whole promotion decision."""
-    import numpy as np
-
     emb = tables.load(spark, sf_dir, "embeddings")
-    rows = (
-        emb.where(F.col("embedding").isNotNull() & (F.col("vec_id") % 2 == 1))
-        .orderBy("vec_id")
-        .limit(IVF_NLIST)
-        .select("embedding")
-        .collect()
-    )
-    return np.array([r.embedding for r in rows], dtype=np.float64)
+    return _centroid_matrix(emb.where(F.col("vec_id") % 2 == 1))
 
 
-def _make_assign_udf(C, farthest: bool = False):
-    """Arrow-batched assignment to the nearest (or, for the poisoned
-    candidate, the FARTHEST) of the captured centroids — 6dp-rounded
-    cosine before the arg pick, ties to the lowest cid, the cross-engine
-    convention every IVF oracle here uses. Rounding BEFORE the pick makes
-    the assignment identical under any summation order, so the DuckDB
-    oracle (sequential list ops) and the numpy matmul (pairwise) agree
-    exactly. The one IVF quantizer UDF: layouts, the standing index and
-    the re-index all wrap their centroid matrix here."""
-    import numpy as np
-
-    C = np.asarray(C, dtype=np.float64)
-    c_norm = np.sqrt((C * C).sum(axis=1))
-
-    @F.pandas_udf("long")
-    def assign(emb_s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.Series([], dtype="int64")
-        sims = np.round(
-            (X @ C.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * c_norm), 6
-        )
-        pick = np.argmin(sims, axis=1) if farthest else np.argmax(sims, axis=1)
-        return pd.Series(pick.astype("int64"))
-
-    return assign
-
-
-def _serve_hits_at_k(cand_df: DataFrame, C_new, qids, Q, k: int, nprobe: int) -> int:
+def _serve_hits_at_k(cand_df: DataFrame, C_new, qids, Q, k: int) -> int:
     """Σ_q |served top-k ∩ exact top-k| over a staged candidate frame —
-    the promotion audit's metric, computed DISTRIBUTED: one mapInPandas
-    matmul pass emits per-partition top-k for BOTH sides (exact = all
-    candidate rows; served = rows whose ivf_list is in the query's
-    nprobe-nearest lists under the CANDIDATE quantizer), then one window
-    reduces partials and one join counts the intersection. The only
-    driver transfer is the final count — the shape that still works when
-    the candidate is the full 100 TB index (probe resolution is an
-    NL×NQ numpy product over the driver-held centroid matrix, the same
-    economics as ``ext_ann_ivf_batch``)."""
-    import numpy as np
-
-    C = np.asarray(C_new, dtype=np.float64)
-    c_norm = np.sqrt((C * C).sum(axis=1))
+    the promotion audit's metric, computed DISTRIBUTED with the one
+    `topk_kernel` pass over a stacked query matrix: rows 0..NQ-1 are the
+    exact side (all-true probe mask), rows NQ..2NQ-1 the served side
+    (each query's IVF_NPROBE lists under the CANDIDATE quantizer). One
+    window reduces the per-batch partials and one join counts the
+    intersection. The only driver transfer is the final count — the
+    shape that still works when the candidate is the full 100 TB index
+    (probe resolution is the same NL×NQ numpy product as
+    ``ext_ann_ivf_batch``)."""
     Q = np.asarray(Q, dtype=np.float64)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    nq = Q.shape[0]
-    sims = np.round((C @ Q.T) / (c_norm[:, None] * q_norms[None, :]), 6)
-    probe_mask = np.zeros((C.shape[0], nq), dtype=bool)
-    for q in range(nq):
-        for lst in np.argsort(-sims[:, q], kind="stable")[:nprobe]:
-            probe_mask[lst, q] = True
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            ids = pdf["vec_id"].to_numpy()
-            lists = pdf["ivf_list"].to_numpy().astype(np.int64)
-            cos = np.round(
-                (X @ Q.T)
-                / (np.sqrt((X * X).sum(axis=1))[:, None] * q_norms[None, :]),
-                6,
-            )
-            notself = ids[:, None] != qid_arr[None, :]
-            out_q, out_id, out_cos, out_side = [], [], [], []
-            for q in range(nq):
-                rows = np.nonzero(notself[:, q])[0]
-                if rows.size == 0:
-                    continue
-                order = rows[np.lexsort((ids[rows], -cos[rows, q]))][:k]
-                out_q.extend([q] * len(order))
-                out_id.extend(ids[order].tolist())
-                out_cos.extend(cos[order, q].tolist())
-                out_side.extend([0] * len(order))
-                srows = rows[probe_mask[lists[rows], q]]
-                sorder = srows[np.lexsort((ids[srows], -cos[srows, q]))][:k]
-                out_q.extend([q] * len(sorder))
-                out_id.extend(ids[sorder].tolist())
-                out_cos.extend(cos[sorder, q].tolist())
-                out_side.extend([1] * len(sorder))
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.array(out_q, dtype=np.int64),
-                        "vec_id": np.array(out_id, dtype=np.int64),
-                        "cosine": np.array(out_cos),
-                        "side": np.array(out_side, dtype=np.int32),
-                    }
-                )
-
-    partial = cand_df.select("vec_id", "embedding", "ivf_list").mapInPandas(
-        kernel, "query_id long, vec_id long, cosine double, side int"
+    nq = len(Q)
+    served = ivf_probe_mask(C_new, Q)
+    mask = np.hstack([np.ones_like(served), served])
+    top = _scored_topk(cand_df, np.vstack([Q, Q]), list(qids) * 2, k, mask, False)
+    exact = top.where(F.col("query_id") < nq).select("query_id", "vec_id")
+    hit = top.where(F.col("query_id") >= nq).select(
+        (F.col("query_id") - nq).alias("query_id"), "vec_id"
     )
-    w = Window.partitionBy("side", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    top = (
-        partial.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("side", "query_id", "vec_id")
-    )
-    exact = top.where(F.col("side") == 0).select("query_id", "vec_id")
-    served = top.where(F.col("side") == 1).select("query_id", "vec_id")
-    return exact.join(served, ["query_id", "vec_id"]).count()
+    return exact.join(hit, ["query_id", "vec_id"]).count()
 
 
 def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1300,15 +1217,11 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
         import tempfile
 
-        import numpy as np
-
-        from ..sources import layouts
-
         emb = tables.load(spark, sf_dir, "embeddings")
         corpus = emb.where(F.col("embedding").isNotNull()).select(
             "vec_id", "label", "embedding"
         )
-        assign_std, _, _ = layouts.ivf_assignment_udf(spark, sf_dir)
+        assign_std, _ = ivf_quantizer(spark, sf_dir)
         C_new = _promote_new_quantizer(spark, sf_dir)
         qrows = sorted(
             corpus.orderBy("vec_id")
@@ -1326,7 +1239,7 @@ def ext_ann_index_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
             hits = (
                 0
                 if cand is None
-                else _serve_hits_at_k(cand, C_new, qids, Q, PROMOTE_K, IVF_NPROBE)
+                else _serve_hits_at_k(cand, C_new, qids, Q, PROMOTE_K)
             )
             audit_hits.append(int(hits))
             return hits >= PROMOTE_MIN_HITS
@@ -1829,8 +1742,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
 
 
 def _pq_codebooks_build(spark: SparkSession, sf_dir: str):
-    import numpy as np
-
     emb = tables.load(spark, sf_dir, "embeddings")
     hash_key = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
@@ -1902,8 +1813,6 @@ def _pq_adc_topk(
     ``cand`` (vec_id, label, embedding) with the trained codebooks, ADC-score
     natively against the query's lookup tables, shortlist ``rerank`` rows,
     exact rounded-cosine re-rank."""
-    import numpy as np
-
     books = _pq_codebooks(spark, sf_dir)
     q_vec = query_vector(spark, sf_dir)
     q_unit = q_vec / np.linalg.norm(q_vec)
@@ -1954,25 +1863,8 @@ def _pq_adc_topk(
         )
         .where(F.col("adc_rank") <= rerank)
     )
-    qdf = spark.createDataFrame(
-        [(q_vec.tolist(), float(np.linalg.norm(q_vec)))],
-        "q_emb: array<double>, q_norm: double",
-    )
-    exact = _with_norm(shortlist.select("vec_id", "label", "embedding")).crossJoin(
-        F.broadcast(qdf)
-    )
-    scored = exact.select(
-        "vec_id",
-        "label",
-        F.round(
-            _cosine("embedding", F.col("q_emb"), F.col("norm"), F.col("q_norm")), 6
-        ).alias("cosine"),
-    )
-    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("rank", "vec_id", "label", "cosine")
+    return _rerank_topk(
+        shortlist.select("vec_id", "label", "embedding"), _query_frame(spark, q_vec)
     )
 
 
@@ -2101,7 +1993,7 @@ def ext_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PQ composed — the real 100 TB ANN serve shape (the FAISS
     IVFPQ index, as storage + plan properties): the coarse quantizer prunes
     the scan to the query's IVF_NPROBE list PARTITIONS (directory-level
-    pruning via the write-time layout, `sources/layouts.write_ivf_layout`),
+    pruning via the write-time layout, `write_ivf_layout`),
     PQ ADC scores only the survivors (M table lookups per vector — the
     memory-bound fast scan), and the exact re-rank touches IVFPQ_RERANK
     rows. Per-query cost at scale: (nprobe/nlist)·corpus code reads + a
@@ -2113,12 +2005,10 @@ def ext_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ext_ann_ivfpq_topk_oracle`). Partition pruning plan-gated and recall
     vs brute force asserted in tests/test_similarity.py.
     """
-    from ..sources import layouts
-
     path = ensure_ivf_layout(spark, sf_dir)
-    probe = layouts.ivf_probe_lists(spark, sf_dir)
+    probe = ivf_probe_mask(ivf_quantizer(spark, sf_dir)[1], query_vector(spark, sf_dir))
     cand = (
-        layouts.read_ivf_probe(spark, path, probe)
+        layouts.read_partitions(spark, path, "ivf_list", np.nonzero(probe[:, 0])[0])
         .where(F.col("vec_id") != QUERY_VEC_ID)
         .where(F.col("embedding").isNotNull())
         .select("vec_id", "label", "embedding")
@@ -2177,10 +2067,7 @@ KMEANS_K = 8
 KMEANS_ITERS = 5
 
 
-_KMEANS_ASSIGN_UDF = None
-
-
-def _kmeans_assign():
+def _kmeans_assign(spark: SparkSession):
     """Arrow-batched assign kernel: one (rows × K) numpy distance computation
     per batch → (cluster, sqdist). Centroids arrive as a LITERAL ARRAY
     COLUMN rather than a closure: Spark pays a multi-second warmup per
@@ -2189,102 +2076,81 @@ def _kmeans_assign():
     literals runs iterations at ~0.6 s. numpy argmin takes the LOWEST index
     on ties, the deterministic tie-break the recipe specifies. Created
     lazily (module import must not require an active SparkSession — the
-    DDL return type parses through the JVM) and cached for the worker-reuse
-    win above."""
-    global _KMEANS_ASSIGN_UDF
-    if _KMEANS_ASSIGN_UDF is not None:
-        return _KMEANS_ASSIGN_UDF
+    DDL return type parses through the JVM) and held per session in
+    `cache`: a ``pandas_udf`` binds to the SparkContext that first runs
+    it, so one kept across sessions breaks the next context's
+    accumulators."""
 
-    @F.pandas_udf("struct<cluster:int, sqdist:double>")
-    def assign(emb_s: pd.Series, c_s: pd.Series) -> pd.DataFrame:
-        import numpy as np
-        import pandas as pd
+    def build():
+        @F.pandas_udf("struct<cluster:int, sqdist:double>")
+        def assign(emb_s: pd.Series, c_s: pd.Series) -> pd.DataFrame:
+            X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
+            if X.size == 0:
+                return pd.DataFrame({"cluster": [], "sqdist": []})
+            C = np.asarray(c_s.iloc[0], dtype=np.float64).reshape(KMEANS_K, -1)
+            # 6dp rounding BEFORE the argmin makes the assignment identical
+            # under any float summation order — the cross-engine determinism
+            # that lets the fit carry an exact recursive-CTE oracle
+            d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
+            cl = d2.argmin(axis=1)
+            return pd.DataFrame(
+                {"cluster": cl.astype("int32"), "sqdist": d2[np.arange(len(cl)), cl]}
+            )
 
-        X = np.array([np.asarray(e, dtype=np.float64) for e in emb_s])
-        if X.size == 0:
-            return pd.DataFrame({"cluster": [], "sqdist": []})
-        C = np.asarray(c_s.iloc[0], dtype=np.float64).reshape(KMEANS_K, -1)
-        # 6dp rounding BEFORE the argmin makes the assignment identical
-        # under any float summation order — the cross-engine determinism
-        # that lets the fit carry an exact recursive-CTE oracle
-        d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-        cl = d2.argmin(axis=1)
-        return pd.DataFrame(
-            {"cluster": cl.astype("int32"), "sqdist": d2[np.arange(len(cl)), cl]}
-        )
+        return assign
 
-    _KMEANS_ASSIGN_UDF = assign
-    return assign
+    return cache.cached(spark, "", (), "kmeans-assign-udf", build)
 
 
 def _centroid_col(C_arr):
     # ONE array Literal node, not F.array over K×dim F.lit nodes: the
     # 512-node expression tree costs ~0.4 s of analysis/codegen per
     # iteration (measured; 5 iters 5.4 s → 3.4 s with the single literal)
-    import numpy as np
-
     return F.lit([float(v) for v in np.asarray(C_arr).flatten()])
 
 
-_KMEANS_PARTIALS_FN = None
-
-
-def _kmeans_partials():
+def _kmeans_partials(batches):
     """Shared mapInPandas kernel fusing assign + per-partition partial sums.
 
     Same shared-kernel discipline as `_kmeans_assign` (centroids arrive in
-    the ``c`` literal column, the function object is created once so its
-    pickle — and Spark's per-distinct-UDF warmup — is paid once across all
-    Lloyd iterations). Emits ≤ K rows per partition: (cluster, count,
-    elementwise sum vector)."""
-    global _KMEANS_PARTIALS_FN
-    if _KMEANS_PARTIALS_FN is not None:
-        return _KMEANS_PARTIALS_FN
-
-    def partials(batches):
-        import numpy as np
-        import pandas as pd
-
-        sums: dict[int, object] = {}
-        counts: dict[int, int] = {}
-        C = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if C is None:
-                C = np.asarray(pdf["c"].iloc[0], dtype=np.float64).reshape(
-                    KMEANS_K, -1
-                )
-            X = np.array([np.asarray(e, dtype=np.float64) for e in pdf["x"]])
-            # same 6dp-rounded assignment as _kmeans_assign (oracle contract)
-            d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-            cl = d2.argmin(axis=1)
-            for k in np.unique(cl):
-                m = cl == k
-                counts[k] = counts.get(k, 0) + int(m.sum())
-                prev = sums.get(k)
-                s = X[m].sum(axis=0)
-                sums[k] = s if prev is None else prev + s
-        ks = sorted(counts)
-        if not ks:
-            # EMPTY partition: yield nothing. Yielding a zero-row frame
-            # here crashes Arrow — pandas types the empty "s" column
-            # float64, which has no list<double> conversion
-            # (ArrowNotImplementedError). Never hit at the fixture sizes
-            # (one parquet split, all partitions non-empty); found by
-            # scaling.py's 10x run, where the bigger scan produces empty
-            # splits.
-            return
-        yield pd.DataFrame(
-            {
-                "cluster": pd.array(ks, dtype="int32"),
-                "n": [counts[k] for k in ks],
-                "s": [sums[k].tolist() for k in ks],
-            }
-        )
-
-    _KMEANS_PARTIALS_FN = partials
-    return partials
+    the ``c`` literal column, so every Lloyd iteration ships this one
+    function). Emits ≤ K rows per partition: (cluster, count, elementwise
+    sum vector)."""
+    sums: dict[int, object] = {}
+    counts: dict[int, int] = {}
+    C = None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if C is None:
+            C = np.asarray(pdf["c"].iloc[0], dtype=np.float64).reshape(KMEANS_K, -1)
+        X = np.array([np.asarray(e, dtype=np.float64) for e in pdf["x"]])
+        # same 6dp-rounded assignment as _kmeans_assign (oracle contract)
+        d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
+        cl = d2.argmin(axis=1)
+        for k in np.unique(cl):
+            m = cl == k
+            counts[k] = counts.get(k, 0) + int(m.sum())
+            prev = sums.get(k)
+            s = X[m].sum(axis=0)
+            sums[k] = s if prev is None else prev + s
+    ks = sorted(counts)
+    if not ks:
+        # EMPTY partition: yield nothing. Yielding a zero-row frame
+        # here crashes Arrow — pandas types the empty "s" column
+        # float64, which has no list<double> conversion
+        # (ArrowNotImplementedError). Never hit at the fixture sizes
+        # (one parquet split, all partitions non-empty); found by
+        # scaling.py's 10x run, where the bigger scan produces empty
+        # splits.
+        return
+    yield pd.DataFrame(
+        {
+            "cluster": pd.array(ks, dtype="int32"),
+            "n": [counts[k] for k in ks],
+            "s": [sums[k].tolist() for k in ks],
+        }
+    )
 
 
 def _kmeans_fit(spark: SparkSession, sf_dir: str):
@@ -2312,8 +2178,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
 
 
 def _kmeans_fit_build(spark: SparkSession, sf_dir: str):
-    import numpy as np
-
     # no fan_out: a 5000-row × 64-dim frame fans into 64 micro Arrow
     # batches whose per-task overhead dwarfs the trivial kernel work
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -2341,7 +2205,7 @@ def _kmeans_fit_build(spark: SparkSession, sf_dir: str):
         # before the collect; locally the partial frame is tiny.
         partials = (
             base.withColumn("c", _centroid_col(C))
-            .mapInPandas(_kmeans_partials(), "cluster int, n long, s array<double>")
+            .mapInPandas(_kmeans_partials, "cluster int, n long, s array<double>")
             .collect()
         )
         sums = np.zeros_like(C)
@@ -2378,7 +2242,7 @@ def ext_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base, C = _kmeans_fit(spark, sf_dir)
     return (
-        base.select(_kmeans_assign()("x", _centroid_col(C)).alias("a"))
+        base.select(_kmeans_assign(spark)("x", _centroid_col(C)).alias("a"))
         .select(F.col("a.cluster").alias("cluster"), F.col("a.sqdist").alias("sqdist"))
         .groupBy("cluster")
         .agg(
@@ -2514,7 +2378,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, C = _kmeans_fit(spark, sf_dir)
     return base.select(
         "vec_id",
-        _kmeans_assign()("x", _centroid_col(C)).getField("cluster").alias("cluster"),
+        _kmeans_assign(spark)("x", _centroid_col(C)).getField("cluster").alias("cluster"),
     )
 
 
@@ -2914,7 +2778,6 @@ def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters advancing in lockstep); python-reference equality test
     additionally pins the recipe.
     """
-    import numpy as np
     import pandas as pd
 
     assign = kmeans_assignments(spark, sf_dir)

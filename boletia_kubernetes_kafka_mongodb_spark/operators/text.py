@@ -1380,43 +1380,41 @@ def ext_text_bigram_logprob_oracle() -> str:
 
 BPE_N_MERGES = 8  # merge operations to learn
 
-_BPE_MERGE_UDF = None
 
-
-def _bpe_merge():
+def _bpe_merge(spark: SparkSession):
     """Shared Arrow kernel applying ONE merge (a, b) → "ab" across symbol
     arrays. Same shared-UDF discipline as the k-means kernels: the pair
     arrives as a literal array column, so all iterations reuse one pickled
-    function (per-distinct-UDF warmup paid once)."""
-    global _BPE_MERGE_UDF
-    if _BPE_MERGE_UDF is not None:
-        return _BPE_MERGE_UDF
+    function (per-distinct-UDF warmup paid once), held per session in
+    `cache` (a ``pandas_udf`` must not outlive its SparkContext)."""
 
-    import pandas as pd
+    def build():
+        import pandas as pd
 
-    # no type hints: module has no pandas import for the string annotations
-    # (PEP 563) to resolve against, and the return type is given explicitly
-    @F.pandas_udf("array<string>")
-    def merge(sym_s, pair_s):
-        a, b = pair_s.iloc[0][0], pair_s.iloc[0][1]
-        ab = a + b
-        out = []
-        for syms in sym_s:
-            L = list(syms)
-            res = []
-            i = 0
-            while i < len(L):
-                if i + 1 < len(L) and L[i] == a and L[i + 1] == b:
-                    res.append(ab)
-                    i += 2
-                else:
-                    res.append(L[i])
-                    i += 1
-            out.append(res)
-        return pd.Series(out)
+        # no type hints: module has no pandas import for the string annotations
+        # (PEP 563) to resolve against, and the return type is given explicitly
+        @F.pandas_udf("array<string>")
+        def merge(sym_s, pair_s):
+            a, b = pair_s.iloc[0][0], pair_s.iloc[0][1]
+            ab = a + b
+            out = []
+            for syms in sym_s:
+                L = list(syms)
+                res = []
+                i = 0
+                while i < len(L):
+                    if i + 1 < len(L) and L[i] == a and L[i + 1] == b:
+                        res.append(ab)
+                        i += 2
+                    else:
+                        res.append(L[i])
+                        i += 1
+                out.append(res)
+            return pd.Series(out)
 
-    _BPE_MERGE_UDF = merge
-    return merge
+        return merge
+
+    return cache.cached(spark, "", (), "bpe-merge-udf", build)
 
 
 def ext_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1503,7 +1501,7 @@ def _bpe_learn_build(spark: SparkSession, sf_dir: str, docs_filter=None) -> list
         r = top[0]
         merges.append((rank, r["a"], r["b"], int(r["c"])))
         words = words.select(
-            _bpe_merge()("syms", F.lit([r["a"], r["b"]])).alias("syms"), "freq"
+            _bpe_merge(spark)("syms", F.lit([r["a"], r["b"]])).alias("syms"), "freq"
         ).localCheckpoint(eager=False)
     return merges
 

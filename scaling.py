@@ -279,7 +279,7 @@ def _incremental_append_leg(spark, sf_dir):
     idx = layouts.IncrementalIvfIndex(
         spark, os.path.join(tempfile.gettempdir(), f"boletia_incidx_{key}")
     )
-    assign_udf, _, _ = S._ivf_standing_quantizer(spark, sf_dir)
+    assign_udf, _ = S._ivf_standing_quantizer(spark, sf_dir)
     if idx.current() == (None, -1):
         from boletia_kubernetes_kafka_mongodb_spark import tables
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 from pathlib import Path
 
@@ -18,7 +19,8 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     from boletia_kubernetes_kafka_mongodb_spark.session import get_spark
 
-    s = get_spark("boletia-tests", cpus=8)
+    # as many local cores as the tier-1 command exports (8 without it)
+    s = get_spark("boletia-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", 8))
     yield s
     s.stop()
 

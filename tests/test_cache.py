@@ -477,3 +477,56 @@ def test_keyed_reads_follow_a_rewritten_lineitem(spark, duck, tmp_path):
     finally:
         oracle.close()
         cache.clear(str(sf))
+
+
+SESSIONS = """
+import sys
+
+sys.path.insert(0, {repo!r})
+
+from pyspark.sql import SparkSession
+
+from boletia_kubernetes_kafka_mongodb_spark.operators import similarity, text
+
+runs = []
+for _ in range(2):
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    runs.append(
+        [
+            sorted(map(tuple, q(spark, {sf!r}).collect()))
+            for q in (similarity.ext_kmeans_embeddings, text.ext_bpe_merges)
+        ]
+    )
+    spark.stop()
+assert runs[0] == runs[1] and all(runs[0]), runs
+print("EQUAL", flush=True)
+"""
+
+
+def test_shared_udfs_do_not_outlive_their_session(tmp_path):
+    """The shared k-means and BPE ``pandas_udf``s are held per session: a
+    second SparkSession in the same process (session → stop → session)
+    gets fresh UDFs, computes the same rows, and its accumulator updates
+    reach a live driver — a UDF kept from the stopped context logs
+    ``Failed to update accumulator … Broken pipe`` on every task."""
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    script = tmp_path / "sessions.py"
+    script.write_text(SESSIONS.format(repo=str(REPO), sf=SF_SMOKE))
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0 and "EQUAL" in proc.stdout, proc.stderr[-4000:]
+    assert "Failed to update accumulator" not in proc.stderr, proc.stderr[-4000:]

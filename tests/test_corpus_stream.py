@@ -1135,7 +1135,7 @@ def _refresh_fixtures(spark):
         split_assignment,
     )
 
-    assign_udf, _, _ = S._ivf_standing_quantizer(spark, SF_SMOKE)
+    assign_udf, _ = S._ivf_standing_quantizer(spark, SF_SMOKE)
     emb = tables.load(spark, SF_SMOKE, "embeddings").where(
         F.col("embedding").isNotNull()
     )

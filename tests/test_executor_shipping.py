@@ -26,6 +26,8 @@ QIDS = (
     "ext_dedup_simhash",
     "ext_dedup_clusters",
     "ext_knn_label_transfer",
+    "ext_ann_ivf_batch",
+    "ext_ann_lsh_topk",
 )
 
 DRIVER = textwrap.dedent(

@@ -9,15 +9,16 @@ import re
 from pyspark.sql import functions as F
 
 from boletia_kubernetes_kafka_mongodb_spark import plans, tables
+from boletia_kubernetes_kafka_mongodb_spark.operators import similarity as S
 from boletia_kubernetes_kafka_mongodb_spark.sources import layouts
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, compare_with_oracle
 
 
-def test_ivf_layout_prunes_partitions_and_matches_in_memory(spark, tmp_path):
+def test_ivf_layout_prunes_partitions_and_matches_oracle(spark, duck, tmp_path):
     path = f"{tmp_path}/emb_ivf"
-    layouts.write_ivf_layout(spark, SF_SMOKE, path)
+    S.write_ivf_layout(spark, SF_CORRECT, path)
 
-    probe_df = layouts.read_ivf_probe(spark, path, [0, 3])
+    probe_df = layouts.read_partitions(spark, path, "ivf_list", [0, 3])
     plan = plans.explain_str(probe_df)
     # the list filter must resolve at planning time, not as a row predicate
     assert "PartitionFilters" in plan
@@ -28,38 +29,36 @@ def test_ivf_layout_prunes_partitions_and_matches_in_memory(spark, tmp_path):
     got_lists = {r.ivf_list for r in probe_df.select("ivf_list").distinct().collect()}
     assert got_lists <= {0, 3}
 
-    # end-to-end: top-k over the layout == the index-free scan form
-    from boletia_kubernetes_kafka_mongodb_spark.operators import similarity
+    # end-to-end: the one IVF serve over this layout == the DuckDB
+    # re-derivation (centroids, assignment, probe lists and re-rank in SQL)
+    compare_with_oracle(
+        spark,
+        duck,
+        lambda s, sf: S.ann_ivf_serve(s, sf, path, S.ivf_quantizer(s, sf)[1]),
+        S.ext_ann_ivf_topk_oracle(),
+    )
 
-    over_layout = sorted(map(tuple, layouts.ann_topk_over_layout(spark, SF_SMOKE, path).collect()))
-    in_memory = sorted(map(tuple, similarity.ann_ivf_topk_scan(spark, SF_SMOKE).collect()))
-    assert over_layout == in_memory
 
-
-def test_ext_ann_ivf_topk_serves_from_pruned_layout(spark):
+def test_ext_ann_ivf_topk_serves_from_pruned_layout(spark, duck):
     """The driver query itself must plan a partition-pruned scan of the IVF
-    layout (not a full-corpus UDF re-assignment) and agree with the
-    index-free fallback."""
-    from boletia_kubernetes_kafka_mongodb_spark.operators import similarity
-
-    df = similarity.ext_ann_ivf_topk(spark, SF_SMOKE)  # builds layout on first call
+    layout (not a full-corpus UDF re-assignment) and agree with the DuckDB
+    oracle."""
+    df = S.ext_ann_ivf_topk(spark, SF_CORRECT)  # builds layout on first call
     plan = plans.explain_str(df)
     assert "PartitionFilters" in plan
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "ivf_list" in m.group(1)
-    got = sorted(map(tuple, df.collect()))
-    ref = sorted(map(tuple, similarity.ann_ivf_topk_scan(spark, SF_SMOKE).collect()))
-    assert got == ref
+    compare_with_oracle(spark, duck, S.ext_ann_ivf_topk, S.ext_ann_ivf_topk_oracle())
 
 
-def test_srp_layout_prunes_partitions_and_matches_scan(spark, tmp_path):
+def test_srp_layout_prunes_partitions_and_matches_oracle(spark, duck, tmp_path):
     """The SRP band-bucket layout: probe plans a partition-pruned scan and
-    the served top-k is byte-identical to the index-free scan form (same
-    candidate set by construction, same deterministic re-rank)."""
+    the served top-k equals the DuckDB oracle, which re-derives the
+    hyperplanes, band codes, candidate set and re-rank in SQL."""
     path = f"{tmp_path}/emb_srp"
-    layouts.write_srp_band_layout(spark, SF_SMOKE, path)
+    S.write_srp_band_layout(spark, SF_CORRECT, path)
 
-    probe_df = layouts.read_srp_probe(spark, path, [0, 70, 130])
+    probe_df = layouts.read_partitions(spark, path, "srp_bucket", [0, 70, 130])
     plan = plans.explain_str(probe_df)
     assert "PartitionFilters" in plan
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -67,29 +66,24 @@ def test_srp_layout_prunes_partitions_and_matches_scan(spark, tmp_path):
     got_buckets = {r.srp_bucket for r in probe_df.select("srp_bucket").distinct().collect()}
     assert got_buckets <= {0, 70, 130}
 
-    from boletia_kubernetes_kafka_mongodb_spark.operators import similarity
-
-    over_layout = sorted(
-        map(tuple, layouts.ann_lsh_topk_over_layout(spark, SF_SMOKE, path).collect())
+    compare_with_oracle(
+        spark,
+        duck,
+        lambda s, sf: S.ann_lsh_serve(s, sf, path),
+        S.ext_ann_lsh_topk_oracle(),
     )
-    in_memory = sorted(map(tuple, similarity.ann_lsh_topk_scan(spark, SF_SMOKE).collect()))
-    assert over_layout == in_memory
 
 
-def test_ext_ann_lsh_topk_serves_from_pruned_layout(spark):
+def test_ext_ann_lsh_topk_serves_from_pruned_layout(spark, duck):
     """The driver query itself must plan a partition-pruned scan of the SRP
-    layout (not the full-corpus UDF band filter) and agree with the
-    index-free fallback."""
-    from boletia_kubernetes_kafka_mongodb_spark.operators import similarity
-
-    df = similarity.ext_ann_lsh_topk(spark, SF_SMOKE)  # builds layout on first call
+    layout (not the full-corpus UDF band filter) and agree with the DuckDB
+    oracle."""
+    df = S.ext_ann_lsh_topk(spark, SF_CORRECT)  # builds layout on first call
     plan = plans.explain_str(df)
     assert "PartitionFilters" in plan
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "srp_bucket" in m.group(1)
-    got = sorted(map(tuple, df.collect()))
-    ref = sorted(map(tuple, similarity.ann_lsh_topk_scan(spark, SF_SMOKE).collect()))
-    assert got == ref
+    compare_with_oracle(spark, duck, S.ext_ann_lsh_topk, S.ext_ann_lsh_topk_oracle())
 
 
 def test_driver_join_availability_bucketed_is_exchange_free(spark):
@@ -329,8 +323,9 @@ def test_ext_ann_ivfpq_topk_pruned_plan_and_recall(spark):
     assert recall >= 0.7, f"IVFPQ recall {recall:.2f}"
     # every returned neighbor must come from the probed lists (the coarse
     # quantizer's contract) — re-derive the probe set and assignments
-    probe = set(layouts.ivf_probe_lists(spark, SF_SMOKE))
-    assign_udf, _, _ = layouts.ivf_assignment_udf(spark, SF_SMOKE)
+    assign_udf, C = similarity.ivf_quantizer(spark, SF_SMOKE)
+    q_vec = similarity.query_vector(spark, SF_SMOKE)
+    probe = set(similarity.ivf_probe_mask(C, q_vec)[:, 0].nonzero()[0].tolist())
     emb = tables.load(spark, SF_SMOKE, "embeddings")
     lists = {
         r.vec_id: r.lst
@@ -393,7 +388,7 @@ def test_ivf_refresh_layout_equals_rebuild(spark):
     got = sorted(
         map(tuple, layouts.read_layout(spark, path).select("vec_id", "ivf_list").collect())
     )
-    assign, _, _ = S._ivf_standing_quantizer(spark, SF_SMOKE)
+    assign, _ = S._ivf_standing_quantizer(spark, SF_SMOKE)
     emb = tables.load(spark, SF_SMOKE, "embeddings").where(
         F.col("embedding").isNotNull()
     )
@@ -421,43 +416,55 @@ def test_ivf_refresh_layout_equals_rebuild(spark):
 
 
 def test_ivf_refresh_serve_pruned_and_arriving_servable(spark):
-    """The refreshed layout serves through a partition-pruned probe scan,
-    the served top-k equals the index-free form over the same frozen
+    """The refreshed layout serves through the one IVF serve with the
+    frozen standing quantizer: the probe scan is partition-pruned, the
+    served top-k equals a numpy brute force over the same frozen
     quantizer, and appended (arriving) vectors are candidates the moment
     the refresh commits."""
-    from boletia_kubernetes_kafka_mongodb_spark.operators import similarity as S
+    import numpy as np
+
     from boletia_kubernetes_kafka_mongodb_spark.operators.sampling import (
         split_assignment,
     )
 
-    served = S.ann_topk_over_refreshed(spark, SF_SMOKE)
+    path = S.ensure_refreshed_ivf_layout(spark, SF_SMOKE)
+    _, C = S._ivf_standing_quantizer(spark, SF_SMOKE)
+    served = S.ann_ivf_serve(spark, SF_SMOKE, path, C)
     plan = plans.explain_str(served)
     assert "PartitionFilters" in plan
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "ivf_list" in m.group(1)
 
-    # index-free reference: assign the full corpus with the frozen
-    # quantizer in memory, filter to the same probe lists, score exactly
-    import numpy as np
+    # index-free reference in numpy: assign the full corpus to the frozen
+    # centroids, keep the query's IVF_NPROBE nearest lists, score exactly
+    # (6dp-rounded cosine; ties to the lowest cid / vec_id)
+    def cos(A, b):
+        return np.round((A @ b) / (np.linalg.norm(A, axis=1) * np.linalg.norm(b)), 6)
 
-    assign, C, c_norm = S._ivf_standing_quantizer(spark, SF_SMOKE)
+    rows = (
+        tables.load(spark, SF_SMOKE, "embeddings")
+        .where(F.col("embedding").isNotNull())
+        .select("vec_id", "label", "embedding")
+        .collect()
+    )
+    X = np.array([r.embedding for r in rows], dtype=np.float64)
+    lists = [int(np.argmax(cos(C, x))) for x in X]
     q_vec = S.query_vector(spark, SF_SMOKE)
-    q_norm = float(np.sqrt(q_vec @ q_vec))
-    probe = sorted(
-        np.argsort(-np.round((C @ q_vec) / (c_norm * q_norm), 6), kind="stable")[
-            : S.IVF_NPROBE
-        ].tolist()
-    )
-    emb = tables.load(spark, SF_SMOKE, "embeddings").where(
-        F.col("embedding").isNotNull() & (F.col("vec_id") != S.QUERY_VEC_ID)
-    )
-    ref_cand = emb.where(assign("embedding").isin(probe))
-    ref = S.exact_topk_over_candidates(spark, ref_cand, q_vec)
-    assert sorted(map(tuple, served.collect())) == sorted(map(tuple, ref.collect()))
+    probe = sorted(np.argsort(-cos(C, q_vec), kind="stable")[: S.IVF_NPROBE].tolist())
+    sims = cos(X, q_vec)
+    best = sorted(
+        (-sims[i], r.vec_id, i)
+        for i, r in enumerate(rows)
+        if lists[i] in probe and r.vec_id != S.QUERY_VEC_ID
+    )[: S.TOPK]
+    want = [
+        (rank, rows[i].vec_id, rows[i].label, float(sims[i]))
+        for rank, (_, _, i) in enumerate(best, start=1)
+    ]
+    assert sorted(map(tuple, served.collect())) == want
 
     # at least one arriving vector sits in the probed partitions
-    path = S.ensure_refreshed_ivf_layout(spark, SF_SMOKE)
-    probed = layouts.read_ivf_probe(spark, path, probe).select(
+    probed = layouts.read_partitions(spark, path, "ivf_list", probe).select(
         "vec_id", split_assignment("vec_id").alias("s")
     )
     assert probed.where(F.col("s") == "test").count() > 0

@@ -250,7 +250,7 @@ def test_kmeans_partials_tolerates_empty_partitions(spark):
     C[1] = 1.0  # two distinct centroids so assignment exercises argmin
     partials = (
         base.withColumn("c", _centroid_col(C))
-        .mapInPandas(_kmeans_partials(), "cluster int, n long, s array<double>")
+        .mapInPandas(_kmeans_partials, "cluster int, n long, s array<double>")
         .collect()
     )
     assert sum(r["n"] for r in partials) == 3
@@ -548,7 +548,6 @@ def test_ann_index_promote_both_branches(spark):
 
     from boletia_kubernetes_kafka_mongodb_spark import tables
     from boletia_kubernetes_kafka_mongodb_spark.operators import similarity as S
-    from boletia_kubernetes_kafka_mongodb_spark.sources import layouts
 
     rows = {r.candidate: r for r in S.ext_ann_index_promote(spark, SF_SMOKE).collect()}
     assert set(rows) == {"poisoned", "good"}
@@ -564,7 +563,7 @@ def test_ann_index_promote_both_branches(spark):
         .where(F.col("embedding").isNotNull())
         .select("vec_id", "embedding")
     )
-    assign_std, _, _ = layouts.ivf_assignment_udf(spark, SF_SMOKE)
+    assign_std, _ = S.ivf_quantizer(spark, SF_SMOKE)
     C_new = S._promote_new_quantizer(spark, SF_SMOKE)
 
     def fprint(assigned):
@@ -634,3 +633,102 @@ def test_embed_project_expr_matches_python_reference(spark):
             ysq = ysq + ps[j] * ps[j]
         expect = round(math.sqrt(ysq) / nx, 6) if nx > 0 else None
         assert row.norm_ratio == expect, vid
+
+
+def _kernel_reference(batches, Q, qids, k, probe_mask):
+    """Brute force over each batch: every allowed row scored one at a time
+    (python dot products), sorted by (rounded cosine DESC, vec_id ASC),
+    the first k per query — the frames `topk_kernel` must yield."""
+    import numpy as np
+
+    out = []
+    for pdf in batches:
+        rows = []
+        for q in range(len(Q)):
+            scored = []
+            for i in range(len(pdf)):
+                vid = int(pdf["vec_id"].iloc[i])
+                if vid == qids[q]:
+                    continue
+                if probe_mask is not None and not probe_mask[int(pdf["ivf_list"].iloc[i]), q]:
+                    continue
+                x = np.asarray(pdf["embedding"].iloc[i], dtype=np.float64)
+                c = round(float(np.dot(x, Q[q]) / (np.sqrt(np.dot(x, x)) * np.sqrt(np.dot(Q[q], Q[q])))), 6)
+                scored.append((-c, vid, int(pdf["label"].iloc[i])))
+            rows += [(q, vid, lab, -nc) for nc, vid, lab in sorted(scored)[:k]]
+        if rows:
+            out.append(rows)
+    return out
+
+
+def test_topk_kernel_matches_numpy_brute_force():
+    """The one per-batch top-k kernel (`similarity.topk_kernel`) against a
+    row-at-a-time brute force on random batches: empty batches yield
+    nothing, rounded-cosine ties (a row and its exact 2× copy) break on
+    vec_id ASC, a query whose probe-mask column is all false gets no row,
+    and a query's own id in the batch is never served to it."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(20261019)
+    dim, n_lists = 5, 4
+    seen = {"tie": 0, "self": 0, "empty": 0, "dark": 0}
+    for trial in range(60):
+        nq = int(rng.integers(1, 4))
+        k = int(rng.integers(1, 5))
+        Q = rng.normal(size=(nq, dim))
+        qids = [int(v) for v in rng.choice(40, nq, replace=False)]
+        mask = None
+        if trial % 3:
+            mask = rng.random((n_lists, nq)) < 0.6
+            if trial % 3 == 2:
+                mask[:, 0] = False  # query 0 probes no list at all
+                seen["dark"] += 1
+        batches = []
+        for _ in range(int(rng.integers(1, 4))):
+            n = int(rng.integers(0, 9))
+            seen["empty"] += n == 0
+            X = rng.normal(size=(n, dim))
+            if n >= 3:
+                X[1] = 2.0 * X[2]  # exactly the same cosine to every query
+                seen["tie"] += 1
+            ids = rng.choice(np.arange(40, 100), n, replace=False)
+            if n and trial % 2:
+                ids[0] = qids[-1]  # a query's own vector is in the batch
+                seen["self"] += 1
+            batches.append(
+                pd.DataFrame(
+                    {
+                        "vec_id": ids.astype(np.int64),
+                        "embedding": list(X),
+                        "label": rng.integers(0, 5, n).astype(np.int32),
+                        "ivf_list": rng.integers(0, n_lists, n).astype(np.int32),
+                    }
+                )
+            )
+        kernel = similarity.topk_kernel(Q, qids, k, mask, True)
+        got = [
+            [
+                (int(r.query_id) if nq > 1 else 0, int(r.vec_id), int(r.label), float(r.cosine))
+                for r in f.itertuples()
+            ]
+            for f in kernel(iter(batches))
+        ]
+        assert got == _kernel_reference(batches, Q, qids, k, mask), trial
+        for frame in got:
+            assert all(vid != qids[q] for q, vid, _, _ in frame)
+            if mask is not None and trial % 3 == 2:
+                assert all(q != 0 for q, _, _, _ in frame)
+    assert all(seen.values()), seen
+
+    # one query as a plain vector, no probe mask, no labels
+    q = rng.normal(size=dim)
+    batch = pd.DataFrame(
+        {"vec_id": np.arange(6, dtype=np.int64), "embedding": list(rng.normal(size=(6, dim)))}
+    )
+    (frame,) = list(similarity.topk_kernel(q, [3], 2, None, False)(iter([batch])))
+    assert list(frame.columns) == ["vec_id", "cosine"]  # one query: no query_id
+    (want,) = _kernel_reference([batch.assign(label=0)], q[None, :], [3], 2, None)
+    assert [(int(v), float(c)) for v, c in frame.itertuples(index=False)] == [
+        (v, c) for _, v, _, c in want
+    ]
