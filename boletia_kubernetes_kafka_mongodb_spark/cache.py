@@ -39,11 +39,12 @@ reservas plus the maintained ``reservado`` counter):
 - **Version:** the tag carries the writer's code version (``ivf_layout_v2``).
   Bump it whenever the writer's output changes for the same input;
   otherwise trees built by older code are served.
-- **Commit:** the writer fills a staging tree and the store's pointer file
-  is flipped onto it (``streaming._snapshot.SnapshotDir``). A tree is
-  served only once its pointer names it, so a crashed or failed write is
-  never read and the next call rebuilds. A store left by older code
-  without a pointer reads as not built, and the first commit removes it.
+- **Commit:** the writer fills a staging tree that the package's one
+  pointer commit publishes (``streaming._snapshot.SnapshotDir.publish``).
+  A tree is served only once its pointer names it, so a crashed or failed
+  write is never read and the next call rebuilds. A store left by older
+  code without a pointer reads as not built, and the first commit removes
+  it.
 - **Lock:** first builds of one store are serialized across threads and
   processes by an exclusive ``flock`` on ``<store>.lock``, beside the
   store because the commit deletes every entry of the store the pointer
@@ -157,14 +158,10 @@ def artifact(spark, sf_dir: str, tables, tag: str, write) -> str:
         fcntl.flock(lock, fcntl.LOCK_EX)
         tree, _ = store.current()
         if tree is None:
-            # every write starts empty: drop what a failed attempt left
-            staging = store.staging(0)
-            shutil.rmtree(staging, ignore_errors=True)
-            write(staging)
             lock.truncate(0)
             lock.write(json.dumps(sources))
             lock.flush()  # no committed store without its record
-            store.commit(os.path.basename(staging), 0)
+            store.publish(0, write)
             tree, _ = store.current()
             # a store deleted from outside is rebuilt at the same path:
             # drop this session's reads of the old files

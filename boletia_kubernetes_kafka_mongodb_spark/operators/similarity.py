@@ -230,6 +230,19 @@ def rounded_cosines(A, B):
     return np.round((A @ B.T) / norms, 6)
 
 
+def rounded_sqdist_argmin(X, C):
+    """Each row of ``X``'s nearest row of ``C`` by squared euclidean
+    distance rounded to 6dp, ties to the LOWEST index: ``(index, distance)``
+    arrays, one entry per row of ``X``. Rounding before the argmin makes
+    the assignment identical under any summation order — the grain the
+    k-means and PQ oracles re-derive in DuckDB."""
+    X = np.asarray(X, dtype=np.float64)
+    C = np.asarray(C, dtype=np.float64)
+    d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
+    idx = d2.argmin(axis=1)
+    return idx, d2[np.arange(len(idx)), idx]
+
+
 def ivf_probe_mask(C, Q):
     """The IVF probe rule: a (lists × queries) bool mask, True where list
     ``l`` is one of query ``q``'s IVF_NPROBE nearest centroids.
@@ -1771,8 +1784,7 @@ def _pq_codebooks_build(spark: SparkSession, sf_dir: str):
         # summation-order drift vanishes under the rounding grain, so a
         # DuckDB recursive CTE re-derives byte-identical codebooks
         for _ in range(PQ_ITERS):
-            d2 = np.round(((Xm[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-            assign = d2.argmin(axis=1)
+            assign, _ = rounded_sqdist_argmin(Xm, C)
             for k in range(PQ_KS):
                 members = Xm[assign == k]
                 if len(members):
@@ -1833,12 +1845,9 @@ def _pq_adc_topk(
         X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
         codes = np.empty((len(X), PQ_M), dtype=np.int32)
         for m in range(PQ_M):
-            Xm = X[:, m * sub : (m + 1) * sub]
             # rounded-before-argmin: same cross-engine contract as training
-            d2 = np.round(
-                ((Xm[:, None, :] - books_b[m][None, :, :]) ** 2).sum(axis=2), 6
-            )
-            codes[:, m] = d2.argmin(axis=1)
+            Xm = X[:, m * sub : (m + 1) * sub]
+            codes[:, m], _ = rounded_sqdist_argmin(Xm, books_b[m])
         return pd.Series(list(codes))
 
     coded = cand.select(
@@ -2088,14 +2097,9 @@ def _kmeans_assign(spark: SparkSession):
             if X.size == 0:
                 return pd.DataFrame({"cluster": [], "sqdist": []})
             C = np.asarray(c_s.iloc[0], dtype=np.float64).reshape(KMEANS_K, -1)
-            # 6dp rounding BEFORE the argmin makes the assignment identical
-            # under any float summation order — the cross-engine determinism
-            # that lets the fit carry an exact recursive-CTE oracle
-            d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-            cl = d2.argmin(axis=1)
-            return pd.DataFrame(
-                {"cluster": cl.astype("int32"), "sqdist": d2[np.arange(len(cl)), cl]}
-            )
+            # the rounded argmin lets the fit carry an exact recursive-CTE oracle
+            cl, d2 = rounded_sqdist_argmin(X, C)
+            return pd.DataFrame({"cluster": cl.astype("int32"), "sqdist": d2})
 
         return assign
 
@@ -2125,9 +2129,7 @@ def _kmeans_partials(batches):
         if C is None:
             C = np.asarray(pdf["c"].iloc[0], dtype=np.float64).reshape(KMEANS_K, -1)
         X = np.array([np.asarray(e, dtype=np.float64) for e in pdf["x"]])
-        # same 6dp-rounded assignment as _kmeans_assign (oracle contract)
-        d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-        cl = d2.argmin(axis=1)
+        cl, _ = rounded_sqdist_argmin(X, C)  # the _kmeans_assign rule
         for k in np.unique(cl):
             m = cl == k
             counts[k] = counts.get(k, 0) + int(m.sum())

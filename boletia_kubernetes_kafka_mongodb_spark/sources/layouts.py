@@ -30,10 +30,15 @@ staging tree, publishes it with a pointer-file commit and shares it with
 every later session (see the ``cache`` docstring).
 """
 
+import os
+import re
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache, tables
+from ..streaming._snapshot import EMPTY, SnapshotDir
 
 
 # ---------------------------------------------------------------------------
@@ -291,8 +296,6 @@ def compact_layout(
     """
     import glob
     import math
-    import os
-    import shutil
 
     old = path.rstrip("/") + "._compact_old"
     if not os.path.isdir(path) and os.path.isdir(old):
@@ -514,15 +517,50 @@ def write_zorder_events(
 
 
 # ---------------------------------------------------------------------------
-# Incrementally-maintained IVF layout (round 10 — streaming index refresh)
+# Incrementally-maintained IVF layout (streaming index refresh)
 # ---------------------------------------------------------------------------
+
+_DELTA = re.compile(r"delta_v(\d+)")
+
+
+class _IndexStore(SnapshotDir):
+    """The index's pointer store: the pointer names the base tree (or
+    ``-``) and the horizon, and the committed state also reads every
+    ``delta_v{b}`` with ``b <= horizon``. Only an append moves the
+    horizon; a rebase keeps it."""
+
+    def _holds(self, entry, name, bid):
+        m = _DELTA.fullmatch(entry)
+        return entry == name or (m is not None and int(m[1]) <= bid)
+
+    def _keeps(self, entry, name, bid):
+        # an uncommitted future delta is not the collection's to take; an
+        # append adds its delta and takes none, while a rebase (same
+        # horizon) takes the deltas its new base absorbed
+        m = _DELTA.fullmatch(entry)
+        return entry == name or (
+            m is not None and (int(m[1]) > bid or bid > self._seen[1])
+        )
+
+
+def _write_lists(df: DataFrame, path: str) -> bool:
+    """Write ``df`` partitioned by ``ivf_list`` at ``path``; False (and no
+    tree) when it holds no row. A partitioned write of an empty frame
+    leaves only ``_SUCCESS``, which ``spark.read.parquet`` rejects
+    (UNABLE_TO_INFER_SCHEMA), so such a tree is never committed."""
+    df.write.partitionBy("ivf_list").parquet(path)
+    for _root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    shutil.rmtree(path, ignore_errors=True)
+    return False
 
 
 class IncrementalIvfIndex:
     """LSM-style streaming-maintained IVF layout: one immutable BASE
     snapshot plus per-micro-batch immutable DELTA directories, committed
-    with the pointer-file protocol (``streaming/_snapshot``) — the
-    streaming form of ``ext_ann_index_refresh``'s nightly append.
+    through the package's one pointer commit (``streaming._snapshot``) —
+    the streaming form of ``ext_ann_index_refresh``'s nightly append.
 
     Directory protocol under ``path``::
 
@@ -531,17 +569,21 @@ class IncrementalIvfIndex:
         CURRENT                        "{base_name}:{last_bid}"
 
     Committed state = the pointer's base + every ``delta_v{b}`` with
-    ``b <= last_bid``. The append is crash-atomic and replay-idempotent:
+    ``b <= last_bid`` (base ``-``: no base tree). The append is
+    crash-atomic and replay-idempotent:
 
     - a delta dir's name is its batch id, so a retried write after a
-      crash OVERWRITES the half-written attempt instead of duplicating;
-    - the pointer flip (one ``os.replace``) is the only commit point — a
-      crash between delta write and flip leaves the batch uncommitted,
-      and Structured Streaming's redelivery of that batch id re-runs it;
+      crash replaces the half-written attempt instead of duplicating;
+    - the pointer flip is the only commit point — a crash between delta
+      write and flip leaves the batch uncommitted, and Structured
+      Streaming's redelivery of that batch id re-runs it;
     - a redelivered ALREADY-committed batch is detected by
       ``bid <= last_bid`` and skipped — append-twice is a no-op, the
       same offset-commit ⇄ effect idempotency contract as the durable
-      sketch monitors.
+      sketch monitors;
+    - no tree without a data file is ever committed: a 0-row batch
+      advances the horizon with no delta dir, and a 0-row rebase commits
+      the base ``-``.
 
     ``compact()`` folds base + committed deltas into a new base snapshot
     (bounding read fan-out — the LSM merge), with the same
@@ -550,120 +592,28 @@ class IncrementalIvfIndex:
     dataflow — frozen-quantizer assignment, partition-pruned probes,
     batch-sized nightly cost — is identical.
 
-    SINGLE-WRITER CONTRACT (round-12 verdict #7): all WRITERS of one
-    index path (``append``/``rebase``/``compact``) must be serialized.
-    In the streaming deployment this is structural — exactly one
-    foreachBatch handler owns the path and Structured Streaming runs a
-    query's batches sequentially; the nightly rebase job must not
-    overlap the stream (pause, or run it through the same handler).
-    Concurrent READERS are always safe (committed dirs are immutable and
-    the GC only collects dirs the new pointer does not name). The
-    contract is ASSERTED, not locked: every writer re-checks the pointer
-    it captured at entry immediately before its flip and raises
-    ``RuntimeError`` — preserving the other writer's commit — instead of
-    silently regressing the replay horizon (which would drop the
-    concurrent batch's rows from committed state while replay detection
-    still believes the bid was absorbed). On Delta/Iceberg the same
-    contract is enforced by the table format's optimistic-commit
-    conflict detection.
+    SINGLE-WRITER CONTRACT: all WRITERS of one index path
+    (``append``/``rebase``/``compact``) must be serialized — one
+    foreachBatch handler owns the path, and the nightly rebase job must
+    not overlap the stream (pause it, or run it through the same
+    handler). Each writer commits through one handle, whose commit raises
+    ``RuntimeError`` (preserving the other writer's commit) when the
+    pointer moved since the writer read it (``SnapshotDir``).
     """
 
-    _NO_BASE = "-"
-
     def __init__(self, spark: SparkSession, path: str):
-        import os
-
         self.spark = spark
         self.path = path
-        # committed dirs are immutable, so their has-parquet verdict never
-        # changes — memoized so the legacy-poisoned-layout self-heal in
-        # _committed_dirs() costs one os.walk per dir per process, not one
-        # per read()/probe() (round-11 ADVICE: the walk was on the hot
-        # serve path). NOT used for staging trees: append/rebase check the
-        # tree they just wrote, which a crashed-then-redelivered batch can
-        # legitimately re-write under the same name.
-        self._pq_memo: dict[str, bool] = {}
-        # last pointer observation, for regression detection (below)
-        self._memo_ptr: "tuple[int, int]" = (-1, -1)  # (base version, bid)
+        self._store = _IndexStore(path)
         os.makedirs(path, exist_ok=True)
 
     def current(self) -> "tuple[str | None, int]":
-        """(base dir name or None, last committed batch id).
-
-        Memo-staleness guard (round-12 ADVICE): committed dirs are
-        immutable under THIS protocol, but an external reset that wipes
-        and recreates the index path under a live instance can reuse a
-        committed-dir name whose memoized has-parquet verdict is stale —
-        a permanent False would silently exclude a valid dir. In
-        protocol, the base version and the batch id only ever move
-        forward; observing either go BACKWARDS proves an out-of-band
-        reset happened, so the whole memo is dropped (one extra os.walk
-        per dir afterwards — the pre-memo cost, paid only on reset)."""
-        import os
-
-        from ..streaming._snapshot import PointerCorruptionError, read_pointer
-
-        name, bid = read_pointer(self.path)
-        ver = self._base_version(name)
-        if ver < self._memo_ptr[0] or bid < self._memo_ptr[1]:
-            self._pq_memo.clear()
-        self._memo_ptr = (ver, bid)
-        if name is None or name == self._NO_BASE:
-            return None, bid
-        if not os.path.isdir(os.path.join(self.path, name)):
-            # Same invariant as SnapshotDir.current (round-13): rebase
-            # writes the base tree BEFORE the flip and GC never removes
-            # the named base, so a pointer naming a missing base proves
-            # out-of-band deletion. Silently excluding it (the old
-            # behavior, via _committed_dirs' has-parquet walk of the
-            # missing dir) would serve deltas only and let the next
-            # compact()/rebase() commit the shrunken state — permanent
-            # loss. A MISSING committed delta stays legitimate: 0-row
-            # batches advance the horizon without writing any dir.
-            raise PointerCorruptionError(
-                f"IncrementalIvfIndex at {self.path}: pointer names base "
-                f"{name!r} (bid {bid}) but that tree is not on disk — the "
-                f"index was damaged out of protocol; refusing to serve a "
-                f"silently shrunken state"
-            )
-        return name, bid
-
-    @staticmethod
-    def _base_version(name: "str | None") -> int:
-        import re
-
-        m = re.match(r"base_v(\d+)$", name) if name else None
-        return int(m.group(1)) if m else -1
-
-    def _check_sole_writer(self, base: "str | None", last: int, action: str) -> None:
-        """SINGLE-WRITER CONTRACT (round-12 verdict #7): all writers of one
-        index path must be serialized — in the streaming deployment that
-        is structural (one foreachBatch handler owns the path; Structured
-        Streaming runs a query's batches sequentially). This guard turns
-        a contract VIOLATION from silent data loss into a loud error: a
-        writer about to flip the pointer re-checks that the pointer still
-        reads exactly what it captured at entry. Without it, an append
-        landing between rebase()'s current() read and its pointer flip is
-        LOST — rebase's new base was derived before the append and its
-        flip would regress the horizon past the appended bid, so the
-        batch's rows vanish from committed state while replay detection
-        still thinks the bid was absorbed (the at-least-once window the
-        horizon exists to close). TOCTOU note: this is detection for a
-        violated contract, not a lock — the check-to-flip window is not
-        atomic and concurrent writers remain out of contract."""
-        from ..streaming._snapshot import read_pointer
-
-        cur_name, cur_bid = read_pointer(self.path)
-        expect = base or self._NO_BASE
-        seen = cur_name or self._NO_BASE
-        if seen != expect or cur_bid != int(last):
-            raise RuntimeError(
-                f"IncrementalIvfIndex at {self.path}: single-writer contract "
-                f"violated during {action} — pointer moved from "
-                f"{expect}:{last} to {seen}:{cur_bid} between the state read "
-                f"and the commit point. Serialize all writers of this index "
-                f"path; the concurrent commit was NOT overwritten."
-            )
+        """(base dir name or None, last committed batch id). A pointer
+        naming a base that is not on disk raises
+        ``PointerCorruptionError``; a missing committed DELTA is
+        legitimate (0-row batches advance the horizon without a dir)."""
+        tree, bid = self._store.current()
+        return (None if tree is None else os.path.basename(tree)), bid
 
     # -- writers -------------------------------------------------------------
 
@@ -682,11 +632,11 @@ class IncrementalIvfIndex:
         quantizer trained on the grown corpus. The replay horizon
         (``last_bid``) is PRESERVED, so a batch redelivered across the
         re-index is still detected and skipped — re-clustering must not
-        reopen the at-least-once window. Crash guarantee as everywhere
-        here: either the old committed state or the new one, never
-        neither; absorbed dirs GC'd after the flip, uncommitted future
-        deltas preserved (a redelivered future batch overwrites its own
-        delta dir under whatever quantizer the handler then holds).
+        reopen the at-least-once window. Either the old committed state
+        or the new one survives a crash, never neither; absorbed dirs are
+        collected after the flip, uncommitted future deltas kept (a
+        redelivered future batch rewrites its own delta dir under
+        whatever quantizer the handler then holds).
 
         STAGED PROMOTION: when ``audit`` is given it is called with the
         fully-written candidate (a DataFrame read back from the staged —
@@ -695,7 +645,9 @@ class IncrementalIvfIndex:
         returns falsy the staged tree is discarded and the committed
         state is untouched (returns False) — a re-clustering that fails
         its serve-quality audit (e.g. recall@k vs the exact brute-force
-        form) can never replace a serving index. Returns True when the
+        form) can never replace a serving index. An audit that raises
+        discards the staged tree too, so a crash-looping promotion job
+        cannot stack index-sized stray trees. Returns True when the
         rebase committed.
 
         Consumption contract: ``assigned_df`` is evaluated ONCE, during
@@ -704,138 +656,25 @@ class IncrementalIvfIndex:
         it after rebase returns — the underlying files are gone
         (materialize first, e.g. ``localCheckpoint(eager=True)``, if the
         frame is needed afterwards)."""
-        import os
-        import re
-        import shutil
-
-        from ..streaming._snapshot import POINTER, fsync_tree, write_pointer
-
         base, last = self.current()
-        n = int(re.match(r"base_v(\d+)", base).group(1)) if base else -1
-        new_base = f"base_v{n + 1}"
-        (
-            assigned_df.write.mode("overwrite")
-            .partitionBy("ivf_list")
-            .parquet(os.path.join(self.path, new_base))
-        )
-        if not self._has_parquet(os.path.join(self.path, new_base)):
-            # 0-row rebase: an all-absorbed-away index is representable as
-            # pointer "-:{last}" — never commit a parquet-less tree.
-            shutil.rmtree(os.path.join(self.path, new_base), ignore_errors=True)
-            new_base = self._NO_BASE
-        if audit is not None:
-            cand = (
-                self.spark.read.parquet(os.path.join(self.path, new_base))
-                if new_base != self._NO_BASE
-                else None
-            )
-            try:
-                verdict = audit(cand)
-            except BaseException:
-                # Audit job died mid-run: treat as non-promotion AND reclaim
-                # the staged tree now — a crash-looping promotion job would
-                # otherwise re-write the full candidate each attempt while
-                # the stray (invisible but index-sized) tree persists until
-                # the next successful rebase (round-11 ADVICE).
-                if new_base != self._NO_BASE:
-                    shutil.rmtree(
-                        os.path.join(self.path, new_base), ignore_errors=True
-                    )
-                raise
-            if not verdict:
-                if new_base != self._NO_BASE:
-                    shutil.rmtree(
-                        os.path.join(self.path, new_base), ignore_errors=True
-                    )
+        n = int(base[len("base_v"):]) if base else -1
+        with self._store.stage(os.path.join(self.path, f"base_v{n + 1}")) as tree:
+            name = os.path.basename(tree) if _write_lists(assigned_df, tree) else EMPTY
+            if audit is not None and not audit(
+                None if name == EMPTY else self.spark.read.parquet(tree)
+            ):
                 return False
-        if new_base != self._NO_BASE:
-            # Spark's parquet writer never fsyncs: flush the staged tree so
-            # a power-loss-durable pointer can only name a durable base.
-            # A FATAL fsync error (EIO/ENOSPC — the tree may have lost
-            # writes) aborts the commit; reclaim the staged tree eagerly,
-            # same rationale as the audit-raise path (a crash-looping
-            # rebase job would otherwise stack index-sized stray trees).
-            try:
-                fsync_tree(os.path.join(self.path, new_base))
-            except OSError:
-                shutil.rmtree(os.path.join(self.path, new_base), ignore_errors=True)
-                raise
-        try:
-            self._check_sole_writer(base, last, "rebase")
-        except RuntimeError:
-            from ..streaming._snapshot import read_pointer
-
-            # the staged tree must not linger (same reclaim as audit-raise)
-            # — unless a concurrent rebase committed the SAME next-version
-            # name (then the dir is committed state, not ours to collect;
-            # both writers racing the same staging dir is already data
-            # corruption territory, which is why this raises at all)
-            if new_base != self._NO_BASE and read_pointer(self.path)[0] != new_base:
-                shutil.rmtree(os.path.join(self.path, new_base), ignore_errors=True)
-            raise
-        write_pointer(self.path, new_base, last)
-        for entry in os.listdir(self.path):
-            if entry in (new_base, POINTER):
-                continue
-            m = re.match(r"delta_v(\d+)$", entry)
-            if m and int(m.group(1)) > last:
-                continue  # uncommitted future delta: not ours to collect
-            p = os.path.join(self.path, entry)
-            self._pq_memo.pop(p, None)  # name may be reused after a reset
-            try:
-                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-            except OSError:
-                pass
+            self._store.commit(name, last)
         return True
 
     def append(self, assigned_df: DataFrame, bid: int) -> bool:
-        """Commit one arriving micro-batch (False = replay, skipped).
-
-        A 0-row batch (e.g. every embedding NULL after the handler's
-        isNotNull filter) still advances the replay horizon but leaves NO
-        delta directory: a partitionBy write of an empty frame produces a
-        tree with only ``_SUCCESS``, which ``spark.read.parquet`` rejects
-        (UNABLE_TO_INFER_SCHEMA) — committing it would poison every
-        subsequent ``read()``/``probe()``/``compact()``, the exact
-        failure class the pointer protocol exists to prevent."""
-        import os
-        import shutil
-
-        from ..streaming._snapshot import fsync_tree, write_pointer
-
+        """Commit one arriving micro-batch (False = replay, skipped)."""
         base, last = self.current()
         if int(bid) <= last:
             return False
-        delta = os.path.join(self.path, f"delta_v{int(bid)}")
-        (
-            assigned_df.write.mode("overwrite")
-            .partitionBy("ivf_list")
-            .parquet(delta)
-        )
-        if not self._has_parquet(delta):
-            shutil.rmtree(delta, ignore_errors=True)
-        else:
-            # Spark never fsyncs its parquet output: flush the delta so a
-            # power-loss-durable pointer can only commit a durable batch.
-            # Fatal fsync error: abort before the flip and reclaim the
-            # (uncommitted — bid > last, pointer untouched) delta; a
-            # redelivery of the batch rewrites the same dir anyway.
-            try:
-                fsync_tree(delta)
-            except OSError:
-                shutil.rmtree(delta, ignore_errors=True)
-                raise
-        try:
-            self._check_sole_writer(base, last, f"append(bid={int(bid)})")
-        except RuntimeError:
-            from ..streaming._snapshot import read_pointer
-
-            # reclaim our staged delta ONLY if the concurrent commit did
-            # not itself absorb this bid (else the dir is committed state)
-            if int(bid) > read_pointer(self.path)[1]:
-                shutil.rmtree(delta, ignore_errors=True)
-            raise
-        write_pointer(self.path, base or self._NO_BASE, int(bid))
+        with self._store.stage(os.path.join(self.path, f"delta_v{int(bid)}")) as tree:
+            _write_lists(assigned_df, tree)
+            self._store.commit(base or EMPTY, int(bid))
         return True
 
     def compact(self) -> None:
@@ -852,39 +691,13 @@ class IncrementalIvfIndex:
 
     # -- readers -------------------------------------------------------------
 
-    @staticmethod
-    def _has_parquet(d: str) -> bool:
-        """True iff the tree under ``d`` holds at least one data file
-        (``spark.read.parquet`` on a file-less tree raises
-        UNABLE_TO_INFER_SCHEMA, so writers and readers both gate on it)."""
-        import os
-
-        for _root, _dirs, files in os.walk(d):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
     def _committed_dirs(self) -> "list[str]":
-        import os
-        import re
-
         base, last = self.current()
-        dirs = [os.path.join(self.path, base)] if base else []
-        for entry in sorted(os.listdir(self.path)):
-            m = re.match(r"delta_v(\d+)$", entry)
-            if m and int(m.group(1)) <= last:
-                dirs.append(os.path.join(self.path, entry))
-        # Self-healing for layouts committed before the empty-batch guard:
-        # a parquet-less tree is unreadable, never part of the state.
-        # Verdicts memoized per committed dir (immutable once committed).
-        out = []
-        for d in dirs:
-            ok = self._pq_memo.get(d)
-            if ok is None:
-                ok = self._pq_memo[d] = self._has_parquet(d)
-            if ok:
-                out.append(d)
-        return out
+        return [
+            os.path.join(self.path, entry)
+            for entry in sorted(os.listdir(self.path))
+            if self._store._holds(entry, base or EMPTY, last)
+        ]
 
     def read(self) -> DataFrame:
         """The committed index as one frame (base ∪ committed deltas).

@@ -1,34 +1,36 @@
-"""Crash-atomic versioned snapshot directories (pointer-file commit).
+"""Crash-atomic versioned directories: the package's one pointer commit.
 
-Round-9 verdict: the previous swap (write new → ``rmtree(old)`` →
-``os.replace(tmp, path)``) had a crash window between the rmtree and the
-replace in which NO snapshot exists — a crash there silently reset the
-durable monitors to empty on restart, the precise failure mode the
-durable stores exist to prevent.
+Every versioned directory in the package (the MERGE sink table, the
+durable sketch state, the ``cache.artifact`` stores and the incremental
+IVF index) writes and commits through :class:`SnapshotDir`:
 
-The fix applied here: snapshots are immutable versioned subdirectories
-(``v{n}/``) under the store path; the ONE mutable object is a pointer
-file (``CURRENT``) flipped with a single ``os.replace`` — atomic on
-POSIX. The pointer content is fsync'd before the flip, so a crash at any
-instant leaves either the old pointer (old snapshot intact on disk) or
-the new pointer (new snapshot fully written) — never neither. The
-pointer also records the batch id that produced the snapshot, which
-makes "legitimately EMPTY state at batch N" representable (the previous
-layout read a 0-row frame as "no state").
+1. **stage** a fresh tree under the store path (:meth:`SnapshotDir.stage`);
+2. **write** it (Spark's parquet writer, or any tree writer);
+3. **fsync** every tree the commit adds (Spark never fsyncs its output);
+4. **check the single writer**: the pointer still reads what this handle
+   last read or wrote, and the batch horizon does not regress;
+5. **flip** the pointer file (``CURRENT``, content ``name:bid``) with one
+   ``os.replace`` — the single commit point;
+6. **collect** every entry the new state does not keep.
 
-Stale artifacts self-heal: everything in the store path that the
-pointer does not name (staging dirs from crashed attempts, the
-predecessor snapshot, orphaned pointer temp files) is garbage-collected
-after each successful commit.
+Committed trees are immutable and the pointer is the one mutable object,
+so a crash at any instant leaves either the old pointer (old state intact
+on disk) or the new pointer (new state fully written and flushed), never
+neither. The pointer records the batch id that produced the state, so a
+legitimately empty state at batch N is representable, and a pointer that
+names ``-`` commits an empty state with no tree at all. Anything the
+pointer does not name (staging trees of crashed attempts, the
+predecessor, orphaned pointer temps) is collected after the next
+successful commit.
 
-On a real multi-node deployment this directory protocol is replaced by a
-Delta/Iceberg ACID commit (same dataflow, table-format transaction
-instead of a pointer file); the handlers' batch-id idempotence contract
-is identical.
+On a multi-node deployment this directory protocol is a Delta/Iceberg
+ACID commit (same dataflow, table-format transaction instead of a pointer
+file); the handlers' batch-id idempotence contract is identical.
 """
 
 from __future__ import annotations
 
+import contextlib
 import errno
 import os
 import shutil
@@ -36,17 +38,15 @@ import tempfile
 
 
 POINTER = "CURRENT"
+EMPTY = "-"  # pointer name of a committed state that has no tree
 
 # fsync failures that mean "this platform or filesystem cannot fsync
-# this object" — the documented best-effort case (process-crash
-# atomicity still holds via the rename; only the power-loss guarantee
-# narrows, exactly as on a filesystem with no fsync at all). Everything
-# OUTSIDE this set — EIO, ENOSPC, EDQUOT in particular — means the
-# kernel may have DROPPED dirty pages (Linux clears the page-error state
-# on a failed fsync, so a retry would falsely succeed): proceeding to
-# the pointer flip would commit a possibly-lost tree, so those are FATAL
-# and must abort the commit before write_pointer runs (round-12 ADVICE,
-# medium).
+# this object": process-crash atomicity still holds through the rename,
+# only the power-loss guarantee narrows (as on a filesystem with no fsync
+# at all). Everything else (EIO, ENOSPC, EDQUOT in particular) means the
+# kernel may have dropped dirty pages; Linux clears the page-error state
+# on a failed fsync, so a retry would falsely succeed. Those abort the
+# commit before the pointer flip.
 _FSYNC_NOT_SUPPORTED = frozenset(
     getattr(errno, name)
     for name in ("EINVAL", "EBADF", "ENOSYS", "ENOTSUP", "EOPNOTSUPP", "ENOTTY")
@@ -100,10 +100,9 @@ def read_pointer(dirpath: str) -> tuple[str | None, int]:
     including the store dir itself not existing yet).
 
     A pointer that exists but cannot be parsed raises
-    ``PointerCorruptionError``; I/O errors other than the two
-    "never committed" shapes (ENOENT, ENOTDIR) propagate — both were
-    previously swallowed into the never-committed answer, which turned
-    external corruption into a silent durable-state reset (round-13)."""
+    ``PointerCorruptionError``. Only the two "never committed" shapes
+    (ENOENT, ENOTDIR) read as empty; any other I/O error propagates, so
+    external damage can never pass for a durable state reset."""
     try:
         with open(os.path.join(dirpath, POINTER)) as f:
             raw = f.read()
@@ -123,24 +122,17 @@ def read_pointer(dirpath: str) -> tuple[str | None, int]:
 def write_pointer(dirpath: str, name: str, bid: int) -> None:
     """Atomically commit ``(name, bid)`` as ``dirpath``'s pointer: write a
     temp file, fsync, then ONE ``os.replace`` — the single commit point.
-    The DIRECTORY is fsync'd after the replace: commit()'s GC of the
-    predecessor snapshot runs next, and without the dir fsync a power
-    loss could persist the rmtree while the rename is still unflushed —
-    CURRENT would then name a deleted snapshot.
+    The DIRECTORY is fsync'd after the replace, so the rename is durable
+    before any GC unlink can be: otherwise a power loss could persist the
+    predecessor's rmtree while the rename is still unflushed, and CURRENT
+    would name a deleted snapshot.
 
-    Scope (round-11 ADVICE): this function makes the POINTER FLIP itself
-    power-loss-durable (rename persisted before any GC unlink can be).
-    It does NOT flush the data files of the tree the new pointer names —
-    Spark's parquet writer never fsyncs, so callers that need the full
-    either-old-or-new guarantee under power loss must ``fsync_tree`` the
-    staged snapshot/delta BEFORE calling this (``SnapshotDir.commit`` and
-    ``IncrementalIvfIndex``'s commit points do). The dir fsync is
-    best-effort ONLY for the not-supported error class (non-POSIX
-    platforms where directories are not openable/fsyncable, filesystems
-    with no dir fsync): process-crash atomicity still holds there via
-    the rename. Real I/O failures (EIO/ENOSPC/...) propagate — a
-    silently skipped dir fsync on POSIX was an invisible durability
-    downgrade (round-12 ADVICE, low)."""
+    This makes the POINTER FLIP durable; it does not flush the data files
+    of the tree the pointer names (``SnapshotDir.commit`` runs
+    ``fsync_tree`` on them first). The dir fsync is best-effort ONLY for
+    the not-supported error class (platforms where directories cannot be
+    opened or fsync'd); process-crash atomicity still holds there through
+    the rename. Real I/O failures (EIO/ENOSPC/...) propagate."""
     fd, tmp = tempfile.mkstemp(prefix=".ptr_", dir=dirpath)
     with os.fdopen(fd, "w") as f:
         f.write(f"{name}:{int(bid)}\n")
@@ -160,23 +152,18 @@ def write_pointer(dirpath: str, name: str, bid: int) -> None:
 
 
 def fsync_tree(path: str) -> None:
-    """fsync every file and directory under ``path``, bottom-up. The
-    pointer-file protocol's missing half for POWER-LOSS durability
-    (round-11 ADVICE): the tree a pointer is about to name is written by
-    Spark, which never fsyncs — flushing it before the flip means a
-    durable pointer can only name a durable tree.
+    """fsync every file and directory under ``path``, bottom-up: the tree
+    a pointer is about to name is written by Spark, which never fsyncs,
+    and a durable pointer must only ever name a durable tree.
 
-    Error policy (round-12 ADVICE, medium): only the NOT-SUPPORTED class
-    (ENOTSUP/EINVAL/EBADF/... — platforms or filesystems that cannot
-    fsync this object) is swallowed; those keep process-crash atomicity
-    from the rename and merely lack the extra power-loss guarantee, the
-    same as running on a no-fsync filesystem. EIO/ENOSPC/EDQUOT and any
-    other real I/O failure PROPAGATE so the caller aborts before the
-    pointer flip — on Linux a failed fsync clears the kernel page-error
-    state, so the staged tree may already have lost writes and flipping
-    the pointer onto it would durably commit the loss. ENOENT on a
-    file open is skipped (a concurrently GC'd straggler, not a flush
-    failure of the tree's own data)."""
+    Only the NOT-SUPPORTED class (ENOTSUP/EINVAL/EBADF/...) is swallowed:
+    those filesystems keep process-crash atomicity from the rename and
+    merely lack the power-loss guarantee. EIO/ENOSPC/EDQUOT and any other
+    real I/O failure PROPAGATE so the caller aborts before the pointer
+    flip: a failed fsync clears the kernel page-error state, so the tree
+    may already have lost writes. ENOENT on a file open is skipped (a
+    concurrently collected straggler, not a flush failure of the tree's
+    own data)."""
     for root, _dirs, files in os.walk(path, topdown=False):
         for fname in files:
             try:
@@ -202,25 +189,46 @@ def fsync_tree(path: str) -> None:
 
 
 class SnapshotDir:
-    """Pointer-committed versioned snapshot store under one directory."""
+    """One writer's handle on a pointer-committed versioned store.
+
+    By default a committed state is the one tree the pointer names
+    (``v{bid}``). A store whose state spans several trees overrides the
+    two rules :meth:`_holds` (which entries a committed state reads) and
+    :meth:`_keeps` (which entries a commit's collection spares).
+
+    SINGLE-WRITER CONTRACT: all writers of one store path must be
+    serialized. In the streaming deployment this is structural — one
+    foreachBatch handler owns the path and Structured Streaming runs a
+    query's batches one at a time. Concurrent READERS are always safe:
+    committed trees are immutable and the collection only removes trees
+    the new pointer does not keep. The contract is ASSERTED at the commit
+    point, not locked: :meth:`commit` raises, leaving the other writer's
+    commit in place, when the pointer moved since this handle last read or
+    wrote it, or when the flip would regress the batch horizon. Flipping
+    anyway would un-commit the other writer's batch while replay detection
+    still believes it absorbed. The check-to-flip window is not atomic;
+    on Delta/Iceberg the table format's optimistic-commit conflict
+    detection enforces the same contract."""
 
     POINTER = POINTER
 
     def __init__(self, path: str):
         self.path = path
+        self._seen: tuple[str | None, int] | None = None  # last pointer read or written
 
     def current(self) -> tuple[str | None, int]:
-        """(absolute path of the committed snapshot dir, its batch id);
-        ``(None, -1)`` when nothing has ever been committed.
+        """(absolute path of the committed tree, its batch id);
+        ``(None, bid)`` for a committed empty state and ``(None, -1)``
+        when nothing has ever been committed.
 
-        A pointer that names a snapshot dir NOT on disk raises
+        A pointer that names a tree NOT on disk raises
         ``PointerCorruptionError``: every committer writes the tree before
         the flip and GC never removes the named tree, so the state is only
-        reachable by out-of-band deletion — previously it was reported as
-        "never committed", silently resetting the store (round-13)."""
-        name, bid = read_pointer(self.path)
-        if name is None:
-            return None, -1
+        reachable by out-of-band deletion. Serving the remaining trees
+        instead would let the next commit persist the shrunken state."""
+        name, bid = self._seen = read_pointer(self.path)
+        if name is None or name == EMPTY:
+            return None, bid
         sub = os.path.join(self.path, name)
         if not os.path.isdir(sub):
             raise PointerCorruptionError(
@@ -231,47 +239,74 @@ class SnapshotDir:
         return sub, bid
 
     def staging(self, bid: int) -> str:
-        """Path for the next (uncommitted) snapshot. Never collides with
-        the committed snapshot: save() is only reached for bid >
-        last committed bid (the handlers' replay gate), so ``v{bid}`` can
-        only pre-exist as a leftover from a crashed attempt — which the
-        parquet writer's overwrite mode replaces."""
+        """Path of the tree a whole-state commit at batch ``bid`` writes.
+        Never the committed tree: a commit is only reached for a bid past
+        the committed one (the handlers' replay gate), so ``v{bid}`` can
+        only pre-exist as a leftover of a crashed attempt."""
         os.makedirs(self.path, exist_ok=True)
         return os.path.join(self.path, f"v{int(bid)}")
 
-    def commit(self, name: str, bid: int) -> None:
-        """Atomically flip the pointer to ``name``, then GC every other
-        entry (predecessor snapshot, crashed staging dirs, orphaned
-        pointer temps). The ``os.replace`` is the single commit point.
-        The named tree is fsync'd first, so under power loss a durable
-        pointer can only name a durable snapshot (Spark's writer never
-        fsyncs the parquet data files itself).
+    @contextlib.contextmanager
+    def stage(self, tree: str):
+        """Yield ``tree`` (a path under the store) absent, to be written
+        and then committed inside the block. On leaving the block, the
+        tree is removed unless the committed state holds it, so a failed
+        write, an abandoned candidate and a refused or failed commit leave
+        nothing behind — except a tree another writer's commit took in,
+        which is committed state."""
+        shutil.rmtree(tree, ignore_errors=True)
+        try:
+            yield tree
+        finally:
+            if not self._holds(os.path.basename(tree), *read_pointer(self.path)):
+                shutil.rmtree(tree, ignore_errors=True)
 
-        Writers of one store path must be serialized (structural in the
-        streaming deployment: one foreachBatch handler owns the path).
-        As with ``IncrementalIvfIndex``, the contract is asserted at the
-        commit point: a flip that would REGRESS the batch horizon means
-        a concurrent writer committed since this writer read its state —
-        flipping would un-commit that batch AND GC its snapshot dir, so
-        raise instead (round-13; detection, not a lock)."""
-        _, cur_bid = read_pointer(self.path)
-        if int(bid) < cur_bid:
+    def publish(self, bid: int, write) -> None:
+        """Commit ``write(path)``'s tree as the whole state of batch
+        ``bid``."""
+        with self.stage(self.staging(bid)) as tree:
+            write(tree)
+            self.commit(os.path.basename(tree), int(bid))
+
+    def commit(self, name: str, bid: int) -> None:
+        """Flip the pointer to ``name:bid`` — the single commit point of
+        every store. First fsync each tree the new state holds that the
+        last-seen state did not, then check the single writer (see the
+        class docstring), flip, and collect every entry the new state does
+        not keep (predecessor trees, crashed staging trees, orphaned
+        pointer temps; best-effort, a survivor is collected later)."""
+        bid = int(bid)
+        if self._seen is None:
+            self._seen = read_pointer(self.path)
+        seen = self._seen
+        for entry in os.listdir(self.path):
+            if self._holds(entry, name, bid) and not self._holds(entry, *seen):
+                fsync_tree(os.path.join(self.path, entry))
+        cur = read_pointer(self.path)
+        if cur != seen or bid < cur[1]:
             raise RuntimeError(
-                f"SnapshotDir at {self.path}: single-writer contract "
-                f"violated — committing bid {int(bid)} would regress the "
-                f"horizon past a concurrent commit at bid {cur_bid}. "
-                f"Serialize all writers of this store path; the "
-                f"concurrent commit was NOT overwritten."
+                f"store at {self.path}: single-writer contract violated — "
+                f"committing {name}:{bid} over {cur[0]}:{cur[1]}, which this "
+                f"writer read as {seen[0]}:{seen[1]}. Serialize all writers "
+                f"of this store path; the concurrent commit was NOT "
+                f"overwritten."
             )
-        tree = os.path.join(self.path, name)
-        if os.path.isdir(tree):
-            fsync_tree(tree)
         write_pointer(self.path, name, bid)
         for entry in os.listdir(self.path):
-            if entry in (name, self.POINTER):
+            if entry == POINTER or self._keeps(entry, name, bid):
                 continue
             p = os.path.join(self.path, entry)
             try:
                 shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
             except OSError:
-                pass  # GC is best-effort; a survivor is re-collected later
+                pass
+        self._seen = (name, bid)
+
+    def _holds(self, entry: str, name: str | None, bid: int) -> bool:
+        """Whether the state committed as ``name:bid`` reads ``entry``."""
+        return entry == name
+
+    def _keeps(self, entry: str, name: str, bid: int) -> bool:
+        """Whether the collection after a commit of ``name:bid`` spares
+        ``entry``."""
+        return self._holds(entry, name, bid)

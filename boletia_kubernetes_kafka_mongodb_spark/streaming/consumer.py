@@ -9,11 +9,12 @@ topology feeds back to it (the loop-breaker gates).
 
 Spark form: ``route_messages`` + ``loop_breaker`` classify each micro-batch;
 one ``foreachBatch`` handler applies materialize → X-update → cascade to a
-keyed reservas table in seq order (the lifecycle log's phase encoding
-guarantees admits ≤ cancels ≤ cascades within any prefix). Every step is
-value-idempotent, so at-least-once replay (redelivered files, restarted
-checkpoints) converges to the same table — the reference's exactly-once
-*effect* contract (``README.md:148-155``).
+keyed reservas table as ONE plan and ONE commit per trigger (the lifecycle
+log's phase encoding guarantees admits ≤ cancels ≤ cascades within any
+prefix, so a reservation admitted and cancelled in one trigger ends ``X``).
+Every step is value-idempotent, so at-least-once replay (redelivered files,
+restarted checkpoints) converges to the same table — the reference's
+exactly-once *effect* contract (``README.md:148-155``).
 """
 
 from __future__ import annotations
@@ -44,27 +45,25 @@ class InventarioConsumer:
     # -- batch application (runs on the driver inside foreachBatch) ---------
 
     def apply_batch(self, msgs: DataFrame, batch_id: int | None = None) -> None:
+        """One trigger, one commit: the table's rows plus the
+        first-occurrence inserts (M6 insert-if-absent — replays are
+        no-ops), then the M5-effect X flips and the M4 cascade C flips."""
         routed = loop_breaker(route_messages(msgs))
-        mat = materialize_detreserva(routed)
-        x_ids = routed.where(F.col("route") == ROUTE_RESTITUTE).select(
-            F.col("doc_res._id").alias("_id")
+        x_set = (
+            routed.where(F.col("route") == ROUTE_RESTITUTE)
+            .select(F.col("doc_res._id").alias("_id"))
+            .distinct()
+            .withColumn("_flip_x", F.lit(True))
         )
-        cascade_events = routed.where(F.col("route") == ROUTE_CASCADE).select(
-            F.col("doc_inv.nombre").alias("evento")
+        c_set = (
+            routed.where(F.col("route") == ROUTE_CASCADE)
+            .select(F.col("doc_inv.nombre").alias("evento"))
+            .distinct()
+            .withColumn("_flip_c", F.lit(True))
         )
-
-        # M6: insert-if-absent (first occurrence wins — replays are no-ops)
-        self.table.insert_if_absent(mat)
-
-        existing = self.table.read()
-        if existing is None:
-            return
-
-        # M5-effect mirror + M4 cascade as conditional rewrites over the table
-        x_set = x_ids.distinct().withColumn("_flip_x", F.lit(True))
-        c_set = cascade_events.distinct().withColumn("_flip_c", F.lit(True))
+        rows = self.table.with_absent(materialize_detreserva(routed))
         updated = (
-            existing.join(F.broadcast(x_set), "_id", "left")
+            rows.join(F.broadcast(x_set), "_id", "left")
             .join(F.broadcast(c_set), "evento", "left")
             .select(
                 "_id",

@@ -1571,9 +1571,6 @@ def test_index_refresh_empty_batch_cannot_poison(spark, tmp_path):
     from boletia_kubernetes_kafka_mongodb_spark.sources.layouts import (
         IncrementalIvfIndex,
     )
-    from boletia_kubernetes_kafka_mongodb_spark.streaming._snapshot import (
-        write_pointer,
-    )
 
     assign_udf, standing, arriving = _refresh_fixtures(spark)
     idx = IncrementalIvfIndex(spark, str(tmp_path / "inc_empty"))
@@ -1602,17 +1599,6 @@ def test_index_refresh_empty_batch_cannot_poison(spark, tmp_path):
     assert idx.read().count() == n_standing + arriving.count()
     idx.compact()
     assert idx.read().count() == n_standing + arriving.count()
-
-    # self-healing for layouts poisoned BEFORE this guard existed: a
-    # committed delta dir with no data files is skipped by readers
-    poisoned = os.path.join(idx.path, "delta_v7")
-    os.makedirs(poisoned)
-    open(os.path.join(poisoned, "_SUCCESS"), "w").close()
-    base, _ = idx.current()
-    write_pointer(idx.path, base, 7)
-    assert idx.read().count() == n_standing + arriving.count()
-    idx.compact()  # and compaction folds past it (then GCs it)
-    assert not os.path.exists(poisoned)
 
 
 def test_index_rebase_to_empty_representable(spark, tmp_path):
@@ -1852,49 +1838,6 @@ def test_rebase_audit_crash_leaves_serving_state_and_self_heals(spark, tmp_path)
         map(tuple, fresh.read().select("vec_id", "ivf_list").collect())
     ) == before
     assert sorted(os.listdir(fresh.path)) == ["CURRENT", "base_v1"]
-
-
-def test_index_memo_invalidated_on_external_reset(spark, tmp_path):
-    """Round-12 ADVICE (low): the committed-dir has-parquet memo is keyed
-    on dir path and committed dirs are immutable IN protocol — but an
-    out-of-band reset (wipe + recreate of the index path under a live
-    instance) can reuse a committed-dir NAME, leaving a stale False
-    verdict that permanently excludes the new, valid dir. current() must
-    detect the pointer regression (base version or bid going backwards)
-    and drop the memo."""
-    import shutil
-
-    from boletia_kubernetes_kafka_mongodb_spark.sources.layouts import (
-        IncrementalIvfIndex,
-    )
-    from boletia_kubernetes_kafka_mongodb_spark.streaming._snapshot import (
-        write_pointer,
-    )
-
-    path = str(tmp_path / "inc_reset")
-    idx = IncrementalIvfIndex(spark, path)
-
-    # a legacy-poisoned layout: committed pointer naming a parquet-less
-    # tree (pre-empty-batch-guard state the self-heal exists for)
-    os.makedirs(os.path.join(path, "base_v0"))
-    write_pointer(path, "base_v0", 3)
-    assert idx._committed_dirs() == []  # memoizes base_v0 -> False
-    assert idx._pq_memo[os.path.join(path, "base_v0")] is False
-
-    # external reset: wipe the path, recreate the SAME dir name with
-    # real data (fresh instance elsewhere ran init_base -> base_v0:-1)
-    _, standing, _ = _refresh_fixtures(spark)
-    shutil.rmtree(path)
-    fresh = IncrementalIvfIndex(spark, path)
-    fresh.init_base(standing)
-    assert fresh.current()[0] == "base_v0"
-
-    # the LIVE original instance must now see the valid dir: the bid
-    # regression (3 -> -1) proves the reset and drops the stale memo
-    assert idx.current() == ("base_v0", -1)
-    dirs = idx._committed_dirs()
-    assert dirs == [os.path.join(path, "base_v0")]
-    assert idx.read().count() == standing.count()
 
 
 def test_single_writer_contract_append_during_rebase(spark, tmp_path):

@@ -239,3 +239,35 @@ def test_invariant_vii_echo_messages_never_loop(spark, tmp_path):
     consumer.apply_batch(echo_only)
     t = consumer.table.read()
     assert t is None or t.count() == 0
+
+
+def test_one_commit_per_trigger(spark, tmp_path):
+    """Each apply_batch is one plan and one commit: the reservas table's
+    pointer bid advances by exactly 1 per trigger, and a reservation
+    admitted and cancelled inside one trigger ends as X."""
+    from pyspark.sql import Window
+
+    from boletia_kubernetes_kafka_mongodb_spark.streaming._snapshot import read_pointer
+
+    log = cdc_stream.build_lifecycle_message_log(spark, SF_SMOKE)
+    msgs = log.withColumn("trigger", F.ntile(3).over(Window.orderBy("seq")))
+    msgs = msgs.localCheckpoint(eager=True)
+    expected = sorted(
+        (r._id, r.evento, r.estado, r.email, r.cantidad)
+        for r in _expected_final(spark).collect()
+    )
+    assert any(r[2] == "X" for r in expected)
+
+    # the whole log as one trigger: every user-cancelled reservation is
+    # admitted and cancelled inside it
+    whole = InventarioConsumer(spark, str(tmp_path / "whole"))
+    whole.apply_batch(msgs.drop("trigger"), 0)
+    assert read_pointer(whole.table.path)[1] == 0
+    assert _table_state(whole) == expected
+
+    # the same log over three triggers
+    consumer = InventarioConsumer(spark, str(tmp_path / "run"))
+    for i in range(3):
+        consumer.apply_batch(msgs.where(F.col("trigger") == i + 1).drop("trigger"), i)
+        assert read_pointer(consumer.table.path)[1] == i
+    assert _table_state(consumer) == expected

@@ -732,3 +732,43 @@ def test_topk_kernel_matches_numpy_brute_force():
     assert [(int(v), float(c)) for v, c in frame.itertuples(index=False)] == [
         (v, c) for _, v, _, c in want
     ]
+
+
+def test_rounded_sqdist_argmin_matches_row_at_a_time_reference():
+    """The one squared-distance argmin (`similarity.rounded_sqdist_argmin`,
+    shared by k-means assign/partials and PQ training/encoding) against a
+    row-at-a-time python reference on random batches. Coordinates sit on a
+    0.25 grid, so every distance is exact and ties are real: a duplicated
+    centroid row and points equidistant from two centroids must go to the
+    LOWEST index. One-row batches are covered."""
+    import numpy as np
+
+    def reference(X, C):
+        out = []
+        for x in X.tolist():
+            best = None
+            for j, c in enumerate(C.tolist()):
+                d = round(sum((a - b) ** 2 for a, b in zip(x, c)), 6)
+                if best is None or d < best[1]:
+                    best = (j, d)
+            out.append(best)
+        return out
+
+    rng = np.random.default_rng(20261019)
+    ties = one_row = 0
+    for trial in range(80):
+        dim = int(rng.integers(1, 6))
+        k = int(rng.integers(1, 7))
+        n = 1 if trial % 4 == 0 else int(rng.integers(2, 12))
+        C = rng.integers(-4, 5, size=(k, dim)) / 4.0
+        if k >= 3:
+            C[2] = C[0]  # a duplicated centroid: index 0 must win
+        X = rng.integers(-4, 5, size=(n, dim)) / 4.0
+        idx, d2 = similarity.rounded_sqdist_argmin(X, C)
+        want = reference(X, C)
+        assert [(int(i), float(d)) for i, d in zip(idx, d2)] == want, trial
+        one_row += n == 1
+        for x in X:
+            dists = sorted(round(float(((x - c) ** 2).sum()), 6) for c in C)
+            ties += len(dists) > 1 and dists[0] == dists[1]
+    assert ties > 0 and one_row > 0, (ties, one_row)
