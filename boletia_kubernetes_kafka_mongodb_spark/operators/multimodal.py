@@ -343,14 +343,8 @@ def decode_media(payload: bytes, media_format: str) -> bytes:
     if media_format == "png" and payload[:8] == PNG_SIG:
         return decode_png(payload)
     raise NotImplementedError(
-        "media decode requires a codec library (libjpeg/ffmpeg); "
-        "use fake_decode for deterministic tests"
+        "media decode requires a codec library (libjpeg/ffmpeg)"
     )
-
-
-def fake_decode(payload: bytes) -> bytes:
-    """Deterministic fake decode: identity bytes (tests the batch plumbing)."""
-    return payload
 
 
 def extract_features(spark: SparkSession, media: DataFrame) -> DataFrame:
@@ -366,9 +360,11 @@ def extract_features(spark: SparkSession, media: DataFrame) -> DataFrame:
     row took, so the driver's hash check pins that wav/png rows really
     went through the parsers.
 
-    The closure calls the module's ``decode_wav`` / ``decode_png``: the
-    package is pickled by value (see the package ``__init__``), so workers
-    that cannot import it still receive both parsers with the closure.
+    The closure calls the module's ``decode_media``, whose
+    ``NotImplementedError`` (no codec for the format) selects the identity
+    fake: the package is pickled by value (see the package ``__init__``),
+    so workers that cannot import it still receive both parsers with the
+    closure.
     """
 
     def featurize(batches: Iterator) -> Iterator:
@@ -381,13 +377,10 @@ def extract_features(spark: SparkSession, media: DataFrame) -> DataFrame:
             decoders = []
             for payload, fmt in zip(pdf["payload"], pdf["media_format"]):
                 pb = bytes(payload)
-                if fmt == "wav":
-                    raw_b = decode_wav(pb)
-                    decoders.append("wav")
-                elif fmt == "png" and pb[:8] == PNG_SIG:
-                    raw_b = decode_png(pb)
-                    decoders.append("png")
-                else:
+                try:
+                    raw_b = decode_media(pb, fmt)
+                    decoders.append(fmt)
+                except NotImplementedError:
                     raw_b = pb  # identity fake (stub mandate)
                     decoders.append("identity")
                 raw = np.frombuffer(raw_b, dtype=np.uint8)

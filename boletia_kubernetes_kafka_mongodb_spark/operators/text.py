@@ -979,7 +979,7 @@ def _mg_summaries(toks: DataFrame, k: int) -> DataFrame:
     each partition emits ≤ k candidate rows plus one exact-total row
     (``is_total``), regardless of partition size — the pass-1 stage of
     ``ext_heavy_hitters``, shared with the streaming twin
-    (``streaming/corpus.heavy_hitters_stream``)."""
+    (``streaming/corpus.heavy_hitters_update``)."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -1715,8 +1715,16 @@ def ext_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     are omitted on both engines (and with ≥1 word every divisor is > 0 —
     each word encodes to ≥ 1 symbol)."""
     merges = [(m[1], m[2]) for m in _bpe_learn(spark, sf_dir)]
-    bpe_count = _bpe_count_udf(merges)
     docs = tables.load(spark, sf_dir, "documents", fan=True)
+    return fertility_by_lang(docs, merges)
+
+
+def fertility_by_lang(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Per-language ``n_words, n_tokens_bpe, n_chars, fertility,
+    chars_per_token`` of a ``lang, text`` frame under a frozen merge list
+    — the body of ``ext_tokenizer_fertility`` and of its streaming
+    reading (``streaming.corpus.fertility_batch``)."""
+    bpe_count = _bpe_count_udf(merges)
     toks = tokens_col("text")
     per = docs.select(
         "lang",

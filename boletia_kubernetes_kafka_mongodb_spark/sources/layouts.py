@@ -521,26 +521,41 @@ def write_zorder_events(
 # ---------------------------------------------------------------------------
 
 _DELTA = re.compile(r"delta_v(\d+)")
+_ABSORBED = re.compile(r"(?:base|-)_h(\d+)")
+
+
+def _absorbed(name: "str | None") -> int:
+    """The horizon of the deltas the base ``name`` absorbed: ``h`` for a
+    ``base_h{h}_v{n}`` tree or a ``-_h{h}`` empty base, -1 (none) for
+    ``base_v{n}`` and ``-``."""
+    m = _ABSORBED.match(name or "")
+    return int(m[1]) if m else -1
 
 
 class _IndexStore(SnapshotDir):
-    """The index's pointer store: the pointer names the base tree (or
-    ``-``) and the horizon, and the committed state also reads every
-    ``delta_v{b}`` with ``b <= horizon``. Only an append moves the
-    horizon; a rebase keeps it."""
+    """The index's pointer store: the pointer names the base (a tree, or
+    an empty base ``-``) and the horizon, and the committed state also
+    reads every ``delta_v{b}`` above the deltas the base absorbed and at
+    or below the horizon. Only an append moves the horizon; a rebase
+    keeps it and names the horizon it absorbed in its base."""
 
     def _holds(self, entry, name, bid):
         m = _DELTA.fullmatch(entry)
-        return entry == name or (m is not None and int(m[1]) <= bid)
+        return entry == name or (
+            m is not None and _absorbed(name) < int(m[1]) <= bid
+        )
 
     def _keeps(self, entry, name, bid):
-        # an uncommitted future delta is not the collection's to take; an
-        # append adds its delta and takes none, while a rebase (same
-        # horizon) takes the deltas its new base absorbed
+        # an uncommitted future delta is not the collection's to take
         m = _DELTA.fullmatch(entry)
-        return entry == name or (
-            m is not None and (int(m[1]) > bid or bid > self._seen[1])
-        )
+        return self._holds(entry, name, bid) or (m is not None and int(m[1]) > bid)
+
+    def pointer(self) -> "tuple[str, int]":
+        """The committed (base name, horizon), checked as ``current``
+        checks it; ``-`` or ``-_h{h}`` names no base tree."""
+        self.current()
+        name, bid = self._seen
+        return name or EMPTY, bid
 
 
 def _write_lists(df: DataFrame, path: str) -> bool:
@@ -564,13 +579,18 @@ class IncrementalIvfIndex:
 
     Directory protocol under ``path``::
 
-        base_v{n}/ivf_list=<k>/...    the compacted standing index
-        delta_v{bid}/ivf_list=<k>/... one committed arriving micro-batch
-        CURRENT                        "{base_name}:{last_bid}"
+        base_h{h}_v{n}/ivf_list=<k>/... the compacted standing index, which
+                                         absorbed the deltas up to ``h``
+                                         (``base_v{n}``: none)
+        delta_v{bid}/ivf_list=<k>/...   one committed arriving micro-batch
+        CURRENT                          "{base_name}:{last_bid}"
 
     Committed state = the pointer's base + every ``delta_v{b}`` with
-    ``b <= last_bid`` (base ``-``: no base tree). The append is
-    crash-atomic and replay-idempotent:
+    ``h < b <= last_bid`` (base ``-`` or ``-_h{h}``: no base tree). A
+    rebase's deltas therefore leave the committed state at its pointer
+    flip, before the collection removes them, so a crash between the two
+    cannot serve their rows twice. The append is crash-atomic and
+    replay-idempotent:
 
     - a delta dir's name is its batch id, so a retried write after a
       crash replaces the half-written attempt instead of duplicating;
@@ -656,12 +676,14 @@ class IncrementalIvfIndex:
         it after rebase returns — the underlying files are gone
         (materialize first, e.g. ``localCheckpoint(eager=True)``, if the
         frame is needed afterwards)."""
-        base, last = self.current()
-        n = int(base[len("base_v"):]) if base else -1
-        with self._store.stage(os.path.join(self.path, f"base_v{n + 1}")) as tree:
-            name = os.path.basename(tree) if _write_lists(assigned_df, tree) else EMPTY
+        base, last = self._store.pointer()
+        n = int(base.rsplit("_v", 1)[1]) if base.startswith("base") else -1
+        tag = f"_h{last}" if last >= 0 else ""  # the deltas this base absorbs
+        with self._store.stage(os.path.join(self.path, f"base{tag}_v{n + 1}")) as tree:
+            wrote = _write_lists(assigned_df, tree)
+            name = os.path.basename(tree) if wrote else EMPTY + tag
             if audit is not None and not audit(
-                None if name == EMPTY else self.spark.read.parquet(tree)
+                self.spark.read.parquet(tree) if wrote else None
             ):
                 return False
             self._store.commit(name, last)
@@ -669,12 +691,12 @@ class IncrementalIvfIndex:
 
     def append(self, assigned_df: DataFrame, bid: int) -> bool:
         """Commit one arriving micro-batch (False = replay, skipped)."""
-        base, last = self.current()
+        base, last = self._store.pointer()
         if int(bid) <= last:
             return False
         with self._store.stage(os.path.join(self.path, f"delta_v{int(bid)}")) as tree:
             _write_lists(assigned_df, tree)
-            self._store.commit(base or EMPTY, int(bid))
+            self._store.commit(base, int(bid))
         return True
 
     def compact(self) -> None:
@@ -692,11 +714,11 @@ class IncrementalIvfIndex:
     # -- readers -------------------------------------------------------------
 
     def _committed_dirs(self) -> "list[str]":
-        base, last = self.current()
+        base, last = self._store.pointer()
         return [
             os.path.join(self.path, entry)
             for entry in sorted(os.listdir(self.path))
-            if self._store._holds(entry, base or EMPTY, last)
+            if self._store._holds(entry, base, last)
         ]
 
     def read(self) -> DataFrame:

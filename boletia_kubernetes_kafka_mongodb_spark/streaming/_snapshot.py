@@ -18,7 +18,8 @@ so a crash at any instant leaves either the old pointer (old state intact
 on disk) or the new pointer (new state fully written and flushed), never
 neither. The pointer records the batch id that produced the state, so a
 legitimately empty state at batch N is representable, and a pointer that
-names ``-`` commits an empty state with no tree at all. Anything the
+names ``-`` (or ``-_{tag}``, where a store records something about the empty
+state) commits an empty state with no tree at all. Anything the
 pointer does not name (staging trees of crashed attempts, the
 predecessor, orphaned pointer temps) is collected after the next
 successful commit.
@@ -38,7 +39,7 @@ import tempfile
 
 
 POINTER = "CURRENT"
-EMPTY = "-"  # pointer name of a committed state that has no tree
+EMPTY = "-"  # pointer name of a committed state with no tree (tagged: "-_…")
 
 # fsync failures that mean "this platform or filesystem cannot fsync
 # this object": process-crash atomicity still holds through the rename,
@@ -227,7 +228,7 @@ class SnapshotDir:
         reachable by out-of-band deletion. Serving the remaining trees
         instead would let the next commit persist the shrunken state."""
         name, bid = self._seen = read_pointer(self.path)
-        if name is None or name == EMPTY:
+        if name is None or name.split("_", 1)[0] == EMPTY:
             return None, bid
         sub = os.path.join(self.path, name)
         if not os.path.isdir(sub):

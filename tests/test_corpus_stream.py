@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -399,7 +400,9 @@ def test_quality_psi_stream_equals_batch(spark, tmp_path):
             got[r.batch_id] = (r.n, r.psi, r.drifted)
 
     q = (
-        C.quality_psi_stream(stream, w, fit_bin, n, emit)
+        stream.writeStream.foreachBatch(
+            lambda bdf, bid: emit(C.quality_psi_batch(bdf, w, fit_bin, n, bid))
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "psi_ckpt"))
         .start()
@@ -437,14 +440,16 @@ def test_quantile_sketch_stream_state_equals_batch_sketch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    state: dict = {"sketch": None}
+    store = C.DurableSketchState(spark, str(tmp_path / "qsk_state"))
     emitted: dict[int, list] = {}
 
-    def emit(bid, pct_df):
-        emitted[bid] = sorted(map(tuple, pct_df.collect()))
+    def emit(bid, sketch):
+        emitted[bid] = sorted(map(tuple, C.quantile_sketch_serve(sketch).collect()))
 
     q = (
-        C.quantile_sketch_stream(stream, emit, state)
+        stream.writeStream.foreachBatch(
+            C.sketch_handler(store, C.quantile_sketch_update, emit)
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "qsk_ckpt"))
         .start()
@@ -452,7 +457,7 @@ def test_quantile_sketch_stream_state_equals_batch_sketch(spark, tmp_path):
     q.awaitTermination(600)
     assert len(emitted) == 4
 
-    got_rows = sorted(map(tuple, state["sketch"].collect()))
+    got_rows = sorted(map(tuple, store.load()[0].collect()))
     want_rows = sorted(
         map(tuple, A._qsk_bottomk(A._qsk_partials(ev)).collect())
     )
@@ -479,13 +484,16 @@ def test_quantile_sketch_stream_percentiles_converge(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
+    store = C.DurableSketchState(spark, str(tmp_path / "qsk2_state"))
     emitted: dict[int, list] = {}
 
-    def emit(bid, pct_df):
-        emitted[bid] = sorted(map(tuple, pct_df.collect()))
+    def emit(bid, sketch):
+        emitted[bid] = sorted(map(tuple, C.quantile_sketch_serve(sketch).collect()))
 
     q = (
-        C.quantile_sketch_stream(stream, emit)
+        stream.writeStream.foreachBatch(
+            C.sketch_handler(store, C.quantile_sketch_update, emit)
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "qsk2_ckpt"))
         .start()
@@ -527,13 +535,17 @@ def test_heavy_hitters_stream_guarantees_vs_exact(spark, tmp_path):
         .parquet(path)
     )
     k = 4
+    store = C.DurableSketchState(spark, str(tmp_path / "hh_state"))
     seen: list = []
 
-    def emit(bid, n_total, counters):
-        seen.append((bid, n_total, counters))
+    def emit(bid, st):
+        mg = C.heavy_hitters_state_load(st)
+        seen.append((bid, mg["n_total"], mg["counters"]))
 
     q = (
-        C.heavy_hitters_stream(stream, emit, k=k)
+        stream.writeStream.foreachBatch(
+            C.sketch_handler(store, partial(C.heavy_hitters_update, k=k), emit)
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "hh_ckpt"))
         .start()
@@ -595,11 +607,15 @@ def test_freq_sketch_stream_state_equals_batch_cells(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    state: dict = {"cells": None}
+    store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
     n_emits = []
 
     q = (
-        C.freq_sketch_stream(stream, lambda bid, cells: n_emits.append(bid), state=state)
+        stream.writeStream.foreachBatch(
+            C.sketch_handler(
+                store, C.freq_sketch_update, lambda bid, cells: n_emits.append(bid)
+            )
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "cms_ckpt"))
         .start()
@@ -609,14 +625,15 @@ def test_freq_sketch_stream_state_equals_batch_cells(spark, tmp_path):
 
     toks = docs.select(F.explode(T.tokens_col("text")).alias("token"))
     want_cells = sorted(map(tuple, T._cms_cells(toks, T.CMS_D, T.CMS_W).collect()))
-    got_cells = sorted(map(tuple, state["cells"].collect()))
+    cells = store.load()[0]
+    got_cells = sorted(map(tuple, cells.collect()))
     assert got_cells == want_cells and len(got_cells) > 0
 
     batch = T.ext_freq_countmin(spark, SF_SMOKE)
     keys = batch.select("token")
     got_est = {
         r.token: r.n_est
-        for r in C.freq_sketch_estimate(state["cells"], keys).collect()
+        for r in C.freq_sketch_estimate(cells, keys).collect()
     }
     want_est = {r.token: r.n_est for r in batch.collect()}
     assert got_est == want_est
@@ -669,14 +686,20 @@ def test_monitoring_stack_one_stream(spark, tmp_path):
 
     stream = _doc_stream(spark, tmp_path)
     k, d, cw = 8, 2, 64
-    hh_state: dict = {"counters": {}, "n_total": 0}
-    cms_state: dict = {"cells": None}
+    hh_store = C.DurableSketchState(spark, str(tmp_path / "hh_state"))
+    cms_store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
+    hh = C.sketch_handler(
+        hh_store, partial(C.heavy_hitters_update, k=k), lambda bid, st: None
+    )
+    cms = C.sketch_handler(
+        cms_store, partial(C.freq_sketch_update, d=d, w=cw), lambda bid, st: None
+    )
     psi: dict[int, float] = {}
 
     def each(bdf, bid):
         psi[bid] = C.quality_psi_batch(bdf, w, fit_bin, n, bid).collect()[0].psi
-        C.heavy_hitters_fold(hh_state, bdf, k)
-        C.freq_sketch_fold(cms_state, bdf, d, cw)
+        hh(bdf, bid)
+        cms(bdf, bid)
 
     q = (
         stream.writeStream.foreachBatch(each)
@@ -699,7 +722,7 @@ def test_monitoring_stack_one_stream(spark, tmp_path):
     # CMS: drained cells == the batch cell table over the whole corpus
     toks = docs.select(F.explode(T.tokens_col("text")).alias("token"))
     want_cells = sorted(map(tuple, T._cms_cells(toks, d, cw).collect()))
-    assert sorted(map(tuple, cms_state["cells"].collect())) == want_cells
+    assert sorted(map(tuple, cms_store.load()[0].collect())) == want_cells
 
     # MG: totals exact; guarantee holds vs exact counts
     exact = {
@@ -709,6 +732,7 @@ def test_monitoring_stack_one_stream(spark, tmp_path):
         .collect()
     }
     nn = sum(exact.values())
+    hh_state = C.heavy_hitters_state_load(hh_store.load()[0])
     assert hh_state["n_total"] == nn
     assert len(hh_state["counters"]) <= k
     for t, est in hh_state["counters"].items():
@@ -734,28 +758,24 @@ def test_quantile_sketch_restart_durable(spark, tmp_path):
     emitted_b: dict[int, list] = {}
 
     # uninterrupted run
+    def served(into):
+        return lambda bid, sketch: into.__setitem__(
+            bid, sorted(map(tuple, C.quantile_sketch_serve(sketch).collect()))
+        )
+
     store_a = C.DurableSketchState(spark, str(tmp_path / "state_a"))
-    h = C.quantile_sketch_handler(
-        lambda bid, df: emitted_a.__setitem__(bid, sorted(map(tuple, df.collect()))),
-        store=store_a,
-    )
+    h = C.sketch_handler(store_a, C.quantile_sketch_update, served(emitted_a))
     for i, b in enumerate(batches):
         h(b, i)
 
     # killed after committing batch 1, restarted: a NEW handler (fresh
     # in-memory state) on the same store; batch 1 is redelivered first
     store_b = C.DurableSketchState(spark, str(tmp_path / "state_b"))
-    h1 = C.quantile_sketch_handler(
-        lambda bid, df: emitted_b.__setitem__(bid, sorted(map(tuple, df.collect()))),
-        store=store_b,
-    )
+    h1 = C.sketch_handler(store_b, C.quantile_sketch_update, served(emitted_b))
     h1(batches[0], 0)
     h1(batches[1], 1)
     rows_before_replay = sorted(map(tuple, store_b.load()[0].collect()))
-    h2 = C.quantile_sketch_handler(
-        lambda bid, df: emitted_b.__setitem__(bid, sorted(map(tuple, df.collect()))),
-        store=store_b,
-    )
+    h2 = C.sketch_handler(store_b, C.quantile_sketch_update, served(emitted_b))
     h2(batches[1], 1)  # redelivered in-flight batch: must be a no-op fold
     assert sorted(map(tuple, store_b.load()[0].collect())) == rows_before_replay
     h2(batches[2], 2)
@@ -779,25 +799,27 @@ def test_heavy_hitters_restart_durable(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     batches = [docs.where(F.col("doc_id") % 3 == i).localCheckpoint() for i in range(3)]
     k = 4
+    update = partial(C.heavy_hitters_update, k=k)
+
+    def recorded(into):
+        def emit(bid, st):
+            mg = C.heavy_hitters_state_load(st)
+            into[bid] = (mg["n_total"], mg["counters"])
+
+        return emit
 
     store_a = C.DurableSketchState(spark, str(tmp_path / "hh_a"))
     emit_a: dict[int, tuple] = {}
-    h = C.heavy_hitters_handler(
-        lambda bid, n, c: emit_a.__setitem__(bid, (n, c)), k=k, store=store_a
-    )
+    h = C.sketch_handler(store_a, update, recorded(emit_a))
     for i, b in enumerate(batches):
         h(b, i)
 
     store_b = C.DurableSketchState(spark, str(tmp_path / "hh_b"))
     emit_b: dict[int, tuple] = {}
-    h1 = C.heavy_hitters_handler(
-        lambda bid, n, c: emit_b.__setitem__(bid, (n, c)), k=k, store=store_b
-    )
+    h1 = C.sketch_handler(store_b, update, recorded(emit_b))
     h1(batches[0], 0)
     h1(batches[1], 1)
-    h2 = C.heavy_hitters_handler(
-        lambda bid, n, c: emit_b.__setitem__(bid, (n, c)), k=k, store=store_b
-    )
+    h2 = C.sketch_handler(store_b, update, recorded(emit_b))
     h2(batches[1], 1)  # replay: no double count
     h2(batches[2], 2)
 
@@ -833,14 +855,18 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
     ckpt = str(tmp_path / "cms_restart_ckpt")
     store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
     d, w = 2, 64
+    update = partial(C.freq_sketch_update, d=d, w=w)
     bids: list[int] = []
+
+    def record(bid, cells):
+        bids.append(bid)
 
     cdc_stream.write_ordered_files(first, path, n_files=2, order_col="doc_id")
     stream1 = (
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(path)
     )
     q1 = (
-        C.freq_sketch_stream(stream1, lambda bid, cells: bids.append(bid), d=d, w=w, store=store)
+        stream1.writeStream.foreachBatch(C.sketch_handler(store, update, record))
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .start()
@@ -853,7 +879,7 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(path)
     )
     q2 = (
-        C.freq_sketch_stream(stream2, lambda bid, cells: bids.append(bid), d=d, w=w, store=store)
+        stream2.writeStream.foreachBatch(C.sketch_handler(store, update, record))
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .start()
@@ -868,10 +894,11 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
     assert sorted(map(tuple, cells.collect())) == want and len(want) > 0
 
 
-def test_sketch_stream_checkpoint_release_bounded(spark):
-    """Round-8 ADVICE: the NON-durable monitors' per-step localCheckpoints
-    must not accumulate — each fold releases its predecessor's blocks, so
-    N folds leave exactly ONE new persisted RDD (per monitor), not N."""
+def test_sketch_handler_pins_no_rdd_blocks(spark, tmp_path):
+    """Monitor state lives in its store, not in executor storage: five
+    folds of each monitor through `sketch_handler` add no entry to the
+    persisted-RDD list, so an executor loss can lose no standing state and
+    a long-lived stream accumulates no blocks."""
     from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus as C
 
     sc = spark.sparkContext
@@ -883,22 +910,23 @@ def test_sketch_stream_checkpoint_release_bounded(spark):
         [(i, f"tok{i % 5} tok{i % 3} common") for i in range(60)],
         "doc_id long, text string",
     )
-    base = persisted_ids()
-    cms_state: dict = {"cells": None}
-    for i in range(5):
-        C.freq_sketch_fold(cms_state, docs.where(F.col("doc_id") % 5 == i), 2, 16)
-    assert len(persisted_ids() - base) == 1
-
     ev = spark.createDataFrame(
         [(i, "t", float(i % 13)) for i in range(60)],
         "event_id long, event_type string, value double",
     )
-    base = persisted_ids()
-    served: list = []
-    h = C.quantile_sketch_handler(lambda bid, df: served.append(df.count()))
-    for i in range(5):
-        h(ev.where(F.col("event_id") % 5 == i), i)
-    assert len(persisted_ids() - base) == 1
+    monitors = [
+        ("qsk", C.quantile_sketch_update, ev, "event_id"),
+        ("hh", partial(C.heavy_hitters_update, k=4), docs, "doc_id"),
+        ("cms", partial(C.freq_sketch_update, d=2, w=16), docs, "doc_id"),
+    ]
+    for name, update, frame, key in monitors:
+        base = persisted_ids()
+        store = C.DurableSketchState(spark, str(tmp_path / name))
+        h = C.sketch_handler(store, update, lambda bid, st: st.count())
+        for i in range(5):
+            h(frame.where(F.col(key) % 5 == i), i)
+        assert store.load()[1] == 4
+        assert persisted_ids() - base == set(), name
 
 
 def test_monitoring_stack_durable_composed_restart(spark, tmp_path):
@@ -922,13 +950,15 @@ def test_monitoring_stack_durable_composed_restart(spark, tmp_path):
     def run_once():
         """Fresh handlers + empty in-memory state each run — everything
         standing must come back from the stores."""
-        hh = C.heavy_hitters_handler(
-            lambda bid, n, c: None, k=k,
-            store=C.DurableSketchState(spark, str(tmp_path / "hh_state")),
+        hh = C.sketch_handler(
+            C.DurableSketchState(spark, str(tmp_path / "hh_state")),
+            partial(C.heavy_hitters_update, k=k),
+            lambda bid, st: None,
         )
-        cms = C.freq_sketch_handler(
-            lambda bid, cells: None, d=d, w=w,
-            store=C.DurableSketchState(spark, str(tmp_path / "cms_state")),
+        cms = C.sketch_handler(
+            C.DurableSketchState(spark, str(tmp_path / "cms_state")),
+            partial(C.freq_sketch_update, d=d, w=w),
+            lambda bid, cells: None,
         )
 
         def each(bdf, bid):
@@ -1008,7 +1038,9 @@ def test_embed_drift_stream_equals_batch(spark, tmp_path):
         emitted[r.batch_id] = (r.n, r.psi, r.drifted, r.low_sample)
 
     q = (
-        C.embed_drift_stream(stream, cent, fit_bin, n, emit)
+        stream.writeStream.foreachBatch(
+            lambda bdf, bid: emit(C.embed_drift_batch(bdf, cent, fit_bin, n, bid))
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "embdrift_ckpt"))
         .start()
@@ -1044,6 +1076,7 @@ def test_freq_sketch_durable_random_schedules(spark, tmp_path):
         for i in range(4)
     ]
     d, w = 2, 16
+    update = partial(C.freq_sketch_update, d=d, w=w)
     alldocs = batches[0]
     for b in batches[1:]:
         alldocs = alldocs.unionByName(b)
@@ -1053,7 +1086,7 @@ def test_freq_sketch_durable_random_schedules(spark, tmp_path):
     for seed in range(5):
         rng = random.Random(seed)
         store = C.DurableSketchState(spark, str(tmp_path / f"sched{seed}"))
-        h = C.freq_sketch_handler(lambda bid, cells: None, d, w, None, store)
+        h = C.sketch_handler(store, update, lambda bid, cells: None)
         nxt = 0
         while nxt < len(batches):
             roll = rng.random()
@@ -1064,7 +1097,7 @@ def test_freq_sketch_durable_random_schedules(spark, tmp_path):
                 # crash: the handler (and all driver state) is lost;
                 # restart builds a fresh one over the same store, and the
                 # stream may redeliver the last batch first
-                h = C.freq_sketch_handler(lambda bid, cells: None, d, w, None, store)
+                h = C.sketch_handler(store, update, lambda bid, cells: None)
                 if nxt > 0 and rng.random() < 0.7:
                     h(batches[nxt - 1], nxt - 1)
             else:
@@ -1095,7 +1128,9 @@ def test_fertility_stream_equals_batch(spark, tmp_path):
             emitted[rows[0].batch_id] = sorted(map(tuple, rows))
 
     q = (
-        C.fertility_stream(stream, merges, emit)
+        stream.writeStream.foreachBatch(
+            lambda bdf, bid: emit(C.fertility_batch(bdf, merges, bid))
+        )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "fert_ckpt"))
         .start()
@@ -1217,8 +1252,10 @@ def test_index_refresh_stream_equals_batch_refresh(spark, tmp_path):
     )
     applied: dict[int, bool] = {}
     q = (
-        corpus.index_refresh_stream(
-            stream, idx, assign_udf, emit=lambda bid, ok: applied.setdefault(bid, ok)
+        stream.writeStream.foreachBatch(
+            corpus.index_refresh_handler(
+                idx, assign_udf, emit=lambda bid, ok: applied.setdefault(bid, ok)
+            )
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "idx_ckpt"))
@@ -1321,13 +1358,13 @@ def test_index_refresh_compact_bounds_and_preserves(spark, tmp_path):
     after = sorted(map(tuple, idx.read().select("vec_id", "ivf_list").collect()))
     assert after == before
     entries = sorted(os.listdir(idx.path))
-    assert entries == ["CURRENT", "base_v1", "delta_v9"]
+    assert entries == ["CURRENT", "base_h1_v1", "delta_v9"]
 
     idx.compact()  # idempotent-ish: still the same rows, still one base
     assert sorted(
         map(tuple, idx.read().select("vec_id", "ivf_list").collect())
     ) == before
-    assert sorted(os.listdir(idx.path)) == ["CURRENT", "base_v2", "delta_v9"]
+    assert sorted(os.listdir(idx.path)) == ["CURRENT", "base_h1_v2", "delta_v9"]
 
 
 def test_drift_gated_reindex_composition(spark, tmp_path):
@@ -1498,7 +1535,7 @@ def test_index_refresh_bootstrap_without_base(spark, tmp_path):
 
     idx.compact()
     assert idx.read().count() == want_n
-    assert sorted(os.listdir(idx.path)) == ["CURRENT", "base_v0"]
+    assert sorted(os.listdir(idx.path)) == ["CURRENT", "base_h1_v0"]
     # replay across the compaction still gated
     h(arriving.where(F.col("vec_id") % 2 == 1), 1)
     assert idx.read().count() == want_n
@@ -1602,9 +1639,10 @@ def test_index_refresh_empty_batch_cannot_poison(spark, tmp_path):
 
 
 def test_index_rebase_to_empty_representable(spark, tmp_path):
-    """A rebase that absorbs everything away (0 rows) must commit as
-    pointer "-:{last}" — never as a parquet-less base tree — preserving
-    the replay horizon so the index can keep accepting batches."""
+    """A rebase that absorbs everything away (0 rows) must commit as an
+    empty base ("-_h{last}:{last}") — never as a parquet-less base tree —
+    preserving the replay horizon so the index can keep accepting
+    batches."""
     from boletia_kubernetes_kafka_mongodb_spark.sources.layouts import (
         IncrementalIvfIndex,
     )
@@ -1887,7 +1925,7 @@ def test_single_writer_contract_append_during_rebase(spark, tmp_path):
 
     # a retry from fresh state commits cleanly and folds the delta
     idx.compact()
-    assert idx.current() == ("base_v1", 0)
+    assert idx.current() == ("base_h0_v1", 0)
     assert idx.read().count() == n_standing + n_arrived
 
 
@@ -1999,7 +2037,7 @@ def test_index_fatal_fsync_aborts_commit_and_reclaims_staging(spark, tmp_path):
     assert idx.append(arrived, 0) is True
     assert idx.current() == ("base_v0", 0)
     idx.compact()
-    assert idx.current() == ("base_v1", 0)
+    assert idx.current() == ("base_h0_v1", 0)
     assert idx.read().count() == n0 + arrived.count()
 
 

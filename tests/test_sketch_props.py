@@ -12,7 +12,7 @@ SparkSession, so they explore hundreds of random merge trees in seconds:
   and the KMV family.
 - Count-Min: cell tables add, and min-over-cells never underestimates —
   the identities behind `_cms_cells` map-side combine and
-  `freq_sketch_stream`'s cell-wise fold.
+  `freq_sketch_update`'s cell-wise fold.
 """
 
 from __future__ import annotations

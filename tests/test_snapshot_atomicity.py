@@ -12,8 +12,7 @@ always recoverable:
   pointer temps left behind) → the NEW state serves, and the next commit
   self-heals the strays;
 - a legitimately 0-row state frame round-trips WITH its batch id (the
-  pre-r10 layout's documented "empty reads as absent" caveat is gone);
-- the pre-r10 flat layout is still readable (in-place upgrade).
+  pre-r10 layout's documented "empty reads as absent" caveat is gone).
 
 Both durable classes are covered (`DurableSketchState`,
 `ParquetMergeTable`), plus a seeded random-schedule fuzz that adds the
@@ -24,6 +23,7 @@ from __future__ import annotations
 
 import os
 import random
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -170,6 +170,7 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
         for i in range(4)
     ]
     d, w = 2, 16
+    update = partial(C.freq_sketch_update, d=d, w=w)
     alldocs = batches[0]
     for b in batches[1:]:
         alldocs = alldocs.unionByName(b)
@@ -179,7 +180,7 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
     for seed in range(5):
         rng = random.Random(1000 + seed)
         store = _CrashySketchStore(spark, str(tmp_path / f"crashy{seed}"), rng)
-        h = C.freq_sketch_handler(lambda bid, cells: None, d, w, None, store)
+        h = C.sketch_handler(store, update, lambda bid, cells: None)
         nxt = 0
         while nxt < len(batches):
             roll = rng.random()
@@ -188,9 +189,7 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
                     h(batches[nxt - 1], nxt - 1)  # redelivery, committed
                 elif roll < 0.4:
                     # plain crash+restart (handler and in-memory state lost)
-                    h = C.freq_sketch_handler(
-                        lambda bid, cells: None, d, w, None, store
-                    )
+                    h = C.sketch_handler(store, update, lambda bid, cells: None)
                     if nxt > 0 and rng.random() < 0.7:
                         h(batches[nxt - 1], nxt - 1)
                 else:
@@ -199,9 +198,7 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
             except _CrashMidSwap:
                 # the failed batch never committed: Structured Streaming
                 # fails the query, restart re-folds it from committed state
-                h = C.freq_sketch_handler(
-                    lambda bid, cells: None, d, w, None, store
-                )
+                h = C.sketch_handler(store, update, lambda bid, cells: None)
         cells, last_bid = store.load()
         assert last_bid == len(batches) - 1, f"seed {seed}"
         assert sorted(map(tuple, cells.collect())) == want, f"seed {seed}"
@@ -313,9 +310,12 @@ def test_heavy_hitters_handler_state_consistent_after_crashed_save(
     )
     store = C.DurableSketchState(spark, str(tmp_path / "hh"))
     emitted = []
-    h = C.heavy_hitters_handler(
-        lambda bid, n, counters: emitted.append((bid, n, counters)), 8, None, store
-    )
+
+    def emit(bid, st):
+        mg = C.heavy_hitters_state_load(st)
+        emitted.append((bid, mg["n_total"], mg["counters"]))
+
+    h = C.sketch_handler(store, partial(C.heavy_hitters_update, k=8), emit)
     h(b0, 0)
     n0, counters0 = emitted[-1][1], dict(emitted[-1][2])
 
@@ -591,6 +591,65 @@ def test_commit_refuses_horizon_regression(tmp_path):
         f.write("bid=4")
     store.commit("v4", 4)
     assert _snapshot.read_pointer(str(tmp_path)) == ("v4", 4)
+
+
+class _ListsFrame:
+    """Stands in for an assigned frame in the no-Spark index tests: its
+    partitioned parquet write leaves one data file under one list, or,
+    for a 0-row frame, only the ``_SUCCESS`` marker."""
+
+    def __init__(self, rows=True):
+        self.rows = rows
+
+    @property
+    def write(self):
+        return self
+
+    def partitionBy(self, *cols):
+        return self
+
+    def parquet(self, path):
+        os.makedirs(os.path.join(path, "ivf_list=0"))
+        name = "part-0.parquet" if self.rows else "_SUCCESS"
+        open(os.path.join(path, "ivf_list=0", name), "wb").close()
+
+
+@pytest.mark.parametrize("rows", [True, False], ids=["base", "empty_base"])
+def test_index_rebase_crash_before_collection_serves_rows_once(
+    tmp_path, monkeypatch, rows
+):
+    """A rebase keeps the horizon, so between its pointer flip and the
+    collection the deltas it absorbed are still on disk. A process that
+    dies in that window must not serve them next to the new base, which
+    already holds their rows (or, for a 0-row rebase, purged them): a
+    fresh index reads only the new base, and the next commit collects the
+    leftovers."""
+    from boletia_kubernetes_kafka_mongodb_spark.sources import layouts
+
+    path = str(tmp_path / "idx")
+    idx = layouts.IncrementalIvfIndex(None, path)
+    idx.init_base(_ListsFrame())
+    assert idx.append(_ListsFrame(), 0)
+
+    def die(self, entry, name, bid):
+        raise _CrashMidSwap("crash after pointer flip, before collection")
+
+    monkeypatch.setattr(layouts._IndexStore, "_keeps", die)
+    with pytest.raises(_CrashMidSwap):
+        idx.rebase(_ListsFrame(rows))
+    monkeypatch.undo()
+
+    fresh = layouts.IncrementalIvfIndex(None, path)
+    base, last = fresh.current()
+    assert last == 0 and (base is not None) == rows
+    assert [os.path.basename(d) for d in fresh._committed_dirs()] == (
+        [base] if rows else []
+    )
+
+    assert fresh.append(_ListsFrame(), 1)
+    assert sorted(os.listdir(path)) == ["CURRENT"] + ([base] if rows else []) + [
+        "delta_v1"
+    ]
 
 
 def test_corrupt_pointer_raises_instead_of_silently_resetting(tmp_path):
