@@ -38,7 +38,9 @@ def kafka_source(
     The reference's ``RecibeMensajes`` (``pcKafka/pcKafka.go:60-86``)
     fetch-without-autocommit semantics ≙ Spark checkpointed offsets: an
     offset is only committed once the micro-batch that contains it durably
-    completes — the same at-least-once contract.
+    completes — the same at-least-once contract. A consumer group is a
+    checkpoint location, so it is also the streaming query id that
+    ``streaming.sinks.durable_handler`` tells a redelivered batch by.
     """
     topics = ",".join(GROUP_SUBSCRIPTIONS[group])
     return (

@@ -1,8 +1,8 @@
 """Crash-atomic versioned directories: the package's one pointer commit.
 
-Every versioned directory in the package (the MERGE sink table, the
-durable sketch state, the ``cache.artifact`` stores and the incremental
-IVF index) writes and commits through :class:`SnapshotDir`:
+Every versioned directory in the package (``sinks.DurableTable``, the one
+durable ``foreachBatch`` store; the ``cache.artifact`` stores; the
+incremental IVF index) writes and commits through :class:`SnapshotDir`:
 
 1. **stage** a fresh tree under the store path (:meth:`SnapshotDir.stage`);
 2. **write** it (Spark's parquet writer, or any tree writer);
@@ -205,7 +205,8 @@ class SnapshotDir:
     the new pointer does not keep. The contract is ASSERTED at the commit
     point, not locked: :meth:`commit` raises, leaving the other writer's
     commit in place, when the pointer moved since this handle last read or
-    wrote it, or when the flip would regress the batch horizon. Flipping
+    wrote it, or when the flip would regress the batch horizon, and
+    :meth:`stage` refuses a tree the committed state holds. Flipping
     anyway would un-commit the other writer's batch while replay detection
     still believes it absorbed. The check-to-flip window is not atomic;
     on Delta/Iceberg the table format's optimistic-commit conflict
@@ -254,7 +255,15 @@ class SnapshotDir:
         tree is removed unless the committed state holds it, so a failed
         write, an abandoned candidate and a refused or failed commit leave
         nothing behind — except a tree another writer's commit took in,
-        which is committed state."""
+        which is committed state. A tree the committed state already holds
+        is refused: only another writer's commit can have put it there."""
+        if self._holds(os.path.basename(tree), *read_pointer(self.path)):
+            raise RuntimeError(
+                f"store at {self.path}: single-writer contract violated — "
+                f"staging {os.path.basename(tree)}, which the committed "
+                f"state holds. Serialize all writers of this store path; "
+                f"the concurrent commit was NOT overwritten."
+            )
         shutil.rmtree(tree, ignore_errors=True)
         try:
             yield tree

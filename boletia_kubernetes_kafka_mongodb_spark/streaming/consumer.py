@@ -8,12 +8,14 @@ inventory on user cancels (M2) — while skipping every echo message the
 topology feeds back to it (the loop-breaker gates).
 
 Spark form: ``route_messages`` + ``loop_breaker`` classify each micro-batch;
-one ``foreachBatch`` handler applies materialize → X-update → cascade to a
-keyed reservas table as ONE plan and ONE commit per trigger (the lifecycle
-log's phase encoding guarantees admits ≤ cancels ≤ cascades within any
-prefix, so a reservation admitted and cancelled in one trigger ends ``X``).
-Every step is value-idempotent, so at-least-once replay (redelivered files,
-restarted checkpoints) converges to the same table — the reference's
+``InventarioConsumer.update`` applies materialize → X-update → cascade to
+the reservas table as ONE plan, and the package's durable gate
+(``sinks.durable_handler``) commits it into a ``sinks.DurableTable`` as ONE
+commit per trigger (the lifecycle log's phase encoding guarantees admits ≤
+cancels ≤ cascades within any prefix, so a reservation admitted and
+cancelled in one trigger ends ``X``). A redelivered trigger is skipped by
+its batch id, and every step is value-idempotent, so a fresh checkpoint
+re-reading old files converges to the same table too — the reference's
 exactly-once *effect* contract (``README.md:148-155``).
 """
 
@@ -24,13 +26,12 @@ from pyspark.sql import functions as F
 
 from .router import (
     ROUTE_CASCADE,
-    ROUTE_MATERIALIZE,
     ROUTE_RESTITUTE,
     loop_breaker,
     materialize_detreserva,
     route_messages,
 )
-from .sinks import ParquetMergeTable
+from .sinks import DurableTable, durable_handler, insert_if_absent
 
 
 class InventarioConsumer:
@@ -38,16 +39,15 @@ class InventarioConsumer:
 
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
-        self.table = ParquetMergeTable(
-            spark, f"{workdir}/reservas", key="_id", order_col="seq"
-        )
+        self.table = DurableTable(spark, f"{workdir}/reservas")
+        # apply_batch(msgs, batch_id=None): the foreachBatch body — one
+        # trigger, one commit of ``update``; a redelivered id is skipped
+        self.apply_batch = durable_handler(self.table, self.update, None)
 
-    # -- batch application (runs on the driver inside foreachBatch) ---------
-
-    def apply_batch(self, msgs: DataFrame, batch_id: int | None = None) -> None:
-        """One trigger, one commit: the table's rows plus the
-        first-occurrence inserts (M6 insert-if-absent — replays are
-        no-ops), then the M5-effect X flips and the M4 cascade C flips."""
+    def update(self, standing: DataFrame | None, msgs: DataFrame) -> DataFrame:
+        """The standing rows plus the first-occurrence inserts (M6
+        insert-if-absent), then the M5-effect X flips and the M4 cascade C
+        flips."""
         routed = loop_breaker(route_messages(msgs))
         x_set = (
             routed.where(F.col("route") == ROUTE_RESTITUTE)
@@ -61,8 +61,8 @@ class InventarioConsumer:
             .distinct()
             .withColumn("_flip_c", F.lit(True))
         )
-        rows = self.table.with_absent(materialize_detreserva(routed))
-        updated = (
+        rows = insert_if_absent(standing, materialize_detreserva(routed), "_id", "seq")
+        return (
             rows.join(F.broadcast(x_set), "_id", "left")
             .join(F.broadcast(c_set), "evento", "left")
             .select(
@@ -80,7 +80,6 @@ class InventarioConsumer:
                 "seq",
             )
         )
-        self.table._replace_with(updated)
 
     # -- streaming wiring ---------------------------------------------------
 

@@ -15,95 +15,22 @@ the same documents. The twins come in three shapes:
   that a caller hands to ``writeStream.foreachBatch`` itself;
 - the three sketch monitors (bottom-K quantiles, Misra–Gries heavy
   hitters, Count-Min), each one ``update(standing | None, batch) ->
-  frame`` folded by the one handler ``sketch_handler``. Every monitor is
-  durable: its standing state lives in a ``DurableSketchState`` and
-  commits with the batch id that produced it, so a restart resumes the
-  committed state and a redelivered batch folds zero times.
+  frame`` folded by the package's one durable gate,
+  ``sinks.durable_handler``. Every monitor is durable: its standing state
+  lives in a ``sinks.DurableTable`` and commits with the batch id that
+  produced it, so a restart resumes the committed state and a
+  redelivered batch folds zero times. The per-step write is sketch-sized
+  (≤ T×K / k+1 / d·w rows), noise next to the batch fold itself.
 
 Stream ≡ batch parity is pinned in tests/test_corpus_stream.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.text import CMS_D, CMS_W, HH_K, fingerprint_col, tokens_col
-from ._snapshot import SnapshotDir
-
-
-class DurableSketchState:
-    """Restart-durable standing state of one sketch monitor.
-
-    The reference's design lesson is offset-commit ⇄ effect idempotency
-    (``inventario/main.go:56-66``, ``README.md:148-155``: commit the offset
-    only with the effect, make the effect replay-safe); this store applies
-    it to the monitors through the package's one pointer commit
-    (``streaming._snapshot.SnapshotDir``):
-
-    - the state rows commit INSIDE the same ``foreachBatch`` that folded
-      the batch, and the pointer records that batch id — so a 0-row state
-      at batch N is representable;
-    - restart: ``sketch_handler`` reloads the exact state the last
-      committed batch produced before the first new batch arrives;
-    - replay (after a crash between fold and offset commit, Structured
-      Streaming re-delivers the in-flight batch with the SAME batch id):
-      the recorded id detects it and the fold is skipped;
-    - a crash at any instant recovers either the previous or the new
-      committed state, never neither.
-
-    Standing state is served from the parquet scan, so nothing is pinned
-    in executor storage and an executor loss loses no state. The
-    per-step write is sketch-sized (≤ T×K / k+1 / d·w rows) — noise next
-    to the batch fold itself at any scale."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._snap = SnapshotDir(path)
-
-    def load(self) -> tuple[DataFrame | None, int]:
-        """(state frame, last applied batch id); (None, -1) when nothing
-        has ever been committed."""
-        sub, bid = self._snap.current()
-        if sub is None:
-            return None, -1
-        return self.spark.read.parquet(sub), bid
-
-    def save(self, state_df: DataFrame, bid: int) -> None:
-        """Commit ``state_df`` as the state batch ``bid`` produced."""
-        self._snap.publish(int(bid), state_df.write.parquet)
-
-
-def sketch_handler(store: DurableSketchState, update, emit):
-    """The per-batch body of every sketch monitor: pass it to
-    ``writeStream.foreachBatch``, or call it from a composed handler.
-
-    ``update(standing | None, batch) -> frame`` folds one micro-batch into
-    the standing state (``quantile_sketch_update``,
-    ``heavy_hitters_update``, ``freq_sketch_update``), and
-    ``emit(batch_id, standing)`` receives the committed state after each
-    batch. The handler loads ``(standing, last_bid)`` from ``store`` once,
-    at construction. A redelivered batch (an id at or below the committed
-    one) emits the committed state and does not fold, so replaying a batch
-    is a no-op. Any other batch commits ``update(standing, batch)`` under
-    its id, and the handler adopts the new state only after that commit:
-    a save that dies leaves it on the state the store holds, and the retry
-    folds the batch exactly once. ``standing`` scans the committed tree,
-    which the next commit collects, so ``emit`` consumes it before
-    returning."""
-    standing, last_bid = store.load()
-
-    def _each(bdf: DataFrame, bid: int) -> None:
-        nonlocal standing, last_bid
-        if bid <= last_bid:
-            emit(bid, standing)
-            return
-        store.save(update(standing, bdf), bid)
-        standing, last_bid = store.load()
-        emit(bid, standing)
-
-    return _each
 
 
 def vocab_counts_stream(docs_stream: DataFrame) -> DataFrame:
@@ -174,7 +101,7 @@ def quality_score_stream(docs_stream: DataFrame, weights: list[float]) -> DataFr
 def quality_gate_stream(
     docs_stream: DataFrame, weights: list[float], threshold: float
 ) -> DataFrame:
-    """Streaming serve of a CHOSEN OPERATING POINT (round 7): train
+    """Streaming serve of a CHOSEN OPERATING POINT: train
     offline, select the threshold offline (`text.quality_threshold_select`
     — max kept-fraction subject to a precision target), then gate the
     arriving corpus ONLINE. Still a stateless narrow map per micro-batch;
@@ -210,9 +137,9 @@ def quality_psi_batch(
     `ext_quality_psi` runs per source). STATELESS: bins recompute per
     batch, the baseline is a B-row broadcast frame, nothing accumulates
     across batches. Output: one (batch_id, n, psi, drifted, low_sample)
-    row — ``low_sample`` (n < ``QC_PSI_MIN_N``) is the round-9 alert
-    gate: a tiny micro-batch reads inflated PSI from the smoothing terms
-    alone, so alerting composes ``drifted AND NOT low_sample``."""
+    row — ``low_sample`` (n < ``QC_PSI_MIN_N``) is the alert gate: a
+    tiny micro-batch reads inflated PSI from the smoothing terms alone,
+    so alerting composes ``drifted AND NOT low_sample``."""
     from ..operators.text import (
         QC_CAL_BINS,
         _qc_features,
@@ -318,9 +245,9 @@ def index_refresh_handler(index, assign_udf, emit=None):
 
 def quantile_sketch_update(standing: DataFrame | None, ev_batch: DataFrame) -> DataFrame:
     """One sketch-maintenance step: absorb an arriving events batch into the
-    standing bottom-K quantile sketch (``operators.aggregates`` round-8
-    family). The batch contributes only its bounded per-partition partials
-    (≤ T×K rows per partition), and bottom-K of (sketch ∪ partials) IS the
+    standing bottom-K quantile sketch (``operators.aggregates._qsk_*``).
+    The batch contributes only its bounded per-partition partials (≤ T×K
+    rows per partition), and bottom-K of (sketch ∪ partials) IS the
     sketch of the union — exact mergeability, so the maintained state
     after any number of steps is BIT-EQUAL to the one-shot whole-history
     sketch over the same rows (the deployment form of

@@ -7,10 +7,12 @@ SES sends (``:97-118``). Transport errors retry via non-commit; AWS-side
 errors are tolerated (confirm anyway, ``:119-131``).
 
 Spark form: the same message stream → parse → render → an idempotent
-``notifications`` table sink keyed by (reserva_id, estado) — one notification
-per lifecycle transition, replay-safe. Actual SMTP delivery would be a
-``foreach`` side effect reading this table; the engine's contract is the
-rendered rows (FIXTURES.md §2).
+``notifications`` table keyed by (reserva_id, estado) — one notification
+per lifecycle transition. ``notifications_update`` is its fold: a
+``sinks.DurableTable`` under ``sinks.durable_handler`` skips a redelivered
+batch, and the insert-if-absent drops re-rendered rows. Actual SMTP
+delivery would be a ``foreach`` side effect reading this table; the
+engine's contract is the rendered rows (FIXTURES.md §2).
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.templates import render_notification
 from ..sources.catalog import RESERVA_SCHEMA, TOPIC_RESERVAS
 from ..functions.json_codec import unquote_json_string
-from .sinks import ParquetMergeTable
+from .sinks import insert_if_absent
 
 
 def render_notifications_stream(msgs: DataFrame) -> DataFrame:
@@ -56,7 +58,7 @@ def render_notifications_stream(msgs: DataFrame) -> DataFrame:
     )
 
 
-def notifications_sink(spark, path: str) -> ParquetMergeTable:
-    """Idempotent sink: replayed messages re-render identical rows and the
-    insert-if-absent MERGE drops them — exactly-once *effect*."""
-    return ParquetMergeTable(spark, path, key="notif_key", order_col="seq")
+def notifications_update(standing: DataFrame | None, rendered: DataFrame) -> DataFrame:
+    """Insert-if-absent on ``notif_key``: replayed messages re-render
+    identical rows and the MERGE drops them — exactly-once *effect*."""
+    return insert_if_absent(standing, rendered, "notif_key", "seq")

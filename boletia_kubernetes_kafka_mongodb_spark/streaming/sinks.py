@@ -1,108 +1,158 @@
-"""Idempotent foreachBatch MERGE sinks (SURVEY.md §2.1 S2, §2.3 M6, §7 Phase 3b).
+"""Durable ``foreachBatch`` state: one store, one replay gate (SURVEY.md
+§2.1 S2, §2.3 M6, §7 Phase 3b).
 
-The reference achieves exactly-once *effect* over at-least-once delivery by
-making every consumer idempotent: insert-or-ignore on a unique key
-(``inventario/main.go:88-95``) and insert-or-replace by ``_id`` (the sink
-connector, ``kafka-mongodb-connect.yaml:22-33``). The Spark equivalents are
-foreachBatch writers that MERGE each micro-batch into a keyed table:
-
-- ``upsert_keep_last``  — replace-by-key (S2 clone semantics)
-- ``insert_if_absent``  — anti-join append (M6 dedup semantics)
-
-Both are *value-idempotent*: replaying any batch (or the whole stream)
-leaves the table in the same state — asserted by the replay-twice tests.
-
-Storage: one parquet tree per committed version behind the package's one
-pointer commit (``streaming._snapshot.SnapshotDir``): every MERGE writes a
-whole new version and flips the pointer, so a crash at any instant leaves
-the previous or the new table, never neither. On a real deployment this is
-a Delta/Iceberg MERGE INTO (same dataflow, ACID commit instead of a pointer
-file); the batch dedup logic is identical.
+The reference gets exactly-once *effect* over at-least-once delivery by
+committing an offset only with its effect and making the effect safe to
+replay (``inventario/main.go:56-66``, ``README.md:148-155``); Structured
+Streaming makes a sink idempotent on the batch id, which the engine
+re-delivers unchanged on recovery. Every stateful sink in the package is
+one ``update(standing | None, batch) -> frame`` committed into the one
+store, :class:`DurableTable`, through the one gate,
+:func:`durable_handler`. The MERGE updates here — ``upsert_keep_last``
+(S2 replace-by-key clone) and ``insert_if_absent`` (M6 dedup) — are also
+value-idempotent, which covers a fresh checkpoint re-reading old data.
+On a real deployment the store is a Delta/Iceberg table (ACID commit,
+``txnAppId``/``txnVersion`` for the gate); the dataflow is identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import json
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._snapshot import SnapshotDir
 
+_QUERY_ID = "sql.streaming.queryId"  # the local property foreachBatch runs under
+_HORIZONS = "_horizons"  # in each committed tree; Spark's reader skips "_" files
 
-class ParquetMergeTable:
-    """A keyed parquet-backed table with MERGE-style writers for foreachBatch."""
 
-    def __init__(self, spark: SparkSession, path: str, key: str, order_col: str | None = None):
+def _query(spark: SparkSession) -> str:
+    """The id of the streaming query whose batch this thread runs: stable
+    across restarts of one checkpoint, new for a fresh checkpoint. ``-``
+    outside a stream (a direct call)."""
+    return spark.sparkContext.getLocalProperty(_QUERY_ID) or "-"
+
+
+class DurableTable:
+    """The one durable ``foreachBatch`` store: a committed state is one
+    parquet tree behind the package's one pointer commit
+    (``streaming._snapshot.SnapshotDir``), so a crash at any instant
+    leaves the previous or the new state, and nothing is pinned in
+    executor storage. The pointer's id is the store's commit horizon: the
+    batch id, or one past the committed id when a fresh checkpoint
+    numbers its batches below it. The tree's ``_horizons`` file maps each
+    streaming query that committed here to the last batch id it
+    committed, which is what :func:`durable_handler` tells a replay by. A
+    tree written before that record existed reads as committed by no
+    query."""
+
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.key = key
-        self.order_col = order_col  # keep-last tie-break (e.g. seq/offset)
         self._snap = SnapshotDir(path)
 
+    def load(self) -> tuple[DataFrame | None, int, dict[str, int]]:
+        """(state frame, commit horizon, ``{query: last batch id it
+        committed}``) from one read of the pointer, which the next
+        :meth:`save`'s single-writer check compares against;
+        ``(None, -1, {})`` when nothing has ever been committed."""
+        sub, bid = self._snap.current()
+        if sub is None:
+            return None, bid, {}
+        frame, record = self.spark.read.parquet(sub), os.path.join(sub, _HORIZONS)
+        if not os.path.exists(record):
+            return frame, bid, {}
+        with open(record) as f:
+            return frame, bid, json.load(f)
+
     def read(self) -> DataFrame | None:
-        sub, _ = self._snap.current()
-        return None if sub is None else self.spark.read.parquet(sub)
+        return self.load()[0]
 
-    def _replace_with(self, df: DataFrame) -> None:
-        """Commit ``df`` as the table's next version. The pointer's batch
-        id is the version ordinal, monotone across the table's life."""
-        _, n = self._snap.current()
-        self._snap.publish(n + 1, df.write.parquet)
+    def save(self, frame: DataFrame, bid: int, horizons: dict[str, int]) -> None:
+        """Commit ``frame`` at commit horizon ``bid`` with ``horizons`` as
+        its record. Refused if the pointer moved since this handle last
+        loaded or saved."""
 
-    # -- S2: insert-or-replace by key (keep-last) ---------------------------
+        def write(tree: str) -> None:
+            frame.write.parquet(tree)
+            with open(os.path.join(tree, _HORIZONS), "w") as f:
+                json.dump(horizons, f)
 
-    def upsert_keep_last(self, batch: DataFrame) -> None:
-        """MERGE: for each key, the highest-``order_col`` row wins — across
-        the existing table AND the batch (so replays are no-ops)."""
-        order = self.order_col or self.key
-        existing = self.read()
-        unioned = batch if existing is None else existing.unionByName(batch)
-        w = Window.partitionBy(self.key).orderBy(F.col(order).desc())
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        self._replace_with(merged)
+        self._snap.publish(bid, write)
 
-    # -- M6: insert-if-absent (idempotent insert) ---------------------------
 
-    def insert_if_absent(self, batch: DataFrame) -> None:
-        """Append only keys not present yet; first occurrence wins within the
-        batch (dedup) — the ``IsDup ⇒ ok`` unique-index semantics."""
-        self._replace_with(self.with_absent(batch))
+def durable_handler(store: DurableTable, update, emit):
+    """The per-batch body of every durable sink: pass it to
+    ``writeStream.foreachBatch``, or call it from a composed handler.
 
-    def with_absent(self, batch: DataFrame) -> DataFrame:
-        """The insert-if-absent merge as a plan, uncommitted: the table's
-        rows plus the batch's first occurrence of every key the table does
-        not hold yet."""
-        order = self.order_col or self.key
-        w = Window.partitionBy(self.key).orderBy(F.col(order).asc())
-        deduped = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        existing = self.read()
-        if existing is None:
-            return deduped
-        fresh = deduped.join(
-            existing.select(self.key), on=self.key, how="left_anti"
-        )
-        return existing.unionByName(fresh)
+    ``update(standing | None, batch) -> frame`` folds one micro-batch into
+    the committed state, and ``emit(batch_id, standing)``, unless None,
+    receives the committed state after each batch. Each call loads the
+    store once: a redelivered batch emits the committed state and does
+    not fold, so replaying a batch is a no-op. Any other batch commits
+    ``update(standing, batch)``, and only the committed state is served
+    after it: a save that dies leaves the state the store holds, and the
+    retry folds the batch exactly once. ``standing`` scans the committed
+    tree, which the next commit collects, so ``emit`` consumes it before
+    returning.
 
-    # -- foreachBatch adapters ---------------------------------------------
+    Two rules decide what a batch id means:
 
-    def foreach_batch_upsert(self):
-        def handler(batch_df: DataFrame, batch_id: int) -> None:
-            self.upsert_keep_last(batch_df)
+    1. ``batch_id=None`` (a direct call outside a stream) is the next id,
+       one past the store's horizon, folded with no replay check.
+    2. A batch is a replay only if the same streaming query committed it:
+       its id is at or below the last id that query committed. A fresh
+       checkpoint (a new consumer group) over a store with data numbers
+       its batches from 0 again, and its batches fold; value-idempotent
+       updates keep that re-read safe. Direct calls with an id count as
+       one query of their own."""
 
-        return handler
+    def _each(batch: DataFrame, bid: int | None = None) -> None:
+        standing, last, horizons = store.load()
+        query = _query(store.spark)
+        if bid is not None and bid <= horizons.get(query, -1):
+            if emit is not None:
+                emit(bid, standing)
+            return
+        bid = last + 1 if bid is None else bid
+        store.save(update(standing, batch), max(bid, last + 1), {**horizons, query: bid})
+        if emit is not None:
+            emit(bid, store.read())
 
-    def foreach_batch_insert_if_absent(self):
-        def handler(batch_df: DataFrame, batch_id: int) -> None:
-            self.insert_if_absent(batch_df)
+    return _each
 
-        return handler
+
+# -- the MERGE updates --------------------------------------------------------
+
+
+def _first_per_key(df: DataFrame, key: str, order: Column) -> DataFrame:
+    w = Window.partitionBy(key).orderBy(order)
+    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+
+
+def upsert_keep_last(
+    standing: DataFrame | None, batch: DataFrame, key: str, order_col: str
+) -> DataFrame:
+    """S2 insert-or-replace by key: the highest-``order_col`` row of each
+    key wins, across the standing table AND the batch (so a re-fold is a
+    no-op)."""
+    unioned = batch if standing is None else standing.unionByName(batch)
+    return _first_per_key(unioned, key, F.col(order_col).desc())
+
+
+def insert_if_absent(
+    standing: DataFrame | None, batch: DataFrame, key: str, order_col: str
+) -> DataFrame:
+    """M6 insert-if-absent: the standing rows plus the batch's first
+    occurrence (lowest ``order_col``) of every key not present yet — the
+    ``IsDup ⇒ ok`` unique-index semantics."""
+    deduped = _first_per_key(batch, key, F.col(order_col).asc())
+    if standing is None:
+        return deduped
+    return standing.unionByName(deduped.join(standing.select(key), on=key, how="left_anti"))
 
 
 def dedup_within_watermark(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 from functools import partial
 
 from pyspark.sql import functions as F
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 from boletia_kubernetes_kafka_mongodb_spark import tables
 from boletia_kubernetes_kafka_mongodb_spark.operators import dedup
 from boletia_kubernetes_kafka_mongodb_spark.sources import cdc_stream
-from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus
+from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus, sinks
 from tests.conftest import SF_SMOKE
 
 
@@ -440,7 +441,7 @@ def test_quantile_sketch_stream_state_equals_batch_sketch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    store = C.DurableSketchState(spark, str(tmp_path / "qsk_state"))
+    store = sinks.DurableTable(spark, str(tmp_path / "qsk_state"))
     emitted: dict[int, list] = {}
 
     def emit(bid, sketch):
@@ -448,7 +449,7 @@ def test_quantile_sketch_stream_state_equals_batch_sketch(spark, tmp_path):
 
     q = (
         stream.writeStream.foreachBatch(
-            C.sketch_handler(store, C.quantile_sketch_update, emit)
+            sinks.durable_handler(store, C.quantile_sketch_update, emit)
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "qsk_ckpt"))
@@ -484,7 +485,7 @@ def test_quantile_sketch_stream_percentiles_converge(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    store = C.DurableSketchState(spark, str(tmp_path / "qsk2_state"))
+    store = sinks.DurableTable(spark, str(tmp_path / "qsk2_state"))
     emitted: dict[int, list] = {}
 
     def emit(bid, sketch):
@@ -492,7 +493,7 @@ def test_quantile_sketch_stream_percentiles_converge(spark, tmp_path):
 
     q = (
         stream.writeStream.foreachBatch(
-            C.sketch_handler(store, C.quantile_sketch_update, emit)
+            sinks.durable_handler(store, C.quantile_sketch_update, emit)
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "qsk2_ckpt"))
@@ -535,7 +536,7 @@ def test_heavy_hitters_stream_guarantees_vs_exact(spark, tmp_path):
         .parquet(path)
     )
     k = 4
-    store = C.DurableSketchState(spark, str(tmp_path / "hh_state"))
+    store = sinks.DurableTable(spark, str(tmp_path / "hh_state"))
     seen: list = []
 
     def emit(bid, st):
@@ -544,7 +545,7 @@ def test_heavy_hitters_stream_guarantees_vs_exact(spark, tmp_path):
 
     q = (
         stream.writeStream.foreachBatch(
-            C.sketch_handler(store, partial(C.heavy_hitters_update, k=k), emit)
+            sinks.durable_handler(store, partial(C.heavy_hitters_update, k=k), emit)
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "hh_ckpt"))
@@ -607,12 +608,12 @@ def test_freq_sketch_stream_state_equals_batch_cells(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
+    store = sinks.DurableTable(spark, str(tmp_path / "cms_state"))
     n_emits = []
 
     q = (
         stream.writeStream.foreachBatch(
-            C.sketch_handler(
+            sinks.durable_handler(
                 store, C.freq_sketch_update, lambda bid, cells: n_emits.append(bid)
             )
         )
@@ -686,12 +687,12 @@ def test_monitoring_stack_one_stream(spark, tmp_path):
 
     stream = _doc_stream(spark, tmp_path)
     k, d, cw = 8, 2, 64
-    hh_store = C.DurableSketchState(spark, str(tmp_path / "hh_state"))
-    cms_store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
-    hh = C.sketch_handler(
+    hh_store = sinks.DurableTable(spark, str(tmp_path / "hh_state"))
+    cms_store = sinks.DurableTable(spark, str(tmp_path / "cms_state"))
+    hh = sinks.durable_handler(
         hh_store, partial(C.heavy_hitters_update, k=k), lambda bid, st: None
     )
-    cms = C.sketch_handler(
+    cms = sinks.durable_handler(
         cms_store, partial(C.freq_sketch_update, d=d, w=cw), lambda bid, st: None
     )
     psi: dict[int, float] = {}
@@ -743,12 +744,11 @@ def test_monitoring_stack_one_stream(spark, tmp_path):
 
 
 def test_quantile_sketch_restart_durable(spark, tmp_path):
-    """Round-8 verdict #2 (kill-and-restart criterion): with a
-    `DurableSketchState`, the standing sketch after a restart mid-stream —
-    including Structured Streaming's redelivery of the in-flight batch
-    with the SAME batch id — is row-for-row equal to the uninterrupted
-    run's state AND to the batch whole-corpus sketch; replaying a batch
-    twice is a no-op fold."""
+    """Kill-and-restart: with a `sinks.DurableTable`, the standing sketch
+    after a restart mid-stream — including Structured Streaming's
+    redelivery of the in-flight batch with the SAME batch id — is
+    row-for-row equal to the uninterrupted run's state AND to the batch
+    whole-corpus sketch; replaying a batch twice is a no-op fold."""
     from boletia_kubernetes_kafka_mongodb_spark.operators import aggregates as A
     from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus as C
 
@@ -763,25 +763,25 @@ def test_quantile_sketch_restart_durable(spark, tmp_path):
             bid, sorted(map(tuple, C.quantile_sketch_serve(sketch).collect()))
         )
 
-    store_a = C.DurableSketchState(spark, str(tmp_path / "state_a"))
-    h = C.sketch_handler(store_a, C.quantile_sketch_update, served(emitted_a))
+    store_a = sinks.DurableTable(spark, str(tmp_path / "state_a"))
+    h = sinks.durable_handler(store_a, C.quantile_sketch_update, served(emitted_a))
     for i, b in enumerate(batches):
         h(b, i)
 
     # killed after committing batch 1, restarted: a NEW handler (fresh
     # in-memory state) on the same store; batch 1 is redelivered first
-    store_b = C.DurableSketchState(spark, str(tmp_path / "state_b"))
-    h1 = C.sketch_handler(store_b, C.quantile_sketch_update, served(emitted_b))
+    store_b = sinks.DurableTable(spark, str(tmp_path / "state_b"))
+    h1 = sinks.durable_handler(store_b, C.quantile_sketch_update, served(emitted_b))
     h1(batches[0], 0)
     h1(batches[1], 1)
     rows_before_replay = sorted(map(tuple, store_b.load()[0].collect()))
-    h2 = C.sketch_handler(store_b, C.quantile_sketch_update, served(emitted_b))
+    h2 = sinks.durable_handler(store_b, C.quantile_sketch_update, served(emitted_b))
     h2(batches[1], 1)  # redelivered in-flight batch: must be a no-op fold
     assert sorted(map(tuple, store_b.load()[0].collect())) == rows_before_replay
     h2(batches[2], 2)
 
-    sa, bid_a = store_a.load()
-    sb, bid_b = store_b.load()
+    sa, bid_a, _ = store_a.load()
+    sb, bid_b, _ = store_b.load()
     assert bid_a == bid_b == 2
     got_a = sorted(map(tuple, sa.collect()))
     got_b = sorted(map(tuple, sb.collect()))
@@ -808,18 +808,18 @@ def test_heavy_hitters_restart_durable(spark, tmp_path):
 
         return emit
 
-    store_a = C.DurableSketchState(spark, str(tmp_path / "hh_a"))
+    store_a = sinks.DurableTable(spark, str(tmp_path / "hh_a"))
     emit_a: dict[int, tuple] = {}
-    h = C.sketch_handler(store_a, update, recorded(emit_a))
+    h = sinks.durable_handler(store_a, update, recorded(emit_a))
     for i, b in enumerate(batches):
         h(b, i)
 
-    store_b = C.DurableSketchState(spark, str(tmp_path / "hh_b"))
+    store_b = sinks.DurableTable(spark, str(tmp_path / "hh_b"))
     emit_b: dict[int, tuple] = {}
-    h1 = C.sketch_handler(store_b, update, recorded(emit_b))
+    h1 = sinks.durable_handler(store_b, update, recorded(emit_b))
     h1(batches[0], 0)
     h1(batches[1], 1)
-    h2 = C.sketch_handler(store_b, update, recorded(emit_b))
+    h2 = sinks.durable_handler(store_b, update, recorded(emit_b))
     h2(batches[1], 1)  # replay: no double count
     h2(batches[2], 2)
 
@@ -828,8 +828,8 @@ def test_heavy_hitters_restart_durable(spark, tmp_path):
     n_tokens = 90 * 3 + 30
     assert emit_b[2][0] == n_tokens
     # restart-loaded state equals the uninterrupted dict state
-    da, _ = store_a.load()
-    db, _ = store_b.load()
+    da, _, _ = store_a.load()
+    db, _, _ = store_b.load()
     key = lambda r: (r[0] or "", *r[1:])
     assert sorted(map(tuple, da.collect()), key=key) == sorted(
         map(tuple, db.collect()), key=key
@@ -838,7 +838,7 @@ def test_heavy_hitters_restart_durable(spark, tmp_path):
 
 def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
     """TRUE kill-and-restart through Structured Streaming: run 1 drains the
-    first two files with a checkpointLocation + DurableSketchState, the
+    first two files with a checkpointLocation + `sinks.DurableTable`, the
     query stops (availableNow), two MORE files land, and run 2 — a fresh
     stream, fresh handler, EMPTY in-memory state — resumes from the same
     checkpoint + store. The drained standing cells must equal the batch
@@ -853,7 +853,7 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
     second = docs.where(F.col("doc_id") % 2 == 1)
     path = str(tmp_path / "cmsdocs")
     ckpt = str(tmp_path / "cms_restart_ckpt")
-    store = C.DurableSketchState(spark, str(tmp_path / "cms_state"))
+    store = sinks.DurableTable(spark, str(tmp_path / "cms_state"))
     d, w = 2, 64
     update = partial(C.freq_sketch_update, d=d, w=w)
     bids: list[int] = []
@@ -866,7 +866,7 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(path)
     )
     q1 = (
-        stream1.writeStream.foreachBatch(C.sketch_handler(store, update, record))
+        stream1.writeStream.foreachBatch(sinks.durable_handler(store, update, record))
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .start()
@@ -879,7 +879,7 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(path)
     )
     q2 = (
-        stream2.writeStream.foreachBatch(C.sketch_handler(store, update, record))
+        stream2.writeStream.foreachBatch(sinks.durable_handler(store, update, record))
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .start()
@@ -887,7 +887,7 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
     q2.awaitTermination(600)
     assert bids == [0, 1, 2, 3]
 
-    cells, last_bid = store.load()
+    cells, last_bid, _ = store.load()
     assert last_bid == 3
     toks = docs.select(F.explode(T.tokens_col("text")).alias("token"))
     want = sorted(map(tuple, T._cms_cells(toks, d, w).collect()))
@@ -896,9 +896,9 @@ def test_freq_sketch_restart_durable_real_stream(spark, tmp_path):
 
 def test_sketch_handler_pins_no_rdd_blocks(spark, tmp_path):
     """Monitor state lives in its store, not in executor storage: five
-    folds of each monitor through `sketch_handler` add no entry to the
-    persisted-RDD list, so an executor loss can lose no standing state and
-    a long-lived stream accumulates no blocks."""
+    folds of each monitor through `sinks.durable_handler` add no entry to
+    the persisted-RDD list, so an executor loss can lose no standing state
+    and a long-lived stream accumulates no blocks."""
     from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus as C
 
     sc = spark.sparkContext
@@ -921,8 +921,8 @@ def test_sketch_handler_pins_no_rdd_blocks(spark, tmp_path):
     ]
     for name, update, frame, key in monitors:
         base = persisted_ids()
-        store = C.DurableSketchState(spark, str(tmp_path / name))
-        h = C.sketch_handler(store, update, lambda bid, st: st.count())
+        store = sinks.DurableTable(spark, str(tmp_path / name))
+        h = sinks.durable_handler(store, update, lambda bid, st: st.count())
         for i in range(5):
             h(frame.where(F.col(key) % 5 == i), i)
         assert store.load()[1] == 4
@@ -930,9 +930,9 @@ def test_sketch_handler_pins_no_rdd_blocks(spark, tmp_path):
 
 
 def test_monitoring_stack_durable_composed_restart(spark, tmp_path):
-    """The round-9 deployment form of the composed monitoring stack: the MG
+    """The deployment form of the composed monitoring stack: the MG
     and CMS handlers run in ONE foreachBatch, EACH with its own
-    DurableSketchState, through a true Structured Streaming
+    `sinks.DurableTable`, through a true Structured Streaming
     kill-and-restart (checkpointLocation + new files between runs). After
     draining, both standing states equal their batch recomputes over the
     whole corpus — the composition preserves each monitor's standalone
@@ -950,13 +950,13 @@ def test_monitoring_stack_durable_composed_restart(spark, tmp_path):
     def run_once():
         """Fresh handlers + empty in-memory state each run — everything
         standing must come back from the stores."""
-        hh = C.sketch_handler(
-            C.DurableSketchState(spark, str(tmp_path / "hh_state")),
+        hh = sinks.durable_handler(
+            sinks.DurableTable(spark, str(tmp_path / "hh_state")),
             partial(C.heavy_hitters_update, k=k),
             lambda bid, st: None,
         )
-        cms = C.sketch_handler(
-            C.DurableSketchState(spark, str(tmp_path / "cms_state")),
+        cms = sinks.durable_handler(
+            sinks.DurableTable(spark, str(tmp_path / "cms_state")),
             partial(C.freq_sketch_update, d=d, w=w),
             lambda bid, cells: None,
         )
@@ -984,12 +984,12 @@ def test_monitoring_stack_durable_composed_restart(spark, tmp_path):
     run_once()
 
     toks = docs.select(F.explode(T.tokens_col("text")).alias("token"))
-    cells, bid = C.DurableSketchState(spark, str(tmp_path / "cms_state")).load()
+    cells, bid, _ = sinks.DurableTable(spark, str(tmp_path / "cms_state")).load()
     assert bid == 3
     want_cells = sorted(map(tuple, T._cms_cells(toks, d, w).collect()))
     assert sorted(map(tuple, cells.collect())) == want_cells
 
-    hh_df, hh_bid = C.DurableSketchState(spark, str(tmp_path / "hh_state")).load()
+    hh_df, hh_bid, _ = sinks.DurableTable(spark, str(tmp_path / "hh_state")).load()
     assert hh_bid == 3
     st = C.heavy_hitters_state_load(hh_df)
     exact = {
@@ -1085,8 +1085,8 @@ def test_freq_sketch_durable_random_schedules(spark, tmp_path):
 
     for seed in range(5):
         rng = random.Random(seed)
-        store = C.DurableSketchState(spark, str(tmp_path / f"sched{seed}"))
-        h = C.sketch_handler(store, update, lambda bid, cells: None)
+        store = sinks.DurableTable(spark, str(tmp_path / f"sched{seed}"))
+        h = sinks.durable_handler(store, update, lambda bid, cells: None)
         nxt = 0
         while nxt < len(batches):
             roll = rng.random()
@@ -1097,13 +1097,13 @@ def test_freq_sketch_durable_random_schedules(spark, tmp_path):
                 # crash: the handler (and all driver state) is lost;
                 # restart builds a fresh one over the same store, and the
                 # stream may redeliver the last batch first
-                h = C.sketch_handler(store, update, lambda bid, cells: None)
+                h = sinks.durable_handler(store, update, lambda bid, cells: None)
                 if nxt > 0 and rng.random() < 0.7:
                     h(batches[nxt - 1], nxt - 1)
             else:
                 h(batches[nxt], nxt)
                 nxt += 1
-        cells, last_bid = store.load()
+        cells, last_bid, _ = store.load()
         assert last_bid == len(batches) - 1, f"seed {seed}"
         assert sorted(map(tuple, cells.collect())) == want, f"seed {seed}"
 
@@ -1277,7 +1277,6 @@ def test_index_refresh_stream_equals_batch_refresh(spark, tmp_path):
     assert got == want and len(got) > 0
 
     plan = plans.explain_str(idx.probe([0, 3]))
-    import re
 
     assert plan.count("PartitionFilters") >= 2  # base scan + delta scans
     for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", plan):
@@ -1814,7 +1813,8 @@ def test_index_fuzz_append_compact_rebase_crash(spark, tmp_path):
                     )
                 else:
                     nv = int(base.split("_v")[1]) + 1 if base else 0
-                    assert f"base_v{nv}" not in entries, (
+                    stray = re.compile(rf"base(_h\d+)?_v{nv}")
+                    assert not any(stray.fullmatch(e) for e in entries), (
                         f"seed {seed} step {steps}: aborted rebase left a stray"
                     )
             finally:

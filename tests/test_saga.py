@@ -10,6 +10,8 @@ consumer-maintained reservas table:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from boletia_kubernetes_kafka_mongodb_spark import tables
@@ -105,14 +107,17 @@ def test_invariant_i_clone_preserves_id_and_fields(spark, tmp_path):
     """(i) the sink clone carries the same _id and all fields — pushing the
     eventos view through the upsert sink reproduces it exactly, and a replay
     of the same batch (keep-last) changes nothing."""
-    from boletia_kubernetes_kafka_mongodb_spark.streaming.sinks import ParquetMergeTable
+    from boletia_kubernetes_kafka_mongodb_spark.streaming import sinks
 
     src = tables.inventario(spark, SF_SMOKE)
-    sink = ParquetMergeTable(spark, str(tmp_path / "clone"), key="_id")
-    sink.upsert_keep_last(src)
+    sink = sinks.DurableTable(spark, str(tmp_path / "clone"))
+    upsert = sinks.durable_handler(
+        sink, partial(sinks.upsert_keep_last, key="_id", order_col="_id"), None
+    )
+    upsert(src)
     want = sorted(map(tuple, src.collect()))
     assert sorted(map(tuple, sink.read().collect())) == want
-    sink.upsert_keep_last(src)  # replayed clone: still byte-identical
+    upsert(src)  # replayed clone: still byte-identical
     assert sorted(map(tuple, sink.read().collect())) == want
 
 
@@ -161,15 +166,18 @@ def test_invariant_iii_cancel_restores_availability_exactly(spark):
 def test_invariant_iv_duplicate_event_name_rejected(spark, tmp_path):
     """(iv) inserting a second event with an existing nombre is rejected —
     the unique-index insert keeps the first document unchanged."""
-    from boletia_kubernetes_kafka_mongodb_spark.streaming.sinks import ParquetMergeTable
+    from boletia_kubernetes_kafka_mongodb_spark.streaming import sinks
 
-    t = ParquetMergeTable(spark, str(tmp_path / "ev"), key="nombre", order_col="seq")
-    t.insert_if_absent(
+    t = sinks.DurableTable(spark, str(tmp_path / "ev"))
+    insert = sinks.durable_handler(
+        t, partial(sinks.insert_if_absent, key="nombre", order_col="seq"), None
+    )
+    insert(
         spark.createDataFrame(
             [("Evento 000001", 100, 1)], "nombre string, capacidad long, seq long"
         )
     )
-    t.insert_if_absent(
+    insert(
         spark.createDataFrame(
             [("Evento 000001", 999, 2), ("Evento 000002", 50, 3)],
             "nombre string, capacidad long, seq long",
@@ -270,4 +278,28 @@ def test_one_commit_per_trigger(spark, tmp_path):
     for i in range(3):
         consumer.apply_batch(msgs.where(F.col("trigger") == i + 1).drop("trigger"), i)
         assert read_pointer(consumer.table.path)[1] == i
+    assert _table_state(consumer) == expected
+
+
+def test_redelivered_trigger_commits_nothing(spark, tmp_path):
+    """A trigger redelivered under its batch id is skipped by the durable
+    gate: the pointer and the store's directory listing stay as they
+    were, and the table equals the saga expectation."""
+    import os
+
+    msgs = cdc_stream.build_lifecycle_message_log(spark, SF_SMOKE)
+    consumer = InventarioConsumer(spark, str(tmp_path / "run"))
+
+    def snapshot():
+        with open(os.path.join(consumer.table.path, "CURRENT")) as f:
+            return f.read(), sorted(os.listdir(consumer.table.path))
+
+    consumer.apply_batch(msgs, 0)
+    before = snapshot()
+    consumer.apply_batch(msgs, 0)
+    assert snapshot() == before
+    expected = sorted(
+        (r._id, r.evento, r.estado, r.email, r.cantidad)
+        for r in _expected_final(spark).collect()
+    )
     assert _table_state(consumer) == expected

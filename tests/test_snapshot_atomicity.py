@@ -1,8 +1,8 @@
-"""Crash-atomicity of the durable snapshot stores (round-9 verdict #1).
+"""Crash-atomicity of the durable snapshot stores.
 
-The previous swap (write new → rmtree(old) → os.replace) had a crash
-window in which NO snapshot exists; these tests kill the protocol at
-every interesting instant and assert the previous committed state is
+A swap that writes the new tree, removes the old one and then renames has
+a crash window in which NO snapshot exists; these tests kill the protocol
+at every interesting instant and assert the previous committed state is
 always recoverable:
 
 - crash BETWEEN the staging write and the pointer flip → the store must
@@ -11,12 +11,12 @@ always recoverable:
 - crash AFTER the flip but before GC (stale predecessor / orphaned
   pointer temps left behind) → the NEW state serves, and the next commit
   self-heals the strays;
-- a legitimately 0-row state frame round-trips WITH its batch id (the
-  pre-r10 layout's documented "empty reads as absent" caveat is gone).
+- a legitimately 0-row state frame round-trips WITH its batch id, so an
+  empty state never reads as "no state".
 
-Both durable classes are covered (`DurableSketchState`,
-`ParquetMergeTable`), plus a seeded random-schedule fuzz that adds the
-mid-swap-crash action to the round-9 replay-protocol fuzz.
+The one durable store (`sinks.DurableTable`) is covered directly and under
+its MERGE and sketch updates, plus seeded random-schedule fuzzes that add
+the mid-swap-crash action to the replay-protocol fuzz.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from boletia_kubernetes_kafka_mongodb_spark.streaming import corpus as C
 from boletia_kubernetes_kafka_mongodb_spark.streaming import sinks
+from boletia_kubernetes_kafka_mongodb_spark.streaming.sinks import DurableTable, durable_handler
 from boletia_kubernetes_kafka_mongodb_spark.streaming._snapshot import SnapshotDir
 
 
@@ -49,32 +50,32 @@ def _sorted(df):
     return sorted(map(tuple, df.collect()))
 
 
-# --- DurableSketchState ---------------------------------------------------
+# --- DurableTable: sketch state --------------------------------------------
 
 
 def test_sketch_crash_between_write_and_flip(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "state")
-    store = C.DurableSketchState(spark, path)
+    store = DurableTable(spark, path)
     s0 = _cells(spark, [(0, 1, 10), (0, 2, 5)])
-    store.save(s0, 0)
+    store.save(s0, 0, {})
 
     # crash: the v1 staging dir is fully written, the pointer never flips
     monkeypatch.setattr(SnapshotDir, "commit", _boom)
     s1 = _cells(spark, [(0, 1, 12), (0, 2, 9)])
     with pytest.raises(_CrashMidSwap):
-        store.save(s1, 1)
+        store.save(s1, 1, {})
     monkeypatch.undo()
 
     # a restarted process recovers the PREVIOUS committed state, not empty
-    fresh = C.DurableSketchState(spark, path)
-    got, bid = fresh.load()
+    fresh = DurableTable(spark, path)
+    got, bid, _ = fresh.load()
     assert bid == 0
     assert _sorted(got) == _sorted(s0)
 
     # the stream redelivers batch 1; the retried save commits and the
     # crashed attempt's staging dir is garbage-collected
-    fresh.save(s1, 1)
-    got, bid = C.DurableSketchState(spark, path).load()
+    fresh.save(s1, 1, {})
+    got, bid, _ = DurableTable(spark, path).load()
     assert bid == 1
     assert _sorted(got) == _sorted(s1)
     assert sorted(os.listdir(path)) == ["CURRENT", "v1"]
@@ -82,84 +83,113 @@ def test_sketch_crash_between_write_and_flip(spark, tmp_path, monkeypatch):
 
 def test_sketch_crash_after_flip_self_heals(spark, tmp_path):
     path = str(tmp_path / "state")
-    store = C.DurableSketchState(spark, path)
-    store.save(_cells(spark, [(0, 1, 1)]), 0)
+    store = DurableTable(spark, path)
+    store.save(_cells(spark, [(0, 1, 1)]), 0, {})
 
     # simulate "crash after flip, before GC": strays the GC would have
     # removed are still on disk next to the committed snapshot
     os.makedirs(os.path.join(path, "v_stale_prev"))
     open(os.path.join(path, ".ptr_orphan"), "w").write("junk")
 
-    got, bid = C.DurableSketchState(spark, path).load()
+    got, bid, _ = DurableTable(spark, path).load()
     assert bid == 0 and _sorted(got) == [(0, 1, 1)]
 
     # the next successful commit collects the strays
-    store.save(_cells(spark, [(0, 1, 3)]), 1)
+    store.save(_cells(spark, [(0, 1, 3)]), 1, {})
     assert sorted(os.listdir(path)) == ["CURRENT", "v1"]
 
 
 def test_sketch_empty_state_representable(spark, tmp_path):
-    """Round-9 'What's wrong #3': the pointer records the bid, so a 0-row
-    committed state at batch N no longer reads as 'no state'."""
+    """The pointer records the bid, so a 0-row committed state at batch N
+    does not read as 'no state'."""
     path = str(tmp_path / "state")
-    store = C.DurableSketchState(spark, path)
+    store = DurableTable(spark, path)
     empty = _cells(spark, []).where(F.lit(False))
-    store.save(empty, 3)
-    got, bid = C.DurableSketchState(spark, path).load()
+    store.save(empty, 3, {})
+    got, bid, _ = DurableTable(spark, path).load()
     assert bid == 3
     assert got is not None and got.count() == 0
     assert got.columns == ["j", "b", "cnt"]
 
 
-# --- ParquetMergeTable -----------------------------------------------------
+# --- DurableTable: MERGE table ---------------------------------------------
+
+
+def _upsert(store, key, order_col):
+    return durable_handler(
+        store, partial(sinks.upsert_keep_last, key=key, order_col=order_col), None
+    )
 
 
 def test_merge_table_crash_between_write_and_flip(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "tbl")
-    t = sinks.ParquetMergeTable(spark, path, key="k", order_col="seq")
+    t = DurableTable(spark, path)
     b0 = spark.createDataFrame([("a", 1, "x")], "k string, seq long, v string")
-    t.upsert_keep_last(b0)
+    _upsert(t, "k", "seq")(b0)
 
     monkeypatch.setattr(SnapshotDir, "commit", _boom)
     b1 = spark.createDataFrame([("a", 2, "y")], "k string, seq long, v string")
     with pytest.raises(_CrashMidSwap):
-        t.upsert_keep_last(b1)
+        _upsert(t, "k", "seq")(b1)
     monkeypatch.undo()
 
     # restart: the table still serves the last COMMITTED merge
-    fresh = sinks.ParquetMergeTable(spark, path, key="k", order_col="seq")
+    fresh = DurableTable(spark, path)
     assert _sorted(fresh.read()) == [("a", 1, "x")]
 
     # the redelivered batch merges idempotently and commits; the retry
     # overwrites the crashed attempt's v1 staging and GCs the v0 snapshot
-    fresh.upsert_keep_last(b1)
+    _upsert(fresh, "k", "seq")(b1)
     assert _sorted(fresh.read()) == [("a", 2, "y")]
     assert sorted(os.listdir(path)) == ["CURRENT", "v1"]
+
+
+def test_durable_handler_refuses_a_commit_between_its_load_and_save(spark, tmp_path):
+    """The single-writer check spans the whole fold: when a second writer
+    commits after the gate's load and before its save, the save raises
+    and the second writer's commit stands, rows and record alike. The
+    fold stages either the tree the other writer committed (same batch
+    id) or a later one."""
+    schema = "k string, seq long, v string"
+    theirs = spark.createDataFrame([("b", 1, "theirs")], schema)
+    mine = spark.createDataFrame([("a", 1, "mine")], schema)
+    for bid in (0, 5):
+        path = str(tmp_path / f"tbl{bid}")
+
+        def racing_update(standing, batch):
+            DurableTable(spark, path).save(theirs, 0, {"other": 0})
+            return sinks.upsert_keep_last(standing, batch, "k", "seq")
+
+        with pytest.raises(RuntimeError, match="single-writer"):
+            durable_handler(DurableTable(spark, path), racing_update, None)(mine, bid)
+        got, last, horizons = DurableTable(spark, path).load()
+        assert _sorted(got) == [("b", 1, "theirs")], bid
+        assert (last, horizons) == (0, {"other": 0}), bid
+        assert sorted(os.listdir(path)) == ["CURRENT", "v0"], bid
 
 
 # --- protocol fuzz with the mid-swap crash action ---------------------------
 
 
-class _CrashySketchStore(C.DurableSketchState):
+class _CrashyStore(DurableTable):
     """Save that sometimes writes the staging snapshot and dies before the
-    pointer flip — the exact window the round-9 verdict flagged."""
+    pointer flip — the window in which no commit has happened yet."""
 
     def __init__(self, spark, path, rng, p_crash=0.3):
         super().__init__(spark, path)
         self._rng = rng
         self._p = p_crash
 
-    def save(self, state_df, bid):
+    def save(self, frame, bid, horizons):
         if self._rng.random() < self._p:
-            state_df.write.mode("overwrite").parquet(self._snap.staging(int(bid)))
+            frame.write.mode("overwrite").parquet(self._snap.staging(int(bid)))
             raise _CrashMidSwap(f"mid-swap crash at bid {bid}")
-        super().save(state_df, bid)
+        super().save(frame, bid, horizons)
 
 
 def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
-    """Round-9 fuzz extended per the verdict's done-criteria: random
-    interleavings of {fold, redeliver, restart, CRASH MID-SWAP} must all
-    drain to the exact batch cell table."""
+    """Random interleavings of {fold, redeliver, restart, CRASH MID-SWAP}
+    must all drain to the exact batch cell table."""
     from boletia_kubernetes_kafka_mongodb_spark.operators import text as T
 
     batches = [
@@ -179,8 +209,8 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
 
     for seed in range(5):
         rng = random.Random(1000 + seed)
-        store = _CrashySketchStore(spark, str(tmp_path / f"crashy{seed}"), rng)
-        h = C.sketch_handler(store, update, lambda bid, cells: None)
+        store = _CrashyStore(spark, str(tmp_path / f"crashy{seed}"), rng)
+        h = durable_handler(store, update, lambda bid, cells: None)
         nxt = 0
         while nxt < len(batches):
             roll = rng.random()
@@ -189,7 +219,7 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
                     h(batches[nxt - 1], nxt - 1)  # redelivery, committed
                 elif roll < 0.4:
                     # plain crash+restart (handler and in-memory state lost)
-                    h = C.sketch_handler(store, update, lambda bid, cells: None)
+                    h = durable_handler(store, update, lambda bid, cells: None)
                     if nxt > 0 and rng.random() < 0.7:
                         h(batches[nxt - 1], nxt - 1)
                 else:
@@ -198,31 +228,13 @@ def test_freq_sketch_durable_fuzz_with_midswap_crashes(spark, tmp_path):
             except _CrashMidSwap:
                 # the failed batch never committed: Structured Streaming
                 # fails the query, restart re-folds it from committed state
-                h = C.sketch_handler(store, update, lambda bid, cells: None)
-        cells, last_bid = store.load()
+                h = durable_handler(store, update, lambda bid, cells: None)
+        cells, last_bid, _ = store.load()
         assert last_bid == len(batches) - 1, f"seed {seed}"
         assert sorted(map(tuple, cells.collect())) == want, f"seed {seed}"
 
 
 # --- merge-table protocol fuzz with the mid-swap crash action ---------------
-
-
-class _CrashyMergeTable(sinks.ParquetMergeTable):
-    """_replace_with that sometimes writes the staging snapshot and dies
-    before the pointer flip — the merge-table side of the round-9 crash
-    window, fuzzed like the sketch stores."""
-
-    def __init__(self, spark, path, key, order_col, rng, p_crash=0.3):
-        super().__init__(spark, path, key=key, order_col=order_col)
-        self._rng = rng
-        self._p = p_crash
-
-    def _replace_with(self, df):
-        if self._rng.random() < self._p:
-            _, n = self._snap.current()
-            df.write.mode("overwrite").parquet(self._snap.staging(n + 1))
-            raise _CrashMidSwap(f"mid-swap crash at v{n + 1}")
-        super()._replace_with(df)
 
 
 def test_merge_table_fuzz_random_schedules_with_crashes(spark, tmp_path):
@@ -232,11 +244,11 @@ def test_merge_table_fuzz_random_schedules_with_crashes(spark, tmp_path):
     value-idempotent MERGE contract under the full at-least-once +
     crash-recovery generality.
 
-    Round-13 flavor: POINTER CORRUPTION injected before a random op —
-    the merge must raise PointerCorruptionError (never serve the
-    flat-layout fallback's silently-empty table), the committed snapshot
-    dir survives untouched, and after the operator restores the saved
-    pointer the schedule drains to the same merge."""
+    POINTER CORRUPTION is injected before a random op as well: the merge
+    must raise PointerCorruptionError (never serve a silently-empty
+    table), the committed snapshot dir survives untouched, and after the
+    operator restores the saved pointer the schedule drains to the same
+    merge."""
     from boletia_kubernetes_kafka_mongodb_spark.streaming import _snapshot
     rows = [(f"k{j % 7}", j, f"v{j}") for j in range(24)]
     batches = [
@@ -254,7 +266,8 @@ def test_merge_table_fuzz_random_schedules_with_crashes(spark, tmp_path):
     for seed in range(5):
         rng = random.Random(2000 + seed)
         path = str(tmp_path / f"mt{seed}")
-        t = _CrashyMergeTable(spark, path, key="k", order_col="seq", rng=rng)
+        t = _CrashyStore(spark, path, rng)
+        upsert = _upsert(t, "k", "seq")
         nxt = 0
         corrupt_fired = 0
         while nxt < len(batches):
@@ -269,9 +282,9 @@ def test_merge_table_fuzz_random_schedules_with_crashes(spark, tmp_path):
                         f.write("fuzz-garbage")
             try:
                 if roll < 0.25 and nxt > 0:
-                    t.upsert_keep_last(batches[nxt - 1])  # redelivery
+                    upsert(batches[nxt - 1])  # redelivery: re-merged
                 else:
-                    t.upsert_keep_last(batches[nxt])
+                    upsert(batches[nxt])
                     nxt += 1
             except _snapshot.PointerCorruptionError:
                 assert corrupt, f"seed {seed}: corruption raise w/o injection"
@@ -286,9 +299,8 @@ def test_merge_table_fuzz_random_schedules_with_crashes(spark, tmp_path):
                 # uncommitted batch because the exception aborts the try
                 if roll >= 0.25:
                     pass  # the in-flight batch will be retried
-                t = _CrashyMergeTable(
-                    spark, path, key="k", order_col="seq", rng=rng
-                )
+                t = _CrashyStore(spark, path, rng)
+                upsert = _upsert(t, "k", "seq")
         got = sorted(map(tuple, t.read().collect()))
         assert got == want, f"seed {seed}"
         corrupt_total += corrupt_fired
@@ -308,14 +320,14 @@ def test_heavy_hitters_handler_state_consistent_after_crashed_save(
     b1 = spark.createDataFrame(
         [(2, "beta beta alpha"), (3, "delta")], "doc_id long, text string"
     )
-    store = C.DurableSketchState(spark, str(tmp_path / "hh"))
+    store = DurableTable(spark, str(tmp_path / "hh"))
     emitted = []
 
     def emit(bid, st):
         mg = C.heavy_hitters_state_load(st)
         emitted.append((bid, mg["n_total"], mg["counters"]))
 
-    h = C.sketch_handler(store, partial(C.heavy_hitters_update, k=8), emit)
+    h = durable_handler(store, partial(C.heavy_hitters_update, k=8), emit)
     h(b0, 0)
     n0, counters0 = emitted[-1][1], dict(emitted[-1][2])
 
@@ -335,7 +347,7 @@ def test_heavy_hitters_handler_state_consistent_after_crashed_save(
     assert counters1.get("beta", 0) <= 3 and counters1.get("alpha", 0) <= 4
 
     # and the durable store agrees with the handler
-    df, last = C.DurableSketchState(spark, str(tmp_path / "hh")).load()
+    df, last, _ = DurableTable(spark, str(tmp_path / "hh")).load()
     assert last == 1
     assert C.heavy_hitters_state_load(df)["n_total"] == n1
 
@@ -713,14 +725,14 @@ def test_corrupt_pointer_raises_instead_of_silently_resetting(tmp_path):
 
 
 def test_corrupt_pointer_surfaces_through_durable_stores(spark, tmp_path):
-    """The stores built on SnapshotDir (merge table, sketch state) must
-    surface pointer corruption loudly instead of reading the store as
-    absent."""
+    """The durable store built on SnapshotDir must surface pointer
+    corruption loudly instead of reading the store as absent."""
     from boletia_kubernetes_kafka_mongodb_spark.streaming import _snapshot
 
     path = str(tmp_path / "tbl")
-    tbl = sinks.ParquetMergeTable(spark, path, key="j", order_col="b")
-    tbl.upsert_keep_last(_cells(spark, [(1, 1, 10)]))
+    tbl = DurableTable(spark, path)
+    upsert = _upsert(tbl, "j", "b")
+    upsert(_cells(spark, [(1, 1, 10)]))
     assert _sorted(tbl.read()) == [(1, 1, 10)]
 
     with open(os.path.join(path, _snapshot.POINTER), "w") as f:
@@ -728,7 +740,7 @@ def test_corrupt_pointer_surfaces_through_durable_stores(spark, tmp_path):
     with pytest.raises(_snapshot.PointerCorruptionError):
         tbl.read()
     with pytest.raises(_snapshot.PointerCorruptionError):
-        tbl.upsert_keep_last(_cells(spark, [(2, 2, 20)]))
+        upsert(_cells(spark, [(2, 2, 20)]))
 
     # heal → the committed rows are still there, untouched by the episode
     vdirs = [e for e in os.listdir(path) if e.startswith("v")]

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from functools import partial
 
 import pytest
 
@@ -139,38 +140,44 @@ def _as_sorted_tuples(df):
 
 
 def test_upsert_keep_last_replay_idempotent(spark, tmpdir):
-    t = sinks.ParquetMergeTable(spark, f"{tmpdir}/t1", key="key", order_col="seq")
+    t = sinks.DurableTable(spark, f"{tmpdir}/t1")
+    upsert = sinks.durable_handler(
+        t, partial(sinks.upsert_keep_last, key="key", order_col="seq"), None
+    )
     b1 = spark.createDataFrame(
         [("k1", 1, "v1"), ("k2", 2, "v2")], "key string, seq long, val string"
     )
     b2 = spark.createDataFrame(
         [("k1", 3, "v1b"), ("k3", 4, "v3")], "key string, seq long, val string"
     )
-    t.upsert_keep_last(b1)
-    t.upsert_keep_last(b2)
+    upsert(b1)
+    upsert(b2)
     state1 = _as_sorted_tuples(t.read())
     # replay both batches (at-least-once) → identical state
-    t.upsert_keep_last(b1)
-    t.upsert_keep_last(b2)
+    upsert(b1)
+    upsert(b2)
     assert _as_sorted_tuples(t.read()) == state1
     vals = {r.key: (r.seq, r.val) for r in t.read().collect()}
     assert vals == {"k1": (3, "v1b"), "k2": (2, "v2"), "k3": (4, "v3")}
 
 
 def test_insert_if_absent_replay_idempotent(spark, tmpdir):
-    t = sinks.ParquetMergeTable(spark, f"{tmpdir}/t2", key="_id", order_col="seq")
+    t = sinks.DurableTable(spark, f"{tmpdir}/t2")
+    insert = sinks.durable_handler(
+        t, partial(sinks.insert_if_absent, key="_id", order_col="seq"), None
+    )
     b1 = spark.createDataFrame(
         [("a", 1, 5), ("a", 2, 9), ("b", 3, 7)], "_id string, seq long, qty int"
     )
-    t.insert_if_absent(b1)
+    insert(b1)
     first = {r._id: (r.seq, r.qty) for r in t.read().collect()}
     assert first == {"a": (1, 5), "b": (3, 7)}  # first occurrence wins
     # replay + a new key
     b2 = spark.createDataFrame(
         [("a", 9, 1), ("c", 4, 2)], "_id string, seq long, qty int"
     )
-    t.insert_if_absent(b2)
-    t.insert_if_absent(b2)
+    insert(b2)
+    insert(b2)
     got = {r._id: (r.seq, r.qty) for r in t.read().collect()}
     assert got == {"a": (1, 5), "b": (3, 7), "c": (4, 2)}
 
@@ -184,9 +191,7 @@ def test_pipeline_replay_twice_same_state(spark, tmpdir):
     cdc_stream.write_stream_fixture(log.limit(2000), f"{tmpdir}/msgs", n_files=4)
 
     def run_once(run: int):
-        table = sinks.ParquetMergeTable(
-            spark, f"{tmpdir}/reservas_{run}", key="_id", order_col="seq"
-        )
+        table = sinks.DurableTable(spark, f"{tmpdir}/reservas_{run}")
         msgs = cdc_stream.read_message_stream(spark, f"{tmpdir}/msgs", max_files_per_trigger=2)
         routed = router.loop_breaker(router.route_messages(msgs))
         restitutions = routed.where(F.col("route") == router.ROUTE_RESTITUTE).select(
@@ -207,10 +212,9 @@ def test_pipeline_replay_twice_same_state(spark, tmpdir):
         return table
 
     def t_handler(table):
-        def h(batch_df, batch_id):
-            table.insert_if_absent(batch_df)
-
-        return h
+        return sinks.durable_handler(
+            table, partial(sinks.insert_if_absent, key="_id", order_col="seq"), None
+        )
 
     t_a = run_once("a")
     t_b = run_once("b")
@@ -374,6 +378,28 @@ def test_scd2_intervals_contiguous_one_current_per_key(spark):
         assert versions[-1].is_current and versions[-1].valid_to_us is None
         for a, b in zip(versions, versions[1:]):
             assert a.valid_to_us == b.valid_from_us
+
+
+def test_kafka_builders_construct_without_connector(spark):
+    """No broker and no spark-sql-kafka package here: the S5 source and S3
+    sink builders must still construct (they only fail at
+    ``.load()``/``.start()``), and each reference consumer group subscribes
+    to its reference topics (``inventario/main.go:52``,
+    ``notificaciones/main.go:39``)."""
+    from pyspark.sql.streaming import DataStreamReader, DataStreamWriter
+
+    from boletia_kubernetes_kafka_mongodb_spark.sources import kafka as kafka_mod
+
+    assert kafka_mod.GROUP_SUBSCRIPTIONS == {
+        "inventario": ["boletia.inventario", "boletia.reservas"],
+        "notificaciones": ["boletia.reservas"],
+    }
+    for group in kafka_mod.GROUP_SUBSCRIPTIONS:
+        assert isinstance(kafka_mod.kafka_source(spark, group), DataStreamReader)
+    out = spark.readStream.format("rate").load().selectExpr(
+        "CAST(value AS STRING) AS key", "CAST(value AS STRING) AS value"
+    )
+    assert isinstance(kafka_mod.kafka_sink(out, "boletia.reservas"), DataStreamWriter)
 
 
 def test_kafka_multipartition_delivery_event_time_admission(spark, tmpdir):
